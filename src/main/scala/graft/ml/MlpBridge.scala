@@ -33,6 +33,12 @@ object MlpBridge {
     * (100,) by default like the reference (`VectorSearchBase.py:230`),
     * stratified 75/25 split, predict all rows.
     *
+    * Scale shape: the prepared frame is cached once; the split is one
+    * `rand(seed)` column over it (train rows equal `sampleBy`'s for the
+    * same seed, the holdout is their exact complement), so no step
+    * shuffles the feature matrix. The fit is MLlib's L-BFGS, one
+    * treeAggregate per iteration.
+    *
     * @param labelCol string or numeric label column; indexed to
     *                 0..n-1 by sorted distinct value (deterministic)
     */
@@ -46,8 +52,6 @@ object MlpBridge {
     val labels = clean.select(col(labelCol).cast("string")).distinct()
       .collect().map(_.getString(0)).sorted
     require(labels.length >= 2, "need at least 2 classes")
-    val labelIdx = labels.zipWithIndex
-      .map { case (v, i) => v -> i.toDouble }.toMap
     // label indexing as a codegen'd map-literal lookup, not a Scala UDF
     // — stays inside whole-stage codegen (the label map is driver-sized
     // already: it was collected to index it)
@@ -59,11 +63,7 @@ object MlpBridge {
       .cache()
     val dim = prepared.select(size(col(vecCol))).head.getInt(0)
 
-    // stratified 75/25: sampleBy on the label column (reference uses
-    // sklearn stratified split with seed 810, VectorSearchBase.py:225)
-    val fractions = labelIdx.values.map(_ -> 0.75).toMap
-    val train = prepared.stat.sampleBy("label", fractions, seed)
-    val testSet = prepared.exceptAll(train)
+    val (train, testSet) = stratifiedSplit(prepared, seed)
 
     val mlp = new MultilayerPerceptronClassifier()
       .setLayers((dim +: hidden :+ labels.length).toArray)
@@ -85,6 +85,21 @@ object MlpBridge {
       .localCheckpoint(true) // materialize so the cache can be released
     prepared.unpersist()
     MlpResult(all, acc)
+  }
+
+  /** Stratified 75/25 split of a CACHED frame (reference: sklearn
+    * stratified split with seed 810, `VectorSearchBase.py:225`). Every
+    * class keeps 0.75, so the train side is `sampleBy(label, 0.75 per
+    * class, seed)` — which Spark plans as a filter on one `rand(seed)`
+    * draw per row — and the holdout is the exact complement of that
+    * same draw: no `exceptAll` shuffle of the feature vectors. The
+    * draw is per partition and row order, so both sides must read the
+    * same cached partitions. */
+  private[ml] def stratifiedSplit(prepared: DataFrame,
+      seed: Long): (DataFrame, DataFrame) = {
+    val split = prepared.withColumn("__u", rand(seed))
+    (split.filter(col("__u") < 0.75).drop("__u"),
+      split.filter(col("__u") >= 0.75).drop("__u"))
   }
 
   /** Train a regressor on (vecCol → labelCol): GBT substitute for

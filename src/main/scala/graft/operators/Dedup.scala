@@ -4,7 +4,8 @@ import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import graft.Checkpoints.LineageCutOps
 
 import scala.util.Random
@@ -601,19 +602,94 @@ object Dedup {
     dedupByPairs(df, idCol, pairs, policy)
   }
 
+  /** Pair-list size up to which [[misDropped]] decides in-process. */
+  private[operators] val LocalPairBound = 1000000
+
   /** Dropped ids under the greedy-by-id maximal-independent-set rule,
-    * computed by iterative status propagation along smaller→larger
-    * edges: a node is KEPT when every smaller near-dup neighbor is
-    * DROPPED (vacuously, when it has none), DROPPED when any smaller
-    * neighbor is KEPT. Each round decides at least the next layer of
-    * every dependency chain; rounds needed = longest id-increasing
-    * path (short in real near-dup graphs — components are bucket-
-    * bounded). Nodes still undecided after `maxRounds` default to KEPT
+    * computed by synchronous status rounds along smaller→larger edges:
+    * a node is KEPT when every smaller near-dup neighbor is DROPPED
+    * (vacuously, when it has none), DROPPED when any smaller neighbor is
+    * KEPT. Each round decides at least the next layer of every
+    * dependency chain; rounds needed = longest id-increasing path
+    * (short in real near-dup graphs — components are bucket-bounded).
+    * Nodes still undecided after `maxRounds` default to KEPT
     * (conservative: never drops unique data). Generic over any
-    * orderable id type; no driver-side graph. */
-  private def misDropped(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val e = pairs.select(col("idA").as("u"), col("idB").as("v"))
-      .distinct().lineageCut()
+    * orderable id type.
+    *
+    * Scale shape: the distinct pair list is cached and collected ONCE
+    * (one job, capped at `localBound` + 1 rows). When it fits
+    * `localBound`, the rounds run in-process ([[localMisDropped]]);
+    * above it — pair lists grow with the data — the same rounds run
+    * distributed, as keyed joins and aggregates with a lineage cut and
+    * a count job per round. The cut reads the cached pairs, so the pair
+    * pipeline runs once on either side; the above-bound side also pays
+    * the `localBound` + 1 rows the collect brought to the driver.
+    * Either way the dropped ids come back as an RDD-backed frame, so
+    * [[dedupByPairs]]' anti-join stays a shuffled join, not a broadcast
+    * of a small local relation.
+    *
+    * @param localBound package-visible so specs can force the
+    *                   distributed side; not a user option */
+  private[operators] def misDropped(pairs: DataFrame, maxRounds: Int = 50,
+      localBound: Int = LocalPairBound): DataFrame = {
+    val e = pairs.select(col("idA").as("u"), col("idB").as("v")).distinct()
+      .persist()
+    val local = e.limit(localBound + 1).collect()
+    if (local.length > localBound) {
+      // the rounds' eager lineage cut reads the partitions cached so far
+      try distributedMisDropped(e, maxRounds) finally e.unpersist()
+    } else {
+      e.unpersist()
+      val spark = pairs.sparkSession
+      val dropped = localMisDropped(
+        local.map(r => (r.get(0), r.get(1))), maxRounds)
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(dropped.map(Row(_)).toSeq, 1),
+        StructType(Seq(e.schema("u").copy(name = "id"))))
+    }
+  }
+
+  /** The synchronous status rounds of [[misDropped]] over an in-memory
+    * edge list (u < v): returns the dropped ids. */
+  private def localMisDropped(edges: Array[(Any, Any)],
+      maxRounds: Int): Array[Any] = {
+    // binary ids compare by content, not by array identity
+    def key(id: Any): Any = id match {
+      case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+      case other => other
+    }
+    val index = scala.collection.mutable.HashMap[Any, Int]()
+    val ids = scala.collection.mutable.ArrayBuffer[Any]()
+    def node(id: Any): Int =
+      index.getOrElseUpdate(key(id), { ids += id; ids.length - 1 })
+    val es = edges.map { case (u, v) => (node(u), node(v)) }
+    // incoming (smaller) neighbors per node; a node with none is a root
+    val smaller = Array.fill(ids.length)(
+      scala.collection.mutable.ArrayBuffer[Int]())
+    for ((u, v) <- es) smaller(v) += u
+    // 1 kept / 0 dropped / -1 undecided; roots are immediately kept
+    var st = smaller.map(in => if (in.isEmpty) 1 else -1)
+    var undecided = st.count(_ == -1)
+    var it = 0
+    while (undecided > 0 && it < maxRounds) {
+      val cur = st
+      st = Array.tabulate(cur.length) { n =>
+        if (cur(n) != -1) cur(n)
+        else if (smaller(n).exists(cur(_) == 1)) 0
+        else if (smaller(n).forall(cur(_) != -1)) 1
+        else -1
+      }
+      undecided = st.count(_ == -1)
+      it += 1
+    }
+    ids.indices.filter(st(_) == 0).map(ids).toArray
+  }
+
+  /** [[misDropped]]'s rounds as keyed joins and aggregates over a
+    * distributed edge frame (u, v) — the path above the local bound. */
+  private def distributedMisDropped(edges: DataFrame,
+      maxRounds: Int): DataFrame = {
+    val e = edges.lineageCut()
     val targets = e.select(col("v").as("id")).distinct()
     val nodes = e.select(col("u").as("id")).union(targets.select(col("id")))
       .distinct()

@@ -11,10 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[Similarity.topK]] matches that. This index trades recall for a
   * `nprobe/nClusters` scan fraction:
   *
-  *  - '''build''': seeded Lloyd's k-means on a sample (one
-  *    vec_sum-aggregate job per iteration) → centroids on the driver
-  *    (nClusters × dim floats — tiny); every row gets a `cluster`
-  *    column via one codegen'd nearest-centroid kernel expression.
+  *  - '''build''': seeded Lloyd's k-means in-process on one
+  *    bounded, collected sample → centroids on the driver (nClusters ×
+  *    dim floats — tiny); every row gets a `cluster` column via one
+  *    codegen'd nearest-centroid kernel expression.
   *  - '''persist''': `partitionBy(cluster)` parquet. Queries filter on
   *    cluster ids → Spark partition pruning reads only nprobe
   *    directories of the lake, never the full corpus.
@@ -199,20 +199,21 @@ object IvfIndex {
       nCells: Int, nonEmptyCells: Int, total: Long, maxCell: Long,
       imbalance: Double, meanQuantErr: Double, maxQuantErr: Double)
 
-  /** Fit centroids with a self-contained seeded Lloyd's loop, assign
-    * every row its nearest centroid.
+  /** Fit centroids on one bounded in-process sample, assign every row
+    * its nearest centroid.
     *
-    * The loop is built from this engine's own operators: cell
-    * assignment is the codegen'd [[graft.functions.NearestCentroid]]
-    * kernel, centroid refresh is one `groupBy(cell).agg(vec_sum, n)`
-    * (partial aggregation — nClusters × dim doubles cross the
-    * shuffle), so each iteration is ONE light job on the sample,
-    * versus the many init+iteration jobs of an MLlib fit. Empty cells
-    * keep their previous centroid.
+    * Training shape: one top-N collect (two for a large frame) brings
+    * the `sampleFraction` sample to the driver, cut at 256 × nClusters
+    * rows and at a driver byte budget ([[LocalFit.trainingSample]]).
+    * Seeding and every Lloyd's round run in-process on that array with
+    * the engine's own
+    * [[graft.functions.NearestCentroid]] kernel, double accumulation,
+    * and empty cells keeping their previous centroid
+    * ([[LocalFit.lloyd]]). Scale shape: the corpus is touched once, by
+    * the final assignment — one lazy narrow codegen'd map.
     *
-    * @param sampleFraction training sample for the fit (iteration cost
-    *                       is O(sample × nClusters); the full data
-    *                       only pays the final narrow assignment)
+    * @param sampleFraction training sample for the fit, before the
+    *                       256-per-centroid cap
     * @param tol            early-exit threshold on the max squared-L2
     *                       centroid shift per iteration; the default 0
     *                       exits only on an exact fixpoint (assignment
@@ -223,67 +224,34 @@ object IvfIndex {
       seed: Long = 42L, sampleFraction: Double = 1.0,
       maxIter: Int = 8, tol: Double = 0.0): IvfIndex = {
     require(nClusters >= 2, "need at least 2 clusters")
-    import graft.functions.VectorFunctions.vec_sum
-    val sample =
-      (if (sampleFraction >= 1.0) df else df.sample(sampleFraction, seed))
-        .select(col(vecCol)).cache()
-    try {
-      var centroids = seedCentroids(sample, vecCol, nClusters, seed)
-      require(centroids.length >= 2,
-        s"need >= 2 distinct vectors to build $nClusters clusters")
-      var it = 0
-      var converged = false
-      while (it < maxIter && !converged) {
-        val stats = assignCells(sample, vecCol, centroids)
-          .groupBy(ClusterCol)
-          .agg(vec_sum(col(vecCol)).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val next = centroids.map(_.clone())
-        stats.foreach { r =>
-          val cell = r.getInt(0)
-          val s = r.getSeq[Double](1)
-          val n = r.getLong(2).toDouble
-          next(cell) = s.map(x => (x / n).toFloat).toArray
-        }
-        val shift = centroids.zip(next)
-          .map { case (a, b) => VectorOps.squaredL2Floats(a, b) }.max
-        centroids = next
-        converged = shift <= tol
-        it += 1
-      }
-      new IvfIndex(centroids, assignCells(df, vecCol, centroids), vecCol,
-        idCol)
-    } finally sample.unpersist()
+    val sample = LocalFit.trainingSample(df, vecCol, idCol, seed,
+      sampleFraction, nClusters, "IVF centroids")
+    val centroids = fitCentroids(sample, nClusters, maxIter, tol)
+    new IvfIndex(centroids, assignCells(df, vecCol, centroids), vecCol,
+      idCol)
   }
 
-  /** Deterministic init: nClusters DISTINCT vectors in hash order
-    * (duplicate vectors — common in dedup corpora — would seed
-    * identical centroids and leave cells permanently dead).
-    *
-    * Implemented as a single `TakeOrderedAndProject` over
-    * `(hash, vector)` — a narrow top-N, no shuffle — oversampling 4×
-    * and deduplicating the tiny collected slice driver-side. Duplicate
-    * vectors hash identically, so they are adjacent in hash order and
-    * the oversample is exhausted only under extreme duplication; the
-    * full `distinct()` shuffle runs solely as that fallback. */
-  private def seedCentroids(sample: DataFrame, vecCol: String,
-      nClusters: Int, seed: Long): Array[Array[Float]] = {
-    val hashed = sample
-      .withColumn("__h", hash(col(vecCol), lit(seed.toInt)))
-    val over = hashed
-      .orderBy(col("__h"), col(vecCol))
-      .limit(math.max(nClusters * 4, nClusters + 16))
-      .collect().map(_.getSeq[Float](0).toArray)
-    val distinctSeeds = scala.collection.mutable.ArrayBuffer[Array[Float]]()
-    val seen = scala.collection.mutable.HashSet[Seq[Float]]()
-    for (v <- over if distinctSeeds.length < nClusters)
-      if (seen.add(v.toSeq)) distinctSeeds += v
-    if (distinctSeeds.length >= nClusters) distinctSeeds.toArray
-    else // oversample exhausted by duplicates: exact fallback
-      hashed.dropDuplicates(vecCol)
-        .orderBy(col("__h"), col(vecCol)).limit(nClusters)
-        .collect().map(_.getSeq[Float](0).toArray)
+  /** Seeded Lloyd's on a hash-ordered sample ([[LocalFit.trainingSample]]).
+    * Init: the first nClusters DISTINCT vectors in that order (duplicate
+    * vectors — common in dedup corpora — would seed identical centroids
+    * and leave cells permanently dead). */
+  private[operators] def fitCentroids(sample: Array[Array[Float]],
+      nClusters: Int, maxIter: Int, tol: Double): Array[Array[Float]] = {
+    val seeds = LocalFit.firstDistinct(sample, nClusters)
+    require(seeds.length >= 2,
+      s"need >= 2 distinct vectors to build $nClusters clusters")
+    lloydRounds(sample, seeds.toArray, maxIter, tol)
   }
+
+  /** In-process Lloyd's rounds from `init` ([[LocalFit.lloyd]] with the
+    * [[graft.functions.NearestCentroid]] kernel); one round is the
+    * in-process twin of [[lloydStepMeans]]. */
+  private[operators] def lloydRounds(points: Array[Array[Float]],
+      init: Array[Array[Float]], maxIter: Int,
+      tol: Double): Array[Array[Float]] =
+    LocalFit.lloyd(Array(points), Array(init), maxIter, tol) {
+      (books, _, p) => VectorOps.nearestCentroid(p, true, books(0))
+    }(0)
 
   /** Reload a partitioned index written by [[IvfIndex.writePartitioned]]. */
   def load(spark: SparkSession, path: String,
@@ -308,8 +276,9 @@ object IvfIndex {
       spark.read.parquet(s"$path/table"), vecCol, idCol)
 
   /** One Lloyd's recenter step as a cross-engine-auditable frame —
-    * the oracle twin of the iteration body shared by [[IvfIndex.build]]
-    * and [[refreshCentroids]]. Runs the REAL code path (the codegen'd
+    * the oracle twin of [[refreshCentroids]]'s step and of the
+    * in-process round [[IvfIndex.build]] runs ([[lloydRounds]],
+    * spec-pinned to this frame). Runs the REAL code path (the codegen'd
     * [[graft.functions.NearestCentroid]] argmin assignment, then the
     * `vec_sum` partial-aggregate recenter), but emits scalar rows
     * `(cluster, i, value, n)` with each mean rounded to decimal(18,9)

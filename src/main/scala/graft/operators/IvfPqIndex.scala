@@ -80,31 +80,33 @@ final class IvfPqIndex(
 
 object IvfPqIndex {
 
-  /** Build the composed index: coarse IVF fit, residual computation
-    * (one narrow codegen'd map), PQ fit on the residuals, then ONE
-    * narrow projection to the (id, cell, code) table — no join between
-    * the two stages. */
+  /** Build the composed index: coarse IVF fit, PQ fit on the
+    * residuals, then ONE narrow projection to the (id, cell, code)
+    * table — no join between the two stages.
+    *
+    * Training shape: one top-N collect (two for a large frame) brings
+    * the `sampleFraction` sample to the driver, cut at 256 ×
+    * max(nClusters, codesPerBook) rows and at a driver byte budget
+    * ([[LocalFit.trainingSample]]). The coarse Lloyd's fit, the
+    * residuals of that same sample and the PQ fit on them all run
+    * in-process. Scale shape: the corpus is touched once, by the lazy
+    * assign-residual-encode narrow map. */
   def build(df: DataFrame, vecCol: String, idCol: String,
       nClusters: Int = 16, m: Int = 8, codesPerBook: Int = 256,
       seed: Long = 42L, sampleFraction: Double = 1.0,
       maxIter: Int = 8): IvfPqIndex = {
-    val ivf = IvfIndex.build(df, vecCol, idCol, nClusters, seed,
-      sampleFraction, maxIter)
-    val resid = ivf.assigned.withColumn("__resid",
-      cell_residual(col(IvfIndex.ClusterCol), col(vecCol), ivf.centroids))
-    // dim is already known from the coarse centroids (residuals keep
-    // the vector dim) — skip PqIndex.train's probeDim limit-1 job
-    val pq = PqIndex.trainWithDim(resid.select(col(idCol), col("__resid")),
-      "__resid", idCol, m, codesPerBook, seed, sampleFraction, maxIter,
-      ivf.centroids(0).length)
+    val (cells, resid) = fitCells(df, vecCol, idCol, nClusters,
+      codesPerBook, seed, sampleFraction, maxIter)
+    val books = PqIndex.fitBooks(resid, m, codesPerBook, seed, maxIter)
     // cache the codes table: queries fan out into nprobe filtered
     // branches, and without this each branch would recompute cell
     // assignment + residual + encode over the full corpus. The cached
     // form is m bytes/row — "codes fit in memory" IS the PQ design
     // point; the durable twin is writeTable's partitioned layout.
-    val table = resid.select(col(idCol), col(IvfIndex.ClusterCol),
-      pq_encode(col("__resid"), pq.codebooks).as(PqIndex.CodeCol)).cache()
-    new IvfPqIndex(ivf.centroids, pq.codebooks, table, df, vecCol, idCol)
+    val table = residualFrame(df, vecCol, idCol, cells)
+      .select(col(idCol), col(IvfIndex.ClusterCol),
+        pq_encode(col("__resid"), books).as(PqIndex.CodeCol)).cache()
+    new IvfPqIndex(cells, books, table, df, vecCol, idCol)
   }
 
   /** IVF-OPQ: the faiss `OPQMatrix`-inside-IVF composition — residuals
@@ -113,26 +115,43 @@ object IvfPqIndex {
     * (rotating RESIDUALS is what faiss does; rotating raw vectors
     * would change cell geometry). Distances are rotation-invariant:
     * the ADC estimates rank the same true neighbors, and the exact
-    * re-rank still runs in the ORIGINAL space against the corpus. */
+    * re-rank still runs in the ORIGINAL space against the corpus.
+    * Same training shape as [[build]], with the OPQ alternation in
+    * place of the plain PQ fit. */
   def buildOpq(df: DataFrame, vecCol: String, idCol: String,
       nClusters: Int = 16, m: Int = 8, codesPerBook: Int = 256,
       seed: Long = 42L, sampleFraction: Double = 1.0, maxIter: Int = 8,
       opqIters: Int = 3): IvfPqIndex = {
-    val ivf = IvfIndex.build(df, vecCol, idCol, nClusters, seed,
-      sampleFraction, maxIter)
-    val resid = ivf.assigned.withColumn("__resid",
-      cell_residual(col(IvfIndex.ClusterCol), col(vecCol), ivf.centroids))
-    val opq = PqIndex.trainOpq(resid.select(col(idCol), col("__resid")),
-      "__resid", idCol, m, codesPerBook, seed, sampleFraction, maxIter,
-      opqIters)
-    val table = resid
-      .withColumn("__rresid", mat_vec(col("__resid"), opq.rotation))
+    val (cells, resid) = fitCells(df, vecCol, idCol, nClusters,
+      codesPerBook, seed, sampleFraction, maxIter)
+    val (rotation, books) = PqIndex.fitOpq(resid, m, codesPerBook, seed,
+      maxIter, opqIters, rotationSeed = 7L)
+    val table = residualFrame(df, vecCol, idCol, cells)
+      .withColumn("__rresid", mat_vec(col("__resid"), rotation))
       .select(col(idCol), col(IvfIndex.ClusterCol),
-        pq_encode(col("__rresid"), opq.inner.codebooks).as(PqIndex.CodeCol))
+        pq_encode(col("__rresid"), books).as(PqIndex.CodeCol))
       .cache()
-    new IvfPqIndex(ivf.centroids, opq.inner.codebooks, table, df, vecCol,
-      idCol, rotation = Some(opq.rotation))
+    new IvfPqIndex(cells, books, table, df, vecCol, idCol,
+      rotation = Some(rotation))
   }
+
+  /** The coarse centroids and the residuals of the same collected
+    * training sample against them. */
+  private def fitCells(df: DataFrame, vecCol: String, idCol: String,
+      nClusters: Int, codesPerBook: Int, seed: Long, sampleFraction: Double,
+      maxIter: Int): (Array[Array[Float]], Array[Array[Float]]) = {
+    require(nClusters >= 2, "need at least 2 clusters")
+    val sample = LocalFit.trainingSample(df, vecCol, idCol, seed,
+      sampleFraction, math.max(nClusters, codesPerBook), "IVF-PQ")
+    val cells = IvfIndex.fitCentroids(sample, nClusters, maxIter, 0.0)
+    (cells, LocalFit.residuals(sample, cells))
+  }
+
+  private def residualFrame(df: DataFrame, vecCol: String, idCol: String,
+      cells: Array[Array[Float]]): DataFrame =
+    IvfIndex.assignCells(df.select(col(idCol), col(vecCol)), vecCol, cells)
+      .withColumn("__resid",
+        cell_residual(col(IvfIndex.ClusterCol), col(vecCol), cells))
 
   /** Reload a partitioned codes table written by
     * [[IvfPqIndex.writeTable]]. */

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.VectorFunctions._
 import graft.functions.VectorOps
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -15,11 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * candidate scan fits in cluster memory" and "it does not" at 10⁹+
   * rows.
   *
-  *  - '''train''': joint Lloyd's over ALL subspaces at once — the
-  *    sample explodes to (sub, subvec) rows ONCE, each iteration is ONE
-  *    job (codegen'd [[graft.functions.NearestSubCentroid]] assignment
-  *    + `groupBy(sub, cell)` vec_sum refresh with partial aggregation),
-  *    so cost does not multiply by m the way per-subspace fits would.
+  *  - '''train''': Lloyd's over ALL subspaces, in-process on one
+  *    bounded collected sample ([[LocalFit]]): one job (two for a
+  *    large frame) brings the sample to the driver, every round runs
+  *    there on all driver cores with the engine's
+  *    [[graft.functions.NearestSubCentroid]] kernel.
   *  - '''encode''': one narrow codegen'd [[graft.functions.PqEncode]]
   *    projection → `codes` frame of (id, m-byte code).
   *  - '''query''': the ADC table (m × codesPerBook squared-L2 entries
@@ -145,86 +144,61 @@ object PqIndex {
     * frame. `codesPerBook` ≤ 256 (one byte per subspace); `df`'s vector
     * dim must divide evenly into `m` subspaces.
     *
-    * Training shape: the sample pays ONE explode into (sub, subvec)
-    * rows (cached), then `maxIter` single-job Lloyd's rounds; only
-    * m × codesPerBook centroid stats cross the shuffle per round. Seeds
-    * are distinct subvectors in deterministic hash order, per subspace
-    * (duplicate-heavy corpora would otherwise seed dead centroids);
-    * under-populated subspaces pad by repeating their first seed —
-    * padded duplicates never win an argmin tie, so they are inert. */
+    * Training shape: one top-N collect (two for a large frame) brings
+    * the `sampleFraction` sample to the driver, cut at 256 ×
+    * codesPerBook rows and at a driver byte budget
+    * ([[LocalFit.trainingSample]]); seeding and the Lloyd's rounds run
+    * in-process on it ([[fitBooks]]). The corpus is touched once, by
+    * the lazy narrow [[graft.functions.PqEncode]] projection. */
   def train(df: DataFrame, vecCol: String, idCol: String, m: Int = 8,
       codesPerBook: Int = 256, seed: Long = 42L,
-      sampleFraction: Double = 1.0, maxIter: Int = 8): PqIndex =
-    trainWithDim(df, vecCol, idCol, m, codesPerBook, seed, sampleFraction,
-      maxIter, probeDim(df, vecCol))
-
-  /** One first-row job to learn the vector dimension. */
-  private def probeDim(df: DataFrame, vecCol: String): Int = {
-    val firstRows = df.select(col(vecCol)).limit(1).collect()
-    require(firstRows.nonEmpty, "cannot train PQ codebooks on an empty frame")
-    firstRows(0).getSeq[Float](0).length
-  }
-
-  // package-visible so IvfPqIndex can pass the dim it already knows
-  // from its coarse centroids instead of paying probeDim's extra job
-  private[operators] def trainWithDim(df: DataFrame, vecCol: String, idCol: String,
-      m: Int, codesPerBook: Int, seed: Long, sampleFraction: Double,
-      maxIter: Int, dim: Int): PqIndex = {
-    require(m >= 1, "need at least 1 subspace")
-    require(codesPerBook >= 2 && codesPerBook <= 256,
-      "codesPerBook must be in [2, 256] (one byte per code)")
-    require(!df.columns.contains(CodeCol),
-      s"input frame must not contain a column named '$CodeCol'")
-    require(dim % m == 0, s"vector dim $dim must divide into $m subspaces")
-    val subDim = dim / m
-    val sample =
-      (if (sampleFraction >= 1.0) df else df.sample(sampleFraction, seed))
-        .select(col(vecCol))
-    val books = fitBooks(sample, vecCol, m, codesPerBook, seed, maxIter,
-      subDim)
+      sampleFraction: Double = 1.0, maxIter: Int = 8): PqIndex = {
+    val sample = trainingSample(df, vecCol, idCol, codesPerBook, seed,
+      sampleFraction, "PQ codebooks")
+    val books = fitBooks(sample, m, codesPerBook, seed, maxIter)
     new PqIndex(books, df,
       df.select(col(idCol), pq_encode(col(vecCol), books).as(CodeCol)),
       vecCol, idCol)
   }
 
-  /** The joint-subspace Lloyd's fit on an already-sampled vectors
-    * frame, returning only the codebooks (shared by [[train]] and the
-    * OPQ alternation, which refits books per rotation update). */
-  private def fitBooks(sample: DataFrame, vecCol: String, m: Int,
-      codesPerBook: Int, seed: Long, maxIter: Int,
-      subDim: Int): Array[Array[Array[Float]]] = {
-    val subSlices = array((0 until m).map(s =>
-      slice(col(vecCol), s * subDim + 1, subDim)): _*)
-    val exploded = sample.select(posexplode(subSlices))
-      .toDF("sub", "subvec").cache()
-    try {
-      var books = seedBooks(exploded, m, codesPerBook, seed)
-      var it = 0
-      var converged = false
-      while (it < maxIter && !converged) {
-        val stats = exploded
-          .withColumn("cell",
-            nearest_sub_centroid(col("sub"), col("subvec"), books))
-          .groupBy("sub", "cell")
-          .agg(vec_sum(col("subvec")).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val next = books.map(_.map(_.clone()))
-        stats.foreach { r =>
-          val s = r.getSeq[Double](2)
-          val n = r.getLong(3).toDouble
-          next(r.getInt(0))(r.getInt(1)) =
-            s.map(x => (x / n).toFloat).toArray
-        }
-        var shift = 0.0
-        for (s <- 0 until m; c <- 0 until codesPerBook)
-          shift = math.max(shift,
-            VectorOps.squaredL2Floats(books(s)(c), next(s)(c)))
-        books = next
-        converged = shift == 0.0
-        it += 1
-      }
-      books
-    } finally { exploded.unpersist(); () }
+  /** The collected training sample of a PQ fit
+    * ([[LocalFit.trainingSample]]) after checking `df` has no column
+    * named like the codes. */
+  private def trainingSample(df: DataFrame, vecCol: String, idCol: String,
+      codesPerBook: Int, seed: Long, sampleFraction: Double,
+      what: String): Array[Array[Float]] = {
+    require(!df.columns.contains(CodeCol),
+      s"input frame must not contain a column named '$CodeCol'")
+    LocalFit.trainingSample(df, vecCol, idCol, seed, sampleFraction,
+      codesPerBook, what)
+  }
+
+  /** Joint-subspace Lloyd's fit on a collected training sample
+    * ([[LocalFit.trainingSample]]), returning only the codebooks (shared by
+    * [[train]], the OPQ alternation — which refits books per rotation
+    * update — and IVF-PQ's residual fit). In-process: seeds from
+    * [[seedBooks]], then at most `maxIter` rounds of
+    * [[graft.functions.NearestSubCentroid]] assignment and double-sum
+    * recentering per subspace ([[LocalFit.lloyd]]), stopping at the
+    * exact fixpoint. */
+  private[operators] def fitBooks(sample: Array[Array[Float]], m: Int,
+      codesPerBook: Int, seed: Long,
+      maxIter: Int): Array[Array[Array[Float]]] = {
+    require(m >= 1, "need at least 1 subspace")
+    require(codesPerBook >= 2 && codesPerBook <= 256,
+      "codesPerBook must be in [2, 256] (one byte per code)")
+    val dim = sample(0).length
+    require(dim % m == 0, s"vector dim $dim must divide into $m subspaces")
+    require(LocalFit.firstDistinct(sample, 2).length >= 2,
+      "need >= 2 distinct vectors to train PQ codebooks")
+    val subDim = dim / m
+    val subs = Array.tabulate(m)(s =>
+      sample.map(v => java.util.Arrays.copyOfRange(v, s * subDim,
+        (s + 1) * subDim)))
+    LocalFit.lloyd(subs, seedBooks(subs, codesPerBook, seed), maxIter,
+      0.0) { (books, s, p) =>
+      VectorOps.nearestSubCentroid(s, p, true, books)
+    }
   }
 
   /** Seeded random orthonormal rotation (the OPQ random-rotation
@@ -253,7 +227,8 @@ object PqIndex {
     basis.map(_.map(_.toFloat)).toArray
   }
 
-  /** Train PQ on ROTATED vectors: corpus rows pass once through the
+  /** Train PQ on ROTATED vectors: the collected training sample rotates
+    * in-process before [[fitBooks]], corpus rows pass once through the
     * codegen'd [[graft.functions.MatVec]] kernel (narrow map), queries
     * rotate driver-side. Squared-L2 is rotation-invariant, so ranks and
     * re-ranked distances match the unrotated space (up to float32
@@ -263,13 +238,24 @@ object PqIndex {
       m: Int = 8, codesPerBook: Int = 256, seed: Long = 42L,
       sampleFraction: Double = 1.0, maxIter: Int = 8,
       rotationSeed: Long = 7L): RotatedPqIndex = {
+    val sample = trainingSample(df, vecCol, idCol, codesPerBook, seed,
+      sampleFraction, "PQ codebooks")
+    val r = randomRotation(sample(0).length, rotationSeed)
+    val books = fitBooks(sample.map(matVecFloats(r, _)), m, codesPerBook,
+      seed, maxIter)
+    rotatedIndex(df, vecCol, idCol, r, books)
+  }
+
+  /** The corpus through the rotation kernel (lazy narrow map) and its
+    * codes: the only distributed work of a rotated fit. */
+  private def rotatedIndex(df: DataFrame, vecCol: String, idCol: String,
+      r: Array[Array[Float]],
+      books: Array[Array[Array[Float]]]): RotatedPqIndex = {
     import graft.functions.VectorFunctions.mat_vec
-    val dim = probeDim(df, vecCol) // rotation preserves dim: probe ONCE
-    val r = randomRotation(dim, rotationSeed)
     val rotated = df.withColumn(vecCol, mat_vec(col(vecCol), r))
-    new RotatedPqIndex(r,
-      trainWithDim(rotated, vecCol, idCol, m, codesPerBook, seed,
-        sampleFraction, maxIter, dim))
+    new RotatedPqIndex(r, new PqIndex(books, rotated,
+      rotated.select(col(idCol), pq_encode(col(vecCol), books).as(CodeCol)),
+      vecCol, idCol))
   }
 
   /** OPQ proper — the NON-PARAMETRIC alternating optimization of
@@ -289,75 +275,60 @@ object PqIndex {
     * the ADC tables get strictly tighter than the random-rotation
     * baseline on anisotropic data.
     *
-    * Scale shape: step 1 is the sampled Lloyd's fit (slim stats
-    * shuffles only); step 2 is ONE mapPartitions pass over the cached
-    * sample accumulating the dim×dim cross matrix per partition
-    * (dim² doubles cross the network per partition, independent of
-    * row count — the genuine per-partition-imperative case), and the
-    * SVD runs driver-side on that dim×dim matrix via breeze (bundled
-    * with Spark). The full corpus is touched once at the end for lazy
-    * encoding. */
+    * Training shape: one top-N collect (two for a large frame) brings
+    * the `sampleFraction` sample to the driver, cut at 256 ×
+    * codesPerBook rows and at a driver byte budget
+    * ([[LocalFit.trainingSample]]); both half-steps run in-process on
+    * it ([[fitOpq]]) — step 1 is [[fitBooks]], step 2 accumulates the
+    * dim×dim cross matrix in double and takes its SVD via breeze
+    * (bundled with Spark). Scale shape: the full corpus is touched once
+    * at the end, by the lazy rotate-and-encode narrow map. */
   def trainOpq(df: DataFrame, vecCol: String, idCol: String, m: Int = 8,
       codesPerBook: Int = 256, seed: Long = 42L,
       sampleFraction: Double = 1.0, maxIter: Int = 8, opqIters: Int = 4,
       rotationSeed: Long = 7L): RotatedPqIndex = {
-    import graft.functions.VectorFunctions.mat_vec
+    val sample = trainingSample(df, vecCol, idCol, codesPerBook, seed,
+      sampleFraction, "OPQ codebooks")
+    val (r, books) = fitOpq(sample, m, codesPerBook, seed, maxIter,
+      opqIters, rotationSeed)
+    rotatedIndex(df, vecCol, idCol, r, books)
+  }
+
+  /** The OPQ alternation on a collected training sample: returns the
+    * rotation and the codebooks fitted for it (shared by [[trainOpq]]
+    * and IVF-OPQ's residual fit). */
+  private[operators] def fitOpq(sample: Array[Array[Float]], m: Int,
+      codesPerBook: Int, seed: Long, maxIter: Int, opqIters: Int,
+      rotationSeed: Long): (Array[Array[Float]], Array[Array[Array[Float]]]) = {
     require(opqIters >= 1, "need at least one alternation")
-    val dim = probeDim(df, vecCol)
-    require(dim % m == 0, s"vector dim $dim must divide into $m subspaces")
-    val subDim = dim / m
-    val spark = df.sparkSession
-    val sample =
-      (if (sampleFraction >= 1.0) df else df.sample(sampleFraction, seed))
-        .select(col(vecCol)).cache()
-    try {
-      var r = randomRotation(dim, rotationSeed)
-      var books: Array[Array[Array[Float]]] = null
-      var it = 0
-      while (it < opqIters) {
-        // (1) refit codebooks for the current rotation — fewer Lloyd
-        // rounds per alternation; the outer loop provides the rest
-        books = fitBooks(sample.withColumn(vecCol, mat_vec(col(vecCol), r)),
-          vecCol, m, codesPerBook, seed, maxIter, subDim)
-        // (2) Procrustes update — skip after the last codebook fit so
-        // the returned books always match the returned rotation
-        if (it < opqIters - 1) {
-          val bcBooks = spark.sparkContext.broadcast(books)
-          val bcR = spark.sparkContext.broadcast(r)
-          val cross = sample.rdd.mapPartitions { rows =>
-            val bks = bcBooks.value
-            val rot = bcR.value
-            val acc = Array.ofDim[Double](dim, dim)
-            rows.foreach { row =>
-              val x = row.getSeq[Float](0).toArray
-              val y = quantizeFloats(bks, matVecFloats(rot, x))
-              var a = 0
-              while (a < dim) {
-                val xa = x(a).toDouble
-                var b = 0
-                while (b < dim) { acc(a)(b) += xa * y(b); b += 1 }
-                a += 1
-              }
-            }
-            Iterator(acc)
-          }.reduce { (p, q) =>
-            var a = 0
-            while (a < dim) {
-              var b = 0
-              while (b < dim) { p(a)(b) += q(a)(b); b += 1 }
-              a += 1
-            }
-            p
+    val dim = sample(0).length
+    var r = randomRotation(dim, rotationSeed)
+    var books: Array[Array[Array[Float]]] = null
+    var it = 0
+    while (it < opqIters) {
+      // (1) refit codebooks for the current rotation
+      books = fitBooks(sample.map(matVecFloats(r, _)), m, codesPerBook,
+        seed, maxIter)
+      // (2) Procrustes update — skip after the last codebook fit so
+      // the returned books always match the returned rotation
+      if (it < opqIters - 1) {
+        val cross = Array.ofDim[Double](dim, dim)
+        for (x <- sample) {
+          val y = quantizeFloats(books, matVecFloats(r, x))
+          var a = 0
+          while (a < dim) {
+            val xa = x(a).toDouble
+            val row = cross(a)
+            var b = 0
+            while (b < dim) { row(b) += xa * y(b); b += 1 }
+            a += 1
           }
-          r = procrustesRotation(cross)
         }
-        it += 1
+        r = procrustesRotation(cross)
       }
-      val rotated = df.withColumn(vecCol, mat_vec(col(vecCol), r))
-      new RotatedPqIndex(r, new PqIndex(books, rotated,
-        rotated.select(col(idCol),
-          pq_encode(col(vecCol), books).as(CodeCol)), vecCol, idCol))
-    } finally { sample.unpersist(); () }
+      it += 1
+    }
+    (r, books)
   }
 
   /** `R = V Uᵀ` for the cross matrix `M = Σ x ŷᵀ = U S Vᵀ` — the
@@ -479,37 +450,17 @@ object PqIndex {
       idCol)
 
   /** Per-subspace seeding: the first `codesPerBook` DISTINCT subvectors
-    * in seeded hash order (one window pass over the exploded sample;
-    * the 4× oversample absorbs duplicate-heavy data, and the collected
-    * slice is m × 4k rows — driver-tiny). The window partitions by
-    * `sub` (only m reducers), which is fine exactly because it runs on
-    * the TRAINING SAMPLE — keep `sampleFraction` sized so the sample
-    * fits a handful of executors; the full corpus never passes through
-    * this window. */
-  private def seedBooks(exploded: DataFrame, m: Int, codesPerBook: Int,
-      seed: Long): Array[Array[Array[Float]]] = {
-    val w = Window.partitionBy("sub")
-      .orderBy(col("__h"), col("subvec"))
-    val over = exploded
-      .withColumn("__h", hash(col("subvec"), lit(seed.toInt)))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= codesPerBook * 4)
-      .select("sub", "subvec").collect()
-    val books = Array.fill(m)(
-      scala.collection.mutable.ArrayBuffer[Array[Float]]())
-    val seen = Array.fill(m)(scala.collection.mutable.HashSet[Seq[Float]]())
-    for (r <- over) {
-      val s = r.getInt(0)
-      val v = r.getSeq[Float](1)
-      if (books(s).length < codesPerBook && seen(s).add(v))
-        books(s) += v.toArray
-    }
-    books.map { b =>
-      require(b.nonEmpty, "subspace has no vectors to seed from")
-      // pad under-populated books with their first seed (inert: a
-      // duplicate centroid never wins the lowest-index argmin tie)
+    * in seeded hash order (`hash(subvec, seed)`, [[LocalFit.hashOrdered]]),
+    * drawn from the first 4 × codesPerBook of that order — the 4×
+    * oversample absorbs duplicate-heavy data. Under-populated books pad
+    * by repeating their first seed: a duplicate centroid never wins the
+    * lowest-index argmin tie, so padding is inert. */
+  private def seedBooks(subs: Array[Array[Array[Float]]], codesPerBook: Int,
+      seed: Long): Array[Array[Array[Float]]] =
+    subs.map { vs =>
+      val b = LocalFit.firstDistinct(
+        LocalFit.hashOrdered(vs, seed).take(codesPerBook * 4), codesPerBook)
       while (b.length < codesPerBook) b += b.head.clone()
       b.toArray
     }
-  }
 }

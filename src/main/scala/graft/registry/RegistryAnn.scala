@@ -588,10 +588,11 @@ private[graft] object RegistryAnn {
     // sensitive → rows-only check (recall properties are unit-tested)
     "ivf_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      // fit on a quarter sample: Lloyd's iteration cost is O(sample ×
-      // nClusters) and the seeding top-N scans only the sample, while
-      // the final cell assignment (a narrow codegen'd map) still covers
-      // the full data — at 100 TB the build is an offline job anyway
+      // fit on a quarter sample: one collect brings it (capped at 256
+      // rows per centroid) to the driver, where seeding and Lloyd's run
+      // in-process, while the final cell assignment (a narrow codegen'd
+      // map) still covers the full data — at 100 TB the build is an
+      // offline job anyway
       val idx = graft.operators.IvfIndex.build(emb, "embedding", "vec_id",
         nClusters = 16, maxIter = 8, sampleFraction = 0.25)
       val q = emb.filter(col("vec_id") === 0).select("embedding")

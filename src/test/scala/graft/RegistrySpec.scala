@@ -30,6 +30,12 @@ class RegistrySpec extends AnyFunSuite {
       s"fit queries must be engine queries, not gate twins: $overlap")
   }
 
+  test("artifact builds are counted in build_sec only, never also " +
+      "in twins_sec") {
+    val overlap = SparkEntry.gateTwins intersect SparkEntry.artifactBuilds
+    assert(overlap.isEmpty, s"builds double-counted as twins: $overlap")
+  }
+
   test("query names are shell- and filename-safe (Verify writes " +
       "outDir/<name>)") {
     val bad = SparkEntry.queries.keySet

@@ -95,4 +95,28 @@ class MlpBridgeSpec extends SparkSpec {
       MlpBridge.trainClassifier(df, "vector", "y")
     }
   }
+
+  test("classifier split: train rows equal sampleBy's for the same seed, " +
+      "the holdout is their exact complement") {
+    import org.apache.spark.sql.functions._
+    val prepared = clustered.repartition(3)
+      .withColumn("label", when(col("y") === "a", 0.0)
+        .when(col("y") === "b", 1.0).otherwise(2.0))
+      .cache()
+    try {
+      for (seed <- Seq(810L, 3L)) {
+        val (train, test) = MlpBridge.stratifiedSplit(prepared, seed)
+        def ids(df: org.apache.spark.sql.DataFrame): Set[String] =
+          df.select("id").collect().map(_.getString(0)).toSet
+        val want = ids(prepared.stat.sampleBy("label",
+          Map(0.0 -> 0.75, 1.0 -> 0.75, 2.0 -> 0.75), seed))
+        val trainIds = ids(train)
+        val testIds = ids(test)
+        assert(trainIds == want)
+        assert((trainIds intersect testIds).isEmpty)
+        assert((trainIds ++ testIds) == ids(prepared))
+        assert(train.count() + test.count() == 180L)
+      }
+    } finally { prepared.unpersist(); () }
+  }
 }

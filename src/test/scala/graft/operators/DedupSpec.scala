@@ -687,4 +687,50 @@ class DedupSpec extends SparkSpec {
         "cluster", Seq("n_members"))
     }
   }
+
+  test("misDropped: in-process and distributed rounds drop identical ids " +
+      "(chain, star, triangle, chain longer than maxRounds)") {
+    import spark.implicits._
+    def dropped(edges: Seq[(Long, Long)], maxRounds: Int,
+        localBound: Int): Set[Long] = {
+      val pairs = edges.toDF("idA", "idB")
+      Dedup.misDropped(pairs, maxRounds, localBound)
+        .collect().map(_.getLong(0)).toSet
+    }
+    val chain = (1L to 5L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val star = (2L to 6L).map(1L -> _) ++ (7L to 9L).map(_ -> 10L)
+    val triangle = Seq(1L -> 2L, 1L -> 3L, 2L -> 3L)
+    val longChain = (1L to 30L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val cases = Seq(
+      ("chain", chain, 50, Set(2L, 4L)),
+      ("star", star, 50, (2L to 6L).toSet + 10L),
+      ("triangle", triangle, 50, Set(2L, 3L)),
+      // 5 rounds settle ids 1..6; 7..30 stay undecided and are KEPT
+      ("long chain", longChain, 5, Set(2L, 4L, 6L)))
+    for ((name, edges, rounds, want) <- cases) {
+      val local = dropped(edges, rounds, Dedup.LocalPairBound)
+      val distributed = dropped(edges, rounds, localBound = 0)
+      assert(local == distributed, s"$name: $local vs $distributed")
+      assert(local == want, s"$name: $local")
+    }
+    // non-long ids take the same in-process path
+    val strPairs = Seq("a" -> "b", "a" -> "c", "b" -> "c").toDF("idA", "idB")
+    assert(Dedup.misDropped(strPairs).collect().map(_.getString(0)).toSet ==
+      Set("b", "c"))
+  }
+
+  test("misDropped computes the pair frame once on the distributed side") {
+    import spark.implicits._
+    val evals = spark.sparkContext.longAccumulator("pair evaluations")
+    val tap = udf { (id: Long) => evals.add(1); id }.asNondeterministic()
+    val edges = (1L to 40L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val pairs = edges.toDF("idA", "idB").repartition(4)
+      .select(tap(col("idA")).as("idA"), col("idB"))
+    // 39 pairs over a bound of 5 (a bound of 0 would let Spark's limit-1
+    // rewrite of the distinct evaluate a single row)
+    val dropped = Dedup.misDropped(pairs, localBound = 5)
+      .collect().map(_.getLong(0)).toSet
+    assert(dropped == (2L to 40L by 2).toSet)
+    assert(evals.sum == edges.length)
+  }
 }

@@ -209,4 +209,45 @@ class IvfIndexSpec extends SparkSpec {
     val refreshed = grown.refreshCentroids()
     assert(refreshed.health().meanQuantErr <= drifted.meanQuantErr)
   }
+
+  test("fitted centroids are bit-identical for 1 and 7 input partitions") {
+    def fit(parts: Int) = IvfIndex.build(emb.repartition(parts),
+      "embedding", "vec_id", nClusters = 16).centroids.map(_.toSeq).toSeq
+    val one = fit(1)
+    assert(one == fit(7))
+    assert(one == index.centroids.map(_.toSeq).toSeq)
+  }
+
+  test("bad training input raises a named error, never an NPE") {
+    import spark.implicits._
+    def err(df: org.apache.spark.sql.DataFrame): String =
+      intercept[IllegalArgumentException] {
+        IvfIndex.build(df, "embedding", "vec_id", nClusters = 4)
+      }.getMessage
+    val good = (0 until 20).map(i => (i.toLong, Array(i.toFloat, 1f)))
+    assert(err(good.toDF("vec_id", "embedding").filter("vec_id < 0"))
+      .contains("empty"))
+    assert(err((good :+ ((99L, null.asInstanceOf[Array[Float]])))
+      .toDF("vec_id", "embedding")).contains("null vectors"))
+    assert(err((good :+ ((99L, Array(1f, 2f, 3f))))
+      .toDF("vec_id", "embedding")).contains("mixed vector dims"))
+    assert(err((0 until 20).map(i => (i.toLong, Array(1f, 1f)))
+      .toDF("vec_id", "embedding")).contains("distinct vectors"))
+  }
+
+  test("a vector with more copies than the sample cap still seeds every " +
+      "cell") {
+    import spark.implicits._
+    // 256 × 2 = 512 rows cap; [1, 0] alone fills it many times over
+    val crowded = Seq.tabulate(1000)(i => (i.toLong, Array(1f, 0f))) ++
+      Seq((1000L, Array(0f, 1f)), (1001L, Array(5f, 5f)))
+    val sameId = Seq.fill(1000)((1L, Array(1f, 0f))) ++
+      Seq((2L, Array(0f, 1f)), (3L, Array(5f, 5f)))
+    for (rows <- Seq(crowded, sameId); seed <- 0L until 6L) {
+      val idx = IvfIndex.build(rows.toDF("vec_id", "embedding"), "embedding",
+        "vec_id", nClusters = 2, seed = seed)
+      assert(idx.centroids.length == 2, s"seed $seed")
+      assert(idx.centroids.map(_.toSeq).distinct.length == 2, s"seed $seed")
+    }
+  }
 }

@@ -89,4 +89,26 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(meanOpq >= meanPlain - 0.15,
       s"IVF-OPQ recall $meanOpq far below plain IVF-PQ $meanPlain")
   }
+
+  test("cells and codebooks are bit-identical for 1 and 7 input " +
+      "partitions; bad training input raises a named error") {
+    def fit(parts: Int) = {
+      val idx = IvfPqIndex.build(emb.repartition(parts), "embedding",
+        "vec_id", nClusters = 8, m = 8, codesPerBook = 32)
+      (idx.cells.map(_.toSeq).toSeq,
+        idx.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
+    }
+    assert(fit(1) == fit(7))
+    val nullVec = Seq((1L, Array(1f, 2f)), (2L, null.asInstanceOf[Array[Float]]))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      IvfPqIndex.build(nullVec, "embedding", "vec_id", nClusters = 2, m = 2,
+        codesPerBook = 4)
+    }
+    assert(e.getMessage.contains("null vectors"))
+    intercept[IllegalArgumentException] {
+      IvfPqIndex.build(emb.filter("vec_id < 0"), "embedding", "vec_id",
+        nClusters = 2, m = 2, codesPerBook = 4)
+    }
+  }
 }

@@ -242,4 +242,52 @@ class PqIndexSpec extends SparkSpec {
       assert(refined == exact, s"refined $refined vs exact $exact")
     }
   }
+
+  test("codebooks (PQ and OPQ) are bit-identical for 1 and 7 input " +
+      "partitions") {
+    val df = clustered().toDF("vid", "vec")
+    def books(b: Array[Array[Array[Float]]]) = b.map(_.map(_.toSeq).toSeq).toSeq
+    def pq(parts: Int) = books(PqIndex.train(df.repartition(parts), "vec",
+      "vid", m = 4, codesPerBook = 8).codebooks)
+    def opq(parts: Int) = {
+      val idx = PqIndex.trainOpq(df.repartition(parts), "vec", "vid", m = 4,
+        codesPerBook = 4, opqIters = 3)
+      (idx.rotation.map(_.toSeq).toSeq, books(idx.inner.codebooks))
+    }
+    assert(pq(1) == pq(7))
+    assert(opq(1) == opq(7))
+  }
+
+  test("bad training input raises a named error in train and trainOpq") {
+    val good = clustered()
+    val cases = Seq(
+      "empty" -> good.toDF("vid", "vec").filter("vid < 0"),
+      "null vectors" ->
+        (good :+ ((999L, null.asInstanceOf[Array[Float]]))).toDF("vid", "vec"),
+      "mixed vector dims" ->
+        (good :+ ((999L, Array.fill(4)(1f)))).toDF("vid", "vec"),
+      "distinct vectors" ->
+        good.map { case (id, _) => (id, Array.fill(8)(1f)) }.toDF("vid", "vec"))
+    for ((what, df) <- cases) {
+      val a = intercept[IllegalArgumentException] {
+        PqIndex.train(df, "vec", "vid", m = 4, codesPerBook = 4)
+      }
+      assert(a.getMessage.contains(what), a.getMessage)
+      val b = intercept[IllegalArgumentException] {
+        PqIndex.trainOpq(df, "vec", "vid", m = 4, codesPerBook = 4)
+      }
+      assert(b.getMessage.contains(what), b.getMessage)
+    }
+  }
+
+  test("a vector with more copies than the sample cap does not fail the fit") {
+    // 256 × 2 = 512 rows cap; one vector fills it many times over
+    val rows = Seq.fill(1000)((1L, Array(1f, 0f, 1f, 0f))) ++
+      Seq((2L, Array(0f, 1f, 0f, 1f)), (3L, Array(5f, 5f, 5f, 5f)))
+    for (seed <- 0L until 6L) {
+      val idx = PqIndex.train(rows.toDF("vid", "vec"), "vec", "vid", m = 2,
+        codesPerBook = 2, seed = seed)
+      assert(idx.codes.count() == 1002, s"seed $seed")
+    }
+  }
 }
