@@ -1,34 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // dev-only config experiments (SPARK_GRAFT_EXTRA_CONF="k=v;k=v"):
-    // lets a config candidate be A/B-measured WITHOUT editing the
-    // committed session config. The driver never sets it, so its
-    // bench runs always measure the committed configuration.
-    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // explicit, not inherited from build.sbt javaOptions: bench and
-      // verify must agree on timestamp semantics whatever the harness
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // per-process warehouse — same isolation rationale as Verify;
-      // WarehouseDir wipes stale same-pid leftovers + self-cleans
-      .config("spark.sql.warehouse.dir", WarehouseDir.path)
-    val spark = extraConf.foldLeft(builder) {
-      case (b, (k, v)) => b.config(k, v) }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warmup so the alphabetically-first query doesn't
-    // absorb ~4s of classloading; touches no benchmark data.
-    spark.range(1000000).selectExpr("sum(id)", "count(distinct id % 100)")
-      .collect()
+    val spark = GraftSession.local()
+    Harness.warmUp(spark)
     // A failed query must NOT silently record a timing (round-1 defect:
     // errors were swallowed into -1L counts). Failures are excluded
     // from `queries`/total and reported in `errors`.
@@ -36,13 +11,7 @@ object Bench {
     // per-query codegen + parquet-footer first-touch costs that at toy
     // scale dominate the actual operator time and made round-over-round
     // numbers swing ~2x.
-    // dev-only subset filter (SPARK_GRAFT_ONLY=q1,q2): iterate on a
-    // few queries without a full pass. Driver leaves it unset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val runs = picked.map { case (name, fn) =>
+    val runs = Harness.queries.map { case (name, fn) =>
       def once(): Either[String, Double] = {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
@@ -78,8 +47,9 @@ object Bench {
     val coldOk = runs.collect { case (n, _, Some(sec)) => n -> sec }
     val failed = runs.collect { case (n, Left(err), _) => n -> err }
     def f2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val errs = failed.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    def entries(kvs: Seq[(String, String)]): String = kvs
+      .map { case (k, v) => Harness.jsonString(k) + ":" + v }.mkString("{", ",", "}")
+    val errs = entries(failed.map { case (k, v) => k -> Harness.jsonString(v) })
     val total = ok.map(_._2).sum
     // engine vs oracle-twin split: `total` stays the all-queries sum
     // (driver contract), but the subtotals let round-over-round
@@ -106,12 +76,12 @@ object Bench {
     // final line is length-budgeted: slowest queries get individual
     // entries, the remainder is folded into fast_n/fast_sec. The complete
     // per-query map is printed earlier (it may scroll out of the window).
-    val allQs = ok.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f2(v) }.mkString("{", ",", "}")
-    val coldQs = coldOk.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f2(v) }.mkString("{", ",", "}")
+    def secs(kvs: Seq[(String, Double)]): String =
+      entries(kvs.sortBy(_._1).map { case (k, v) => k -> f2(v) })
+    val allQs = secs(ok)
+    val coldQs = secs(coldOk)
     val coldTotal = coldOk.map(_._2).sum
-    System.out.println(s"""[bench-full] {"metric":"total","value":${f2(total)},"unit":"sec","engine_sec":${f2(engineSec)},"twins_sec":${f2(twinsSec)},"fit_sec":${f2(fitSec)},"build_sec":${f2(buildSec)},"cold_total":${f2(coldTotal)},"queries":$allQs,"queries_cold":$coldQs,"errors":$errs,"sf":"$sfDir"}""")
+    System.out.println(s"""[bench-full] {"metric":"total","value":${f2(total)},"unit":"sec","engine_sec":${f2(engineSec)},"twins_sec":${f2(twinsSec)},"fit_sec":${f2(fitSec)},"build_sec":${f2(buildSec)},"cold_total":${f2(coldTotal)},"queries":$allQs,"queries_cold":$coldQs,"errors":$errs,"sf":${Harness.jsonString(sfDir)}}""")
     val bySlow = ok.sortBy(-_._2)
     val budget = 1250 // chars for the per-query map body
     val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
@@ -122,8 +92,7 @@ object Bench {
       if (used + w <= budget) { kept += (k -> v); used += w }
     }
     val fast = ok.filterNot(e => kept.exists(_._1 == e._1))
-    val qs = kept.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f2(v) }.mkString("{", ",", "}")
+    val qs = secs(kept.toSeq)
     // Stop Spark BEFORE printing the summary so no shutdown log line can
     // land after it in a merged stdout/stderr capture; OFF silences the
     // shutdown-hook loggers that would otherwise fire after main returns.
@@ -133,7 +102,7 @@ object Bench {
     // the driver's PERF can track per-process first-run cost (every
     // memoized build + codegen) and the explicit build-line subtotal
     // round-over-round without parsing the [bench-full] dump
-    println(s"""{"metric":"total","value":${f2(total)},"unit":"sec","engine_sec":${f2(engineSec)},"twins_sec":${f2(twinsSec)},"fit_sec":${f2(fitSec)},"build_sec":${f2(buildSec)},"cold_total":${f2(coldTotal)},"queries":$qs,"fast_n":${fast.size},"fast_sec":${f2(fast.map(_._2).sum)},"errors":$errs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f2(total)},"unit":"sec","engine_sec":${f2(engineSec)},"twins_sec":${f2(twinsSec)},"fit_sec":${f2(fitSec)},"build_sec":${f2(buildSec)},"cold_total":${f2(coldTotal)},"queries":$qs,"fast_n":${fast.size},"fast_sec":${f2(fast.map(_._2).sum)},"errors":$errs,"sf":${Harness.jsonString(sfDir)}}""")
     System.out.flush()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -49,12 +49,8 @@ object SharedFrames {
     * [[Checkpoints.ConfKey]] does for reliable checkpoints). */
   val ArtifactsDirKey = "spark.graft.artifacts.dir"
 
-  // logical key (dir#key) -> (input fingerprint, artifact path).
-  // Keying the map on the LOGICAL key and storing the fingerprint in
-  // the value bounds the memo: an in-process regeneration of the same
-  // input replaces the entry instead of accumulating a stale one per
-  // stamp (the r17 ADVICE unbounded-memo item).
-  private val built = new ConcurrentHashMap[String, (String, String)]()
+  // logical key (dir#key) -> artifact path, stamped with `dir`
+  private val built = new Memo[String]
 
   /** Resolve a NEW unique artifact directory under the conf root. For
     * local roots the directory is created eagerly and registered for
@@ -65,16 +61,19 @@ object SharedFrames {
     val root = s.conf.getOption(ArtifactsDirKey).map(_.trim)
       .filter(_.nonEmpty).getOrElse(s.conf.get("spark.sql.warehouse.dir"))
     val name = "graft-shared-" + java.util.UUID.randomUUID().toString
-    val isLocal = !root.contains(":/") || root.startsWith("file:")
-    if (isLocal) {
-      val local = java.nio.file.Paths.get(
-        if (root.startsWith("file:")) new java.net.URI(root).getPath
-        else root)
-      val d = java.nio.file.Files.createDirectories(local.resolve(name))
-        .toAbsolutePath
+    val uri = new java.net.URI(root)
+    def local(path: String): String = {
+      val d = java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(path).resolve(name)).toAbsolutePath
       tempDirs.add(d)
       d.toString
-    } else s"${root.stripSuffix("/")}/$name"
+    }
+    uri.getScheme match {
+      case null => local(root)
+      // `file:relative` is an opaque URI: no path, only a scheme-specific part
+      case "file" => local(Option(uri.getPath).getOrElse(uri.getSchemeSpecificPart))
+      case _ => s"${root.stripSuffix("/")}/$name"
+    }
   }
 
   // deleteOnExit cannot remove a NON-EMPTY directory, so each local
@@ -82,7 +81,7 @@ object SharedFrames {
   // shutdown hook — without it every process run leaks its materialized
   // parquet until external cleanup.
   private val tempDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+    ConcurrentHashMap.newKeySet[java.nio.file.Path]()
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       tempDirs.forEach { root =>
@@ -99,77 +98,23 @@ object SharedFrames {
     }, "graft-shared-frames-cleanup"))
   }
 
-  /** The md5 fingerprint of the parquet files under `dir` (relative
-    * path, inode fileKey, size, ns mtime — see [[fingerprinted]]).
-    * Package-private so registry-side memos that must key on input
-    * CONTENT identity rather than the bare directory string (the
-    * bucketed-store build memo) share the exact same protection. */
-  private[graft] def inputFingerprint(dir: String): String = {
-    val root = java.nio.file.Paths.get(dir)
-    val fp =
-      if (!java.nio.file.Files.isDirectory(root)) "absent"
-      else {
-        val walk = java.nio.file.Files.walk(root)
-        try {
-          val entries = new java.util.ArrayList[String]()
-          walk.filter(p => java.nio.file.Files.isRegularFile(p))
-            .forEach { p =>
-              val attrs = java.nio.file.Files.readAttributes(
-                p, classOf[java.nio.file.attribute.BasicFileAttributes])
-              val inode = Option(attrs.fileKey).map(_.toString)
-                .getOrElse("nokey")
-              entries.add(root.relativize(p).toString + ":" + inode +
-                ":" + attrs.size + ":" + attrs.lastModifiedTime
-                  .to(java.util.concurrent.TimeUnit.NANOSECONDS))
-            }
-          java.util.Collections.sort(entries)
-          // md5, not hashCode: a 32-bit collision would silently serve
-          // a stale artifact — the exact failure the fingerprint closes
-          val md = java.security.MessageDigest.getInstance("MD5")
-          md.digest(String.join("\n", entries).getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
-        } finally walk.close()
-      }
-    fp
-  }
-
-  /** Memoized materialization: build `frame` once per (process, key),
-    * persist to a temp parquet, read back on every call. Exposed
-    * package-private for registry-side derivations whose building
-    * blocks live in SparkEntry (the md5 gate-twin pair kernel). */
+  /** Memoized materialization: build `frame` once per (process, key,
+    * input stamp), persist to a temp parquet, read back on every call.
+    * The stamp ([[Memo.stamp]] of `dir`) makes an in-process
+    * regeneration of the input rebuild instead of serving a stale
+    * artifact. Exposed package-private for registry-side derivations
+    * whose building blocks live in SparkEntry (the md5 gate-twin pair
+    * kernel). */
   private[graft] def materialized(s: SparkSession, dir: String,
-      key: String)(frame: => DataFrame): DataFrame = {
-    // The value carries the INPUT FINGERPRINT (relative path, inode
-    // fileKey, size, ns mtime per file — see [[inputFingerprint]]): a
-    // bare path key would silently serve a STALE artifact if the
-    // parquet under `dir` were regenerated in-process. The inode
-    // fileKey is the load-bearing field — an overwrite recreates every
-    // part file, so identity changes even inside one mtime tick.
-    // get + putIfAbsent, NOT computeIfAbsent: artifact builds NEST
-    // (the md5 pair build reads the shingle artifact), and a nested
-    // computeIfAbsent on the same ConcurrentHashMap throws
-    // IllegalStateException("Recursive update") whenever the two keys
-    // happen to share a bin. The worst case here is two threads
-    // building the same artifact concurrently into separate dirs
-    // — one wins the putIfAbsent, both read consistent data.
-    val logical = s"$dir#$key"
-    val fp = inputFingerprint(dir)
-    val existing = built.get(logical)
-    val path =
-      if (existing != null && existing._1 == fp) existing._2
-      else {
-        val p = s"${newArtifactDir(s)}/frame.parquet"
-        frame.write.mode("overwrite").parquet(p)
-        if (existing == null) {
-          val prev = built.putIfAbsent(logical, (fp, p))
-          if (prev != null && prev._1 == fp) prev._2 else { built.put(logical, (fp, p)); p }
-        } else { built.put(logical, (fp, p)); p } // regeneration: replace, don't accumulate
-      }
-    s.read.parquet(path)
-  }
+      key: String)(frame: => DataFrame): DataFrame =
+    s.read.parquet(built(s"$dir#$key", dir) { _ =>
+      val p = s"${newArtifactDir(s)}/frame.parquet"
+      frame.write.mode("overwrite").parquet(p)
+      p
+    })
 
   /** Memoized fit-offline index artifact: `build(root)` runs ONCE per
-    * (process, input-fingerprint, key), persisting a saved index under
+    * (process, input stamp, key), persisting a saved index under
     * the returned root; later calls return the same root for loads.
     * This is the registry-side stand-in for a scheduled index-build
     * job: the `*_saved_knn` queries measure load+search over the
@@ -178,20 +123,12 @@ object SharedFrames {
     * reported search time — the honest fit-offline/search-online
     * split). */
   private[graft] def materializedArtifact(s: SparkSession, dir: String,
-      key: String)(build: String => Unit): String = {
-    val logical = s"$dir#$key"
-    val fp = inputFingerprint(dir)
-    val existing = built.get(logical)
-    if (existing != null && existing._1 == fp) existing._2
-    else {
+      key: String)(build: String => Unit): String =
+    built(s"$dir#$key", dir) { _ =>
       val p = s"${newArtifactDir(s)}/artifact"
       build(p)
-      if (existing == null) {
-        val prev = built.putIfAbsent(logical, (fp, p))
-        if (prev != null && prev._1 == fp) prev._2 else { built.put(logical, (fp, p)); p }
-      } else { built.put(logical, (fp, p)); p }
+      p
     }
-  }
 
   /** Char-bigram LM scored documents table for `dir`:
     * (doc_id, n_bigrams, lm_score) from

@@ -37,68 +37,18 @@ object SparkEntry {
     * string join keys or explicit aliases, never `df("col")` column
     * references (which would be ambiguous/trivially-true across the
     * shared instance). Every registry consumer already does. */
-  // per-session map: the inner map keys on PATH and stores the stamp
-  // in the value, so a regenerated file REPLACES its entry (bounded —
-  // no stale stamps accumulate); stopped sessions are evicted on the
-  // next call (a DataFrame strongly references its session, so weak
-  // KEYS alone could never collect an entry).
-  private val tableMemo = new java.util.HashMap[
-    SparkSession,
-    java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]]()
+  // one Memo per session, keyed on the path (see [[Memo]]); stopped
+  // sessions are evicted on the next call (a DataFrame strongly
+  // references its session, so weak KEYS alone could never collect an
+  // entry).
+  private val tableMemo = new java.util.HashMap[SparkSession, Memo[DataFrame]]()
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val perSession = tableMemo.synchronized {
       tableMemo.keySet.removeIf(sess => sess.sparkContext.isStopped)
-      var m = tableMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[
-          String, (String, DataFrame)]()
-        tableMemo.put(s, m)
-      }
-      m
+      tableMemo.computeIfAbsent(s, _ => new Memo[DataFrame])
     }
     val path = s"$dir/$name.parquet"
-    val stamp = pathStamp(path)
-    val got = perSession.get(path)
-    if (got != null && got._1 == stamp) got._2
-    else {
-      val df = s.read.parquet(path)
-      if (got == null) {
-        val prev = perSession.putIfAbsent(path, (stamp, df))
-        if (prev != null && prev._1 == stamp) prev._2
-        else { perSession.put(path, (stamp, df)); df }
-      } else { perSession.put(path, (stamp, df)); df }
-    }
-  }
-
-  /** Identity stamp of a parquet path (file OR directory): inode,
-    * size, ns-mtime per regular file — the SharedFrames fingerprint
-    * discipline applied to base tables. Directory stamps digest the
-    * entry list with md5 (not 32-bit hashCode — a collision would
-    * silently serve a stale relation, the exact failure the stamp
-    * exists to close). */
-  private def pathStamp(path: String): String = {
-    import java.nio.file.{Files, Paths}
-    val p = Paths.get(path)
-    def stamp(f: java.nio.file.Path): String = {
-      val a = Files.readAttributes(f,
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      val inode = Option(a.fileKey).map(_.toString).getOrElse("nokey")
-      s"$inode:${a.size}:${a.lastModifiedTime
-        .to(java.util.concurrent.TimeUnit.NANOSECONDS)}"
-    }
-    if (Files.isRegularFile(p)) stamp(p)
-    else if (Files.isDirectory(p)) {
-      val walk = Files.walk(p)
-      try {
-        val entries = new java.util.ArrayList[String]()
-        walk.filter(f => Files.isRegularFile(f))
-          .forEach(f => entries.add(p.relativize(f).toString + ":" + stamp(f)))
-        java.util.Collections.sort(entries)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.digest(String.join("\n", entries).getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-      } finally walk.close()
-    } else "absent"
+    perSession(path, path)(_ => s.read.parquet(path))
   }
 
   /** Modulus of the exact-Jaccard AUDIT STRATUM (`doc_id % m == 0`),
@@ -122,18 +72,9 @@ object SparkEntry {
     * (keyed by the same content fingerprint as SharedFrames), and the
     * count() behind it used to re-run as a driver job on every call
     * site of every bench rerun. */
-  // keyed on the LOGICAL (dir, knob) key with the content fingerprint
-  // in the value: a regenerated input replaces its entry instead of
-  // accumulating one per stamp (bounded, like tableMemo/SharedFrames)
-  private val scalarMemos = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Long)]()
-  private def scalarMemo(dir: String, key: String)(v: => Long): Long = {
-    val logical = s"$dir#$key"
-    val fp = SharedFrames.inputFingerprint(dir)
-    val got = scalarMemos.get(logical)
-    if (got != null && got._1 == fp) got._2
-    else { val computed = v; scalarMemos.put(logical, (fp, computed)); computed }
-  }
+  private val scalarMemos = new Memo[Long]
+  private def scalarMemo(dir: String, key: String)(v: => Long): Long =
+    scalarMemos(s"$dir#$key", dir)(_ => v)
 
   /** Modulus of the EMBEDDING audit stratum (`vec_id % m == 0`) for
     * the SRP LSH gate query: the registered query pins 2×8
@@ -427,16 +368,14 @@ object SparkEntry {
     * `lang → option1`, `source → option2`, `embedding → vector`
     * (FIXTURES.md §B mapping); ids follow target order. */
   // process-local memo for the bucketed store's two-batch build (see
-  // store_bucketed_knn's registration comment). Keyed by corpus dir
-  // PLUS the SharedFrames input fingerprint, and the bucketed table
-  // name carries the same fingerprint: a bare-dir key over one global
-  // table name would silently serve corpus A's bucketed rows to a
-  // query over corpus B (or stale rows after an in-process
-  // regeneration of the same dir). A superseded same-dir table leaks
-  // in the warehouse until process exit — acceptable for a gate/bench
-  // process, stated here because it is the cost of the safety.
-  private[graft] val bucketedStoreMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, VectorStore]()
+  // store_bucketed_knn's registration comment), keyed by corpus dir.
+  // The bucketed table name carries the dir's stamp: one global table
+  // name would silently serve corpus A's bucketed rows to a query over
+  // corpus B (or stale rows after an in-process regeneration of the
+  // same dir). A superseded same-dir table leaks in the warehouse
+  // until process exit — acceptable for a gate/bench process, stated
+  // here because it is the cost of the safety.
+  private[graft] val bucketedStoreMemo = new Memo[VectorStore]
 
   private[graft] def storeOf(s: SparkSession, dir: String): VectorStore = {
     val in = storeBase(s, dir)

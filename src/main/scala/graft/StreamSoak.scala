@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -129,14 +129,8 @@ object StreamSoak {
       .map(_.split(",").toSeq.map(_.trim.toInt)).getOrElse(Seq(dflt))
     val docRates = rates(3, 2000)
     val eventRates = rates(4, 20000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCores
+    val spark = GraftSession.local(cpus)
     val sections = new ArrayBuffer[String]
 
     // ---- Phase A: near-dup ingest (one run per offered rate) ----

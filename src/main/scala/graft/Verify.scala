@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
-  * oracle_sql.json for the DuckDB compare.
+  * oracle_sql.json for the DuckDB compare (`SPARK_GRAFT_ONLY` limits
+  * both to a subset, see [[Harness]]).
   *
   * Failures are loud: every query that throws is named, with its error,
   * in `<outDir>/failed.json` (written on every run, `{}` when all
@@ -10,58 +10,24 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet has TIMESTAMP(NANOS) which Spark rejects by
-      // default; read as long (epoch nanos) and convert where needed.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // PER-PROCESS warehouse: bucketed-table queries write managed
-      // tables; a shared ./spark-warehouse let a concurrent process
-      // (another Verify tier, a spec run) overwrite them mid-read —
-      // observed once as a bucketed_join count mismatch at sf1.
-      // WarehouseDir wipes stale same-pid leftovers + self-cleans.
-      .config("spark.sql.warehouse.dir", WarehouseDir.path)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    // dev aid: SPARK_GRAFT_VERIFY_ONLY=a,b,c gates a subset locally;
-    // the driver never sets it, so its runs always dump everything
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val failed = SparkEntry.queries.toSeq
-      .filter(kv => only.forall(_.contains(kv._1)))
-      .flatMap { case (name, fn) =>
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          None
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some(name -> String.valueOf(e.getMessage))
-        }
+    val failed = Harness.queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> String.valueOf(e.getMessage))
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter(kv => only.forall(_.contains(kv._1)))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/failed.json"),
-      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    }
+    def json(kvs: Iterable[(String, String)]): String = kvs
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(SparkEntry.oracleSql.filter(kv => Harness.selected(kv._1))))
+    Files.writeString(Paths.get(s"$outDir/failed.json"), json(failed))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries failed: " +

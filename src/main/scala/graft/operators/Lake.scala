@@ -351,7 +351,9 @@ object Lake {
     * check-then-write, NOT an atomic reservation — two writers whose
     * existence checks interleave before either writes can BOTH pass
     * and merge files into the same `gen=N` directory, a corrupt
-    * commit with a `_SUCCESS` marker. True mutual exclusion still
+    * commit with a `_SUCCESS` marker. Commits to one root from ONE
+    * JVM serialize on a per-root lock, so this needs writers in
+    * different processes; mutual exclusion across processes still
     * requires external coordination (a lock service, a single-writer
     * job queue) or an atomic-rename commit protocol; do not rely on
     * `errorifexists` as a lock.
@@ -437,9 +439,13 @@ object Lake {
     // rethrows; the error message names that possibility). Only
     // NonFatal failures are classified at all — OOM/interrupt
     // propagate untouched.
+    val rootPath = new Path(root)
+    val lock = commitLocks.computeIfAbsent(
+      rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(rootPath).toString, _ => new Object)
     var attempt = 0
     var committed = -1L
-    while (committed < 0L) {
+    while (committed < 0L) lock.synchronized {
       val dirs = genDirs(spark, root)
       val gen = genHook(dirs.fold(-1L)(ds =>
         if (ds.isEmpty) -1L else ds.map(_._1).max) + 1L)
@@ -487,6 +493,10 @@ object Lake {
     }
     committed
   }
+
+  // qualified table root -> the lock its in-process commits hold
+  private val commitLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** True when `e` (or any cause in its chain) is the errorifexists
     * path-collision failure: Spark's PATH_ALREADY_EXISTS

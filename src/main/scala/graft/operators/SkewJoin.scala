@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 
 /** Salted equi-join for skewed keys (builder brief: "salting for
   * skew"). AQE's skew-join split handles most cases at runtime
-  * (enabled in [[graft.GraftSession]]); explicit salting remains the
+  * (on by default in Spark 4); explicit salting remains the
   * tool when one key dominates so hard that even split partitions
   * can't parallelize the build side — e.g. joining 100 TB of events
   * against a dimension where 30% of rows share one key.

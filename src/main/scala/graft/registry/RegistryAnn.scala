@@ -1053,8 +1053,7 @@ private[graft] object RegistryAnn {
     // (min-of-3 reports the search), and the append-dedup plan shape
     // stays asserted by PlanAuditSpec.
     "store_bucketed_knn" -> ((s, dir) => {
-      val fp = SharedFrames.inputFingerprint(dir)
-      val store = bucketedStoreMemo.computeIfAbsent(s"$dir@$fp", _ => {
+      val store = bucketedStoreMemo(dir, dir) { fp =>
         val in = storeBase(s, dir)
           .select(col("doc_id"), col("text").as("target"),
             col("lang").as("option1"), col("source").as("option2"),
@@ -1064,7 +1063,7 @@ private[graft] object RegistryAnn {
         st.setData(in.filter(col("doc_id") < 250).drop("doc_id"))
         st.setData(in.drop("doc_id"), append = true)
         st
-      })
+      }
       val q = t(s, dir, "embeddings").filter(col("vec_id") === 0)
         .select("embedding").head.getSeq[Float](0).toArray
       store.queryVectorWithInfo(q, k = 5)

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.{HashEmbedder, VectorFunctions}
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Manual end-to-end drive of the public API against real testdata.
@@ -10,12 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object DriveSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     import spark.implicits._
 
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

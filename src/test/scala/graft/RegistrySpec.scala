@@ -1,14 +1,16 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Registry hygiene — cheap invariants that make a registration typo
   * fail in CI instead of as a silent driver-gate anomaly: every oracle
   * SQL string must point at a registered query, and the bench
   * subtotal sets must name real queries (a misspelled entry would
   * silently misclassify seconds between engine/twins/fit). Pure map
-  * checks, no SparkSession. */
-class RegistrySpec extends AnyFunSuite {
+  * checks, plus the flagship entry query. */
+class RegistrySpec extends SparkSpec {
+
+  test("SparkEntry.entry, the flagship smoke query, returns rows") {
+    assert(SparkEntry.entry(spark).count() >= 1L)
+  }
 
   test("every oracleSql key is a registered query") {
     val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet

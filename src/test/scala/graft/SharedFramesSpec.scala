@@ -179,6 +179,22 @@ class SharedFramesSpec extends SparkSpec {
         files2.mkString(", "))
   }
 
+  test("an opaque relative file: artifacts root resolves against the " +
+      "working directory") {
+    val rel = "target/graft-file-root"
+    spark.conf.set(SharedFrames.ArtifactsDirKey, s"file:$rel")
+    try {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sfspec-fileroot-").toAbsolutePath.toString
+      Seq((1L, "lambda mu nu xi omicron")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val root = java.nio.file.Paths.get(rel).toAbsolutePath.toString
+      val files = SharedFrames.lmScoredDocs(spark, dir).inputFiles
+      assert(files.nonEmpty && files.forall(_.contains(root)),
+        s"artifact must live under $root, got: " + files.mkString(", "))
+    } finally spark.conf.unset(SharedFrames.ArtifactsDirKey)
+  }
+
   test("perplexityBucketsFromScored over the shared frame equals " +
       "perplexityBuckets run end-to-end") {
     val docs = spark.read.parquet(s"$fixtureDir/documents.parquet")

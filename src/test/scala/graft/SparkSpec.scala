@@ -3,24 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM per `sbt test` fork). */
+/** Shared local session for all suites (one JVM per `sbt test` fork):
+  * the harness factory at an explicit `local[4]`, whatever
+  * `SPARK_GRAFT_CPUS` says. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // per-process warehouse: keeps spec-written bucketed tables from
-      // racing a concurrently running Verify/Bench over a shared
-      // ./spark-warehouse (same rationale as Verify.scala);
-      // WarehouseDir wipes stale same-pid leftovers + self-cleans
-      .config("spark.sql.warehouse.dir", WarehouseDir.path)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

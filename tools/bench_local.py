@@ -63,7 +63,7 @@ def main() -> None:
     rnd = sys.argv[1]
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-    cpus = sys.argv[4] if len(sys.argv) > 4 else "32"
+    cpus = sys.argv[4] if len(sys.argv) > 4 else "4"
     only = sys.argv[6] if len(sys.argv) > 6 else ""
     results = []
     for i in range(runs):
