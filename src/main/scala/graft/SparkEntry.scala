@@ -51,6 +51,27 @@ object SparkEntry {
     perSession(path, path)(_ => s.read.parquet(path))
   }
 
+  /** The query vector of the single-query search lines: the
+    * `embedding` of `vec_id = 0` in `emb` (one job). */
+  private[graft] def queryVec(emb: DataFrame): Array[Float] =
+    emb.filter(col("vec_id") === 0).select("embedding")
+      .head.getSeq[Float](0).toArray
+
+  /** The first `n` `embedding`s of `emb` by `vec_id` — the fixed
+    * centroids of the oracle-checkable index lines (one job). */
+  private[graft] def firstVecs(emb: DataFrame, n: Int): Array[Array[Float]] =
+    emb.filter(col("vec_id") < n).orderBy("vec_id")
+      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+
+  /** Fixed PQ codebooks cut from `rows`: book `sub` holds each row's
+    * `sub`-th of `m` equal subvectors. */
+  private[graft] def sliceBooks(rows: Array[Array[Float]],
+      m: Int): Array[Array[Array[Float]]] = {
+    val subDim = rows(0).length / m
+    Array.tabulate(m)(sub =>
+      rows.map(v => v.slice(sub * subDim, (sub + 1) * subDim)))
+  }
+
   /** Modulus of the exact-Jaccard AUDIT STRATUM (`doc_id % m == 0`),
     * derived from the corpus size so the audit carries a fixed BUDGET
     * (~17k docs), not a fixed fraction: the exact kernel's meet volume

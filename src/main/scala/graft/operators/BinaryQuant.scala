@@ -11,8 +11,8 @@ import org.apache.spark.sql.DataFrame
   * 8 B) and the candidate metric becomes XOR+popcount, the cheapest
   * distance a CPU can evaluate. Candidates ranked by Hamming distance
   * are re-ranked by exact squared-L2 against the original vectors —
-  * the standard binary-quantization recall recovery (same
-  * `refineFactor` contract as [[SqIndex]]/[[PqIndex]]).
+  * the standard binary-quantization recall recovery (the [[Rerank]]
+  * `refineFactor` contract).
   *
   * Training-free: no Lloyd's, no codebooks, no range fit — encode is a
   * single codegen'd projection, so unlike PQ/IVF the WHOLE pipeline is
@@ -34,35 +34,20 @@ final class BinaryQuantIndex(
 
   import BinaryQuant.CodeCol
 
-  /** Approximate top-k. Returns (idCol, distance) ascending — the
-    * Hamming distance (as double) when `refineFactor == 1`, exact
-    * squared-L2 over the re-ranked k·refineFactor candidates
-    * otherwise. */
-  def query(q: Array[Float], k: Int, refineFactor: Int = 8): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(refineFactor >= 1, "refineFactor must be >= 1")
-    val cand = codes
-      .withColumn("__hd", hamming_dist(col(CodeCol),
-        typedLit(BinaryQuant.pack(q))))
-      .orderBy(col("__hd").asc, col(idCol).asc)
-      .limit(k * refineFactor)
-    if (refineFactor == 1)
-      cand.select(col(idCol), col("__hd").cast("double").as("distance"))
-    else cand.select(col(idCol))
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("distance", squared_l2(col(vecCol), typedLit(q)))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("distance"))
-  }
+  /** Approximate top-k under the [[Rerank]] contract: Hamming
+    * distances pick the candidates. */
+  def query(q: Array[Float], k: Int, refineFactor: Int = 8): DataFrame =
+    Rerank.topK(
+      codes.withColumn("__hd", hamming_dist(col(CodeCol),
+        typedLit(BinaryQuant.pack(q)))),
+      "__hd", k, refineFactor, corpus, vecCol, idCol, q)
 
   /** Batch ANN join: per query row the approximate top-k corpus rows,
     * (queryIdCol, idCol, distance). The query side must be
     * broadcast-small (same contract as [[Similarity.topKJoin]]). */
   def queryBatch(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, k: Int, refineFactor: Int = 8): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(refineFactor >= 1, "refineFactor must be >= 1")
+    val pool = Rerank.poolSize(k, refineFactor)
     // mirror build()'s null-code discipline on the query side: a null
     // query vector would yield null __qbits/__hd, and the ascending
     // Hamming sort puts NULLS FIRST — that query would get k arbitrary
@@ -76,7 +61,7 @@ final class BinaryQuantIndex(
     val cand = codes.crossJoin(broadcast(q))
       .withColumn("__hd", hamming_dist(col(CodeCol), col("__qbits")))
       .withColumn("__rn", row_number().over(wHam))
-      .filter(col("__rn") <= k * refineFactor)
+      .filter(col("__rn") <= pool)
       .select(col(queryIdCol), col(idCol), col("__qvec"))
     val wDist = Window.partitionBy(queryIdCol)
       .orderBy(col("distance").asc, col(idCol).asc)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import graft.functions.VectorOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -19,8 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Query: rank cells driver-side against the query (nCells·dim
   * flops), scan the nprobe pruned partitions with one packed-word
   * Hamming kernel (the query's code is a literal — no per-branch
-  * recompute), union the branches into a global (hd, id) top-
-  * (k·refine) heap, re-rank exactly in the original float space. No
+  * recompute) into one global (hd, id) top-(k·refine) heap, re-rank
+  * exactly in the original float space ([[Rerank]]). No
   * corpus shuffle anywhere; the codes table partitioned by cell reads
   * nprobe directories at 8 bytes/row for 64-dim vectors.
   */
@@ -32,35 +31,16 @@ final class IvfBinaryIndex(
 
   def nCells: Int = cells.length
 
-  /** Approximate top-k: (idCol, distance) ascending — Hamming (as
-    * double) when `refineFactor == 1`, exact squared-L2 over the
-    * re-ranked candidates otherwise. */
+  /** Approximate top-k under the [[Rerank]] contract: Hamming
+    * distances over the probed cells pick the candidates. */
   def query(q: Array[Float], k: Int, nprobe: Int = 4,
       refineFactor: Int = 8): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(nprobe >= 1 && nprobe <= nCells,
-      s"nprobe must be in [1, $nCells]")
-    require(refineFactor >= 1, "refineFactor must be >= 1")
-    val probed = cells.zipWithIndex
-      .map { case (c, i) => (VectorOps.squaredL2Floats(q, c), i) }
-      .sortBy { case (d, i) => (d, i) }
-      .take(nprobe).map(_._2)
-    val qbits = BinaryQuant.pack(q)
-    val cand = table
-      .filter(col(IvfIndex.ClusterCol).isin(probed.map(Integer.valueOf): _*))
-      .withColumn("__hd",
-        hamming_dist(col(BinaryQuant.CodeCol), typedLit(qbits)))
-      .orderBy(col("__hd").asc, col(idCol).asc)
-      .limit(k * refineFactor)
-    if (refineFactor == 1)
-      cand.select(col(idCol), col("__hd").cast("double").as("distance"))
-        .limit(k)
-    else cand.select(col(idCol))
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("distance", squared_l2(col(vecCol), typedLit(q)))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("distance"))
+    val probed = IvfIndex.probe(cells, q, nprobe).map(Integer.valueOf)
+    Rerank.topK(
+      table.filter(col(IvfIndex.ClusterCol).isin(probed: _*))
+        .withColumn("__hd", hamming_dist(col(BinaryQuant.CodeCol),
+          typedLit(BinaryQuant.pack(q)))),
+      "__hd", k, refineFactor, corpus, vecCol, idCol, q)
   }
 
   /** Persist the codes table partitioned by cell — probed queries read

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.VectorOps
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** IVF (inverted-file) approximate k-NN — the 100 TB scale path
   * (SURVEY §7.1 step 7; faiss IVF-Flat semantics: exact search inside
@@ -32,20 +32,14 @@ final class IvfIndex(
   /** Cluster ids nearest to `q`, closest first (driver-side — the
     * centroid table is tiny by construction). */
   def rankCells(q: Array[Float]): Array[Int] =
-    centroids.zipWithIndex
-      .map { case (c, i) => (VectorOps.squaredL2Floats(q, c), i) }
-      .sortBy { case (d, i) => (d, i) }
-      .map(_._2)
+    IvfIndex.probe(centroids, q, nClusters)
 
   /** Approximate top-k: exact search over the `nprobe` nearest cells. */
-  def query(q: Array[Float], k: Int, nprobe: Int = 4): DataFrame = {
-    require(nprobe >= 1 && nprobe <= nClusters,
-      s"nprobe must be in [1, $nClusters]")
-    val cells = rankCells(q).take(nprobe).toSeq
+  def query(q: Array[Float], k: Int, nprobe: Int = 4): DataFrame =
     Similarity.topK(
-      assigned.filter(col(IvfIndex.ClusterCol).isin(cells: _*)),
+      assigned.filter(col(IvfIndex.ClusterCol)
+        .isin(IvfIndex.probe(centroids, q, nprobe).toSeq: _*)),
       vecCol, idCol, q, k)
-  }
 
   /** Batch ANN join: approximate top-k corpus neighbors for EVERY row
     * of a query DataFrame — the scale path when the query side is too
@@ -198,6 +192,33 @@ object IvfIndex {
   final case class Health(
       nCells: Int, nonEmptyCells: Int, total: Long, maxCell: Long,
       imbalance: Double, meanQuantErr: Double, maxQuantErr: Double)
+
+  /** The `nprobe` cells nearest to `q`, closest first: squared-L2 to
+    * each centroid driver-side (the centroid table is tiny by
+    * construction), ties by cell id. */
+  private[operators] def probe(cells: Array[Array[Float]], q: Array[Float],
+      nprobe: Int): Array[Int] = {
+    require(nprobe >= 1 && nprobe <= cells.length,
+      s"nprobe must be in [1, ${cells.length}]")
+    cells.zipWithIndex
+      .map { case (c, i) => (VectorOps.squaredL2Floats(q, c), i) }
+      .sortBy { case (d, i) => (d, i) }
+      .take(nprobe).map(_._2)
+  }
+
+  /** One branch per probed cell of a cell-partitioned codes `table`,
+    * unioned: the cell's pruned partition scored by `score` of the
+    * query's residual against that cell's centroid, as
+    * (idCol, distance) — nprobe parallel pruned scans. */
+  private[operators] def residualBranches(table: DataFrame,
+      cells: Array[Array[Float]], q: Array[Float], nprobe: Int,
+      idCol: String)(score: Array[Float] => Column): DataFrame =
+    probe(cells, q, nprobe).toSeq.map { cell =>
+      val residQ = q.indices.map(i => q(i) - cells(cell)(i)).toArray
+      table.filter(col(ClusterCol) === cell)
+        .withColumn("distance", score(residQ))
+        .select(col(idCol), col("distance"))
+    }.reduce(_ unionByName _)
 
   /** Fit centroids on one bounded in-process sample, assign every row
     * its nearest centroid.

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import graft.functions.VectorOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -33,42 +32,20 @@ final class IvfPqIndex(
   def nCells: Int = cells.length
   def codesPerBook: Int = codebooks(0).length
 
-  /** Approximate top-k: (idCol, distance) ascending — ADC estimates
-    * when `refineFactor == 1`, exact squared-L2 over the re-ranked
-    * candidates otherwise. */
+  /** Approximate top-k under the [[Rerank]] contract: per probed cell,
+    * the ADC table of the query's residual scores that cell's codes. */
   def query(q: Array[Float], k: Int, nprobe: Int = 4,
       refineFactor: Int = 4): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(nprobe >= 1 && nprobe <= nCells,
-      s"nprobe must be in [1, $nCells]")
-    require(refineFactor >= 1, "refineFactor must be >= 1")
-    val probed = cells.zipWithIndex
-      .map { case (c, i) => (VectorOps.squaredL2Floats(q, c), i) }
-      .sortBy { case (d, i) => (d, i) }
-      .take(nprobe).map(_._2)
-    // per probed cell: its own residual ADC table over its own pruned
-    // partition — nprobe parallel pruned scans, unioned
-    val branches = probed.toSeq.map { cell =>
-      val raw = q.indices.map(i => q(i) - cells(cell)(i)).toArray
+    val branches = IvfIndex.residualBranches(table, cells, q, nprobe,
+      idCol) { raw =>
       // OPQ variant: codes live in the rotated residual space, so the
       // query residual rotates driver-side before the ADC table
       val residQ = rotation.fold(raw)(PqIndex.matVecFloats(_, raw))
-      val t = PqIndex.adcTable(codebooks, residQ)
-      table.filter(col(IvfIndex.ClusterCol) === cell)
-        .withColumn("distance",
-          pq_adc(col(PqIndex.CodeCol), t, codesPerBook))
-        .select(col(idCol), col("distance"))
+      pq_adc(col(PqIndex.CodeCol), PqIndex.adcTable(codebooks, residQ),
+        codesPerBook)
     }
-    val cand = branches.reduce(_ unionByName _)
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k * refineFactor)
-    if (refineFactor == 1) cand.limit(k)
-    else cand.drop("distance")
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("distance", squared_l2(col(vecCol), typedLit(q)))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("distance"))
+    Rerank.topK(branches, "distance", k, refineFactor, corpus, vecCol,
+      idCol, q)
   }
 
   /** Persist the compressed table partitioned by cell: probed queries

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import graft.functions.VectorOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -14,12 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The middle point of the compression/precision curve: cheaper to fit
   * than IVF-PQ (one min/max pass, no codebook training), 4× instead of
-  * 32× compression, tighter approximate distances. Query mirrors
-  * [[IvfPqIndex.query]]: rank cells driver-side, per probed cell fuse
-  * reconstruct-and-distance over that cell's pruned partition with the
-  * query's residual, union the nprobe branches into one global
-  * top-(k·refine), re-rank exactly in the original space. No corpus
-  * shuffle anywhere.
+  * 32× compression, tighter approximate distances. Query: rank cells
+  * driver-side, per probed cell fuse reconstruct-and-distance over that
+  * cell's pruned partition with the query's residual, union the nprobe
+  * branches into one global top-(k·refine), re-rank exactly in the
+  * original space ([[Rerank]]). No corpus shuffle anywhere.
   */
 final class IvfSqIndex(
     val cells: Array[Array[Float]],
@@ -31,37 +29,14 @@ final class IvfSqIndex(
   def nCells: Int = cells.length
   def dim: Int = lo.length
 
-  /** Approximate top-k: (idCol, distance) ascending — SQ-ADC residual
-    * estimates when `refineFactor == 1`, exact squared-L2 over the
-    * re-ranked candidates otherwise. */
+  /** Approximate top-k under the [[Rerank]] contract: per probed cell,
+    * SQ-ADC of the query's residual scores that cell's codes. */
   def query(q: Array[Float], k: Int, nprobe: Int = 4,
-      refineFactor: Int = 4): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(nprobe >= 1 && nprobe <= nCells,
-      s"nprobe must be in [1, $nCells]")
-    require(refineFactor >= 1, "refineFactor must be >= 1")
-    val probed = cells.zipWithIndex
-      .map { case (c, i) => (VectorOps.squaredL2Floats(q, c), i) }
-      .sortBy { case (d, i) => (d, i) }
-      .take(nprobe).map(_._2)
-    val branches = probed.toSeq.map { cell =>
-      val residQ = q.indices.map(i => q(i) - cells(cell)(i)).toArray
-      table.filter(col(IvfIndex.ClusterCol) === cell)
-        .withColumn("distance",
-          sq_adc(col(SqIndex.CodeCol), residQ, lo, step))
-        .select(col(idCol), col("distance"))
-    }
-    val cand = branches.reduce(_ unionByName _)
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k * refineFactor)
-    if (refineFactor == 1) cand.limit(k)
-    else cand.drop("distance")
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("distance", squared_l2(col(vecCol), typedLit(q)))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("distance"))
-  }
+      refineFactor: Int = 4): DataFrame =
+    Rerank.topK(
+      IvfIndex.residualBranches(table, cells, q, nprobe, idCol)(residQ =>
+        sq_adc(col(SqIndex.CodeCol), residQ, lo, step)),
+      "distance", k, refineFactor, corpus, vecCol, idCol, q)
 
   /** Persist the codes table partitioned by cell: probed queries read
     * nprobe directories of dim-byte codes — the 100 TB layout. */

@@ -31,31 +31,17 @@ object Matryoshka {
     l2_normalize(slice(v, 1, dims))
   }
 
-  /** Two-stage MRL top-k: candidates by squared-L2 over the
-    * `dims`-prefix units (k·refineFactor of them), exact full-dim
-    * re-rank. `refineFactor == 1` returns the truncated-space
-    * distances directly. Returns (idCol, distance) ascending, ties by
-    * id. */
+  /** Two-stage MRL top-k under the [[Rerank]] contract: squared-L2
+    * over the `dims`-prefix units picks the candidates, so
+    * `refineFactor == 1` returns the truncated-space distances. */
   def topK(corpus: DataFrame, vecCol: String, idCol: String,
       query: Array[Float], dims: Int, k: Int,
       refineFactor: Int = 4): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(refineFactor >= 1, "refineFactor must be >= 1")
     require(query.length >= dims,
       s"query dim ${query.length} < truncation dims $dims")
-    val qlit = typedLit(query)
-    val cand = corpus
-      .withColumn("__mrl_d",
-        squared_l2(truncate(col(vecCol), dims), truncate(qlit, dims)))
-      .orderBy(col("__mrl_d").asc, col(idCol).asc)
-      .limit(k * refineFactor)
-    if (refineFactor == 1)
-      cand.select(col(idCol), col("__mrl_d").as("distance"))
-    else cand.select(col(idCol))
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("distance", squared_l2(col(vecCol), qlit))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("distance"))
+    Rerank.topK(
+      corpus.withColumn("__mrl_d", squared_l2(truncate(col(vecCol), dims),
+        truncate(typedLit(query), dims))),
+      "__mrl_d", k, refineFactor, corpus, vecCol, idCol, query)
   }
 }

@@ -257,17 +257,12 @@ final class ReducedSqIndex(val model: PcaReduce.PcaModel,
     val inner: SqIndex, corpus: DataFrame, vecCol: String,
     idCol: String) extends Serializable {
 
-  /** Top-k: SQ-ADC candidates in the reduced space, exact squared-L2
-    * re-rank in the original space. */
-  def query(q: Array[Float], k: Int, refineFactor: Int = 8): DataFrame = {
-    require(refineFactor >= 1, "refineFactor must be >= 1")
-    import graft.functions.VectorFunctions.squared_l2
-    inner.query(model.projectOne(q), k * refineFactor, refineFactor = 1)
-      .drop("distance")
-      .join(corpus, Seq(idCol))
-      .withColumn("distance", squared_l2(col(vecCol), typedlit(q.toSeq)))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("distance"))
-  }
+  /** Top-k: k·refineFactor SQ-ADC candidates in the reduced space,
+    * re-ranked by exact squared-L2 in the original space at every
+    * `refineFactor`, 1 included ([[Rerank.exact]]). */
+  def query(q: Array[Float], k: Int, refineFactor: Int = 8): DataFrame =
+    Rerank.exact(
+      inner.query(model.projectOne(q), Rerank.poolSize(k, refineFactor),
+        refineFactor = 1).select(col(idCol)),
+      corpus, vecCol, idCol, q, k)
 }

@@ -25,10 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    from the query's subvectors to every centroid) is computed
   *    driver-side; the scan then does m BYTE-indexed lookups per row —
   *    no float math — planned as `TakeOrderedAndProject` over the
-  *    codes-only columns (no shuffle, no vector reads). `refineFactor`
-  *    re-ranks the ADC candidates by exact distance against the
-  *    original corpus (the standard PQ re-rank): a k×refine-row join,
-  *    negligible beside the scan.
+  *    codes-only columns (no shuffle, no vector reads); `refineFactor`
+  *    re-ranks the ADC candidates exactly ([[Rerank]]).
   *
   * Compose with [[IvfIndex]] for IVF-PQ: partition the CODES frame by
   * the IVF cell (`IvfIndex.assignCells` on the same vectors) and probe
@@ -48,27 +46,13 @@ final class PqIndex(
   /** ADC lookup table for `q` (see [[PqIndex.adcTable]]). */
   def adcTable(q: Array[Float]): Array[Double] = PqIndex.adcTable(codebooks, q)
 
-  /** Approximate top-k. Returns (idCol, distance) ascending — ADC
-    * distances when `refineFactor == 1`, exact squared-L2 over the
-    * re-ranked `k * refineFactor` ADC candidates otherwise. */
-  def query(q: Array[Float], k: Int, refineFactor: Int = 4): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(refineFactor >= 1, "refineFactor must be >= 1")
-    val table = adcTable(q)
-    val cand = codes
-      .withColumn("distance",
-        pq_adc(col(PqIndex.CodeCol), table, codesPerBook))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k * refineFactor)
-      .select(col(idCol), col("distance"))
-    if (refineFactor == 1) cand
-    else cand.drop("distance")
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("distance", squared_l2(col(vecCol), typedLit(q)))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("distance"))
-  }
+  /** Approximate top-k under the [[Rerank]] contract: ADC distances
+    * pick the candidates. */
+  def query(q: Array[Float], k: Int, refineFactor: Int = 4): DataFrame =
+    Rerank.topK(
+      codes.withColumn("distance",
+        pq_adc(col(PqIndex.CodeCol), adcTable(q), codesPerBook)),
+      "distance", k, refineFactor, corpus, vecCol, idCol, q)
 
   /** Persist the compressed table — (id, code) only, m bytes of payload
     * per row; downstream ADC scans read THIS, never the vectors. */
@@ -89,12 +73,7 @@ final class RotatedPqIndex(
   def rotate(q: Array[Float]): Array[Float] = {
     require(q.length == rotation(0).length,
       s"query dim ${q.length} != rotation dim ${rotation(0).length}")
-    rotation.map { row =>
-      var acc = 0.0
-      var i = 0
-      while (i < row.length) { acc += row(i).toDouble * q(i); i += 1 }
-      acc.toFloat
-    }
+    PqIndex.matVecFloats(rotation, q)
   }
 
   def query(q: Array[Float], k: Int, refineFactor: Int = 4): DataFrame =

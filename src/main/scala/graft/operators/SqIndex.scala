@@ -24,8 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    reconstruction and squared-L2 into one pass over the code bytes;
   *    planned as `TakeOrderedAndProject` over the codes frame (no
   *    shuffle, no vector reads). `refineFactor` re-ranks candidates by
-  *    exact distance against the original vectors, exactly as
-  *    [[PqIndex.query]] does.
+  *    exact distance against the original vectors ([[Rerank]]).
   *
   * At 100 TB the codes table IS the scan set: 4× fewer bytes than the
   * raw vectors, still linear — compose with [[IvfIndex]] cell pruning
@@ -38,25 +37,13 @@ final class SqIndex(
 
   def dim: Int = lo.length
 
-  /** Approximate top-k. Returns (idCol, distance) ascending — SQ-ADC
-    * distances when `refineFactor == 1`, exact squared-L2 over the
-    * re-ranked `k * refineFactor` candidates otherwise. */
+  /** Approximate top-k under the [[Rerank]] contract: SQ-ADC distances
+    * pick the candidates. */
   def query(q: Array[Float], k: Int, refineFactor: Int = 4): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(refineFactor >= 1, "refineFactor must be >= 1")
     require(q.length == dim, s"query dim ${q.length} != fitted dim $dim")
-    val cand = codes
-      .withColumn("distance", sq_adc(col(SqIndex.CodeCol), q, lo, step))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k * refineFactor)
-      .select(col(idCol), col("distance"))
-    if (refineFactor == 1) cand
-    else cand.drop("distance")
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("distance", squared_l2(col(vecCol), typedLit(q)))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("distance"))
+    Rerank.topK(
+      codes.withColumn("distance", sq_adc(col(SqIndex.CodeCol), q, lo, step)),
+      "distance", k, refineFactor, corpus, vecCol, idCol, q)
   }
 
   /** Persist the compressed table — (id, code), dim bytes of payload

@@ -24,8 +24,7 @@ private[graft] object RegistryAnn {
     // ---- vector engine surface (SURVEY §2 J1/W1/F2-F4) ----
     "knn_top5" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       Similarity.topK(emb.select("vec_id", "embedding"), "embedding", "vec_id", q, k = 5)
         .select("vec_id", "distance")
     }),
@@ -34,8 +33,7 @@ private[graft] object RegistryAnn {
     // shuffle; the unbounded-cardinality complement of top-k
     "radius_search" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       Similarity.radiusSearch(emb.select("vec_id", "embedding"),
         "embedding", "vec_id", q, radius = 1.45)
         .select("vec_id", "distance")
@@ -47,10 +45,8 @@ private[graft] object RegistryAnn {
     // trained index uses)
     "ivf_fixed_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val cents = firstVecs(emb, 4)
+      val q = queryVec(emb)
       val idx = new graft.operators.IvfIndex(cents,
         graft.operators.IvfIndex.assignCells(emb, "embedding", cents),
         "embedding", "vec_id")
@@ -63,8 +59,7 @@ private[graft] object RegistryAnn {
     // exact argmin kernel; share is one bridged division
     "ivf_cell_balance" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+      val cents = firstVecs(emb, 4)
       val n = emb.count()
       graft.operators.IvfIndex.assignCells(emb, "embedding", cents)
         .groupBy(col("cluster").cast("long").as("cell"))
@@ -82,10 +77,8 @@ private[graft] object RegistryAnn {
     // machine-checks the maintenance path end-to-end
     "ivf_fixed_append_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val cents = firstVecs(emb, 4)
+      val q = queryVec(emb)
       val base = emb.filter(col("vec_id") % 10 =!= 0)
       val incoming = emb.filter(col("vec_id") % 10 === 0)
       val idx = new graft.operators.IvfIndex(cents,
@@ -101,8 +94,7 @@ private[graft] object RegistryAnn {
     // nprobe 1/2/4 — the report that picks an IVF operating point
     "ivf_fixed_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+      val cents = firstVecs(emb, 4)
       val idx = new graft.operators.IvfIndex(cents,
         graft.operators.IvfIndex.assignCells(emb, "embedding", cents),
         "embedding", "vec_id")
@@ -132,8 +124,7 @@ private[graft] object RegistryAnn {
     // loop remains unoracled.
     "ivf_lloyd_step" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+      val cents = firstVecs(emb, 4)
       graft.operators.IvfIndex.lloydStepMeans(emb, "embedding", cents)
     }),
     // PQ compression path with FIXED codebooks (subvectors of the
@@ -143,18 +134,13 @@ private[graft] object RegistryAnn {
     // machinery is oracle-checked end to end
     "pq_fixed_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val m = 4
-      val subDim = cents(0).length / m
-      val books = Array.tabulate(m)(sub =>
-        cents.map(v => v.slice(sub * subDim, (sub + 1) * subDim)))
+      val cents = firstVecs(emb, 4)
+      val books = sliceBooks(cents, 4)
       val codes = emb.select(col("vec_id"),
         pq_encode(col("embedding"), books).as(graft.operators.PqIndex.CodeCol))
       val idx = new graft.operators.PqIndex(books, emb, codes,
         "embedding", "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5).select("vec_id", "distance")
     }),
     // OPQ path with a FIXED permutation rotation (dimension reversal):
@@ -172,19 +158,14 @@ private[graft] object RegistryAnn {
         if (j == dim - 1 - i) 1.0f else 0.0f)
       val rotated = emb.select(col("vec_id"),
         mat_vec(col("embedding"), rot).as("embedding"))
-      val cents = rotated.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val m = 4
-      val subDim = dim / m
-      val books = Array.tabulate(m)(sub =>
-        cents.map(v => v.slice(sub * subDim, (sub + 1) * subDim)))
+      val cents = firstVecs(rotated, 4)
+      val books = sliceBooks(cents, 4)
       val codes = rotated.select(col("vec_id"),
         pq_encode(col("embedding"), books).as(graft.operators.PqIndex.CodeCol))
       val idx = new graft.operators.RotatedPqIndex(rot,
         new graft.operators.PqIndex(books, rotated, codes,
           "embedding", "vec_id"))
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5).select("vec_id", "distance")
     }),
     // IVF-PQ composition with FIXED cells AND codebooks: the residual
@@ -197,8 +178,7 @@ private[graft] object RegistryAnn {
     // (0..3's own residuals are identically zero).
     "ivfpq_fixed_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+      val cents = firstVecs(emb, 4)
       val clusterCol = graft.operators.IvfIndex.ClusterCol
       val resid = graft.operators.IvfIndex
         .assignCells(emb, "embedding", cents)
@@ -207,24 +187,19 @@ private[graft] object RegistryAnn {
       val bookRows = resid
         .filter(col("vec_id") >= 4 && col("vec_id") < 8).orderBy("vec_id")
         .select("__resid").collect().map(_.getSeq[Float](0).toArray)
-      val m = 4
-      val subDim = bookRows(0).length / m
-      val books = Array.tabulate(m)(sub =>
-        bookRows.map(v => v.slice(sub * subDim, (sub + 1) * subDim)))
+      val books = sliceBooks(bookRows, 4)
       val table = resid.select(col("vec_id"), col(clusterCol),
         pq_encode(col("__resid"), books).as(graft.operators.PqIndex.CodeCol))
       val idx = new graft.operators.IvfPqIndex(cents, books, table, emb,
         "embedding", "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, nprobe = 2).select("vec_id", "distance")
     }),
     // the BATCH ANN join path (multi-probe kernel → hash join by cell
     // → WindowGroupLimit) through the same fixed-centroid index
     "ivf_fixed_batch_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+      val cents = firstVecs(emb, 4)
       val idx = new graft.operators.IvfIndex(cents,
         graft.operators.IvfIndex.assignCells(emb, "embedding", cents),
         "embedding", "vec_id")
@@ -235,8 +210,7 @@ private[graft] object RegistryAnn {
     }),
     "cosine_top5" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       Similarity.topK(emb.select("vec_id", "embedding"), "embedding", "vec_id", q,
         k = 5, metric = Metric.Cosine, scoreCol = "sim")
         .select("vec_id", "sim")
@@ -283,10 +257,8 @@ private[graft] object RegistryAnn {
     // with fixed cells the ENTIRE composed index is oracle-checked
     "ivfbq_fixed_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val cents = firstVecs(emb, 4)
+      val q = queryVec(emb)
       val idx = graft.operators.IvfBinary.buildWithCentroids(emb,
         "embedding", "vec_id", cents)
       idx.query(q, k = 5, nprobe = 2, refineFactor = 8)
@@ -299,8 +271,7 @@ private[graft] object RegistryAnn {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val meta = t(s, dir, "documents")
         .select(col("doc_id").as("vec_id"), col("lang"), col("source"))
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       Similarity.topK(
         emb.join(meta, Seq("vec_id")).filter(col("lang") === "en"),
         "embedding", "vec_id", q, k = 5)
@@ -312,8 +283,7 @@ private[graft] object RegistryAnn {
     // the SQL twin replays all 5 greedy steps unrolled
     "mmr_select" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       val cands = emb
         .withColumn("rel", cosine_sim(col("embedding"), typedLit(q)))
         .orderBy(col("rel").desc, col("vec_id").asc)
@@ -328,8 +298,7 @@ private[graft] object RegistryAnn {
     // oracle-checked
     "mrl_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       graft.operators.Matryoshka.topK(emb, "embedding", "vec_id", q,
         dims = 16, k = 5, refineFactor = 8)
     }),
@@ -339,8 +308,7 @@ private[graft] object RegistryAnn {
     "binary_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val idx = graft.operators.BinaryQuant.build(emb, "embedding", "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, refineFactor = 8)
     }),
     // batch form: broadcast query codes, WindowGroupLimit Hamming
@@ -368,8 +336,7 @@ private[graft] object RegistryAnn {
     // ---- VectorStore surface (SURVEY §2.10 set_data/query_with_info) ----
     "store_knn" -> ((s, dir) => {
       val store = storeOf(s, dir)
-      val q = t(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = queryVec(t(s, dir, "embeddings"))
       store.queryVectorWithInfo(q, k = 5)
     }),
     "store_append_ids" -> ((s, dir) => {
@@ -595,8 +562,7 @@ private[graft] object RegistryAnn {
       // offline job anyway
       val idx = graft.operators.IvfIndex.build(emb, "embedding", "vec_id",
         nClusters = 16, maxIter = 8, sampleFraction = 0.25)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, nprobe = 4).select("vec_id", "distance")
     }),
     // batch ANN join through the IVF index: every query row gets its
@@ -646,8 +612,7 @@ private[graft] object RegistryAnn {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
         .where(col("embedding").isNotNull)
       val d = emb.select(size(col("embedding"))).head.getInt(0)
-      val mean = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val mean = queryVec(emb)
       val comps = Array.tabulate(16, d)((r, c) =>
         if (Integer.bitCount(r & c) % 2 == 0) 0.125f else -0.125f)
       val model = graft.operators.PcaReduce.PcaModel(
@@ -732,8 +697,7 @@ private[graft] object RegistryAnn {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val idx = graft.operators.IvfSqIndex.build(emb, "embedding",
         "vec_id", nClusters = 16, sampleFraction = 0.25)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, nprobe = 4, refineFactor = 8)
     }),
     // PCA→SQ8 composition: byte-coded candidates in the 16-dim reduced
@@ -744,8 +708,7 @@ private[graft] object RegistryAnn {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val idx = graft.operators.PcaReduce.fitSq(emb, "embedding",
         "vec_id", k = 16)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, refineFactor = 8)
     }),
     // scalar-quantization (SQ8) ANN: 4× compressed codes + fused
@@ -757,8 +720,7 @@ private[graft] object RegistryAnn {
     "sq8_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val idx = graft.operators.SqIndex.fit(emb, "embedding", "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, refineFactor = 4)
     }),
     // SQ8 ENCODE pinned oracle-green with a FIXED per-dim range
@@ -815,8 +777,7 @@ private[graft] object RegistryAnn {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val idx = graft.operators.PqIndex.train(emb, "embedding", "vec_id",
         m = 8, codesPerBook = 16, sampleFraction = 0.25)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, refineFactor = 8)
     }),
     // fused float ADC distance pinned oracle-green with a FIXED
@@ -856,8 +817,7 @@ private[graft] object RegistryAnn {
       val idx = graft.operators.PqIndex.trainOpq(emb, "embedding",
         "vec_id", m = 8, codesPerBook = 16, sampleFraction = 0.25,
         opqIters = 2)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, refineFactor = 8)
     }),
     // composed IVF-PQ (residual-encoded): cell pruning cuts rows
@@ -868,8 +828,7 @@ private[graft] object RegistryAnn {
       val idx = graft.operators.IvfPqIndex.build(emb, "embedding",
         "vec_id", nClusters = 16, m = 8, codesPerBook = 16,
         sampleFraction = 0.25)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, nprobe = 4, refineFactor = 8)
     }),
     // ---- search-over-persisted-artifact variants of the trained ANN
@@ -890,8 +849,7 @@ private[graft] object RegistryAnn {
       }
       val idx = graft.operators.IvfIndex.loadSaved(s, root, "embedding",
         "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, nprobe = 4).select("vec_id", "distance")
     }),
     "sq8_saved_knn" -> ((s, dir) => {
@@ -902,8 +860,7 @@ private[graft] object RegistryAnn {
       }
       val idx = graft.operators.SqIndex.loadSaved(s, root, emb,
         "embedding", "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, refineFactor = 4)
     }),
     "pq_saved_knn" -> ((s, dir) => {
@@ -915,8 +872,7 @@ private[graft] object RegistryAnn {
       }
       val idx = graft.operators.PqIndex.loadSaved(s, root, emb,
         "embedding", "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, refineFactor = 8)
     }),
     "opq_saved_knn" -> ((s, dir) => {
@@ -929,8 +885,7 @@ private[graft] object RegistryAnn {
       }
       val idx = graft.operators.PqIndex.loadSavedRotated(s, root, emb,
         "embedding", "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, refineFactor = 8)
     }),
     "ivfpq_saved_knn" -> ((s, dir) => {
@@ -943,8 +898,7 @@ private[graft] object RegistryAnn {
       }
       val idx = graft.operators.IvfPqIndex.loadSaved(s, root, emb,
         "embedding", "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, nprobe = 4, refineFactor = 8)
     }),
     "pca_sq8_saved_knn" -> ((s, dir) => {
@@ -956,8 +910,7 @@ private[graft] object RegistryAnn {
       }
       val idx = graft.operators.PcaReduce.loadSavedSq(s, root, emb,
         "embedding", "vec_id")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       idx.query(q, k = 5, refineFactor = 8)
     }),
     // z-order lake layout: Morton-interleaved quantized keys (8 bits
@@ -1038,8 +991,7 @@ private[graft] object RegistryAnn {
       writer.setData(in)
       val reopened = new VectorStore(s, HashEmbedder(dim = 64),
         path = Some(s"$tmp/db"))
-      val q = t(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = queryVec(t(s, dir, "embeddings"))
       reopened.queryVectorWithInfo(q, k = 5)
     }),
     // bucketed-table store mode: two-batch ingest where the APPEND
@@ -1064,8 +1016,7 @@ private[graft] object RegistryAnn {
         st.setData(in.drop("doc_id"), append = true)
         st
       }
-      val q = t(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = queryVec(t(s, dir, "embeddings"))
       store.queryVectorWithInfo(q, k = 5)
     }),
     // boolean inverted-index retrieval (AND + NOT): terms filtered

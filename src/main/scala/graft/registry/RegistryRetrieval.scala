@@ -375,8 +375,7 @@ private[graft] object RegistryRetrieval {
           Window.orderBy(col("score").desc, col("doc_id"))))
         .select("doc_id", "rank")
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head.getSeq[Float](0).toArray
+      val q = queryVec(emb)
       val vec = Similarity.topK(emb, "embedding", "vec_id", q, k = 20)
         .withColumn("rank", row_number().over(
           Window.orderBy(col("distance").asc, col("vec_id"))))
