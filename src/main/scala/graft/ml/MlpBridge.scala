@@ -1,9 +1,8 @@
 package graft.ml
 
 import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
-import org.apache.spark.ml.evaluation.{MulticlassClassificationEvaluator, RegressionEvaluator}
+import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.regression.GBTRegressor
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,8 +20,7 @@ final case class MlpResult(predictions: DataFrame, holdoutMetric: Double)
   * separable data), not identical predictions. The M8 regressor is
   * [[trainMlpRegressor]] — a real one-hidden-layer MLP trained by
   * data-parallel full-batch gradient descent (MLlib itself has no MLP
-  * regressor); [[trainRegressor]] keeps the earlier gradient-boosted
-  * substitute for callers that want a tree model.
+  * regressor).
   *
   * Scale: `fit` is driver-orchestrated L-BFGS; each iteration is one
   * treeAggregate over executors — no shuffle of the feature matrix.
@@ -102,43 +100,14 @@ object MlpBridge {
       split.filter(col("__u") >= 0.75).drop("__u"))
   }
 
-  /** Train a regressor on (vecCol → labelCol): GBT substitute for
-    * sklearn's MLPRegressor (M8 gap), 75/25 split (non-stratified,
-    * like `VectorSearchBase.py:245`), returns R² on holdout and
-    * predictions for all rows. */
-  def trainRegressor(df: DataFrame, vecCol: String, labelCol: String,
-      maxIter: Int = 50, seed: Long = 810L): MlpResult = {
-    val prepared = df
-      .filter(col(labelCol).isNotNull && col(vecCol).isNotNull)
-      .withColumn("features", array_to_vector(col(vecCol).cast("array<double>")))
-      .withColumn("label", col(labelCol).cast("double"))
-      .cache()
-    val Array(train, test) = prepared.randomSplit(Array(0.75, 0.25), seed)
-    val gbt = new GBTRegressor()
-      .setMaxIter(maxIter)
-      .setSeed(1L) // model seed 1, reference VectorSearchBase.py:247
-      .setFeaturesCol("features")
-      .setLabelCol("label")
-    val model = gbt.fit(train)
-    val r2 = new RegressionEvaluator().setMetricName("r2")
-      .evaluate(model.transform(test))
-    val all = model.transform(prepared)
-      .withColumnRenamed("prediction", "mlp_pred")
-      .drop("features", "label")
-      .localCheckpoint(true)
-    prepared.unpersist()
-    MlpResult(all, r2)
-  }
-
-  /** TRUE MLP regressor (M8 — closes the GBT-substitute gap for
-    * sklearn's MLPRegressor, `VectorSearchBase.py:236-256`): one tanh
-    * hidden layer + linear output, trained by full-batch gradient
-    * descent with momentum. Weights live on the driver; every
-    * iteration is ONE `treeAggregate` of per-row gradients over the
-    * executors — the feature matrix never shuffles (the same
-    * data-parallel shape MLlib's own L-BFGS uses, so it scales to a
-    * 1000-executor corpus: per-iteration traffic is O(model), not
-    * O(data)). Features and label are standardized from TRAIN
+  /** MLP regressor (M8 — sklearn's MLPRegressor,
+    * `VectorSearchBase.py:236-256`): one tanh hidden layer + linear
+    * output, trained by full-batch gradient descent with momentum.
+    * Weights live on the driver; every iteration is ONE
+    * `treeAggregate` of per-row gradients over the executors — the
+    * feature matrix never shuffles (the same data-parallel shape
+    * MLlib's own L-BFGS uses, so it scales to a 1000-executor corpus:
+    * per-iteration traffic is O(model), not O(data)). Features and label are standardized from TRAIN
     * statistics; predictions de-standardize. Deterministic given
     * (seed, partitioning); across partitionings the float partial
     * sums re-associate, so tests pin QUALITY (R² threshold), not

@@ -45,16 +45,13 @@ object Graph {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double = 0.85,
-      materializeEdges: Boolean = true,
       weightCol: Option[String] = None): DataFrame = {
     require(iters >= 1, "at least one iteration")
     require(damping > 0.0 && damping < 1.0, "damping in (0,1)")
     // the symmetrized edge frame is scanned 1 + iters times (degree
-    // pass + one contribution join per round): materialize it once so
-    // an expensive upstream edge derivation doesn't re-run per round.
-    // Pass false when edges are already a parquet scan — there the
-    // rebuild is cheaper than the serialized cache (the measured
-    // PrefixScan/md5Shingles tradeoff).
+    // pass + one contribution join per round), so it is cut once,
+    // always: skipping the cut even over a parquet-scan edge list made
+    // token_ppr 1.20 → 2.90 s (OPTIMIZATION_r17.md).
     //
     // weightCol (the TRUE TextRank form — Mihalcea & Tarau rank a
     // WEIGHTED co-occurrence graph): contrib(u→v) = pr(u)·w(u,v)/W(u)
@@ -66,14 +63,12 @@ object Graph {
     // bridge so both engines divide identical values. With uniform
     // weights the ranks equal the unweighted form bit-for-bit
     // (w/W = 1/deg on the same doubles — spec-pinned).
-    val sym0 = weightCol match {
+    val sym = (weightCol match {
       case Some(w) => symmetrizeWeighted(edges, srcCol, dstCol, w)
       case None => symmetrize(edges, srcCol, dstCol)
-        .withColumn("__w", lit(1L).cast("decimal(27,12)"))
-    }
-    val sym = if (materializeEdges) sym0.lineageCut() else sym0
-    val deg = sym.groupBy("__u").agg(count(lit(1)).as("__deg"),
-      sum("__w").as("__wout"))
+        .withColumn("__w", unitWeight)
+    }).lineageCut()
+    val deg = outWeights(sym)
     // N enters every row via a broadcast 1-row aggregate (never a
     // driver-side collect of the vertex set)
     val n = broadcast(deg.agg(count(lit(1)).as("__n")))
@@ -81,21 +76,13 @@ object Graph {
       .select(col("__u"), col("__n"),
         (lit(1.0) / col("__n").cast("double")).as("__pr"))
     for (_ <- 1 to iters) {
-      val contribPerEdge = weightCol match {
-        case Some(_) =>
-          ((col("__pr") * col("__w").cast("string").cast("double")) /
-            col("__wout").cast("string").cast("double"))
-            .cast("decimal(18,12)")
-        case None =>
-          (col("__pr") / col("__deg").cast("double"))
-            .cast("decimal(18,12)")
-      }
       val contrib = sym
         .join(pr.join(deg, Seq("__u"))
           .select(col("__u"), col("__n"), col("__deg"), col("__wout"),
             col("__pr")),
           Seq("__u"))
-        .select(col("__v"), col("__n"), contribPerEdge.as("__c"))
+        .select(col("__v"), col("__n"),
+          contribution(weightCol.isDefined).as("__c"))
         .groupBy(col("__v").as("__u"))
         .agg(sum(col("__c")).as("__s"), min(col("__n")).as("__n"))
       pr = contrib.select(col("__u"), col("__n"),
@@ -136,58 +123,18 @@ object Graph {
     * frame every few iterations (connectedComponents guidance). */
   def pageRankDirected(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double = 0.85,
-      materializeEdges: Boolean = true,
       weightCol: Option[String] = None): DataFrame = {
     require(iters >= 1, "at least one iteration")
     require(damping > 0.0 && damping < 1.0, "damping in (0,1)")
-    val e0 = weightCol match {
-      case Some(w) =>
-        val e = edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"),
-            col(w).cast("decimal(27,12)").as("__w"))
-          .where(col("__u").isNotNull && col("__v").isNotNull &&
-            col("__u") =!= col("__v") && col("__w").isNotNull &&
-            col("__w") > 0)
-        e.groupBy("__u", "__v").agg(sum("__w").as("__w"))
-      case None =>
-        edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"))
-          .where(col("__u").isNotNull && col("__v").isNotNull &&
-            col("__u") =!= col("__v"))
-          .distinct()
-          .withColumn("__w", lit(1L).cast("decimal(27,12)"))
-    }
-    val e = if (materializeEdges) e0.lineageCut() else e0
-    // vertex universe: every endpoint, sources and sinks alike
-    val verts0 = e.select(col("__u")).unionByName(
-      e.select(col("__v").as("__u"))).distinct()
-    val verts = if (materializeEdges) verts0.lineageCut() else verts0
-    val outw = e.groupBy("__u").agg(count(lit(1)).as("__deg"),
-      sum("__w").as("__wout"))
+    val e = directedEdges(edges, srcCol, dstCol, weightCol).lineageCut()
+    val verts = vertices(e).lineageCut()
+    val outw = outWeights(e)
     val n = broadcast(verts.agg(count(lit(1)).as("__n")))
     var pr = verts.crossJoin(n)
       .select(col("__u"), col("__n"),
         (lit(1.0) / col("__n").cast("double")).as("__pr"))
     for (_ <- 1 to iters) {
-      val contribPerEdge = weightCol match {
-        case Some(_) =>
-          ((col("__pr") * col("__w").cast("string").cast("double")) /
-            col("__wout").cast("string").cast("double"))
-            .cast("decimal(18,12)")
-        case None =>
-          (col("__pr") / col("__deg").cast("double"))
-            .cast("decimal(18,12)")
-      }
-      val inbound = e
-        .join(pr.select(col("__u"), col("__pr")).join(outw, Seq("__u")),
-          Seq("__u"))
-        .select(col("__v"), contribPerEdge.as("__c"))
-        .groupBy(col("__v").as("__u"))
-        .agg(sum(col("__c")).as("__s"))
-      // dangling mass: exact-decimal sum of ranks whose node has no
-      // out-edge; 1-row broadcast (coalesce for the no-danglers case)
-      val dang = broadcast(
-        pr.join(outw.select("__u"), Seq("__u"), "left_anti")
-          .agg(coalesce(sum(col("__pr").cast("decimal(18,12)")),
-            lit(0L).cast("decimal(18,12)")).as("__d")))
+      val (inbound, dang) = directedRound(e, outw, pr, weightCol.isDefined)
       pr = pr.select(col("__u"), col("__n"))
         .join(inbound, Seq("__u"), "left")
         .crossJoin(dang)
@@ -202,10 +149,7 @@ object Graph {
       // vertex set, contribution join, dangling aggregate): without a
       // per-round materialization the lazy plan re-derives it 3^iters
       // times. The rank frame is |V| rows — checkpointing it each
-      // round is the standard Pregel shape, not an optimization hack,
-      // and is UNCONDITIONAL: materializeEdges governs only the edge
-      // frame (whose rebuild can be cheaper than a cache); skipping
-      // the rank checkpoint is never sane at any iters
+      // round is the standard Pregel shape, not an optimization hack
       pr = pr.lineageCut()
     }
     pr.select(col("__u").as("node"), col("__pr").as("rank"))
@@ -225,10 +169,9 @@ object Graph {
     * ~5 rounds. Oscillation on bipartite structures is inherent to
     * synchronous LPA — run an odd/even iters pair if it matters. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, materializeEdges: Boolean = true): DataFrame = {
+      iters: Int): DataFrame = {
     require(iters >= 1, "at least one iteration")
-    val sym0 = symmetrize(edges, srcCol, dstCol)
-    val sym = if (materializeEdges) sym0.lineageCut() else sym0
+    val sym = symmetrize(edges, srcCol, dstCol).lineageCut()
     var labels = sym.select(col("__u")).distinct()
       .select(col("__u"), col("__u").as("__lbl"))
     for (_ <- 1 to iters) {
@@ -261,28 +204,12 @@ object Graph {
     * as there. */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, seedCol: String, iters: Int,
-      damping: Double = 0.85, materializeEdges: Boolean = true,
+      damping: Double = 0.85,
       weightCol: Option[String] = None): DataFrame = {
     require(iters >= 1, "at least one iteration")
     require(damping > 0.0 && damping < 1.0, "damping in (0,1)")
-    val e0 = weightCol match {
-      case Some(w) =>
-        val e = edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"),
-            col(w).cast("decimal(27,12)").as("__w"))
-          .where(col("__u").isNotNull && col("__v").isNotNull &&
-            col("__u") =!= col("__v") && col("__w").isNotNull &&
-            col("__w") > 0)
-        e.groupBy("__u", "__v").agg(sum("__w").as("__w"))
-      case None =>
-        edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"))
-          .where(col("__u").isNotNull && col("__v").isNotNull &&
-            col("__u") =!= col("__v"))
-          .distinct()
-          .withColumn("__w", lit(1L).cast("decimal(27,12)"))
-    }
-    val e = if (materializeEdges) e0.lineageCut() else e0
-    val verts0 = e.select(col("__u")).unionByName(
-      e.select(col("__v").as("__u"))).distinct()
+    val e = directedEdges(edges, srcCol, dstCol, weightCol).lineageCut()
+    val verts0 = vertices(e)
     val sInGraph = verts0.join(
       seeds.select(col(seedCol).as("__u")).where(col("__u").isNotNull)
         .distinct(), Seq("__u"), "left_semi")
@@ -292,38 +219,18 @@ object Graph {
       "personalizedPageRank needs at least one seed present in the graph")
     val nSeeds = broadcast(sInGraph.agg(count(lit(1)).as("__ns")))
     // personalization vector: 1/|S| on in-graph seeds, 0 elsewhere
-    val verts1 = verts0
+    val verts = verts0
       .join(sInGraph.withColumn("__isSeed", lit(1)), Seq("__u"), "left")
       .crossJoin(nSeeds)
       .select(col("__u"),
         when(col("__isSeed") === 1,
           lit(1.0) / col("__ns").cast("double"))
           .otherwise(lit(0.0)).as("__p"))
-    val verts = if (materializeEdges) verts1.lineageCut()
-      else verts1
-    val outw = e.groupBy("__u").agg(count(lit(1)).as("__deg"),
-      sum("__w").as("__wout"))
+      .lineageCut()
+    val outw = outWeights(e)
     var pr = verts.select(col("__u"), col("__p"), col("__p").as("__pr"))
     for (_ <- 1 to iters) {
-      val contribPerEdge = weightCol match {
-        case Some(_) =>
-          ((col("__pr") * col("__w").cast("string").cast("double")) /
-            col("__wout").cast("string").cast("double"))
-            .cast("decimal(18,12)")
-        case None =>
-          (col("__pr") / col("__deg").cast("double"))
-            .cast("decimal(18,12)")
-      }
-      val inbound = e
-        .join(pr.select(col("__u"), col("__pr")).join(outw, Seq("__u")),
-          Seq("__u"))
-        .select(col("__v"), contribPerEdge.as("__c"))
-        .groupBy(col("__v").as("__u"))
-        .agg(sum(col("__c")).as("__s"))
-      val dang = broadcast(
-        pr.join(outw.select("__u"), Seq("__u"), "left_anti")
-          .agg(coalesce(sum(col("__pr").cast("decimal(18,12)")),
-            lit(0L).cast("decimal(18,12)")).as("__d")))
+      val (inbound, dang) = directedRound(e, outw, pr, weightCol.isDefined)
       pr = pr.select(col("__u"), col("__p"))
         .join(inbound, Seq("__u"), "left")
         .crossJoin(dang)
@@ -334,7 +241,7 @@ object Graph {
                 .cast("string").cast("double") +
                 col("__d").cast("string").cast("double") *
                   col("__p"))).as("__pr"))
-      pr = pr.lineageCut() // see pageRankDirected: unconditional
+      pr = pr.lineageCut() // see pageRankDirected
     }
     pr.select(col("__u").as("node"), col("__pr").as("rank"))
   }
@@ -355,16 +262,10 @@ object Graph {
     * (each is read by the next half-round AND the normalizer), the
     * [[pageRankDirected]] plan-growth rule. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, materializeEdges: Boolean = true): DataFrame = {
+      iters: Int): DataFrame = {
     require(iters >= 1, "at least one iteration")
-    val e0 = edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"))
-      .where(col("__u").isNotNull && col("__v").isNotNull &&
-        col("__u") =!= col("__v"))
-      .distinct()
-    val e = if (materializeEdges) e0.lineageCut() else e0
-    val verts0 = e.select(col("__u")).unionByName(
-      e.select(col("__v").as("__u"))).distinct()
-    val verts = if (materializeEdges) verts0.lineageCut() else verts0
+    val e = properPairs(edges, srcCol, dstCol).distinct().lineageCut()
+    val verts = vertices(e).lineageCut()
     val zero = lit(0L).cast("decimal(18,12)")
     var hub = verts.withColumn("__h", lit(1.0))
     var auth = verts.withColumn("__a", lit(1.0))
@@ -380,7 +281,7 @@ object Graph {
         .select(col("__v").as("__u"),
           (col("__s").cast("string").cast("double") /
             col("__t").cast("string").cast("double")).as("__a"))
-      auth = auth.lineageCut() // see pageRankDirected: unconditional
+      auth = auth.lineageCut() // see pageRankDirected
       val hraw = verts
         .join(e.join(auth.select(col("__u").as("__v"), col("__a")),
             Seq("__v"))
@@ -393,12 +294,71 @@ object Graph {
         .select(col("__u"),
           (col("__s").cast("string").cast("double") /
             col("__t").cast("string").cast("double")).as("__h"))
-      hub = hub.lineageCut() // see pageRankDirected: unconditional
+      hub = hub.lineageCut() // see pageRankDirected
     }
     hub.join(auth, Seq("__u"))
       .select(col("__u").as("node"), col("__h").as("hub"),
         col("__a").as("authority"))
   }
+
+  /** The one per-edge PageRank contribution, cast decimal(18,12):
+    * pr(u)·w(u,v)/W(u) with w and W re-entering doubles through the
+    * VARCHAR bridge when weighted, pr(u)/deg(u) when not. Reads
+    * `__pr` plus [[outWeights]]' `__deg`/`__wout` and the edge `__w`. */
+  private def contribution(weighted: Boolean): Column =
+    (if (weighted)
+      (col("__pr") * col("__w").cast("string").cast("double")) /
+        col("__wout").cast("string").cast("double")
+    else col("__pr") / col("__deg").cast("double"))
+      .cast("decimal(18,12)")
+
+  /** Per-source out-degree `__deg` and exact-decimal out-weight
+    * `__wout` of a (__u, __v, __w) edge frame. */
+  private def outWeights(e: DataFrame): DataFrame =
+    e.groupBy("__u").agg(count(lit(1)).as("__deg"),
+      sum("__w").as("__wout"))
+
+  /** One directed PageRank round's two reads of the previous rank
+    * frame `pr`: the per-node inbound contribution sums (__u, __s) and
+    * the broadcast 1-row dangling mass __d — the exact-decimal sum of
+    * ranks whose node has no out-edge (coalesced for the no-danglers
+    * case). Each caller applies its own update line. */
+  private def directedRound(e: DataFrame, outw: DataFrame, pr: DataFrame,
+      weighted: Boolean): (DataFrame, DataFrame) = {
+    val inbound = e
+      .join(pr.select(col("__u"), col("__pr")).join(outw, Seq("__u")),
+        Seq("__u"))
+      .select(col("__v"), contribution(weighted).as("__c"))
+      .groupBy(col("__v").as("__u"))
+      .agg(sum(col("__c")).as("__s"))
+    val dang = broadcast(
+      pr.join(outw.select("__u"), Seq("__u"), "left_anti")
+        .agg(coalesce(sum(col("__pr").cast("decimal(18,12)")),
+          lit(0L).cast("decimal(18,12)")).as("__d")))
+    (inbound, dang)
+  }
+
+  /** Directed (__u, __v, __w) edges: null endpoints and self-loops
+    * drop; weighted, null/non-positive weights drop and parallel edges
+    * sum their decimal(27,12) weights; unweighted, parallel edges
+    * collapse to one with a unit weight. */
+  private def directedEdges(edges: DataFrame, srcCol: String,
+      dstCol: String, weightCol: Option[String]): DataFrame =
+    weightCol match {
+      case Some(w) => positiveEdges(edges, srcCol, dstCol, w)
+        .groupBy("__u", "__v").agg(sum("__w").as("__w"))
+      case None => properPairs(edges, srcCol, dstCol).distinct()
+        .withColumn("__w", unitWeight)
+    }
+
+  /** Every endpoint of an edge frame, sources and sinks alike, as one
+    * distinct `__u` column. */
+  private def vertices(e: DataFrame): DataFrame =
+    e.select(col("__u")).unionByName(
+      e.select(col("__v").as("__u"))).distinct()
+
+  /** The weight an unweighted PageRank edge carries. */
+  private def unitWeight: Column = lit(1L).cast("decimal(27,12)")
 
   /** Degree-ordered wedge enumeration over an id-canonical edge list
     * (`__u` < `__v`, one row per unordered pair): orient each edge
@@ -490,11 +450,9 @@ object Graph {
     * integers; `seeds` is one column of node ids and joins the vertex
     * set (never collected). */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxHops: Int,
-      materializeEdges: Boolean = true): DataFrame = {
+      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "at least one hop")
-    val sym0 = symmetrize(edges, srcCol, dstCol)
-    val sym = if (materializeEdges) sym0.lineageCut() else sym0
+    val sym = symmetrize(edges, srcCol, dstCol).lineageCut()
     // off-graph seeds are NOT filtered out: a seed with no edges still
     // reports itself at distance 0 (spec-pinned) — callers wanting
     // graph-only nodes semi-join the output against the edge list
@@ -756,12 +714,7 @@ object Graph {
     * one has no PageRank meaning). */
   private def symmetrizeWeighted(edges: DataFrame, srcCol: String,
       dstCol: String, wCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).as("__u"), col(dstCol).as("__v"),
-        col(wCol).cast("decimal(27,12)").as("__w"))
-      .where(col("__u").isNotNull && col("__v").isNotNull &&
-        col("__u") =!= col("__v") && col("__w").isNotNull &&
-        col("__w") > 0)
+    val e = positiveEdges(edges, srcCol, dstCol, wCol)
     e.unionByName(e.select(col("__v").as("__u"), col("__u").as("__v"),
         col("__w")))
       .groupBy("__u", "__v").agg(sum("__w").as("__w"))
@@ -780,10 +733,16 @@ object Graph {
     * a fixed parenthesized expression — no distributed float sum
     * anywhere, so every row is bit-stable across engines; callers sum
     * q_term driver-side (communities-sized) if they want scalar Q.
+    * Without edges (m = 0) Q is undefined: every community still gets
+    * its row, with m = 0 and a null q_term.
+    *
+    * This is [[modularityWeighted]] over the simple unit-weight graph
+    * ([[simpleEdges]]): there sum(w) = |E|, k_i = degree and w_in =
+    * e_c, all exact longs, so the rows are the unweighted ones.
     *
     * Scale shape: canonicalize+distinct the edge list, two keyed
     * joins of edges onto the labels (co-partitioned by node — labels
-    * are node-sized, NOT broadcast), degree as a count over the
+    * are node-sized, NOT broadcast), degree as a sum over the
     * endpoint union, everything aggregated to communities-sized
     * frames; m rides a broadcast one-row crossJoin. Nodes appearing
     * in `labels` but not in any edge count into n_nodes with degree
@@ -791,43 +750,9 @@ object Graph {
     * unlabeled endpoint's edges silently vanish, so callers pass the
     * same node universe they clustered). */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
-      labels: DataFrame, nodeCol: String, labelCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).as("__eu"), col(dstCol).as("__ev"))
-      .where(col("__eu").isNotNull && col("__ev").isNotNull &&
-        col("__eu") =!= col("__ev"))
-      .select(least(col("__eu"), col("__ev")).as("__eu"),
-        greatest(col("__eu"), col("__ev")).as("__ev"))
-      .distinct()
-    val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("label"))
-    val mDf = e.agg(count(lit(1)).cast("long").as("m"))
-    val internal = e
-      .join(lab.select(col("__n").as("__eu"), col("label").as("__cu")),
-        Seq("__eu"))
-      .join(lab.select(col("__n").as("__ev"), col("label").as("__cv")),
-        Seq("__ev"))
-      .filter(col("__cu") === col("__cv"))
-      .groupBy(col("__cu").as("label"))
-      .agg(count(lit(1)).cast("long").as("e_in"))
-    val deg = e.select(col("__eu").as("__n"))
-      .unionByName(e.select(col("__ev").as("__n")))
-      .groupBy("__n").agg(count(lit(1)).cast("long").as("__d"))
-    val byC = lab.join(deg, Seq("__n"), "left")
-      .na.fill(0L, Seq("__d"))
-      .groupBy("label")
-      .agg(count(lit(1)).cast("long").as("n_nodes"),
-        sum("__d").cast("long").as("deg_sum"))
-    byC.join(internal, Seq("label"), "left")
-      .na.fill(0L, Seq("e_in"))
-      .crossJoin(broadcast(mDf))
-      .withColumn("q_term",
-        col("e_in").cast("double") / col("m").cast("double")
-          - (col("deg_sum").cast("double")
-              / (lit(2.0d) * col("m").cast("double")))
-            * (col("deg_sum").cast("double")
-              / (lit(2.0d) * col("m").cast("double"))))
-      .select("label", "n_nodes", "e_in", "deg_sum", "m", "q_term")
-  }
+      labels: DataFrame, nodeCol: String, labelCol: String): DataFrame =
+    modularityOf(simpleEdges(edges, srcCol, dstCol), labels, nodeCol,
+      labelCol, "e_in")
 
   /** WEIGHTED per-community modularity — [[modularity]] generalized
     * to the weighted-with-self-loops graphs [[coarsenByLabels]]
@@ -835,23 +760,22 @@ object Graph {
     * weights): q_term(c) = w_in(c)/m − (S_c/2m)², where w_in counts
     * internal edge weight (a self-loop counts its full weight), k_i
     * follows the Louvain convention (w per proper-edge endpoint, 2w
-    * per self-loop) and S_c = Σ k_i. Reduces exactly to
-    * [[modularity]] on a unit-weight simple graph (spec-asserted).
-    * Same scale shape and exact-longs/one-double contract. */
+    * per self-loop) and S_c = Σ k_i. Null/non-positive weights drop;
+    * with no weight left, m = 0 and q_term is null. Same scale shape
+    * and exact-longs/one-double contract. */
   def modularityWeighted(edges: DataFrame, srcCol: String,
       dstCol: String, wCol: String, labels: DataFrame, nodeCol: String,
-      labelCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).as("__a"), col(dstCol).as("__b"),
-        col(wCol).cast("long").as("__w"))
-      .where(col("__a").isNotNull && col("__b").isNotNull &&
-        col("__w").isNotNull && col("__w") > 0L)
-      .select(least(col("__a"), col("__b")).as("__eu"),
-        greatest(col("__a"), col("__b")).as("__ev"), col("__w"))
-      .groupBy("__eu", "__ev").agg(sum("__w").cast("long").as("__w"))
+      labelCol: String): DataFrame =
+    modularityOf(weightedEdges(edges, srcCol, dstCol, wCol), labels,
+      nodeCol, labelCol, "w_in")
+
+  /** The one modularity body over canonical (__eu, __ev, __w) long
+    * edges; `inCol` names the internal-weight column. */
+  private def modularityOf(e: DataFrame, labels: DataFrame,
+      nodeCol: String, labelCol: String, inCol: String): DataFrame = {
     val lab = labels.select(col(nodeCol).as("__n"),
       col(labelCol).as("label"))
-    val mDf = e.agg(sum("__w").cast("long").as("m"))
+    val mDf = e.agg(coalesce(sum("__w").cast("long"), lit(0L)).as("m"))
     val internal = e
       .join(lab.select(col("__n").as("__eu"), col("label").as("__cu")),
         Seq("__eu"))
@@ -859,28 +783,22 @@ object Graph {
         Seq("__ev"))
       .filter(col("__cu") === col("__cv"))
       .groupBy(col("__cu").as("label"))
-      .agg(sum("__w").cast("long").as("w_in"))
-    val deg = e.select(col("__eu").as("__n"),
-        when(col("__eu") === col("__ev"), col("__w") * 2L)
-          .otherwise(col("__w")).as("__kw"))
-      .unionByName(e.where(col("__eu") =!= col("__ev"))
-        .select(col("__ev").as("__n"), col("__w").as("__kw")))
-      .groupBy("__n").agg(sum("__kw").cast("long").as("__d"))
-    val byC = lab.join(deg, Seq("__n"), "left")
+      .agg(sum("__w").cast("long").as(inCol))
+    val byC = lab.join(strengths(e, "__d"), Seq("__n"), "left")
       .na.fill(0L, Seq("__d"))
       .groupBy("label")
       .agg(count(lit(1)).cast("long").as("n_nodes"),
         sum("__d").cast("long").as("deg_sum"))
     byC.join(internal, Seq("label"), "left")
-      .na.fill(0L, Seq("w_in"))
+      .na.fill(0L, Seq(inCol))
       .crossJoin(broadcast(mDf))
-      .withColumn("q_term",
-        col("w_in").cast("double") / col("m").cast("double")
+      .withColumn("q_term", when(col("m") > 0L,
+        col(inCol).cast("double") / col("m").cast("double")
           - (col("deg_sum").cast("double")
               / (lit(2.0d) * col("m").cast("double")))
             * (col("deg_sum").cast("double")
-              / (lit(2.0d) * col("m").cast("double"))))
-      .select("label", "n_nodes", "w_in", "deg_sum", "m", "q_term")
+              / (lit(2.0d) * col("m").cast("double")))))
+      .select("label", "n_nodes", inCol, "deg_sum", "m", "q_term")
   }
 
   /** ONE synchronous Louvain move round (the phase-1 local-move step
@@ -904,6 +822,8 @@ object Graph {
     * — exact longs everywhere except the single fixed-shape double
     * expression per candidate row (the [[modularity]] q_term
     * convention), so selection replays bit-identically cross-engine.
+    * This is [[louvainMoveRoundWeighted]] over the simple unit-weight
+    * graph ([[simpleEdges]]), where every weighted sum is that count.
     *
     * Returns one row per `labels` row: (node, old_label, new_label,
     * gain) — gain 0.0 and new_label = old_label for stayers (isolated
@@ -912,66 +832,15 @@ object Graph {
     * universe you clustered.
     *
     * Scale shape: canonical distinct edge set, neighbor-community
-    * counts via one edges⋈labels join + grouped count (map-side
+    * sums via one edges⋈labels join + grouped sum (map-side
     * partials), community degree masses joined co-partitioned on
     * label (communities can be node-sized — never broadcast), argmax
     * via `min_by` over (−gain, label) — no window; m rides a
     * broadcast one-row crossJoin. */
   def louvainMoveRound(edges: DataFrame, srcCol: String, dstCol: String,
-      labels: DataFrame, nodeCol: String, labelCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).as("__eu"), col(dstCol).as("__ev"))
-      .where(col("__eu").isNotNull && col("__ev").isNotNull &&
-        col("__eu") =!= col("__ev"))
-      .select(least(col("__eu"), col("__ev")).as("__eu"),
-        greatest(col("__eu"), col("__ev")).as("__ev"))
-      .distinct()
-    val sym = e.unionByName(
-      e.select(col("__ev").as("__eu"), col("__eu").as("__ev")))
-    val lab = labels.select(col(nodeCol).as("__n"),
-      col(labelCol).as("__lbl"))
-    val mDf = e.agg(count(lit(1)).cast("long").as("__m"))
-    val deg = sym.groupBy(col("__eu").as("__n"))
-      .agg(count(lit(1)).cast("long").as("__ki"))
-    val tot = lab.join(deg, Seq("__n"), "left").na.fill(0L, Seq("__ki"))
-      .groupBy("__lbl").agg(sum("__ki").cast("long").as("__tot"))
-    val nbrC = sym
-      .join(lab.select(col("__n").as("__ev"), col("__lbl").as("__c")),
-        Seq("__ev"))
-      .groupBy(col("__eu").as("__n"), col("__c"))
-      .agg(count(lit(1)).cast("long").as("__kic"))
-    val base = lab
-      .join(deg, Seq("__n"), "left").na.fill(0L, Seq("__ki"))
-      .join(tot.select(col("__lbl"), col("__tot").as("__totA")),
-        Seq("__lbl"))
-      .join(nbrC.select(col("__n"), col("__c").as("__lbl"),
-        col("__kic").as("__kia")), Seq("__n", "__lbl"), "left")
-      .na.fill(0L, Seq("__kia"))
-    val cand = nbrC.join(base, Seq("__n"))
-      .where(col("__c") =!= col("__lbl"))
-      .join(tot.select(col("__lbl").as("__c"),
-        col("__tot").as("__totC")), Seq("__c"))
-      .crossJoin(broadcast(mDf))
-      .withColumn("__gain",
-        (col("__kic") - col("__kia")).cast("double")
-            / col("__m").cast("double")
-          - (col("__ki").cast("double")
-              / (lit(2.0d) * col("__m").cast("double")))
-            * ((col("__totC") - col("__totA") + col("__ki"))
-                .cast("double") / col("__m").cast("double")))
-    val best = cand.groupBy("__n")
-      .agg(min_by(struct(col("__c"), col("__gain")),
-        struct((lit(0.0d) - col("__gain")).as("ng"), col("__c")))
-        .as("__b"))
-      .select(col("__n"), col("__b.__c").as("__bc"),
-        col("__b.__gain").as("__bg"))
-    lab.join(best, Seq("__n"), "left")
-      .select(col("__n").as("node"), col("__lbl").as("old_label"),
-        when(col("__bg") > 0.0d, col("__bc")).otherwise(col("__lbl"))
-          .as("new_label"),
-        when(col("__bg") > 0.0d, col("__bg")).otherwise(lit(0.0d))
-          .as("gain"))
-  }
+      labels: DataFrame, nodeCol: String, labelCol: String): DataFrame =
+    moveRound(simpleEdges(edges, srcCol, dstCol), labels, nodeCol,
+      labelCol)
 
   /** Iterated [[louvainMoveRound]] from singleton communities (every
     * node its own label — the Louvain start state): `rounds` fixed
@@ -1012,25 +881,18 @@ object Graph {
     * summed, so callers may pass either orientation. */
   def louvainMoveRoundWeighted(edges: DataFrame, srcCol: String,
       dstCol: String, wCol: String, labels: DataFrame, nodeCol: String,
+      labelCol: String): DataFrame =
+    moveRound(weightedEdges(edges, srcCol, dstCol, wCol), labels,
+      nodeCol, labelCol)
+
+  /** The one Louvain move-round body over canonical (__eu, __ev, __w)
+    * long edges (conventions at [[louvainMoveRoundWeighted]]). */
+  private def moveRound(e: DataFrame, labels: DataFrame, nodeCol: String,
       labelCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).as("__a"), col(dstCol).as("__b"),
-        col(wCol).cast("long").as("__w"))
-      .where(col("__a").isNotNull && col("__b").isNotNull &&
-        col("__w").isNotNull && col("__w") > 0L)
-      .select(least(col("__a"), col("__b")).as("__eu"),
-        greatest(col("__a"), col("__b")).as("__ev"), col("__w"))
-      .groupBy("__eu", "__ev").agg(sum("__w").cast("long").as("__w"))
     val lab = labels.select(col(nodeCol).as("__n"),
       col(labelCol).as("__lbl"))
     val mDf = e.agg(sum("__w").cast("long").as("__m"))
-    // k_i: w to each endpoint of a proper edge, 2w for a self-loop
-    val deg = e.select(col("__eu").as("__n"),
-        when(col("__eu") === col("__ev"), col("__w") * 2L)
-          .otherwise(col("__w")).as("__kw"))
-      .unionByName(e.where(col("__eu") =!= col("__ev"))
-        .select(col("__ev").as("__n"), col("__w").as("__kw")))
-      .groupBy("__n").agg(sum("__kw").cast("long").as("__ki"))
+    val deg = strengths(e, "__ki")
     val tot = lab.join(deg, Seq("__n"), "left").na.fill(0L, Seq("__ki"))
       .groupBy("__lbl").agg(sum("__ki").cast("long").as("__tot"))
     // weighted neighbor-community mass, self-loops excluded
@@ -1115,15 +977,9 @@ object Graph {
       levels: Int = 2, roundsPerLevel: Int = 2): DataFrame = {
     require(levels >= 1 && roundsPerLevel >= 1,
       "at least one level and one round")
-    val base = edges
-      .select(col(srcCol).as("__a"), col(dstCol).as("__b"))
-      .where(col("__a").isNotNull && col("__b").isNotNull &&
-        col("__a") =!= col("__b"))
-      .select(least(col("__a"), col("__b")).as("u"),
-        greatest(col("__a"), col("__b")).as("v"))
-      .distinct()
-      .withColumn("w", lit(1L))
-    var g = base.lineageCut()
+    var g = simpleEdges(edges, srcCol, dstCol)
+      .select(col("__eu").as("u"), col("__ev").as("v"), col("__w").as("w"))
+      .lineageCut()
     var assign = g.select(col("u").as("node")).unionByName(
         g.select(col("v").as("node"))).distinct()
       .select(col("node"), col("node").as("community"))
@@ -1148,15 +1004,72 @@ object Graph {
     assign
   }
 
+  /** Canonical weighted undirected edges (__eu ≤ __ev, long __w):
+    * null endpoints and null/non-positive weights drop, self-loops
+    * stay, parallel edges of either orientation sum their weights. */
+  private def weightedEdges(edges: DataFrame, srcCol: String,
+      dstCol: String, wCol: String): DataFrame =
+    edges
+      .select(col(srcCol).as("__a"), col(dstCol).as("__b"),
+        col(wCol).cast("long").as("__w"))
+      .where(col("__a").isNotNull && col("__b").isNotNull &&
+        col("__w").isNotNull && col("__w") > 0L)
+      .select(least(col("__a"), col("__b")).as("__eu"),
+        greatest(col("__a"), col("__b")).as("__ev"), col("__w"))
+      .groupBy("__eu", "__ev").agg(sum("__w").cast("long").as("__w"))
+
+  /** The simple graph of an edge list as canonical unit-weight edges
+    * (__eu < __ev, __w = 1L): null endpoints and self-loops drop,
+    * parallel edges of either orientation collapse to one. Already in
+    * [[weightedEdges]]' form, so it feeds the weighted bodies as is. */
+  private def simpleEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges
+      .select(col(srcCol).as("__a"), col(dstCol).as("__b"))
+      .where(properEdge("__a", "__b"))
+      .select(least(col("__a"), col("__b")).as("__eu"),
+        greatest(col("__a"), col("__b")).as("__ev"))
+      .distinct()
+      .withColumn("__w", lit(1L))
+
+  /** Louvain k_i per node `__n`, as the long column `name`: w to each
+    * endpoint of a proper (__eu, __ev, __w) edge, 2w for a self-loop. */
+  private def strengths(e: DataFrame, name: String): DataFrame =
+    e.select(col("__eu").as("__n"),
+        when(col("__eu") === col("__ev"), col("__w") * 2L)
+          .otherwise(col("__w")).as("__kw"))
+      .unionByName(e.where(col("__eu") =!= col("__ev"))
+        .select(col("__ev").as("__n"), col("__w").as("__kw")))
+      .groupBy("__n").agg(sum("__kw").cast("long").as(name))
+
   /** Both directions of each edge, self-loops dropped, null endpoints
     * dropped, parallel edges collapsed. */
   private def symmetrize(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).as("__u"), col(dstCol).as("__v"))
-      .where(col("__u").isNotNull && col("__v").isNotNull &&
-        col("__u") =!= col("__v"))
+    val e = properPairs(edges, srcCol, dstCol)
     e.unionByName(e.select(col("__v").as("__u"), col("__u").as("__v")))
       .distinct()
   }
+
+  /** (__u, __v) per input edge, null endpoints and self-loops dropped
+    * (parallel edges kept). */
+  private def properPairs(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"))
+      .where(properEdge("__u", "__v"))
+
+  /** (__u, __v, __w) per input edge with the weight cast
+    * decimal(27,12): null endpoints, self-loops and null/non-positive
+    * weights drop. */
+  private def positiveEdges(edges: DataFrame, srcCol: String,
+      dstCol: String, wCol: String): DataFrame =
+    edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"),
+        col(wCol).cast("decimal(27,12)").as("__w"))
+      .where(properEdge("__u", "__v") && col("__w").isNotNull &&
+        col("__w") > 0)
+
+  /** Both endpoints present and distinct — the edge filter every
+    * graph operator applies. */
+  private def properEdge(u: String, v: String): Column =
+    col(u).isNotNull && col(v).isNotNull && col(u) =!= col(v)
 }

@@ -433,16 +433,19 @@ final class VectorStore(
     clfCache.get._2
   }
 
-  /** Train a regressor on stored vectors (`MLP_Regressor` capability —
-    * GBT substitute, see MlpBridge M8 note). `skipBuild` reuses the
-    * cached model as in [[mlpClassifier]]. */
-  def mlpRegressor(yLabel: String, maxIter: Int = 50,
+  /** Train an MLP regressor on stored vectors (`MLP_Regressor`,
+    * [[graft.ml.MlpBridge.trainMlpRegressor]]): 75/25 split, holdout
+    * R², predictions for ALL rows. `maxIter` is the number of
+    * gradient-descent iterations. `skipBuild` reuses the cached model
+    * as in [[mlpClassifier]]. */
+  def mlpRegressor(yLabel: String, maxIter: Int = 300,
       skipBuild: Boolean = false): graft.ml.MlpResult = {
     require(!isEmpty, "store is empty")
     val args = Seq[Any](yLabel, maxIter)
     if (!skipBuild || !regrCache.exists(_._1 == args))
-      regrCache = Some(args -> graft.ml.MlpBridge.trainRegressor(
-        data.filter(col(yLabel).isNotNull), "vector", yLabel, maxIter))
+      regrCache = Some(args -> graft.ml.MlpBridge.trainMlpRegressor(
+        data.filter(col(yLabel).isNotNull), "vector", yLabel,
+        iters = maxIter))
     regrCache.get._2
   }
 

@@ -34,20 +34,6 @@ class MlpBridgeSpec extends SparkSpec {
     assert(acc >= 0.95, s"all-rows accuracy $acc")
   }
 
-  test("regressor substitute recovers a linear signal (M8, GBT path)") {
-    import spark.implicits._
-    val rnd = new Random(7)
-    val rows = (0 until 200).map { i =>
-      val v = Array.fill(4)(rnd.nextGaussian().toFloat)
-      (i.toLong, v, 3.0 * v(0) - 2.0 * v(1) + 0.1 * rnd.nextGaussian())
-    }
-    val df = rows.toDF("id", "vector", "y")
-    val res = MlpBridge.trainRegressor(df, "vector", "y")
-    assert(res.holdoutMetric >= 0.7, s"holdout R² ${res.holdoutMetric}")
-    val p = MlpBridge.pearson(res.predictions, "mlp_pred", "y")
-    assert(p >= 0.85, s"pearson $p")
-  }
-
   test("TRUE MLP regressor learns a linear signal (M8): holdout R², " +
       "all-rows predictions, input-partitioning insensitivity") {
     import spark.implicits._

@@ -110,27 +110,37 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(out(1L) > out(3L) && out(2L) > out(3L))
     assert(math.abs(out.values.sum - 1.0) < 1e-6)
+    // one edge-cleaning rule for the three PageRanks (personalized
+    // seeded with every vertex)
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val rankers: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "pageRank" -> (df => Graph.pageRank(df, "src", "dst", iters = 3,
+        weightCol = Some("w"))),
+      "pageRankDirected" -> (df => Graph.pageRankDirected(df, "src",
+        "dst", iters = 3, weightCol = Some("w"))),
+      "personalizedPageRank" -> (df => Graph.personalizedPageRank(df,
+        "src", "dst", df.select(col("src").as("seed"))
+          .unionByName(df.select(col("dst").as("seed"))), "seed",
+        iters = 3, weightCol = Some("w"))))
     // a zero/negative/null-weight edge is no edge: node 4 vanishes
     val e2 = Seq((1L, 2L, java.lang.Long.valueOf(10L)),
       (1L, 4L, java.lang.Long.valueOf(0L)),
       (2L, 4L, java.lang.Long.valueOf(-3L)),
       (3L, 4L, null.asInstanceOf[java.lang.Long]))
       .toDF("src", "dst", "w")
-    val nodes = Graph.pageRank(e2, "src", "dst", iters = 2,
-      weightCol = Some("w")).collect().map(_.getLong(0)).toSet
-    assert(nodes === Set(1L, 2L))
     // parallel weighted edges pool their weight (multigraph collapse):
     // 1-2 twice at w=5 ranks like 1-2 once at w=10
     val ePar = Seq((1L, 2L, 5L), (1L, 2L, 5L), (1L, 3L, 1L))
       .toDF("src", "dst", "w")
     val eSum = Seq((1L, 2L, 10L), (1L, 3L, 1L)).toDF("src", "dst", "w")
-    val a = Graph.pageRank(ePar, "src", "dst", iters = 3,
-      weightCol = Some("w")).orderBy("node").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    val b = Graph.pageRank(eSum, "src", "dst", iters = 3,
-      weightCol = Some("w")).orderBy("node").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    assert(a.toSeq === b.toSeq)
+    for ((name, rank) <- rankers) {
+      val nodes = rank(e2).collect().map(_.getLong(0)).toSet
+      assert(nodes === Set(1L, 2L), name)
+      def ranks(df: DataFrame) = rank(df).orderBy("node").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(ranks(ePar) === ranks(eSum), name)
+    }
   }
 
   test("pageRankDirected conserves mass on a graph WITH a sink and " +
@@ -529,5 +539,33 @@ class GraphSpec extends SparkSpec {
       .collect()
     assert(rows.length === 1)
     assert(rows.head.getDouble(5) === 0.0)
+  }
+
+  test("modularity of an edgeless graph: one row per community, m = 0, " +
+      "q_term null") {
+    import spark.implicits._
+    // Q is undefined without edges; both entry points agree on it
+    val lab = Seq((1L, "A"), (2L, "A"), (3L, "B")).toDF("node", "com")
+    val empty = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
+    // self-loops are no edges of the simple graph; non-positive
+    // weights are no edges of the weighted one
+    val loops = Seq((1L, 1L, 1L), (3L, 3L, 1L)).toDF("src", "dst", "w")
+    val dropped = Seq((1L, 2L, 0L), (2L, 3L, -1L)).toDF("src", "dst", "w")
+    val runs = Seq(
+      "modularity/empty" -> Graph.modularity(empty, "src", "dst", lab,
+        "node", "com"),
+      "modularity/self-loops" -> Graph.modularity(loops, "src", "dst",
+        lab, "node", "com"),
+      "modularityWeighted/empty" -> Graph.modularityWeighted(empty,
+        "src", "dst", "w", lab, "node", "com"),
+      "modularityWeighted/non-positive" -> Graph.modularityWeighted(
+        dropped, "src", "dst", "w", lab, "node", "com"))
+    for ((name, df) <- runs) {
+      val rows = df.orderBy("label").collect().map(r =>
+        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.get(4), r.get(5)))
+      assert(rows.toSeq === Seq(("A", 2L, 0L, 0L, 0L, null),
+        ("B", 1L, 0L, 0L, 0L, null)), name)
+    }
   }
 }

@@ -81,10 +81,16 @@ class LouvainSpec extends SparkSpec {
     val weighted = Graph.louvainMoveRoundWeighted(
       triEdges.withColumn("w", lit(1L)), "u", "v", "w",
       triLabels, "n", "lbl")
-    val unweighted = Graph.louvainMoveRound(triEdges, "u", "v",
-      triLabels, "n", "lbl")
-    assert(weighted.except(unweighted).count() === 0 &&
-      unweighted.except(weighted).count() === 0)
+    // a multigraph (parallel edges in both orientations, a self-loop)
+    // moves like its simple unit-weight graph, which is triEdges
+    val multi = triEdges.union(Seq(("b", "a"), ("a", "b"), ("d", "c"),
+      ("c", "c")).toDF("u", "v"))
+    for (raw <- Seq(triEdges, multi)) {
+      val unweighted = Graph.louvainMoveRound(raw, "u", "v",
+        triLabels, "n", "lbl")
+      assert(weighted.except(unweighted).count() === 0 &&
+        unweighted.except(weighted).count() === 0)
+    }
   }
 
   test("coarsenByLabels: hand-checked inter weights and self-loops") {
