@@ -29,7 +29,7 @@ import scala.collection.mutable.{ArrayBuffer, HashSet}
   * Points are visited in the sample's seeded hash order, so the fit
   * does not depend on how the input is partitioned.
   */
-private[operators] object LocalFit {
+private[graft] object LocalFit {
 
   /** Training rows per centroid; the sample cap is this × the largest
     * centroid count the fit needs. */
@@ -43,7 +43,9 @@ private[operators] object LocalFit {
     * heap. The fit holds a few copies at once (the collected rows, the
     * decoded floats, the kernels' `ArrayData` copies, PQ's subvectors);
     * at this budget its live driver heap measured below that of the
-    * distributed fit it replaced, which cached the whole sample. */
+    * distributed fit it replaced, which cached the whole sample. The
+    * same budget bounds a [[graft.store.VectorStore]]'s in-process
+    * snapshot. */
   def sampleBudgetBytes: Long = Runtime.getRuntime.maxMemory / 32
 
   /** The training sample for a fit with `centroids` centroids per

@@ -49,6 +49,8 @@ object Metric {
 object Similarity {
 
   /** Single-query k-NN: top-k rows of `corpus` closest to `query`.
+    * A row with a null vector never takes a slot: its score would be
+    * null, and plain ascending order is NULLS FIRST.
     * Ties broken by `idCol` ascending for deterministic results
     * (SURVEY §7.4). Mirrors `query()` —
     * `/root/reference/vsu/base/VectorSearchBase.py:193-202`. */
@@ -58,7 +60,10 @@ object Similarity {
     require(k > 0, "k must be positive")
     require(!corpus.columns.contains(scoreCol),
       s"scoreCol '$scoreCol' collides with a corpus column — rename one")
-    val scored = corpus.withColumn(scoreCol,
+    // the vector, not the score, is filtered: the filter stays below the
+    // top-k, so a collect still merges the per-partition heaps on the
+    // driver (a filter above the limit makes it a one-partition shuffle)
+    val scored = corpus.where(col(vecCol).isNotNull).withColumn(scoreCol,
       metric.score(col(vecCol), typedLit(query)))
     val ord = if (metric.ascending) col(scoreCol).asc else col(scoreCol).desc
     scored.orderBy(ord, col(idCol).asc).limit(k)

@@ -1,11 +1,14 @@
 package graft.store
 
 import graft.Schemas
-import graft.functions.{Embed, Embedder}
-import graft.operators.{Metric, Similarity}
+import graft.functions.{Embed, Embedder, VectorOps}
+import graft.operators.{LocalFit, Metric, Similarity}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+
+import scala.jdk.CollectionConverters._
 
 /** Schema coercion for ingest — the bulk form of the reference's
   * `set_data` preprocessing (`/root/reference/vsu/base/VectorSearchBase
@@ -64,8 +67,14 @@ object Ingest {
   *
   * Scale design: ingest is bulk (no per-row inserts — S7 is a single
   * `write.mode(append)`), dedup is a hash-shuffle anti-join on `target`
-  * (never post-union dropDuplicates — U1), queries are brute-force
-  * scans planned as `TakeOrderedAndProject` (no corpus shuffle).
+  * (never post-union dropDuplicates — U1). Queries are exact
+  * brute-force top-k. While the store fits the driver budget
+  * ([[LocalFit.sampleBudgetBytes]], a 32nd of the driver heap) they are
+  * served in-process from a [[StoreSnapshot]]: the first query after a
+  * change collects the store once, later ones score it on the driver
+  * with no Spark job and return a local frame. Above the budget they
+  * are Spark scans planned as `TakeOrderedAndProject` (no corpus
+  * shuffle). Both paths return the same rows and schema.
   *
   * '''Bucketed durable mode''' (`bucketedTable`): the store persists as
   * a catalog table `bucketBy(numBuckets, target)`. Appends then (a)
@@ -95,6 +104,40 @@ final class VectorStore(
   import Ingest._
 
   private var mem: Option[DataFrame] = None
+
+  // the in-process copy of `snapSource` (None: that frame was over the
+  // budget); valid only while `snapSource` is the current `mem`, so
+  // every write, which installs a new frame, invalidates it
+  private var snapSource: DataFrame = null
+  private var snap: Option[StoreSnapshot] = None
+  private var snapshotBudgetBytes: Long = LocalFit.sampleBudgetBytes
+
+  /** Forces the snapshot budget and drops any snapshot; package-visible
+    * so specs can pin either query path (0 = always Spark). */
+  private[graft] def setSnapshotBudget(bytes: Long): Unit = {
+    snapshotBudgetBytes = bytes
+    snapSource = null
+    snap = None
+  }
+
+  /** The snapshot of the current contents if one is valid; never
+    * collects. */
+  private def validSnapshot: Option[StoreSnapshot] =
+    if (mem.exists(_ eq snapSource)) snap else None
+
+  /** The snapshot of the current contents, taken on first use after a
+    * change; None while the store is over the budget. An append keeps
+    * an over-budget verdict (see [[setData]]); any other write sizes the
+    * store again on its next query. */
+  private def snapshot: Option[StoreSnapshot] = {
+    val current = data
+    if (current ne snapSource) {
+      snap = None // release the stale copy before collecting the next
+      snap = StoreSnapshot.take(current, snapshotBudgetBytes)
+      snapSource = current
+    }
+    snap
+  }
 
   private def emptyData: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.record)
@@ -131,7 +174,11 @@ final class VectorStore(
     fs.exists(hadoopPath)
   }
 
-  def isEmpty: Boolean = data.isEmpty
+  def isEmpty: Boolean = validSnapshot.fold(data.isEmpty)(_.isEmpty)
+
+  /** Largest stored id, of a non-empty store. */
+  private def maxId: Long =
+    validSnapshot.fold(data.agg(max("id")).head.getLong(0))(_.maxId)
 
   /** Typed view of the store (SURVEY §1.4). */
   def typed: org.apache.spark.sql.Dataset[graft.VectorRecord] = {
@@ -157,9 +204,12 @@ final class VectorStore(
     val inBatchDeduped = prepareIngest(df, sortCols)
 
     if (append && !isEmpty) {
+      // appends only grow the store, so one found over the snapshot
+      // budget stays over it: the new frame keeps that verdict instead
+      // of being sized (or collected) again by the next query
+      val overBudget = mem.exists(_ eq snapSource) && snap.isEmpty
       val existing = data
       val fresh = appendAntiJoin(inBatchDeduped)
-      val maxId = existing.agg(max("id")).head.getLong(0)
       val freshWithIds = withSequentialIds(fresh, maxId + 1, sortCols)
         .select(Schemas.record.fieldNames.map(col): _*)
       bucketedTable match {
@@ -176,6 +226,7 @@ final class VectorStore(
         case None =>
           persist(existing.unionByName(freshWithIds), truncateLineage = true)
       }
+      if (overBudget) snapSource = mem.get
     } else {
       val withIds = withSequentialIds(inBatchDeduped, startAt = 1L, sortCols)
         .select(Schemas.record.fieldNames.map(col): _*)
@@ -248,7 +299,6 @@ final class VectorStore(
       .join(batch.select("target"), Seq("target"), "left_anti")
       .select(Schemas.record.fieldNames.map(col): _*)
     val fresh = batch.join(existing.select("target"), Seq("target"), "left_anti")
-    val maxId = existing.agg(max("id")).head.getLong(0)
     val freshWithIds = withSequentialIds(fresh, maxId + 1, sortCols)
       .select(Schemas.record.fieldNames.map(col): _*)
     val result = untouched.unionByName(updated).unionByName(freshWithIds)
@@ -452,10 +502,20 @@ final class VectorStore(
   /** k-NN by raw vector (`query` parity minus the embed step). Returns
     * `(id, target, option1..5, distance)` ascending squared-L2 with id
     * tiebreak; empty result on empty store (P5 — the reference returns
-    * None, `VectorSearchBase.py:209-210`). */
-  def queryVector(q: Array[Float], k: Int = 5): DataFrame =
-    Similarity.topK(data, "vector", "id", q, k, Metric.SquaredL2)
-      .select(("id" +: Schemas.saveCols :+ "distance").map(col): _*)
+    * None, `VectorSearchBase.py:209-210`). Rows with a null vector are
+    * never returned. */
+  def queryVector(q: Array[Float], k: Int = 5): DataFrame = search(q, k)._1
+
+  /** The top-k frame, plus its rows when it was scored in-process. */
+  private def search(q: Array[Float],
+      k: Int): (DataFrame, Option[Array[Row]]) = snapshot match {
+    case Some(s) =>
+      val rows = s.topK(q, k)
+      (spark.createDataFrame(rows.toSeq.asJava, s.schema), Some(rows))
+    case None =>
+      (Similarity.topK(data, "vector", "id", q, k, Metric.SquaredL2)
+        .select(StoreSnapshot.resultCols.map(col): _*), None)
+  }
 
   /** k-NN by text: embed with the single query prefix (quirk Q1: the
     * reference double-prefixes queries, `/root/reference/vsu/text/
@@ -465,18 +525,121 @@ final class VectorStore(
 
   /** `query_with_info` parity (`VectorSearchBase.py:215-217`): query
     * result with all-null columns dropped (P4 — unused option slots
-    * vanish). The null-count aggregation runs on ≤ k rows. */
+    * vanish). Decided on the ≤ k rows: read directly from an in-process
+    * result, by a null-count aggregation otherwise. */
   def queryWithInfo(q: String, k: Int = 5): DataFrame =
-    dropAllNullColumns(query(q, k))
+    queryVectorWithInfo(embedder.embedOne(queryPrefix + q), k)
 
-  def queryVectorWithInfo(q: Array[Float], k: Int = 5): DataFrame =
-    dropAllNullColumns(queryVector(q, k))
-
-  private def dropAllNullColumns(df: DataFrame): DataFrame = {
-    val counts = df.select(df.columns.map(c => count(col(c)).as(c)): _*)
-      .head
-    val keep = df.columns.zipWithIndex
-      .collect { case (c, i) if counts.getLong(i) > 0 => c }
+  def queryVectorWithInfo(q: Array[Float], k: Int = 5): DataFrame = {
+    val (df, local) = search(q, k)
+    val present: Int => Boolean = local match {
+      case Some(rows) => i => rows.exists(!_.isNullAt(i))
+      case None =>
+        val counts = df.select(df.columns.map(c => count(col(c)).as(c)): _*)
+          .head
+        i => counts.getLong(i) > 0
+    }
+    val keep = df.columns.zipWithIndex.collect { case (c, i) if present(i) => c }
     if (keep.isEmpty) df else df.select(keep.map(col): _*)
+  }
+}
+
+/** A driver-side copy of a store's contents, for serving top-k without
+  * a Spark job: `payload(i)` holds row `i`'s `(id, target, option1..5)`
+  * and `vecs(i)` its vector (null for a null vector).
+  * Scoring is [[VectorOps.squaredL2Floats]] — the Catalyst kernel's
+  * float→double widening and sequential double accumulation — so
+  * distances are bit-identical to the Spark path's, and the top k are
+  * kept by (distance, id) ascending in one bounded heap. */
+private[store] final class StoreSnapshot(payload: Array[Row],
+    vecs: Array[Array[Float]], val schema: StructType) {
+  import StoreSnapshot._
+
+  private val ids = payload.map(_.getLong(0))
+
+  private val dims = vecs.iterator.filter(_ != null).map(_.length)
+    .distinct.toArray
+
+  def isEmpty: Boolean = ids.isEmpty
+
+  def maxId: Long = ids.max
+
+  /** The k nearest rows as `payload :+ distance`, ascending by
+    * (distance, id); rows with a null vector never take a slot. Raises
+    * `vector length mismatch` before scoring when a stored dim differs
+    * from the query's. */
+  def topK(q: Array[Float], k: Int): Array[Row] = {
+    require(k > 0, "k must be positive")
+    dims.find(_ != q.length).foreach { d =>
+      throw new IllegalArgumentException(
+        s"vector length mismatch: $d vs ${q.length}")
+    }
+    val before: (Hit, Hit) => Boolean = (a, b) => {
+      val c = SQLOrderingUtil.compareDoubles(a._1, b._1)
+      c < 0 || (c == 0 && ids(a._2) < ids(b._2))
+    }
+    // bounded heap whose head is the worst kept hit
+    val heap = new java.util.PriorityQueue[Hit](math.min(k, vecs.length + 1),
+      (a: Hit, b: Hit) => if (before(a, b)) 1 else if (before(b, a)) -1 else 0)
+    var i = 0
+    while (i < vecs.length) {
+      val v = vecs(i)
+      if (v != null) {
+        val hit = (VectorOps.squaredL2Floats(v, q), i)
+        if (heap.size < k) heap.add(hit)
+        else if (before(hit, heap.peek)) { heap.poll(); heap.add(hit) }
+      }
+      i += 1
+    }
+    heap.asScala.toArray.sortWith(before).map { case (d, r) =>
+      Row.fromSeq(payload(r).toSeq :+ d)
+    }
+  }
+}
+
+private[store] object StoreSnapshot {
+  /** (distance, row index). */
+  private type Hit = (Double, Int)
+
+  /** Heap bytes a row costs beyond its floats and string chars: object
+    * headers and references of the row, its array and its strings. */
+  private val RowOverheadBytes = 96L
+
+  val resultCols: Seq[String] = "id" +: Schemas.saveCols :+ "distance"
+
+  /** One collect of `data` when it is under `budgetBytes`: the
+    * optimizer's size estimate gates the collect, the collected rows'
+    * heap estimate gates the snapshot. None when either is over. A
+    * frame the optimizer cannot size (a checkpointed or RDD-built one,
+    * reported as `Long.MaxValue`) is gated by one aggregation job that
+    * computes the heap estimate instead. */
+  def take(data: DataFrame, budgetBytes: Long): Option[StoreSnapshot] = {
+    import data.sparkSession.implicits._
+    val cols = resultCols.init
+    val sized = data.queryExecution.optimizedPlan.stats.sizeInBytes
+    val preBytes =
+      if (sized < Long.MaxValue) sized
+      else BigInt(data.select(coalesce(sum(
+        lit(RowOverheadBytes) +
+          when(col("vector").isNull, 0).otherwise(size(col("vector")) * 4) +
+          cols.tail.map(c => coalesce(length(col(c)) * 2, lit(0)))
+            .reduce(_ + _)), lit(0L))).head.getLong(0))
+    if (preBytes >= budgetBytes) return None
+    // vectors decode straight to float arrays, the payload to rows
+    val payloadSchema = StructType(cols.map(data.schema(_)))
+    val (payload, vecs) = data
+      .select(struct(cols.map(col): _*), col("vector"))
+      .as(Encoders.tuple(Encoders.row(payloadSchema),
+        implicitly[Encoder[Array[Float]]]))
+      .collect().unzip
+    val bytes = payload.iterator.zip(vecs.iterator).map { case (r, v) =>
+      RowOverheadBytes + (if (v == null) 0L else 4L * v.length) +
+        (1 until r.length).iterator.map(i =>
+          if (r.isNullAt(i)) 0L else 2L * r.getString(i).length).sum
+    }.sum
+    if (bytes >= budgetBytes) None
+    else Some(new StoreSnapshot(payload, vecs,
+      payloadSchema.add(StructField("distance", DoubleType,
+        nullable = data.schema("vector").nullable))))
   }
 }

@@ -99,6 +99,18 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("topK: a null vector never takes a slot, in either direction") {
+    import spark.implicits._
+    val withNull = corpus.union(Seq((0L, null: Array[Float])).toDF("id", "vec"))
+    for (m <- Seq(Metric.SquaredL2, Metric.Cosine, Metric.Dot)) {
+      val res = Similarity.topK(withNull, "vec", "id", Array(1f, 0f), k = 6,
+        metric = m).collect()
+      assert(res.map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L),
+        s"$m: ${res.mkString(", ")}")
+      assert(!res.exists(_.isNullAt(2)), s"$m returned a null score")
+    }
+  }
+
   test("k larger than corpus returns whole corpus, k<=0 rejected") {
     assert(Similarity.topK(corpus, "vec", "id", Array(0f, 0f), 100)
       .count() == 5)
