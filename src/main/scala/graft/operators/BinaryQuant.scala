@@ -37,10 +37,9 @@ final class BinaryQuantIndex(
   /** Approximate top-k under the [[Rerank]] contract: Hamming
     * distances pick the candidates. */
   def query(q: Array[Float], k: Int, refineFactor: Int = 8): DataFrame =
-    Rerank.topK(
-      codes.withColumn("__hd", hamming_dist(col(CodeCol),
-        typedLit(BinaryQuant.pack(q)))),
-      "__hd", k, refineFactor, corpus, vecCol, idCol, q)
+    Rerank.topK(codes, CodeCol, "__hd", k, refineFactor, corpus, vecCol,
+        idCol, q)(_.withColumn("__hd", hamming_dist(col(CodeCol),
+      typedLit(BinaryQuant.pack(q)))))
 
   /** Batch ANN join: per query row the approximate top-k corpus rows,
     * (queryIdCol, idCol, distance). The query side must be

@@ -36,11 +36,10 @@ final class IvfBinaryIndex(
   def query(q: Array[Float], k: Int, nprobe: Int = 4,
       refineFactor: Int = 8): DataFrame = {
     val probed = IvfIndex.probe(cells, q, nprobe).map(Integer.valueOf)
-    Rerank.topK(
-      table.filter(col(IvfIndex.ClusterCol).isin(probed: _*))
-        .withColumn("__hd", hamming_dist(col(BinaryQuant.CodeCol),
-          typedLit(BinaryQuant.pack(q)))),
-      "__hd", k, refineFactor, corpus, vecCol, idCol, q)
+    Rerank.topK(table.filter(col(IvfIndex.ClusterCol).isin(probed: _*)),
+        BinaryQuant.CodeCol, "__hd", k, refineFactor, corpus, vecCol, idCol,
+        q)(_.withColumn("__hd", hamming_dist(col(BinaryQuant.CodeCol),
+      typedLit(BinaryQuant.pack(q)))))
   }
 
   /** Persist the codes table partitioned by cell — probed queries read

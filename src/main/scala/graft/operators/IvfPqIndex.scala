@@ -36,16 +36,16 @@ final class IvfPqIndex(
     * the ADC table of the query's residual scores that cell's codes. */
   def query(q: Array[Float], k: Int, nprobe: Int = 4,
       refineFactor: Int = 4): DataFrame = {
-    val branches = IvfIndex.residualBranches(table, cells, q, nprobe,
-      idCol) { raw =>
-      // OPQ variant: codes live in the rotated residual space, so the
-      // query residual rotates driver-side before the ADC table
-      val residQ = rotation.fold(raw)(PqIndex.matVecFloats(_, raw))
-      pq_adc(col(PqIndex.CodeCol), PqIndex.adcTable(codebooks, residQ),
-        codesPerBook)
+    Rerank.topK(table, PqIndex.CodeCol, "distance", k, refineFactor, corpus,
+        vecCol, idCol, q) { codes =>
+      IvfIndex.residualBranches(codes, cells, q, nprobe, idCol) { raw =>
+        // OPQ variant: codes live in the rotated residual space, so the
+        // query residual rotates driver-side before the ADC table
+        val residQ = rotation.fold(raw)(PqIndex.matVecFloats(_, raw))
+        pq_adc(col(PqIndex.CodeCol), PqIndex.adcTable(codebooks, residQ),
+          codesPerBook)
+      }
     }
-    Rerank.topK(branches, "distance", k, refineFactor, corpus, vecCol,
-      idCol, q)
   }
 
   /** Persist the compressed table partitioned by cell: probed queries

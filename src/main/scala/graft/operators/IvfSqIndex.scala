@@ -33,10 +33,11 @@ final class IvfSqIndex(
     * SQ-ADC of the query's residual scores that cell's codes. */
   def query(q: Array[Float], k: Int, nprobe: Int = 4,
       refineFactor: Int = 4): DataFrame =
-    Rerank.topK(
-      IvfIndex.residualBranches(table, cells, q, nprobe, idCol)(residQ =>
-        sq_adc(col(SqIndex.CodeCol), residQ, lo, step)),
-      "distance", k, refineFactor, corpus, vecCol, idCol, q)
+    Rerank.topK(table, SqIndex.CodeCol, "distance", k, refineFactor, corpus,
+        vecCol, idCol, q) { codes =>
+      IvfIndex.residualBranches(codes, cells, q, nprobe, idCol)(residQ =>
+        sq_adc(col(SqIndex.CodeCol), residQ, lo, step))
+    }
 
   /** Persist the codes table partitioned by cell: probed queries read
     * nprobe directories of dim-byte codes — the 100 TB layout. */

@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -60,16 +64,6 @@ object Lake {
       agg.getLong(2))
   }
 
-  /** Rewrite the parquet directory at `src` into `dest` with
-    * ~`targetBytesPerFile` files (parquet→parquet, so on-disk sizes
-    * are comparable before/after; the split is by current compressed
-    * bytes, an estimate good to the compression-ratio drift between
-    * layouts). One job: a scan + round-robin repartition to
-    * ceil(total/target) + write — no shuffle keys, so AQE cannot
-    * collapse it back into few oversized tasks. `dest` must differ
-    * from `src`: the caller owns the atomic swap (rename/catalog
-    * pointer flip), because "overwrite the directory I am reading"
-    * is not crash-safe on any object store. */
   /** Write a `_graft_manifest.json` beside a parquet dataset — the
     * handoff contract between pipeline stages (and the cheap
     * did-anything-change probe for downstream consumers): exact row
@@ -333,30 +327,16 @@ object Lake {
     * directories (`root/gen=N/`), and [[readAsOf]] reconstructs the
     * table AS OF any past generation. The registry is the partition
     * layout itself — self-describing, no sidecar transaction log to
-    * corrupt, at the cost of Delta's commit atomicity (a concurrent
-    * writer needs external coordination; same contract as every other
-    * plain-parquet layout here). Two unguarded failure modes and
-    * their handling: (1) TORN COMMIT — a writer dying mid-write
-    * leaves a partial `gen=N` with no `_SUCCESS` marker; readers
-    * ([[snapshotGenerations]], [[readAsOf]]) skip marker-less
-    * directories, and the next commit numbers PAST the torn dir
-    * (recovery = delete it, or just leave it — it stays invisible).
-    * (2) CONCURRENT WRITERS — two commits racing the same `gen=N`:
-    * the loser TYPICALLY sees the winner's directory before writing
-    * (or its `_SUCCESS` after a failed write) and [[commitSnapshot]]
-    * then retries on the next free number (bounded attempts), so
-    * under ordinary interleavings both commits land, serialized; a
-    * write failure with NO committed racer at the target rethrows as
-    * this writer's own error — never retried. But `errorifexists` is a
-    * check-then-write, NOT an atomic reservation — two writers whose
-    * existence checks interleave before either writes can BOTH pass
-    * and merge files into the same `gen=N` directory, a corrupt
-    * commit with a `_SUCCESS` marker. Commits to one root from ONE
-    * JVM serialize on a per-root lock, so this needs writers in
-    * different processes; mutual exclusion across processes still
-    * requires external coordination (a lock service, a single-writer
-    * job queue) or an atomic-rename commit protocol; do not rely on
-    * `errorifexists` as a lock.
+    * corrupt. Each commit goes through [[commitGeneration]], which
+    * claims its `gen=N` with an exclusive create before writing: two
+    * writers, threads or processes, never share a generation, and both
+    * commits land in distinct ones. A writer dying after its claim
+    * leaves a directory with no `_SUCCESS` marker; readers
+    * ([[snapshotGenerations]], [[readAsOf]]) skip it, and the next
+    * commit numbers past it (recovery = delete it, or just leave it —
+    * it stays invisible). The claim orders commits, not the reads that
+    * produced them: two writers deriving upserts from one as-of state
+    * both land, later generation winning per key.
     *
     * A commit carries upserts (full rows) and deletes (key rows) —
     * deletes persist as TOMBSTONES, the standard MVCC trick: dropping
@@ -375,30 +355,13 @@ object Lake {
     * tombstone ratio grows. */
   def commitSnapshot(spark: SparkSession, root: String,
       upserts: DataFrame, keyCols: Seq[String],
-      deletes: Option[DataFrame] = None,
-      maxAttempts: Int = 3): Long =
-    commitSnapshotImpl(spark, root, upserts, keyCols, deletes,
-      maxAttempts, identity)
-
-  /** [[commitSnapshot]] with an injectable generation assignment —
-    * `genHook` sees the freshly-listed next-free generation before
-    * each write attempt. Production passes `identity`; the
-    * concurrent-writer spec passes a hook that returns an
-    * already-taken number once, deterministically replaying the race
-    * window (another committer landing between this writer's listing
-    * and its write) that wall-clock thread interleaving cannot pin
-    * down. */
-  private[graft] def commitSnapshotImpl(spark: SparkSession,
-      root: String, upserts: DataFrame, keyCols: Seq[String],
-      deletes: Option[DataFrame], maxAttempts: Int,
-      genHook: Long => Long): Long = {
+      deletes: Option[DataFrame] = None): Long = {
     require(keyCols.nonEmpty, "key columns required")
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
     require(keyCols.forall(upserts.columns.contains),
       s"upserts must carry the key columns $keyCols")
     deletes.foreach(d => require(keyCols.forall(d.columns.contains),
       s"deletes must carry the key columns $keyCols"))
-    val gens = genDirs(spark, root).map(_.filter(_._2).map(_._1))
+    val gens = snapshotGenerations(spark, root)
     val dataCols = upserts.columns.toSeq.filterNot(_ == "__deleted")
     // schema drift guard: a later commit with different columns would
     // silently null-fill under the plain (non-mergeSchema) read that
@@ -420,111 +383,45 @@ object Lake {
         .withColumn("__deleted", lit(true))
       up.unionByName(tomb)
     }
-    // Bounded retry: each attempt re-lists and targets one past EVERY
-    // existing gen= directory, committed or torn (assigning over a
-    // torn dir would hit errorifexists forever; committed-only
-    // numbering is what readers see). A racing writer landing first
-    // makes this writer lose the generation; the loser re-lists and
-    // re-attempts on the next free number, so both commits land,
-    // serialized. Race classification is deliberately conservative:
-    // a lost race is (a) the target already existing BEFORE this
-    // writer writes anything, or (b) after a failed write, the target
-    // carrying a _SUCCESS marker this writer cannot have produced (a
-    // racer completed there). A bare exists(target) after our own
-    // failed attempt proves nothing — OUR committer creates the dir
-    // before failing mid-write — so that case rethrows as a genuine
-    // write error instead of silently retrying it at successive
-    // generations (the narrow window where a racer created the dir
-    // between our pre-check and write but has not yet committed also
-    // rethrows; the error message names that possibility). Only
-    // NonFatal failures are classified at all — OOM/interrupt
-    // propagate untouched.
+    commitGeneration(spark, root, full)
+  }
+
+  /** Writes `df` as the next generation `root/gen=N` and returns N.
+    * N starts one past every listed `gen=` directory, committed or
+    * torn, and the writer claims it with an exclusive create, moving on
+    * to N+1 while another writer holds it — so each generation has one
+    * writer, across threads and processes. A `file:` root claims with
+    * `Files.createDirectory`; other schemes create a `_CLAIMED` marker
+    * with `overwrite = false`, atomic on HDFS. (Hadoop's `mkdirs`
+    * succeeds on an existing directory, and a `rename` onto one moves
+    * the source inside it: neither can claim.) The write lands in the
+    * claimed directory, and Spark's `_SUCCESS`, written last by the
+    * output committer, marks the commit. A failed write deletes the
+    * claimed directory and rethrows its error. */
+  private[graft] def commitGeneration(spark: SparkSession, root: String,
+      df: DataFrame): Long = {
     val rootPath = new Path(root)
-    val lock = commitLocks.computeIfAbsent(
-      rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(rootPath).toString, _ => new Object)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0L) lock.synchronized {
-      val dirs = genDirs(spark, root)
-      val gen = genHook(dirs.fold(-1L)(ds =>
-        if (ds.isEmpty) -1L else ds.map(_._1).max) + 1L)
-      val target = s"$root/gen=$gen"
-      val p = new Path(target)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      attempt += 1
-      def exhausted(cause: Throwable): Nothing =
-        throw new IllegalStateException(
-          s"snapshot commit to $target failed after $attempt " +
-            "attempt(s) (lost the race to a concurrent writer each " +
-            "time; raise maxAttempts or coordinate writers externally)",
-          cause)
-      if (fs.exists(p)) {
-        // a concurrent writer (committed or in-flight) owns this
-        // generation — nothing of ours was written; re-list and retry
-        if (attempt >= maxAttempts) exhausted(null)
-      } else {
-        try {
-          full.write.mode("errorifexists").parquet(target)
-          committed = gen
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            // Two RACE signatures, both retryable: (a) the target now
-            // carries a racer's _SUCCESS; (b) the write failed on the
-            // errorifexists pre-check itself (PATH_ALREADY_EXISTS /
-            // FileAlreadyExists) — that check runs BEFORE our job
-            // writes anything, so the directory is entirely a racer's
-            // even when its _SUCCESS is not yet visible (the
-            // pre-check-to-write window that a bare _SUCCESS probe
-            // misclassified as a hard mid-write failure — a liveness
-            // bug: one writer could fail despite attempts remaining).
-            val racerCommitted = fs.exists(new Path(p, "_SUCCESS"))
-            if (!racerCommitted && !isPathExistsFailure(e))
-              throw new IllegalStateException(
-                s"snapshot commit to $target failed mid-write (not a " +
-                  "lost race: no concurrent commit landed at this " +
-                  "generation and the failure is not the " +
-                  "errorifexists pre-check; this writer's own torn " +
-                  "directory, if any, carries no _SUCCESS and readers " +
-                  "ignore it)", e)
-            if (attempt >= maxAttempts) exhausted(e)
-        }
-      }
-    }
-    committed
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(rootPath)
+    var gen = genDirs(spark, root).flatMap(_.lastOption).fold(0L)(_._1 + 1L)
+    while (!claim(fs, new Path(rootPath, s"gen=$gen"))) gen += 1L
+    val dir = new Path(rootPath, s"gen=$gen")
+    try df.write.mode("append").parquet(dir.toString)
+    catch { case NonFatal(e) => fs.delete(dir, true); throw e }
+    gen
   }
 
-  // qualified table root -> the lock its in-process commits hold
-  private val commitLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** True when `e` (or any cause in its chain) is the errorifexists
-    * path-collision failure: Spark's PATH_ALREADY_EXISTS
-    * AnalysisException or Hadoop's FileAlreadyExistsException. This
-    * failure fires in the writer's pre-write check — before any of
-    * OUR data moves — so in commitSnapshot's context (our own
-    * fs.exists pre-check saw no directory moments earlier) it proves
-    * a concurrent writer created the target in the window, i.e. a
-    * lost race, never a torn write of ours. Package-private for the
-    * classification spec. */
-  private[operators] def isPathExistsFailure(e: Throwable): Boolean = {
-    val seen = scala.collection.mutable.Set.empty[Throwable]
-    var cur = e
-    while (cur != null && seen.add(cur)) {
-      cur match {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          return true
-        case _: java.nio.file.FileAlreadyExistsException => return true
-        case ae: org.apache.spark.sql.AnalysisException
-            if Option(ae.getCondition).exists(
-                 _.contains("PATH_ALREADY_EXISTS")) ||
-               ae.getMessage.contains("already exists") => return true
-        case _ => ()
-      }
-      cur = cur.getCause
+  /** Creates `dir` exclusively; false when it already exists. */
+  private def claim(fs: FileSystem, dir: Path): Boolean =
+    try {
+      if (fs.getUri.getScheme == "file")
+        Files.createDirectory(Paths.get(fs.makeQualified(dir).toUri))
+      else fs.create(new Path(dir, "_CLAIMED"), false).close()
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException |
+          _: org.apache.hadoop.fs.FileAlreadyExistsException => false
     }
-    false
-  }
 
   /** COMMITTED generation numbers under `root`, ascending; None when
     * the root directory does not exist, Some(empty) when it exists
@@ -540,7 +437,7 @@ object Lake {
 
   /** Every `gen=N` directory under `root` with its committed flag
     * (`_SUCCESS` present), ascending by generation. */
-  private def genDirs(spark: SparkSession,
+  private[graft] def genDirs(spark: SparkSession,
       root: String): Option[Seq[(Long, Boolean)]] = {
     val p = new Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -707,6 +604,16 @@ object Lake {
           s"div ${targetBytes}L"))
   }
 
+  /** Rewrite the parquet directory at `src` into `dest` with
+    * ~`targetBytesPerFile` files (parquet→parquet, so on-disk sizes
+    * are comparable before/after; the split is by current compressed
+    * bytes, an estimate good to the compression-ratio drift between
+    * layouts). One job: a scan + round-robin repartition to
+    * ceil(total/target) + write — no shuffle keys, so AQE cannot
+    * collapse it back into few oversized tasks. `dest` must differ
+    * from `src`: the caller owns the atomic swap (rename/catalog
+    * pointer flip), because "overwrite the directory I am reading"
+    * is not crash-safe on any object store. */
   def compactTo(spark: SparkSession, src: String, dest: String,
       targetBytesPerFile: Long = 128L << 20): Long = {
     require(targetBytesPerFile > 0, "target size must be positive")

@@ -39,9 +39,8 @@ object Matryoshka {
       refineFactor: Int = 4): DataFrame = {
     require(query.length >= dims,
       s"query dim ${query.length} < truncation dims $dims")
-    Rerank.topK(
-      corpus.withColumn("__mrl_d", squared_l2(truncate(col(vecCol), dims),
-        truncate(typedLit(query), dims))),
-      "__mrl_d", k, refineFactor, corpus, vecCol, idCol, query)
+    Rerank.topK(corpus, vecCol, "__mrl_d", k, refineFactor, corpus, vecCol,
+        idCol, query)(_.withColumn("__mrl_d", squared_l2(
+      truncate(col(vecCol), dims), truncate(typedLit(query), dims))))
   }
 }

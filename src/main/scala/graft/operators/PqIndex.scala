@@ -49,10 +49,9 @@ final class PqIndex(
   /** Approximate top-k under the [[Rerank]] contract: ADC distances
     * pick the candidates. */
   def query(q: Array[Float], k: Int, refineFactor: Int = 4): DataFrame =
-    Rerank.topK(
-      codes.withColumn("distance",
-        pq_adc(col(PqIndex.CodeCol), adcTable(q), codesPerBook)),
-      "distance", k, refineFactor, corpus, vecCol, idCol, q)
+    Rerank.topK(codes, PqIndex.CodeCol, "distance", k, refineFactor, corpus,
+        vecCol, idCol, q)(_.withColumn("distance",
+      pq_adc(col(PqIndex.CodeCol), adcTable(q), codesPerBook)))
 
   /** Persist the compressed table — (id, code) only, m bytes of payload
     * per row; downstream ADC scans read THIS, never the vectors. */

@@ -13,25 +13,25 @@ import org.apache.spark.sql.DataFrame
   * the approximate score cast to double as `distance`; otherwise they
   * are re-ranked by exact squared-L2 against the original corpus (the
   * standard PQ re-rank) — a k·refine-row join, negligible beside the
-  * scan. Rows with a null score (a null vector's code) never take a
-  * candidate slot: they sort last and leave the pool, where plain
-  * ascending order (NULLS FIRST) would return them first with a null
-  * distance. Returns (idCol, distance) ascending, ties by id.
+  * scan. A row whose scored column is null (a null vector, or its
+  * code) never takes a candidate slot: it is filtered out before
+  * scoring, as in [[Similarity.topK]], where plain ascending order
+  * (NULLS FIRST) would return it first with a null distance. Returns
+  * (idCol, distance) ascending, ties by id.
   */
 private[operators] object Rerank {
 
-  /** Top-k over `scored` (idCol plus the approximate `scoreCol`) under
-    * the refine contract above. */
-  def topK(scored: DataFrame, scoreCol: String, k: Int, refineFactor: Int,
-      corpus: DataFrame, vecCol: String, idCol: String,
-      q: Array[Float]): DataFrame = {
-    // nulls sort last and are dropped from the pool after the limit: a
-    // filter before it would be pushed below the score projection and
-    // evaluate the score twice per scanned row
-    val cand = scored
-      .orderBy(col(scoreCol).asc_nulls_last, col(idCol).asc)
+  /** Top-k under the refine contract above: `score` turns the non-null
+    * `readCol` rows of `rows` into idCol plus the approximate
+    * `scoreCol`. */
+  def topK(rows: DataFrame, readCol: String, scoreCol: String, k: Int,
+      refineFactor: Int, corpus: DataFrame, vecCol: String, idCol: String,
+      q: Array[Float])(score: DataFrame => DataFrame): DataFrame = {
+    // the filter sits below the top-k, so a collect still merges the
+    // per-partition heaps on the driver
+    val cand = score(rows.where(col(readCol).isNotNull))
+      .orderBy(col(scoreCol), col(idCol))
       .limit(poolSize(k, refineFactor))
-      .where(col(scoreCol).isNotNull)
     if (refineFactor == 1)
       cand.select(col(idCol), col(scoreCol).cast("double").as("distance"))
     else exact(cand.select(col(idCol)), corpus, vecCol, idCol, q, k)

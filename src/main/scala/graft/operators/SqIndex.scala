@@ -41,9 +41,9 @@ final class SqIndex(
     * pick the candidates. */
   def query(q: Array[Float], k: Int, refineFactor: Int = 4): DataFrame = {
     require(q.length == dim, s"query dim ${q.length} != fitted dim $dim")
-    Rerank.topK(
-      codes.withColumn("distance", sq_adc(col(SqIndex.CodeCol), q, lo, step)),
-      "distance", k, refineFactor, corpus, vecCol, idCol, q)
+    Rerank.topK(codes, SqIndex.CodeCol, "distance", k, refineFactor, corpus,
+        vecCol, idCol, q)(_.withColumn("distance",
+      sq_adc(col(SqIndex.CodeCol), q, lo, step)))
   }
 
   /** Persist the compressed table — (id, code), dim bytes of payload

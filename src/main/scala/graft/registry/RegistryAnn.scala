@@ -979,7 +979,7 @@ private[graft] object RegistryAnn {
         "qid", "embedding", "cid", "embedding", k = 4, threshold = 1.0)
         .orderBy("qid", "cid")
     }),
-    // durable (parquet-backed) store path: ingest → swap-persist →
+    // durable (parquet-backed) store path: ingest → generation commit →
     // REOPEN from disk → k-NN; result must equal the in-memory store's
     "store_durable_knn" -> ((s, dir) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-db").toString

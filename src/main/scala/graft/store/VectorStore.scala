@@ -2,7 +2,8 @@ package graft.store
 
 import graft.Schemas
 import graft.functions.{Embed, Embedder, VectorOps}
-import graft.operators.{LocalFit, Metric, Similarity}
+import graft.operators.{Lake, LocalFit, Metric, Similarity}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -83,10 +84,13 @@ object Ingest {
   * O(batch) incoming side shuffles, the existing store is NEVER
   * re-exchanged — and (b) write ONLY the fresh rows as new per-bucket
   * files, so an append writes O(batch), not O(store). The plain `path`
-  * mode rewrites the full store every append (fine for small stores;
-  * its swap-rename gives stronger crash atomicity), which at 100 TB
-  * makes the append loop quadratic — bucketed mode is the scale
-  * default. Plan shape is regression-guarded in PlanAuditSpec.
+  * mode commits the full store as a new generation on every write
+  * ([[Lake.commitGeneration]]: `path/gen=N`, claimed exclusively,
+  * committed by its `_SUCCESS`) and reads the newest committed one, so
+  * a writer dying mid-write leaves the previous contents readable. That
+  * full rewrite makes the append loop quadratic at 100 TB — bucketed
+  * mode is the scale default. Plan shape is regression-guarded in
+  * PlanAuditSpec.
   */
 final class VectorStore(
     val spark: SparkSession,
@@ -146,8 +150,10 @@ final class VectorStore(
   def data: DataFrame = mem.getOrElse {
     val df = (path, bucketedTable) match {
       case (Some(p), _) =>
-        recoverIfInterrupted(p)
-        if (fileExists(p)) spark.read.parquet(p) else emptyData
+        Lake.snapshotGenerations(spark, p).flatMap(_.lastOption).fold {
+          requireGenerational(p)
+          emptyData
+        }(g => spark.read.parquet(s"$p/gen=$g"))
       case (_, Some(tbl)) =>
         if (spark.catalog.tableExists(tbl)) spark.table(tbl) else emptyData
       case _ => emptyData
@@ -156,22 +162,22 @@ final class VectorStore(
     df
   }
 
-  /** Crash recovery for the durable swap (see [[persist]]): if a crash
-    * hit between "live → __old" and "__staging → live", the backup is
-    * still intact — restore it. A stale __staging dir is deleted before
-    * the next write, never renamed over live data. */
-  private def recoverIfInterrupted(p: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(p)
-    val backup = new org.apache.hadoop.fs.Path(p + "__old")
-    if (!fs.exists(live) && fs.exists(backup)) fs.rename(backup, live)
-  }
+  private def fs(p: String): FileSystem =
+    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def fileExists(p: String): Boolean = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(p)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(hadoopPath)
+  /** Raises on a path holding parquet files but no `gen=` directory: a
+    * store written in the flat layout that preceded generation commits,
+    * which would otherwise read as empty. */
+  private def requireGenerational(p: String): Unit = {
+    val root = new Path(p)
+    val names =
+      if (fs(p).exists(root)) fs(p).listStatus(root).map(_.getPath.getName)
+      else Array.empty[String]
+    if (names.exists(_.endsWith(".parquet")) &&
+        !names.exists(_.startsWith("gen=")))
+      throw new IllegalStateException(s"$p holds a flat-layout vector " +
+        "store, written before generation commits; load it with " +
+        "spark.read.parquet and setData it to migrate")
   }
 
   def isEmpty: Boolean = validSnapshot.fold(data.isEmpty)(_.isEmpty)
@@ -345,24 +351,14 @@ final class VectorStore(
   private def persist(df: DataFrame, truncateLineage: Boolean = false): Unit = {
     path match {
       case Some(p) =>
-        // staging write + swap-via-backup: the live dir is renamed
-        // aside (not deleted) before staging is promoted, so a crash at
-        // any point leaves either the old or the new data recoverable
-        // (see recoverIfInterrupted); delete-then-rename would lose the
-        // store if the rename never ran. Staging also can't be read
-        // concurrently with the overwrite of the path we read from.
-        val conf = spark.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(conf)
-        val live = new org.apache.hadoop.fs.Path(p)
-        val backup = new org.apache.hadoop.fs.Path(p + "__old")
-        val staging = new org.apache.hadoop.fs.Path(p + "__staging")
-        fs.delete(staging, true) // stale staging from a crashed write
-        df.write.mode("overwrite").parquet(p + "__staging")
-        fs.delete(backup, true)
-        if (fs.exists(live)) fs.rename(live, backup)
-        fs.rename(staging, live)
-        fs.delete(backup, true)
-        mem = Some(spark.read.parquet(p))
+        // the new contents commit beside the old, which `df` may still
+        // read; once committed, older generations (torn ones included)
+        // are history the store does not keep
+        val gen = Lake.commitGeneration(spark, p, df)
+        mem = Some(spark.read.parquet(s"$p/gen=$gen"))
+        Lake.genDirs(spark, p).getOrElse(Nil).foreach { case (g, _) =>
+          if (g < gen) fs(p).delete(new Path(s"$p/gen=$g"), true)
+        }
       case None =>
         // Appends localCheckpoint (eager): materializes AND truncates
         // lineage — without it, iterated appends (streaming ingest)
@@ -380,20 +376,12 @@ final class VectorStore(
     }
   }
 
-  /** Drop everything (`reset_db`, `VectorSearchBase.py:96-99`). Also
-    * removes any crash backup/staging dirs — otherwise a leftover
-    * `__old` would silently resurrect the deleted store through
-    * [[recoverIfInterrupted]] on the next open. */
+  /** Drop everything (`reset_db`, `VectorSearchBase.py:96-99`): every
+    * generation, committed or torn, goes with the path. */
   def reset(): Unit = {
     mem.foreach(_.unpersist())
     mem = None
-    path.foreach { p =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(conf)
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
-      fs.delete(new org.apache.hadoop.fs.Path(p + "__old"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(p + "__staging"), true)
-    }
+    path.foreach(p => fs(p).delete(new Path(p), true))
     bucketedTable.foreach(tbl => spark.sql(s"DROP TABLE IF EXISTS $tbl"))
     mem = Some(emptyData)
   }

@@ -12,6 +12,9 @@ class LakeSnapshotSpec extends SparkSpec {
   private def tmp(): String = java.nio.file.Files
     .createTempDirectory("graft-snap-").toAbsolutePath.toString
 
+  // commits per writer in the two-process race
+  private val Commits = 20
+
   private def state(root: String, g: Long): Map[Long, (String, Long)] =
     Lake.readAsOf(spark, root, Seq("id"), g).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
@@ -124,20 +127,22 @@ class LakeSnapshotSpec extends SparkSpec {
       .write.parquet(s"$root/gen=1")
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(s"$root/gen=1/_SUCCESS"))
+    // and another killed right after its claim: an empty gen=2
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$root/gen=2"))
     assert(Lake.snapshotGenerations(spark, root).get == Seq(0L),
-      "torn generation must not register as a commit")
+      "torn generations must not register as commits")
     assert(state(root, 99L) == Map(1L -> ("a", 1L)),
       "torn rows must stay invisible to as-of reads")
-    // the next commit must NOT collide with the torn directory
+    // the next commit must NOT collide with either torn directory
     val g = Lake.commitSnapshot(spark, root,
       Seq((2L, "b", 2L)).toDF("id", "v", "n"), Seq("id"))
-    assert(g == 2L, s"next commit must number past the torn dir, got $g")
-    assert(Lake.snapshotGenerations(spark, root).get == Seq(0L, 2L))
+    assert(g == 3L, s"next commit must number past the torn dirs, got $g")
+    assert(Lake.snapshotGenerations(spark, root).get == Seq(0L, 3L))
     assert(state(root, 99L) == Map(1L -> ("a", 1L), 2L -> ("b", 2L)))
   }
 
-  test("two concurrent writers: at most one commit per generation, " +
-      "the loser fails with NO partial visible state") {
+  test("two concurrent writer threads both commit, each in its own " +
+      "generation") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -145,49 +150,73 @@ class LakeSnapshotSpec extends SparkSpec {
     Lake.commitSnapshot(spark, root,
       Seq((1L, "base", 0L)).toDF("id", "v", "n"), Seq("id"))
     val gate = new java.util.concurrent.CountDownLatch(1)
-    def writer(tag: String) = Future {
+    def writer(id: Long, tag: String) = Future {
       gate.await()
-      scala.util.Try(Lake.commitSnapshot(spark, root,
-        Seq((100L, tag, 1L)).toDF("id", "v", "n"), Seq("id")))
+      Lake.commitSnapshot(spark, root,
+        Seq((id, tag, 1L)).toDF("id", "v", "n"), Seq("id"))
     }
-    val (fa, fb) = (writer("a"), writer("b"))
+    val (fa, fb) = (writer(100L, "a"), writer(200L, "b"))
     gate.countDown()
-    val outcomes = Seq(fa, fb).map(Await.result(_, 120.seconds))
-    val won = outcomes.flatMap(_.toOption)
-    assert(won.nonEmpty, "at least one writer must commit")
-    assert(won.distinct.size == won.size,
-      s"two commits may never share a generation: $won")
-    // the registry and the reconstructed state agree with exactly the
-    // successful commits — a loser leaves nothing visible
-    val gens = Lake.snapshotGenerations(spark, root).get
-    assert(gens == (0L +: won.sorted),
-      s"registry $gens must hold the base commit plus the winners $won")
-    val got = state(root, 99L)
-    assert(got(1L) == ("base", 0L) && got.contains(100L) &&
-      got.size == 2, got.toString)
+    val won = Seq(fa, fb).map(Await.result(_, 120.seconds))
+    assert(won.sorted == Seq(1L, 2L), s"both writers must commit: $won")
+    assert(Lake.snapshotGenerations(spark, root).get == Seq(0L, 1L, 2L))
+    // each generation holds its own writer's row only
+    for ((g, tag) <- won.zip(Seq("a", "b")))
+      assert(spark.read.parquet(s"$root/gen=$g").select("v").as[String]
+        .collect().toSeq == Seq(tag), s"gen=$g")
+    assert(state(root, 99L) == Map(1L -> ("base", 0L),
+      100L -> ("a", 1L), 200L -> ("b", 1L)))
   }
 
-  test("commitSnapshot retries a lost race on the next generation: " +
-      "both commits land, serialized, history intact") {
+  test("two writer processes commit 20 times each to one root: 40 " +
+      "distinct committed generations, none mixing writers") {
     val root = tmp()
+    val dir = java.nio.file.Files.createTempDirectory("graft-race-")
+    val (ready, go) = (dir.resolve("ready"), dir.resolve("go"))
+    val log = dir.resolve("writer.log").toFile
+    val child = LakeCommitWriter.launch(root, "child", Commits,
+      ready.toString, go.toString, log)
+    try {
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (!java.nio.file.Files.exists(ready) && child.isAlive &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(java.nio.file.Files.exists(ready), "writer process never " +
+        s"got ready:\n${scala.io.Source.fromFile(log).mkString.takeRight(4000)}")
+      java.nio.file.Files.createFile(go)
+      LakeCommitWriter.commitAll(spark, root, "parent", Commits)
+      assert(child.waitFor(300, java.util.concurrent.TimeUnit.SECONDS) &&
+        child.exitValue == 0, "writer process failed:\n" +
+        scala.io.Source.fromFile(log).mkString.takeRight(4000))
+    } finally child.destroyForcibly()
+    val gens = Lake.snapshotGenerations(spark, root).get
+    assert(gens == (0L until 2L * Commits), s"committed: $gens")
+    val writes = gens.map { g =>
+      val rows = spark.read.parquet(s"$root/gen=$g")
+        .select("writer", "seq").distinct().as[(String, Long)].collect()
+      assert(rows.length == 1, s"gen=$g mixes commits: ${rows.toSeq}")
+      rows.head
+    }
+    assert(writes.toSet == (for {
+      w <- Set("parent", "child"); i <- 0L until Commits } yield (w, i)))
+  }
+
+  test("on a non-file: scheme a commit claims with a _CLAIMED marker " +
+      "that readers ignore") {
+    spark.sparkContext.hadoopConfiguration.set("fs.claimtest.impl",
+      classOf[ClaimTestFileSystem].getName)
+    val root = "claimtest:" + tmp()
     Lake.commitSnapshot(spark, root,
       Seq((1L, "a", 1L)).toDF("id", "v", "n"), Seq("id"))
-    // deterministic race replay: the hook sends the first attempt to
-    // the ALREADY-COMMITTED gen=0 (as if a racer landed between this
-    // writer's listing and its write) → errorifexists → the retry
-    // re-lists and lands on the real next generation
-    var calls = 0
-    val g = Lake.commitSnapshotImpl(spark, root,
-      Seq((2L, "b", 2L)).toDF("id", "v", "n"), Seq("id"), None,
-      maxAttempts = 3,
-      genHook = { next => calls += 1; if (calls == 1) 0L else next })
-    assert(calls == 2, s"expected one lost race + one retry, got $calls")
-    assert(g == 1L, s"loser must land on the next free generation, got $g")
-    assert(Lake.snapshotGenerations(spark, root).get == Seq(0L, 1L))
-    assert(state(root, 99L) ==
-      Map(1L -> ("a", 1L), 2L -> ("b", 2L)),
-      "gen-0 rows must survive the failed attempt against its dir")
-    assert(state(root, 0L) == Map(1L -> ("a", 1L)))
+    // another writer's claim on gen=1: the next commit numbers past it
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(s"$root/gen=1/_CLAIMED"), false)
+      .close()
+    assert(Lake.commitSnapshot(spark, root,
+      Seq((2L, "b", 2L)).toDF("id", "v", "n"), Seq("id")) == 2L)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/gen=2/_CLAIMED")))
+    assert(Lake.snapshotGenerations(spark, root).get == Seq(0L, 2L))
+    assert(state(root, 99L) == Map(1L -> ("a", 1L), 2L -> ("b", 2L)))
   }
 
   test("a mid-write failure of this writer's OWN attempt is not a " +
@@ -196,66 +225,29 @@ class LakeSnapshotSpec extends SparkSpec {
     val root = tmp()
     Lake.commitSnapshot(spark, root,
       Seq((1L, "a", 1L)).toDF("id", "v", "n"), Seq("id"))
-    // poison one row so the write job fails AFTER the committer has
-    // created the target directory — the old exists(target)
-    // classification misread exactly this as a lost race and retried
-    // the genuine write error at successive generations
+    // poison one row so the write job fails after the claim
     val bad = Seq((2L, "b", 2L), (3L, "c", 3L)).toDF("id", "v", "n")
       .withColumn("v",
         when(col("id") === 3L, expr("raise_error('boom')"))
           .otherwise(col("v")))
-    val e = intercept[IllegalStateException] {
+    val e = intercept[Exception] {
       Lake.commitSnapshot(spark, root, bad, Seq("id"))
     }
-    assert(e.getMessage.contains("mid-write") &&
-      !e.getMessage.contains("lost the race"), e.getMessage)
-    assert(Lake.snapshotGenerations(spark, root).get == Seq(0L),
-      "the failed writer must not land anything committed")
-    // no retry happened: nothing (committed or torn) exists past the
-    // single attempted generation
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom")),
+      s"the write's own error must surface: $e")
+    // the failed writer deleted its claim: no gen= directory but gen=0
     val dirs = new java.io.File(root).listFiles()
-      .filter(_.getName.startsWith("gen=")).map(_.getName).sorted
-    assert(!dirs.contains("gen=2"),
-      s"mid-write failure must not be retried at gen=2: " +
-        dirs.mkString(","))
+      .filter(_.getName.startsWith("gen=")).map(_.getName).toSeq
+    assert(dirs == Seq("gen=0"), dirs.mkString(","))
+    assert(Lake.commitSnapshot(spark, root,
+      Seq((2L, "b", 2L)).toDF("id", "v", "n"), Seq("id")) == 1L)
   }
+}
 
-  test("the errorifexists pre-check failure classifies as a lost " +
-      "race: a racer creating the target in the pre-check-to-write " +
-      "window (its _SUCCESS not yet visible) must be retryable, not " +
-      "a hard mid-write failure") {
-    val root = tmp()
-    val dir = s"$root/gen=0"
-    Seq((1L, "a")).toDF("id", "v").write.parquet(dir)
-    // the real exception Spark raises when errorifexists collides —
-    // the classifier must recognize this exact shape, because in the
-    // race window it fires before OUR job writes anything
-    val e = intercept[Throwable] {
-      Seq((2L, "b")).toDF("id", "v")
-        .write.mode("errorifexists").parquet(dir)
-    }
-    assert(Lake.isPathExistsFailure(e),
-      s"errorifexists collision not classified as a race: $e")
-    // a genuine job failure must NOT classify as a race
-    assert(!Lake.isPathExistsFailure(
-      new RuntimeException("boom", new IllegalStateException("inner"))))
-    // cycle-safe on a self-caused chain
-    val cyc = new RuntimeException("a")
-    assert(!Lake.isPathExistsFailure(cyc))
-  }
-
-  test("commitSnapshot rethrows after maxAttempts lost races and on " +
-      "non-race failures") {
-    val root = tmp()
-    Lake.commitSnapshot(spark, root,
-      Seq((1L, "a", 1L)).toDF("id", "v", "n"), Seq("id"))
-    val e = intercept[IllegalStateException] {
-      Lake.commitSnapshotImpl(spark, root,
-        Seq((2L, "b", 2L)).toDF("id", "v", "n"), Seq("id"), None,
-        maxAttempts = 2, genHook = _ => 0L) // every attempt collides
-    }
-    assert(e.getMessage.contains("lost the race"), e.getMessage)
-    assert(Lake.snapshotGenerations(spark, root).get == Seq(0L),
-      "failed committer must leave the registry untouched")
-  }
+/** The local filesystem under the `claimtest:` scheme, so a spec can
+  * drive the commit path that other schemes (HDFS, object stores) take. */
+class ClaimTestFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("claimtest:///")
+  override def getScheme: String = "claimtest"
 }

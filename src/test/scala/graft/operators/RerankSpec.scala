@@ -19,31 +19,41 @@ class RerankSpec extends SparkSpec {
   private lazy val df = vecs.toDF("id", "v")
   private lazy val q = vecs(3)._2.toArray
 
+  private lazy val withNull = df.unionByName(
+    Seq((999L, null: Seq[Float])).toDF("id", "v"))
+
+  // training rejects a sampled null vector by design, so fit on the
+  // first seeds whose half sample leaves the null row out: the null
+  // row still reaches the codes, which encode the whole frame
+  private lazy val nullFreeSeeds = Iterator.from(1).map(_.toLong).filter(s =>
+    withNull.sample(0.5, s).where(col("v").isNull).isEmpty).take(3).toSeq
+
+  private def checkNoNull(what: String, out: DataFrame): Unit = {
+    val got = out.collect().map(r => (r.getLong(0), r.get(1))).toSeq
+    assert(got.length === 5, s"$what: $got")
+    assert(!got.exists { case (id, d) => id == 999L || d == null },
+      s"$what: $got")
+  }
+
   test("a null vector never takes a top-k slot (PQ, OPQ, Matryoshka)") {
-    val withNull = df.unionByName(
-      Seq((999L, null: Seq[Float])).toDF("id", "v"))
-    def check(what: String, out: DataFrame): Unit = {
-      val got = out.collect().map(r => (r.getLong(0), r.get(1))).toSeq
-      assert(got.length === 5, s"$what: $got")
-      assert(!got.exists { case (id, d) => id == 999L || d == null },
-        s"$what: $got")
-    }
-    // training rejects a sampled null vector by design, so fit on the
-    // first seeds whose half sample leaves the null row out: the null
-    // row still reaches the codes, which encode the whole frame
-    val seeds = Iterator.from(1).map(_.toLong).filter(s =>
-      withNull.sample(0.5, s).where(col("v").isNull).isEmpty).take(3).toSeq
-    for (seed <- seeds) {
+    for (seed <- nullFreeSeeds) {
       val pq = PqIndex.train(withNull, "v", "id", m = 4, codesPerBook = 4,
         sampleFraction = 0.5, seed = seed)
-      for (rf <- Seq(1, 4)) check(s"pq seed $seed rf $rf", pq.query(q, 5, rf))
+      for (rf <- Seq(1, 4))
+        checkNoNull(s"pq seed $seed rf $rf", pq.query(q, 5, rf))
     }
     val opq = PqIndex.trainOpq(withNull, "v", "id", m = 4, codesPerBook = 4,
-      sampleFraction = 0.5, seed = seeds.head)
-    check("opq rf 4", opq.query(q, 5, 4))
+      sampleFraction = 0.5, seed = nullFreeSeeds.head)
+    checkNoNull("opq rf 4", opq.query(q, 5, 4))
     for (rf <- Seq(1, 4))
-      check(s"mrl rf $rf", Matryoshka.topK(withNull, "v", "id", q, dims = 4,
-        k = 5, refineFactor = rf))
+      checkNoNull(s"mrl rf $rf", Matryoshka.topK(withNull, "v", "id", q,
+        dims = 4, k = 5, refineFactor = rf))
+  }
+
+  test("a null vector never takes a top-k slot (every other entry point)") {
+    for (seed <- nullFreeSeeds; e <- entriesOver(withNull, seed, 0.5)
+         if !Set("PqIndex", "Matryoshka.topK")(e.name); rf <- Seq(1, 4))
+      checkNoNull(s"${e.name} seed $seed rf $rf", e.run(5, rf, 2))
   }
 
   /** One query entry point: `run(k, refineFactor, nprobe)`; `nCells`
@@ -51,16 +61,25 @@ class RerankSpec extends SparkSpec {
   private case class Entry(name: String, nCells: Option[Int],
       run: (Int, Int, Int) => DataFrame)
 
-  private lazy val entries: Seq[Entry] = {
-    val pq = PqIndex.train(df, "v", "id", m = 4, codesPerBook = 4)
-    val rpq = PqIndex.trainRotated(df, "v", "id", m = 4, codesPerBook = 4)
-    val sq = SqIndex.fit(df, "v", "id")
-    val bq = BinaryQuant.build(df, "v", "id")
-    val ivfPq = IvfPqIndex.build(df, "v", "id", nClusters = 4, m = 4,
-      codesPerBook = 4)
-    val ivfSq = IvfSqIndex.build(df, "v", "id", nClusters = 4)
-    val ivfBq = IvfBinary.build(df, "v", "id", nClusters = 4)
-    val rsq = PcaReduce.fitSq(df, "v", "id", k = 4)
+  private lazy val entries: Seq[Entry] = entriesOver(df, 42L, 1.0)
+
+  /** Every entry point over `frame`, the trained ones fit on a
+    * `sampleFraction` sample drawn with `seed`. */
+  private def entriesOver(frame: DataFrame, seed: Long,
+      sampleFraction: Double): Seq[Entry] = {
+    val pq = PqIndex.train(frame, "v", "id", m = 4, codesPerBook = 4,
+      seed = seed, sampleFraction = sampleFraction)
+    val rpq = PqIndex.trainRotated(frame, "v", "id", m = 4, codesPerBook = 4,
+      seed = seed, sampleFraction = sampleFraction)
+    val sq = SqIndex.fit(frame, "v", "id")
+    val bq = BinaryQuant.build(frame, "v", "id")
+    val ivfPq = IvfPqIndex.build(frame, "v", "id", nClusters = 4, m = 4,
+      codesPerBook = 4, seed = seed, sampleFraction = sampleFraction)
+    val ivfSq = IvfSqIndex.build(frame, "v", "id", nClusters = 4,
+      seed = seed, sampleFraction = sampleFraction)
+    val ivfBq = IvfBinary.build(frame, "v", "id", nClusters = 4,
+      seed = seed, sampleFraction = sampleFraction)
+    val rsq = PcaReduce.fitSq(frame, "v", "id", k = 4)
     Seq(
       Entry("PqIndex", None, (k, rf, _) => pq.query(q, k, rf)),
       Entry("RotatedPqIndex", None, (k, rf, _) => rpq.query(q, k, rf)),
@@ -73,7 +92,8 @@ class RerankSpec extends SparkSpec {
       Entry("IvfBinaryIndex", Some(ivfBq.nCells),
         (k, rf, np) => ivfBq.query(q, k, np, rf)),
       Entry("Matryoshka.topK", None, (k, rf, _) =>
-        Matryoshka.topK(df, "v", "id", q, dims = 4, k = k, refineFactor = rf)),
+        Matryoshka.topK(frame, "v", "id", q, dims = 4, k = k,
+          refineFactor = rf)),
       Entry("ReducedSqIndex", None, (k, rf, _) => rsq.query(q, k, rf)))
   }
 

@@ -184,44 +184,53 @@ class VectorStoreSpec extends SparkSpec {
     assert(reopened.data.agg(max("id")).head.getLong(0) == 3L)
   }
 
-  test("durable persist survives a crash between backup and promote") {
+  test("a torn newest generation still reads the last committed one") {
     val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
     val p = s"$dir/db"
     val store = new VectorStore(spark, HashEmbedder(dim = 8), path = Some(p))
     store.setData(frame("a" -> "1", "b" -> "2"))
-    // simulate the crash window of the swap: live renamed to __old,
-    // staging never promoted (and left stale)
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(p),
-      new org.apache.hadoop.fs.Path(p + "__old")))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(p + "__staging"))
+    store.setData(frame("c" -> "3"), append = true)
+    val gens = new java.io.File(p).list().filter(_.startsWith("gen=")).toSeq
+    assert(gens == Seq("gen=1"), s"older generations must be dropped: $gens")
+    // a writer killed mid-write: rows in gen=2, no _SUCCESS marker
+    store.data.limit(1).write.parquet(s"$p/gen=2")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$p/gen=2/_SUCCESS"))
     val reopened = new VectorStore(spark, HashEmbedder(dim = 8),
       path = Some(p))
-    // backup is restored, data intact
-    assert(reopened.data.count() == 2)
-    // and the stale staging dir is discarded (not renamed over live
-    // data) by the next write
+    assert(reopened.data.count() == 3)
+    // the next write numbers past the torn generation and drops it
     reopened.setData(frame("z" -> "9"))
     assert(reopened.data.count() == 1)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(p + "__staging")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(p + "__old")))
+    assert(new java.io.File(p).list().filter(_.startsWith("gen=")).toSeq ==
+      Seq("gen=3"))
   }
 
-  test("reset clears crash backups so deleted data cannot resurrect") {
+  test("reset removes every generation, torn ones included, so " +
+      "deleted data cannot resurrect") {
     val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
     val p = s"$dir/db"
     val store = new VectorStore(spark, HashEmbedder(dim = 8), path = Some(p))
     store.setData(frame("a" -> "1"))
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate the mid-swap crash, then reset the (recovered) store
-    assert(fs.rename(new org.apache.hadoop.fs.Path(p),
-      new org.apache.hadoop.fs.Path(p + "__old")))
+    store.data.write.parquet(s"$p/gen=1")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$p/gen=1/_SUCCESS"))
     store.reset()
+    assert(!new java.io.File(p).exists())
     val reopened = new VectorStore(spark, HashEmbedder(dim = 8),
       path = Some(p))
-    assert(reopened.data.count() == 0, "reset store resurrected from __old")
+    assert(reopened.data.count() == 0, "reset store resurrected")
+  }
+
+  test("a flat-layout store (parquet files, no gen= directory) is " +
+      "rejected on reopen, not read as empty") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
+    val p = s"$dir/db"
+    val mem = freshStore()
+    mem.setData(frame("a" -> "1"))
+    mem.data.write.parquet(p)
+    val e = intercept[IllegalStateException] {
+      new VectorStore(spark, HashEmbedder(dim = 8), path = Some(p)).data
+    }
+    assert(e.getMessage.contains("flat-layout"), e.getMessage)
   }
 
   test("non-string target is coerced to string (schema stays uniform)") {
