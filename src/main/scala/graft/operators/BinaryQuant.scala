@@ -96,7 +96,7 @@ object BinaryQuant {
     * pass. Null vectors are excluded from the codes (a null code would
     * sort NULLS FIRST into every candidate set). */
   def build(df: DataFrame, vecCol: String, idCol: String): BinaryQuantIndex = {
-    val codes = df.where(col(vecCol).isNotNull)
+    val codes = Rerank.nonNullVectors(df, vecCol)
       .select(col(idCol), sign_bits(col(vecCol)).as(CodeCol))
     new BinaryQuantIndex(df, codes, vecCol, idCol)
   }

@@ -397,17 +397,37 @@ object Lake {
     * the source inside it: neither can claim.) The write lands in the
     * claimed directory, and Spark's `_SUCCESS`, written last by the
     * output committer, marks the commit. A failed write deletes the
-    * claimed directory and rethrows its error. */
+    * claimed directory and rethrows its error.
+    *
+    * `at` claims that one generation instead, for a writer whose commit
+    * is only valid directly after the state it read: if another writer
+    * holds it, nothing is written and an IllegalStateException names the
+    * conflict. `marker` is an empty file created in the claimed
+    * directory before the data, so whatever it marks is fixed before the
+    * generation can commit. */
   private[graft] def commitGeneration(spark: SparkSession, root: String,
-      df: DataFrame): Long = {
+      df: DataFrame, at: Option[Long] = None,
+      marker: Option[String] = None): Long = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(rootPath)
-    var gen = genDirs(spark, root).flatMap(_.lastOption).fold(0L)(_._1 + 1L)
-    while (!claim(fs, new Path(rootPath, s"gen=$gen"))) gen += 1L
-    val dir = new Path(rootPath, s"gen=$gen")
-    try df.write.mode("append").parquet(dir.toString)
-    catch { case NonFatal(e) => fs.delete(dir, true); throw e }
+    def dirOf(g: Long) = new Path(rootPath, s"gen=$g")
+    val gen = at match {
+      case Some(g) =>
+        if (!claim(fs, dirOf(g))) throw new IllegalStateException(
+          s"concurrent write: $root/gen=$g was claimed by another writer " +
+            "after this one read the generation before it")
+        g
+      case None =>
+        var g = genDirs(spark, root).flatMap(_.lastOption).fold(0L)(_._1 + 1L)
+        while (!claim(fs, dirOf(g))) g += 1L
+        g
+    }
+    val dir = dirOf(gen)
+    try {
+      marker.foreach(m => fs.create(new Path(dir, m), false).close())
+      df.write.mode("append").parquet(dir.toString)
+    } catch { case NonFatal(e) => fs.delete(dir, true); throw e }
     gen
   }
 

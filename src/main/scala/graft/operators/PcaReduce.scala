@@ -244,8 +244,11 @@ object PcaReduce {
   def fitSq(df: DataFrame, vecCol: String, idCol: String,
       k: Int): ReducedSqIndex = {
     val model = fit(df, vecCol, k)
-    val reduced = transform(df, vecCol, model, "__pca_vec")
-      .select(col(idCol), col("__pca_vec"))
+    // project only non-null vectors: the reduced column is then
+    // non-nullable, and the SQ fit's null filter cannot push down to
+    // re-run the projection
+    val reduced = transform(Rerank.nonNullVectors(df, vecCol), vecCol,
+      model, "__pca_vec").select(col(idCol), col("__pca_vec"))
     new ReducedSqIndex(model,
       SqIndex.fit(reduced, "__pca_vec", idCol),
       df.select(col(idCol), col(vecCol)), vecCol, idCol)

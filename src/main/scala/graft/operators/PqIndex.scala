@@ -118,8 +118,8 @@ object PqIndex {
     t
   }
 
-  /** Train codebooks on (a sample of) `df` and lazily encode the full
-    * frame. `codesPerBook` ≤ 256 (one byte per subspace); `df`'s vector
+  /** Train codebooks on (a sample of) `df` and lazily encode its
+    * non-null vectors. `codesPerBook` ≤ 256 (one byte per subspace); `df`'s vector
     * dim must divide evenly into `m` subspaces.
     *
     * Training shape: one top-N collect (two for a large frame) brings
@@ -134,8 +134,8 @@ object PqIndex {
     val sample = trainingSample(df, vecCol, idCol, codesPerBook, seed,
       sampleFraction, "PQ codebooks")
     val books = fitBooks(sample, m, codesPerBook, seed, maxIter)
-    new PqIndex(books, df,
-      df.select(col(idCol), pq_encode(col(vecCol), books).as(CodeCol)),
+    new PqIndex(books, df, Rerank.nonNullVectors(df, vecCol)
+      .select(col(idCol), pq_encode(col(vecCol), books).as(CodeCol)),
       vecCol, idCol)
   }
 
@@ -225,14 +225,16 @@ object PqIndex {
   }
 
   /** The corpus through the rotation kernel (lazy narrow map) and its
-    * codes: the only distributed work of a rotated fit. */
+    * codes, of the non-null vectors: the only distributed work of a
+    * rotated fit. */
   private def rotatedIndex(df: DataFrame, vecCol: String, idCol: String,
       r: Array[Array[Float]],
       books: Array[Array[Array[Float]]]): RotatedPqIndex = {
     import graft.functions.VectorFunctions.mat_vec
-    val rotated = df.withColumn(vecCol, mat_vec(col(vecCol), r))
-    new RotatedPqIndex(r, new PqIndex(books, rotated,
-      rotated.select(col(idCol), pq_encode(col(vecCol), books).as(CodeCol)),
+    def rotate(d: DataFrame) = d.withColumn(vecCol, mat_vec(col(vecCol), r))
+    new RotatedPqIndex(r, new PqIndex(books, rotate(df),
+      rotate(Rerank.nonNullVectors(df, vecCol))
+        .select(col(idCol), pq_encode(col(vecCol), books).as(CodeCol)),
       vecCol, idCol))
   }
 

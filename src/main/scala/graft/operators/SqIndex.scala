@@ -96,7 +96,7 @@ object SqIndex {
     // Encode only non-null vectors: a null vector would yield a null
     // code, sq_adc a null distance, and ascending sort is NULLS FIRST —
     // null rows would squat in the top-k candidate slots.
-    val codes = df.where(col(vecCol).isNotNull).select(col(idCol),
+    val codes = Rerank.nonNullVectors(df, vecCol).select(col(idCol),
       sq_encode(col(vecCol), lo, step).as(CodeCol))
     new SqIndex(lo, step, df.select(col(idCol), col(vecCol)), codes,
       vecCol, idCol)

@@ -136,7 +136,8 @@ private[graft] object RegistryAnn {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val cents = firstVecs(emb, 4)
       val books = sliceBooks(cents, 4)
-      val codes = emb.select(col("vec_id"),
+      val codes = graft.operators.Rerank.nonNullVectors(emb, "embedding")
+        .select(col("vec_id"),
         pq_encode(col("embedding"), books).as(graft.operators.PqIndex.CodeCol))
       val idx = new graft.operators.PqIndex(books, emb, codes,
         "embedding", "vec_id")
@@ -156,11 +157,14 @@ private[graft] object RegistryAnn {
       val dim = emb.select("embedding").head.getSeq[Float](0).length
       val rot = Array.tabulate(dim, dim)((i, j) =>
         if (j == dim - 1 - i) 1.0f else 0.0f)
-      val rotated = emb.select(col("vec_id"),
+      def rotate(d: DataFrame) = d.select(col("vec_id"),
         mat_vec(col("embedding"), rot).as("embedding"))
+      val rotated = rotate(emb)
       val cents = firstVecs(rotated, 4)
       val books = sliceBooks(cents, 4)
-      val codes = rotated.select(col("vec_id"),
+      val codes = rotate(
+        graft.operators.Rerank.nonNullVectors(emb, "embedding")).select(
+        col("vec_id"),
         pq_encode(col("embedding"), books).as(graft.operators.PqIndex.CodeCol))
       val idx = new graft.operators.RotatedPqIndex(rot,
         new graft.operators.PqIndex(books, rotated, codes,
@@ -180,8 +184,10 @@ private[graft] object RegistryAnn {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val cents = firstVecs(emb, 4)
       val clusterCol = graft.operators.IvfIndex.ClusterCol
+      // non-null vectors only, so the codes are non-nullable
       val resid = graft.operators.IvfIndex
-        .assignCells(emb, "embedding", cents)
+        .assignCells(graft.operators.Rerank.nonNullVectors(emb, "embedding"),
+          "embedding", cents)
         .withColumn("__resid",
           cell_residual(col(clusterCol), col("embedding"), cents))
       val bookRows = resid

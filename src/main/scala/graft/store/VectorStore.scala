@@ -4,11 +4,16 @@ import graft.Schemas
 import graft.functions.{Embed, Embedder, VectorOps}
 import graft.operators.{Lake, LocalFit, Metric, Similarity}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Schema coercion for ingest — the bulk form of the reference's
@@ -71,11 +76,44 @@ object Ingest {
   * (never post-union dropDuplicates — U1). Queries are exact
   * brute-force top-k. While the store fits the driver budget
   * ([[LocalFit.sampleBudgetBytes]], a 32nd of the driver heap) they are
-  * served in-process from a [[StoreSnapshot]]: the first query after a
-  * change collects the store once, later ones score it on the driver
-  * with no Spark job and return a local frame. Above the budget they
-  * are Spark scans planned as `TakeOrderedAndProject` (no corpus
-  * shuffle). Both paths return the same rows and schema.
+  * served in-process from a [[StoreSnapshot]]: the first query or
+  * append after a replace collects the store once, later queries score
+  * it on the driver with no Spark job and return a local frame. An
+  * append whose batch fits the budget too is decided on the driver
+  * against the snapshot (in-batch first-wins, the anti-join on
+  * `target`, the ids); it writes its fresh rows and grows the snapshot
+  * by the same rows. Above the budget queries are Spark scans planned
+  * as `TakeOrderedAndProject` (no corpus shuffle), and an append is a
+  * Spark anti-join on the stored `target` column. Both paths store the
+  * same rows and ids and return the same rows and schema.
+  *
+  * '''Path mode''' (`path`): the store is a set of generations
+  * `path/gen=N`, each committed by [[Lake.commitGeneration]] (claimed
+  * exclusively, committed by its `_SUCCESS`). A '''base''' holds the
+  * whole store; a '''delta''' (marked by an empty `_DELTA` file written
+  * before its data) holds only the rows one append added. `data` reads
+  * the newest committed base and every committed delta above it as one
+  * parquet scan; a generation without `_SUCCESS` (its writer died)
+  * stays invisible. An append commits its fresh rows as a delta, so it
+  * writes O(batch), unless the committed deltas' bytes have reached the
+  * base's: then it commits base ∪ deltas ∪ fresh as a new base instead,
+  * which keeps rewriting amortised O(1) per appended byte. Over the
+  * snapshot budget, where every query scans the files, each delta
+  * counts `spark.sql.files.openCostInBytes` (4 MB by default, Spark's
+  * price for opening a file) on top of its bytes, the one the append
+  * would add included: a query then scans at most about twice the
+  * base's cost, and Spark, which packs a scan's files into splits of
+  * their total cost over the cores, keeps one split per file of an
+  * even base. A fold writes that even base: one file per core, rows
+  * placed by a hash of `id`. It folds too when one more delta would
+  * make the read list more paths than the driver lists itself
+  * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, 32 by
+  * default; above it every read runs a listing job). A replace,
+  * `updateData` and a fold commit a new base and delete every older
+  * generation. One writer per path: an append claims exactly the
+  * generation after the newest one it read, and raises an
+  * IllegalStateException when another writer holds it, whose rows it
+  * would otherwise lose or duplicate ids with.
   *
   * '''Bucketed durable mode''' (`bucketedTable`): the store persists as
   * a catalog table `bucketBy(numBuckets, target)`. Appends then (a)
@@ -83,14 +121,7 @@ object Ingest {
   * `outputPartitioning` already matches the join key — only the
   * O(batch) incoming side shuffles, the existing store is NEVER
   * re-exchanged — and (b) write ONLY the fresh rows as new per-bucket
-  * files, so an append writes O(batch), not O(store). The plain `path`
-  * mode commits the full store as a new generation on every write
-  * ([[Lake.commitGeneration]]: `path/gen=N`, claimed exclusively,
-  * committed by its `_SUCCESS`) and reads the newest committed one, so
-  * a writer dying mid-write leaves the previous contents readable. That
-  * full rewrite makes the append loop quadratic at 100 TB — bucketed
-  * mode is the scale default. Plan shape is regression-guarded in
-  * PlanAuditSpec.
+  * files. Plan shape is regression-guarded in PlanAuditSpec.
   */
 final class VectorStore(
     val spark: SparkSession,
@@ -106,12 +137,19 @@ final class VectorStore(
   require(numBuckets > 0, "numBuckets must be positive")
 
   import Ingest._
+  import VectorStore._
 
   private var mem: Option[DataFrame] = None
 
+  // path mode: the generations `mem` reads, and the newest generation
+  // number listed beside them (torn ones count), which an append's
+  // claim must follow directly
+  private var layout: Option[Layout] = None
+
   // the in-process copy of `snapSource` (None: that frame was over the
   // budget); valid only while `snapSource` is the current `mem`, so
-  // every write, which installs a new frame, invalidates it
+  // every write, which installs a new frame, invalidates it unless the
+  // write grows the copy by its rows
   private var snapSource: DataFrame = null
   private var snap: Option[StoreSnapshot] = None
   private var snapshotBudgetBytes: Long = LocalFit.sampleBudgetBytes
@@ -143,17 +181,15 @@ final class VectorStore(
     snap
   }
 
+  // a local relation, already on the driver: its snapshot (and an
+  // append's isEmpty) runs no job
   private def emptyData: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.record)
+    spark.createDataFrame(java.util.List.of[Row](), Schemas.record)
 
   /** Current store contents (id, target, option1..5, vector). */
   def data: DataFrame = mem.getOrElse {
     val df = (path, bucketedTable) match {
-      case (Some(p), _) =>
-        Lake.snapshotGenerations(spark, p).flatMap(_.lastOption).fold {
-          requireGenerational(p)
-          emptyData
-        }(g => spark.read.parquet(s"$p/gen=$g"))
+      case (Some(p), _) => readGenerations(p)
       case (_, Some(tbl)) =>
         if (spark.catalog.tableExists(tbl)) spark.table(tbl) else emptyData
       case _ => emptyData
@@ -164,6 +200,49 @@ final class VectorStore(
 
   private def fs(p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The newest committed base under `p` and the committed deltas above
+    * it, recorded in `layout` and read as one parquet scan; empty when
+    * no base has committed. */
+  private def readGenerations(p: String): DataFrame = {
+    val listed = listGenerations(p)
+    val committed = listed.filter(_.committed)
+    val base = committed.lastIndexWhere(!_.delta)
+    if (base < 0) {
+      requireGenerational(p)
+      layout = None
+      emptyData
+    } else {
+      val l = Layout(committed(base), committed.drop(base + 1).toVector,
+        listed.last.n)
+      layout = Some(l)
+      read(p, l)
+    }
+  }
+
+  private def read(p: String, l: Layout): DataFrame =
+    spark.read.schema(StoredSchema)
+      .parquet((l.base +: l.deltas).map(g => s"$p/gen=${g.n}"): _*)
+
+  /** Every `gen=N` directory under `p`, ascending, from one listing of
+    * the root and one of each directory. */
+  private def listGenerations(p: String): Seq[Generation] = {
+    val root = new Path(p)
+    if (!fs(p).exists(root)) Nil
+    else fs(p).listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
+      .map(s => generation(s.getPath)).sortBy(_.n)
+  }
+
+  private def generation(dir: Path): Generation = {
+    val files = fs(dir.toString).listStatus(dir)
+    val names = files.map(_.getPath.getName).toSet
+    Generation(dir.getName.stripPrefix("gen=").toLong,
+      committed = names("_SUCCESS"), delta = names(DeltaMarker),
+      bytes = files.iterator.filter(s => s.isFile &&
+        !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith(".")).map(_.getLen).sum)
+  }
 
   /** Raises on a path holding parquet files but no `gen=` directory: a
     * store written in the flat layout that preceded generation commits,
@@ -207,35 +286,14 @@ final class VectorStore(
     */
   def setData(df: DataFrame, append: Boolean = false,
       sortCols: Seq[String] = Seq("target")): Unit = {
-    val inBatchDeduped = prepareIngest(df, sortCols)
-
-    if (append && !isEmpty) {
-      // appends only grow the store, so one found over the snapshot
-      // budget stays over it: the new frame keeps that verdict instead
-      // of being sized (or collected) again by the next query
-      val overBudget = mem.exists(_ eq snapSource) && snap.isEmpty
-      val existing = data
-      val fresh = appendAntiJoin(inBatchDeduped)
-      val freshWithIds = withSequentialIds(fresh, maxId + 1, sortCols)
-        .select(Schemas.record.fieldNames.map(col): _*)
-      bucketedTable match {
-        case Some(tbl) =>
-          // the bucketed win: write ONLY the fresh rows as new
-          // per-bucket files — the existing store is neither read back
-          // nor rewritten (saveAsTable(append) resolves by name and
-          // enforces the matching bucket spec)
-          freshWithIds.write.mode("append").format("parquet")
-            .bucketBy(numBuckets, "target").sortBy("target")
-            .saveAsTable(tbl)
-          spark.catalog.refreshTable(tbl)
-          mem = Some(spark.table(tbl))
-        case None =>
-          persist(existing.unionByName(freshWithIds), truncateLineage = true)
-      }
-      if (overBudget) snapSource = mem.get
-    } else {
-      val withIds = withSequentialIds(inBatchDeduped, startAt = 1L, sortCols)
-        .select(Schemas.record.fieldNames.map(col): _*)
+    val embedded = coerceAndEmbed(df)
+    // an append takes the snapshot it is decided against, which also
+    // answers isEmpty
+    if (append && !snapshot.fold(data.isEmpty)(_.isEmpty))
+      appendRows(embedded, sortCols)
+    else {
+      val withIds = withSequentialIds(firstWins(embedded, sortCols),
+        startAt = 1L, sortCols).select(Schemas.record.fieldNames.map(col): _*)
       bucketedTable match {
         case Some(tbl) =>
           // materialize BEFORE the rewrite when the table already
@@ -253,38 +311,122 @@ final class VectorStore(
     }
   }
 
-  /** Shared ingest preparation: schema coercion, float32 discipline,
-    * embed-if-missing, first-wins in-batch dedup. */
-  private def prepareIngest(df: DataFrame,
-      sortCols: Seq[String]): DataFrame = {
-    val coerced = normalizeToSchema(df)
-    val embedded =
-      if (coerced.columns.contains("vector")) {
-        // float32 discipline (F5): cast only when the element type
-        // differs — casting array<float,nullable> to the non-null
-        // variant is rejected by Catalyst, and parquet-read arrays are
-        // nullable-element even when no element is null
-        import org.apache.spark.sql.types.{ArrayType, FloatType}
-        coerced.schema("vector").dataType match {
-          case ArrayType(FloatType, _) => coerced
-          case ArrayType(_, n) =>
-            coerced.withColumn("vector", col("vector").cast(ArrayType(FloatType, n)))
-          case other => throw new IllegalArgumentException(
-            s"'vector' column must be an array of floats, got $other")
+  /** Appends `embedded` to a non-empty store: on the driver when a valid
+    * snapshot and the batch fit the budget, else by Spark. */
+  private def appendRows(embedded: DataFrame, sortCols: Seq[String]): Unit = {
+    val batch = firstWins(embedded, sortCols)
+    val local = validSnapshot.flatMap { s =>
+      StoreSnapshot.collect(embedded, Schemas.saveCols,
+        snapshotBudgetBytes - s.bytes).map { case (rows, vecs, _) =>
+        (s, (rows, vecs))
+      }
+    }
+    local match {
+      case Some((s, (rows, vecs))) =>
+        val start = s.maxId + 1L
+        val (payload, freshVecs) =
+          s.fresh(rows, vecs, embedded.schema, sortCols, start)
+        if (payload.nonEmpty) {
+          // the rows and schema the Spark path below would write
+          val schema = StructType(Schemas.record.fieldNames.map {
+            case "id" => StructField("id", LongType, nullable = false)
+            case c => batch.schema(c)
+          })
+          // one partition: one file per delta (or bucket), not one per
+          // core
+          commitFresh(spark.createDataFrame(payload.indices.map(i =>
+            Row.fromSeq(payload(i).toSeq :+ freshVecs(i))).asJava, schema)
+            .coalesce(1), scanned = false)
+          snap = Some(s.grow(payload, freshVecs, data))
+            .filter(_.bytes < snapshotBudgetBytes)
+          snapSource = mem.get
         }
-      } else
-        Embed.embedColumn(coerced, "target", "vector", embedder, batchSize,
-          prefix = queryPrefix)
-    // first-wins WITHIN the incoming batch (reference: pandas
-    // drop_duplicates keep-first, VectorSearchBase.py:124) — min_by
-    // partial aggregation (one candidate per (partition, target)
-    // crosses the shuffle), mirroring Dedup.exactFirstWins; a
-    // row_number window would ship and sort every row. Ties among rows
-    // with identical sortCols values are arbitrary (there is no "input
-    // order" in a distributed frame) — pass a unique key for full
-    // determinism.
-    graft.operators.Dedup.exactFirstWins(embedded, Seq("target"), sortCols)
+      case None =>
+        // appends only grow the store, so one found over the snapshot
+        // budget stays over it: the new frame keeps that verdict instead
+        // of being sized (or collected) again by the next query
+        val overBudget = mem.exists(_ eq snapSource) && snap.isEmpty
+        commitFresh(withSequentialIds(appendAntiJoin(batch), maxId + 1L,
+          sortCols).select(Schemas.record.fieldNames.map(col): _*),
+          scanned = overBudget)
+        if (overBudget) snapSource = mem.get
+    }
   }
+
+  /** Writes the fresh rows of an append as the store's mode writes
+    * them; `scanned`: the store is over the snapshot budget, so every
+    * query scans its files. */
+  private def commitFresh(fresh: DataFrame, scanned: Boolean): Unit =
+    (path, bucketedTable) match {
+      case (_, Some(tbl)) =>
+        // the bucketed win: write ONLY the fresh rows as new
+        // per-bucket files — the existing store is neither read back
+        // nor rewritten (saveAsTable(append) resolves by name and
+        // enforces the matching bucket spec)
+        fresh.write.mode("append").format("parquet")
+          .bucketBy(numBuckets, "target").sortBy("target")
+          .saveAsTable(tbl)
+        spark.catalog.refreshTable(tbl)
+        mem = Some(spark.table(tbl))
+      case (Some(p), _) =>
+        val l = layout.get // a non-empty path store has read its base
+        val at = Some(l.last + 1L)
+        val conf = spark.sessionState.conf
+        // a delta's cost to a scan, in Spark's units: its bytes, plus
+        // the bytes Spark reckons opening a file costs when queries
+        // scan the files
+        val open = if (scanned) conf.filesOpenCostInBytes else 0L
+        if (l.deltas.map(_.bytes + open).sum + open >= l.base.bytes ||
+            l.deltas.length + 2 > conf.parallelPartitionDiscoveryThreshold) {
+          // the fold: deltas that cost as much as the base, or as many
+          // as a read can list on the driver, become an even base (as
+          // scanned, the base's files would merge in the splits the
+          // deltas widened)
+          installBase(p, Lake.commitGeneration(spark, p,
+            data.unionByName(fresh).repartition(
+              spark.sparkContext.defaultParallelism, col("id")), at))
+        } else {
+          val n = Lake.commitGeneration(spark, p, fresh, at, Some(DeltaMarker))
+          val grown = l.copy(deltas = l.deltas :+ generation(
+            new Path(p, s"gen=$n")), last = n)
+          layout = Some(grown)
+          mem = Some(read(p, grown))
+        }
+      case _ => persist(data.unionByName(fresh), truncateLineage = true)
+    }
+
+  /** Shared ingest preparation: schema coercion, float32 discipline,
+    * embed-if-missing. */
+  private def coerceAndEmbed(df: DataFrame): DataFrame = {
+    val coerced = normalizeToSchema(df)
+    if (coerced.columns.contains("vector")) {
+      // float32 discipline (F5): cast only when the element type
+      // differs — casting array<float,nullable> to the non-null
+      // variant is rejected by Catalyst, and parquet-read arrays are
+      // nullable-element even when no element is null
+      import org.apache.spark.sql.types.FloatType
+      coerced.schema("vector").dataType match {
+        case ArrayType(FloatType, _) => coerced
+        case ArrayType(_, n) =>
+          coerced.withColumn("vector", col("vector").cast(ArrayType(FloatType, n)))
+        case other => throw new IllegalArgumentException(
+          s"'vector' column must be an array of floats, got $other")
+      }
+    } else
+      Embed.embedColumn(coerced, "target", "vector", embedder, batchSize,
+        prefix = queryPrefix)
+  }
+
+  /** First-wins WITHIN the incoming batch (reference: pandas
+    * drop_duplicates keep-first, VectorSearchBase.py:124) — min_by
+    * partial aggregation (one candidate per (partition, target) crosses
+    * the shuffle), mirroring Dedup.exactFirstWins; a row_number window
+    * would ship and sort every row. Ties among rows with identical
+    * sortCols values are arbitrary (there is no "input order" in a
+    * distributed frame) — pass a unique key for full determinism.
+    * [[StoreSnapshot.fresh]] is the same rule on the driver. */
+  private def firstWins(embedded: DataFrame, sortCols: Seq[String]): DataFrame =
+    graft.operators.Dedup.exactFirstWins(embedded, Seq("target"), sortCols)
 
   /** Last-wins UPSERT — beyond-reference but the first thing a real
     * user asks for: rows whose `target` already exists REPLACE the
@@ -295,7 +437,7 @@ final class VectorStore(
     * against the existing side stay Exchange-free like the append
     * path. */
   def updateData(df: DataFrame, sortCols: Seq[String] = Seq("target")): Unit = {
-    val batch = prepareIngest(df, sortCols)
+    val batch = firstWins(coerceAndEmbed(df), sortCols)
     if (isEmpty) { setData(batch); return }
     val existing = data
     val updated = existing.select(col("id"), col("target"))
@@ -352,13 +494,8 @@ final class VectorStore(
     path match {
       case Some(p) =>
         // the new contents commit beside the old, which `df` may still
-        // read; once committed, older generations (torn ones included)
-        // are history the store does not keep
-        val gen = Lake.commitGeneration(spark, p, df)
-        mem = Some(spark.read.parquet(s"$p/gen=$gen"))
-        Lake.genDirs(spark, p).getOrElse(Nil).foreach { case (g, _) =>
-          if (g < gen) fs(p).delete(new Path(s"$p/gen=$g"), true)
-        }
+        // read
+        installBase(p, Lake.commitGeneration(spark, p, df))
       case None =>
         // Appends localCheckpoint (eager): materializes AND truncates
         // lineage — without it, iterated appends (streaming ingest)
@@ -376,6 +513,18 @@ final class VectorStore(
     }
   }
 
+  /** Reads the just-committed base `gen=n` as the store; older
+    * generations, torn ones included, are history the store does not
+    * keep. */
+  private def installBase(p: String, n: Long): Unit = {
+    val l = Layout(generation(new Path(p, s"gen=$n")), Vector.empty, n)
+    layout = Some(l)
+    mem = Some(read(p, l))
+    Lake.genDirs(spark, p).getOrElse(Nil).foreach { case (g, _) =>
+      if (g < n) fs(p).delete(new Path(s"$p/gen=$g"), true)
+    }
+  }
+
   /** Drop everything (`reset_db`, `VectorSearchBase.py:96-99`): every
     * generation, committed or torn, goes with the path. */
   def reset(): Unit = {
@@ -384,6 +533,7 @@ final class VectorStore(
     path.foreach(p => fs(p).delete(new Path(p), true))
     bucketedTable.foreach(tbl => spark.sql(s"DROP TABLE IF EXISTS $tbl"))
     mem = Some(emptyData)
+    layout = None
   }
 
   private var zsLabels: Seq[(String, Array[Float])] = Nil
@@ -532,25 +682,99 @@ final class VectorStore(
   }
 }
 
+object VectorStore {
+  /** The empty file that marks a generation as a delta. */
+  private val DeltaMarker = "_DELTA"
+
+  /** [[Schemas.record]] as parquet reads it back (every field and
+    * element nullable): a path store's fixed read schema, so opening a
+    * generation infers nothing (inference runs a Spark job). */
+  private val StoredSchema = StructType(Schemas.record.map { f =>
+    f.copy(dataType = f.dataType match {
+      case ArrayType(t, _) => ArrayType(t, containsNull = true)
+      case t => t
+    }, nullable = true)
+  })
+
+  /** A `gen=N` directory: committed (`_SUCCESS`), a delta (`_DELTA`),
+    * and the bytes of its data files. */
+  private final case class Generation(n: Long, committed: Boolean,
+      delta: Boolean, bytes: Long)
+
+  /** What a path store reads: its base and the deltas above it, plus
+    * the newest generation listed with them, committed or torn. */
+  private final case class Layout(base: Generation,
+      deltas: Vector[Generation], last: Long)
+}
+
 /** A driver-side copy of a store's contents, for serving top-k without
   * a Spark job: `payload(i)` holds row `i`'s `(id, target, option1..5)`
-  * and `vecs(i)` its vector (null for a null vector).
+  * and `vecs(i)` its vector (null for a null vector); `bytes` is its
+  * heap estimate. An append decides its fresh rows against it
+  * ([[fresh]]) and [[grow]]s it by them.
   * Scoring is [[VectorOps.squaredL2Floats]] — the Catalyst kernel's
   * float→double widening and sequential double accumulation — so
   * distances are bit-identical to the Spark path's, and the top k are
   * kept by (distance, id) ascending in one bounded heap. */
-private[store] final class StoreSnapshot(payload: Array[Row],
-    vecs: Array[Array[Float]], val schema: StructType) {
+private[store] final class StoreSnapshot private (payload: Array[Row],
+    vecs: Array[Array[Float]], ids: Array[Long], dims: Array[Int],
+    knownTargets: Option[Set[String]], val schema: StructType,
+    val bytes: Long) {
   import StoreSnapshot._
 
-  private val ids = payload.map(_.getLong(0))
-
-  private val dims = vecs.iterator.filter(_ != null).map(_.length)
-    .distinct.toArray
+  /** The stored targets, for the append's anti-join. */
+  private lazy val targets: Set[String] = knownTargets.getOrElse(
+    payload.iterator.map(_.getString(1)).filter(_ != null).toSet)
 
   def isEmpty: Boolean = ids.isEmpty
 
   def maxId: Long = ids.max
+
+  /** The rows an append of `batch` (rows of `saveCols`, vectors apart)
+    * adds, with ids from `start`: per target the first row in
+    * `sortCols` order, then those whose target is not stored (a null
+    * target never matches), numbered in `sortCols` order — the rules
+    * of the Spark path (`Dedup.exactFirstWins`, the left-anti join on
+    * `target`, `Ingest.withSequentialIds`), in Spark's ordering. Ties
+    * in `sortCols` keep batch order, where Spark's pick is arbitrary.
+    * Returns the rows as payload (`id` first) and their vectors. */
+  def fresh(batch: Array[Row], batchVecs: Array[Array[Float]],
+      schema: StructType, sortCols: Seq[String],
+      start: Long): (Array[Row], Array[Array[Float]]) = {
+    val fields = sortCols.map { c =>
+      val toCatalyst =
+        CatalystTypeConverters.createToCatalystConverter(schema(c).dataType)
+      val at = Schemas.saveCols.indexOf(c)
+      (r: Int) => toCatalyst(if (c == "vector") batchVecs(r) else batch(r).get(at))
+    }
+    val keys = batch.indices.map(i => InternalRow.fromSeq(fields.map(_(i))))
+    val order = RowOrdering.createNaturalAscendingOrdering(
+      sortCols.map(schema(_).dataType))
+    val first = new java.util.HashMap[String, Int]
+    batch.indices.foreach { i =>
+      val t = batch(i).getString(0)
+      val kept = first.get(t)
+      if (!first.containsKey(t) || order.lt(keys(i), keys(kept))) first.put(t, i)
+    }
+    val added = first.values.asScala.toArray.sorted.filter { i =>
+      val t = batch(i).getString(0)
+      t == null || !targets.contains(t)
+    }.sortBy(keys)(order)
+    (added.zipWithIndex.map { case (i, j) =>
+      Row.fromSeq((start + j) +: batch(i).toSeq)
+    }, added.map(batchVecs))
+  }
+
+  /** This snapshot plus `rows` (payload, `id` first) and their
+    * vectors, as the copy of `data`, the store after they were
+    * written. */
+  def grow(rows: Array[Row], rowVecs: Array[Array[Float]],
+      data: DataFrame): StoreSnapshot =
+    new StoreSnapshot(payload ++ rows, vecs ++ rowVecs,
+      ids ++ rows.map(_.getLong(0)),
+      (dims ++ dimsOf(rowVecs)).distinct,
+      Some(targets ++ rows.iterator.map(_.getString(1)).filter(_ != null)),
+      resultSchema(data), bytes + heapBytes(rows, rowVecs))
 
   /** The k nearest rows as `payload :+ distance`, ascending by
     * (distance, id); rows with a null vector never take a slot. Raises
@@ -595,39 +819,85 @@ private[store] object StoreSnapshot {
 
   val resultCols: Seq[String] = "id" +: Schemas.saveCols :+ "distance"
 
-  /** One collect of `data` when it is under `budgetBytes`: the
-    * optimizer's size estimate gates the collect, the collected rows'
-    * heap estimate gates the snapshot. None when either is over. A
-    * frame the optimizer cannot size (a checkpointed or RDD-built one,
-    * reported as `Long.MaxValue`) is gated by one aggregation job that
-    * computes the heap estimate instead. */
-  def take(data: DataFrame, budgetBytes: Long): Option[StoreSnapshot] = {
-    import data.sparkSession.implicits._
-    val cols = resultCols.init
-    val sized = data.queryExecution.optimizedPlan.stats.sizeInBytes
-    val preBytes =
-      if (sized < Long.MaxValue) sized
-      else BigInt(data.select(coalesce(sum(
-        lit(RowOverheadBytes) +
-          when(col("vector").isNull, 0).otherwise(size(col("vector")) * 4) +
-          cols.tail.map(c => coalesce(length(col(c)) * 2, lit(0)))
-            .reduce(_ + _)), lit(0L))).head.getLong(0))
-    if (preBytes >= budgetBytes) return None
-    // vectors decode straight to float arrays, the payload to rows
-    val payloadSchema = StructType(cols.map(data.schema(_)))
-    val (payload, vecs) = data
-      .select(struct(cols.map(col): _*), col("vector"))
-      .as(Encoders.tuple(Encoders.row(payloadSchema),
-        implicitly[Encoder[Array[Float]]]))
-      .collect().unzip
-    val bytes = payload.iterator.zip(vecs.iterator).map { case (r, v) =>
-      RowOverheadBytes + (if (v == null) 0L else 4L * v.length) +
-        (1 until r.length).iterator.map(i =>
-          if (r.isNullAt(i)) 0L else 2L * r.getString(i).length).sum
-    }.sum
-    if (bytes >= budgetBytes) None
-    else Some(new StoreSnapshot(payload, vecs,
-      payloadSchema.add(StructField("distance", DoubleType,
-        nullable = data.schema("vector").nullable))))
+  /** One collect of `data` when its heap estimate is under
+    * `budgetBytes` (see [[collect]]). */
+  def take(data: DataFrame, budgetBytes: Long): Option[StoreSnapshot] =
+    collect(data, resultCols.init, budgetBytes).map {
+      case (payload, vecs, bytes) =>
+        new StoreSnapshot(payload, vecs, payload.map(_.getLong(0)),
+          dimsOf(vecs), None, resultSchema(data), bytes)
+    }
+
+  /** `df`'s `cols` as rows and its vectors, decoded straight to float
+    * arrays, with their heap estimate, when that is under
+    * `budgetBytes`; None otherwise, decided before the rows reach the
+    * driver. A frame the optimizer sizes at the budget or over is
+    * rejected with no job. Otherwise one job collects it, each task
+    * keeping its partition's rows while their heap estimate stays under
+    * an equal share of the budget and shipping a marker instead once it
+    * does not; so at most the budget is ever collected, and a partition
+    * holding more than its share rejects the frame. A local relation is
+    * already on the driver and is copied, with no job. */
+  def collect(df: DataFrame, cols: Seq[String],
+      budgetBytes: Long): Option[(Array[Row], Array[Array[Float]], Long)] = {
+    val schema = StructType(cols.map(df.schema(_)))
+    val (width, strings) =
+      (cols.length, cols.indices.filter(schema(_).dataType == StringType))
+    val selected = df.select(struct(cols.map(col): _*), col("vector"))
+    val plan = df.queryExecution.optimizedPlan
+    val sized = plan.stats.sizeInBytes
+    // internal rows, decoded on the driver below: a typed Dataset would
+    // generate and compile an encoder per frame, which a first append
+    // pays for twice (the store, then the batch)
+    val got: Option[Array[InternalRow]] =
+      if (sized < Long.MaxValue && sized >= budgetBytes) None
+      else if (plan.isInstanceOf[LocalRelation])
+        Some(selected.queryExecution.executedPlan.executeCollect())
+      else {
+        val kept = selected.queryExecution.toRdd.mapPartitions { it =>
+          val share = budgetBytes / TaskContext.get.numPartitions
+          val out = ArrayBuffer.empty[InternalRow]
+          var used = 0L
+          while (used < share && it.hasNext) {
+            val r = it.next()
+            val (fields, v) = (r.getStruct(0, width), r.getArray(1))
+            used += RowOverheadBytes +
+              (if (v == null) 0L else 4L * v.numElements) +
+              strings.iterator.map(i =>
+                if (fields.isNullAt(i)) 0L
+                else 2L * fields.getUTF8String(i).numChars).sum
+            out += r.copy()
+          }
+          if (used >= share) Iterator.single(null: InternalRow)
+          else out.iterator
+        }.collect()
+        if (kept.contains(null)) None else Some(kept)
+      }
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    got.map(_.map { r =>
+      (toRow(r.getStruct(0, width)).asInstanceOf[Row],
+        if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())
+    }.unzip).map { case (r, v) => (r, v, heapBytes(r, v)) }
+      .filter(_._3 < budgetBytes)
   }
+
+  /** The heap estimate of one row and its vector. */
+  private def rowBytes(r: Row, v: Array[Float]): Long =
+    RowOverheadBytes + (if (v == null) 0L else 4L * v.length) +
+      (0 until r.length).iterator.map(r.get(_) match {
+        case s: String => 2L * s.length
+        case _ => 0L
+      }).sum
+
+  /** The heap estimate of rows and their vectors. */
+  private def heapBytes(rows: Array[Row], vecs: Array[Array[Float]]): Long =
+    rows.indices.iterator.map(i => rowBytes(rows(i), vecs(i))).sum
+
+  private def dimsOf(vecs: Array[Array[Float]]): Array[Int] =
+    vecs.iterator.filter(_ != null).map(_.length).distinct.toArray
+
+  /** The schema of a top-k result over `data`. */
+  private def resultSchema(data: DataFrame): StructType =
+    StructType(resultCols.init.map(data.schema(_))).add(StructField(
+      "distance", DoubleType, nullable = data.schema("vector").nullable))
 }

@@ -190,8 +190,12 @@ class VectorStoreSpec extends SparkSpec {
     val store = new VectorStore(spark, HashEmbedder(dim = 8), path = Some(p))
     store.setData(frame("a" -> "1", "b" -> "2"))
     store.setData(frame("c" -> "3"), append = true)
+    // the replace is base gen=0, the append only its fresh row, as delta
+    // gen=1
     val gens = new java.io.File(p).list().filter(_.startsWith("gen=")).toSeq
-    assert(gens == Seq("gen=1"), s"older generations must be dropped: $gens")
+    assert(gens.sorted == Seq("gen=0", "gen=1"), s"base + one delta: $gens")
+    assert(!new java.io.File(s"$p/gen=0/_DELTA").exists() &&
+      new java.io.File(s"$p/gen=1/_DELTA").exists())
     // a writer killed mid-write: rows in gen=2, no _SUCCESS marker
     store.data.limit(1).write.parquet(s"$p/gen=2")
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$p/gen=2/_SUCCESS"))
@@ -231,6 +235,195 @@ class VectorStoreSpec extends SparkSpec {
       new VectorStore(spark, HashEmbedder(dim = 8), path = Some(p)).data
     }
     assert(e.getMessage.contains("flat-layout"), e.getMessage)
+  }
+
+  // ---- path mode: one base generation plus delta generations ----
+
+  private def pathStore(p: String) =
+    new VectorStore(spark, HashEmbedder(dim = 8), path = Some(p))
+
+  /** `gen=N` -> is a delta (holds `_DELTA`), for every generation under
+    * `p`, committed or not. */
+  private def layoutOf(p: String): Seq[(Long, Boolean)] =
+    new java.io.File(p).list().filter(_.startsWith("gen=")).toSeq
+      .map(g => (g.stripPrefix("gen=").toLong,
+        new java.io.File(s"$p/$g/_DELTA").exists())).sortBy(_._1)
+
+  private def rowsOf(store: VectorStore): Seq[(Long, String, String)] =
+    store.data.orderBy("id").collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+
+  test("path mode: a replace and three appends read back as one base " +
+      "plus three deltas, with the rows and ids of a full rewrite") {
+    val p = s"${java.nio.file.Files.createTempDirectory("graft-store")}/db"
+    val store = pathStore(p)
+    val whole = new VectorStore(spark, HashEmbedder(dim = 8))
+    whole.setSnapshotBudget(0L) // the Spark path: union of old and fresh
+    // a base of 300 rows outweighs three small deltas (no fold)
+    val batches = Seq(
+      frame(Seq("m", "c", "x").map(_ -> "1") ++
+        (100 until 397).map(i => s"k$i" -> "1"): _*),
+      frame("c" -> "2", "a" -> "2", "z" -> "2"),  // c is stored: dropped
+      frame("b" -> "3", "b" -> "3", "y" -> "3"),  // in-batch duplicate
+      frame("d" -> "4", "m" -> "4"))
+    store.setData(batches.head)
+    whole.setData(batches.head)
+    batches.tail.foreach { b =>
+      store.setData(b, append = true)
+      whole.setData(b, append = true)
+    }
+    assert(layoutOf(p) == Seq(0L -> false, 1L -> true, 2L -> true, 3L -> true))
+    // each delta holds only what its append added
+    assert((1 to 3).map(g => spark.read.parquet(s"$p/gen=$g").count()) ==
+      Seq(2L, 2L, 1L))
+    val reopened = pathStore(p)
+    assert(rowsOf(reopened) == rowsOf(whole))
+    assert(rowsOf(reopened).map(_._1) == (1L to 305L))
+    assert(reopened.data.collect().map(r => r.getLong(0) -> r.getSeq[Float](7))
+      .toMap == whole.data.collect().map(r => r.getLong(0) -> r.getSeq[Float](7))
+      .toMap)
+  }
+
+  test("path mode: a torn delta is invisible and the next append " +
+      "numbers past it") {
+    val p = s"${java.nio.file.Files.createTempDirectory("graft-store")}/db"
+    val store = pathStore(p)
+    store.setData(frame("a" -> "1", "b" -> "1"))
+    store.setData(frame("c" -> "2"), append = true)
+    // a writer killed mid-write: a delta gen=2 with rows, no _SUCCESS
+    val torn = new java.io.File(s"$p/gen=2")
+    store.data.limit(1).write.parquet(torn.toString)
+    new java.io.File(torn, "_SUCCESS").delete()
+    new java.io.File(torn, "_DELTA").createNewFile()
+    val reopened = pathStore(p)
+    assert(rowsOf(reopened).map(_._2) == Seq("a", "b", "c"))
+    reopened.setData(frame("d" -> "3", "a" -> "3"), append = true)
+    assert(layoutOf(p) == Seq(0L -> false, 1L -> true, 2L -> true, 3L -> true))
+    assert(rowsOf(pathStore(p)) ==
+      Seq((1L, "a", "1"), (2L, "b", "1"), (3L, "c", "2"), (4L, "d", "3")))
+  }
+
+  test("path mode: a replace or updateData leaves exactly one base") {
+    val p = s"${java.nio.file.Files.createTempDirectory("graft-store")}/db"
+    val store = pathStore(p)
+    store.setData(frame("a" -> "1"))
+    store.setData(frame("b" -> "2"), append = true)
+    store.setData(frame("c" -> "3"), append = true)
+    store.updateData(frame("a" -> "9", "d" -> "9"))
+    assert(layoutOf(p) == Seq(3L -> false))
+    assert(rowsOf(pathStore(p)) == Seq((1L, "a", "9"), (2L, "b", "2"),
+      (3L, "c", "3"), (4L, "d", "9")))
+    store.setData(frame("e" -> "5"), append = true)
+    store.setData(frame("z" -> "0", "y" -> "0"))
+    assert(layoutOf(p) == Seq(5L -> false))
+    assert(rowsOf(pathStore(p)) == Seq((1L, "y", "0"), (2L, "z", "0")))
+  }
+
+  test("path mode: once the deltas' bytes reach the base's, the next " +
+      "append folds base, deltas and fresh rows into a new base") {
+    val p = s"${java.nio.file.Files.createTempDirectory("graft-store")}/db"
+    val store = pathStore(p)
+    val whole = new VectorStore(spark, HashEmbedder(dim = 8))
+    whole.setSnapshotBudget(0L)
+    store.setData(frame("base" -> "0"))
+    whole.setData(frame("base" -> "0"))
+    def dataBytes(g: Long) = new java.io.File(s"$p/gen=$g").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    var folds = 0
+    for (i <- 1 to 6) {
+      val before = layoutOf(p)
+      val (base, deltas) = (before.head._1, before.tail.map(_._1))
+      val due = deltas.map(dataBytes).sum >= dataBytes(base)
+      val b = frame(s"t$i" -> s"$i", s"u$i" -> s"$i")
+      store.setData(b, append = true)
+      whole.setData(b, append = true)
+      val next = before.last._1 + 1
+      if (due) {
+        folds += 1
+        assert(layoutOf(p) == Seq(next -> false), s"append $i")
+      } else assert(layoutOf(p) == before :+ (next -> true), s"append $i")
+      assert(rowsOf(store) == rowsOf(whole), s"append $i")
+    }
+    assert(folds >= 1, "no fold in six appends")
+    assert(rowsOf(pathStore(p)) == rowsOf(whole))
+  }
+
+  test("path mode over the snapshot budget: each delta, the next one " +
+      "included, also costs a file open, and a fold writes one even " +
+      "file per core") {
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.get(key)
+    val p = s"${java.nio.file.Files.createTempDirectory("graft-store")}/db"
+    val store = pathStore(p)
+    store.setSnapshotBudget(0L) // every query scans the files
+    val whole = new VectorStore(spark, HashEmbedder(dim = 8))
+    whole.setSnapshotBudget(0L)
+    val rows = frame((0 until 300).map(i => s"k$i" -> "0"): _*)
+    store.setData(rows)
+    whole.setData(rows)
+    def dataFiles(g: Long) = new java.io.File(s"$p/gen=$g").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    def dataBytes(g: Long) = dataFiles(g).map(_.length).sum
+    // a file open priced at a third of the base: the third append folds,
+    // where the deltas' bytes alone would not reach the base's
+    val open = dataBytes(0) / 3
+    try {
+      spark.conf.set(key, open)
+      var folds = 0
+      for (i <- 1 to 6) {
+        val before = layoutOf(p)
+        val (base, deltas) = (before.head._1, before.tail.map(_._1))
+        val due =
+          deltas.map(dataBytes(_) + open).sum + open >= dataBytes(base)
+        val b = frame(s"t$i" -> s"$i", s"u$i" -> s"$i")
+        store.setData(b, append = true)
+        whole.setData(b, append = true)
+        val next = before.last._1 + 1
+        if (due) {
+          folds += 1
+          assert(layoutOf(p) == Seq(next -> false), s"append $i")
+          val sizes = dataFiles(next).map(_.length)
+          assert(sizes.length == spark.sparkContext.defaultParallelism)
+          assert(sizes.max < 2 * sizes.min, s"uneven fold: ${sizes.toSeq}")
+        } else assert(layoutOf(p) == before :+ (next -> true), s"append $i")
+        assert(rowsOf(store) == rowsOf(whole), s"append $i")
+      }
+      assert(folds >= 1 && folds < 6, s"$folds folds in six appends")
+    } finally spark.conf.set(key, prev)
+    assert(rowsOf(pathStore(p)) == rowsOf(whole))
+  }
+
+  test("path mode: an append by a store that read an older generation " +
+      "raises, and leaves the other writer's rows") {
+    val p = s"${java.nio.file.Files.createTempDirectory("graft-store")}/db"
+    val first = pathStore(p)
+    first.setData(frame("a" -> "1"))
+    val second = pathStore(p)
+    assert(second.data.count() == 1)
+    first.setData(frame("b" -> "2"), append = true)
+    val e = intercept[IllegalStateException] {
+      second.setData(frame("c" -> "3"), append = true)
+    }
+    assert(e.getMessage.contains("concurrent write"), e.getMessage)
+    assert(e.getMessage.contains("gen=1"), e.getMessage)
+    assert(rowsOf(pathStore(p)) == Seq((1L, "a", "1"), (2L, "b", "2")))
+  }
+
+  test("path mode: generations without a _DELTA marker (as earlier " +
+      "stores wrote every one) read as bases") {
+    val p = s"${java.nio.file.Files.createTempDirectory("graft-store")}/db"
+    val src = freshStore()
+    src.setData(frame("a" -> "1", "b" -> "1"))
+    // full rewrites, each committed whole; the older one kept, as a
+    // writer dying before deleting it would leave it
+    graft.operators.Lake.commitGeneration(spark, p, src.data.limit(1))
+    graft.operators.Lake.commitGeneration(spark, p, src.data)
+    val store = pathStore(p)
+    assert(rowsOf(store).map(_._2) == Seq("a", "b"))
+    store.setData(frame("c" -> "2"), append = true)
+    assert(layoutOf(p) == Seq(0L -> false, 1L -> false, 2L -> true))
+    assert(rowsOf(pathStore(p)).map(r => (r._1, r._2)) ==
+      Seq(1L -> "a", 2L -> "b", 3L -> "c"))
   }
 
   test("non-string target is coerced to string (schema stays uniform)") {

@@ -15,10 +15,15 @@ length is BENCHMARK.json's run_seconds unless --seconds overrides it.
 
 The output keeps the shape of the earlier BENCH_PAIRS_*.json files: `what`
 and `runs` (one row per run: workload, seed, side, correct, attempted,
-failed and the end-to-end metrics). `summary` adds, per workload and
-end-to-end metric: both sides' medians, the parent's quartiles, the
-change's wins (ties count for neither side), the change/parent ratio of
-medians, the bound from BENCHMARK.json and a verdict:
+failed, the end-to-end metrics, and under `named` the workload's own
+metrics from its `[perfbench] <workload> <name> = <value> <unit>` stderr
+lines, e.g. session `appends`, `store_rows`, `append_p50_ms`). `summary`
+adds, per workload and end-to-end metric: both sides' medians, the
+parent's quartiles, the change's wins (ties count for neither side), the
+change/parent ratio of medians, the bound from BENCHMARK.json and a
+verdict; and under `named` both sides' median of each named metric,
+without a verdict (they are context: in a fixed-time loop a faster side
+runs more ops, so e.g. its session store grows larger):
 
   inside      the change's median is no worse than the parent's by more
               than the bound, and the parent's quartile spread is within
@@ -35,6 +40,7 @@ what it measured. Reads perfbench/ and BENCHMARK.json, writes only under
 import argparse
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -73,6 +79,21 @@ def copy_tree(src, dest):
         shutil.copy2(s, d)
 
 
+def named_metrics(workload, stderr):
+    """{name: value} from the run's `[perfbench] <workload> <name> =
+    <value> <unit>` lines (end-to-end lines carry no unit)."""
+    line = re.compile(r"^\[perfbench\] " + re.escape(workload) +
+                      r" (\S+) = (\S+) \S+$")
+    out = {}
+    for m in map(line.match, stderr.splitlines()):
+        if m:
+            try:
+                out[m.group(1)] = float(m.group(2))
+            except ValueError:
+                pass
+    return out
+
+
 def run_once(tree, workload, seed, seconds):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
@@ -83,7 +104,8 @@ def run_once(tree, workload, seed, seconds):
     except (IndexError, ValueError):
         log(f"no result from {tree} {workload} seed {seed} (exit "
             f"{p.returncode}):", p.stderr[-2000:])
-        return {"correct": False, "attempted": 0, "failed": 0, "metrics": {}}
+        res = {"correct": False, "attempted": 0, "failed": 0, "metrics": {}}
+    res["named"] = named_metrics(workload, p.stderr)
     return res
 
 
@@ -136,6 +158,15 @@ def summarize(runs, bench):
                 "ratio": None if ratio is None else round(ratio, 4),
                 "bound": bound, "verdict": verdict}
         ws = [r for r in runs if r["workload"] == w]
+        named = {}
+        for name in dict.fromkeys(n for r in ws for n in r.get("named", {})):
+            named[name] = {
+                side: round(statistics.median(vals), 3)
+                for side in ("parent", "change")
+                for vals in [[r["named"][name] for r in ws
+                              if r["side"] == side and name in r["named"]]]
+                if vals}
+        rows["named"] = named
         rows["runs_correct"] = sum(r["correct"] for r in ws)
         rows["runs"] = len(ws)
         rows["failed_ops"] = sum(r["failed"] for r in ws)
@@ -195,6 +226,7 @@ def main():
                 got = res.get("metrics", {})
                 row.update({m["name"]: got.get(m["name"], {}).get("value")
                             for m in bench["end_to_end"]})
+                row["named"] = res["named"]
                 runs.append(row)
                 log(f"{w} seed {seed} {side}: {time.time() - t0:.0f} s",
                     json.dumps(row))
