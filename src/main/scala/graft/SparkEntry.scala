@@ -53,20 +53,30 @@ object SparkEntry {
 
   /** The query vector of the single-query search lines: the
     * `embedding` of `vec_id = 0` in `emb` (one job). */
-  private[graft] def queryVec(emb: DataFrame): Array[Float] =
-    emb.filter(col("vec_id") === 0).select("embedding")
-      .head.getSeq[Float](0).toArray
+  private[graft] def queryVec(emb: DataFrame): Array[Float] = {
+    val rows = emb.filter(col("vec_id") === 0).select("embedding").head(1)
+    require(rows.nonEmpty, "the embeddings table has no row with " +
+      "vec_id = 0, the query vector of the single-query search lines")
+    rows(0).getSeq[Float](0).toArray
+  }
 
   /** The first `n` `embedding`s of `emb` by `vec_id` — the fixed
     * centroids of the oracle-checkable index lines (one job). */
-  private[graft] def firstVecs(emb: DataFrame, n: Int): Array[Array[Float]] =
-    emb.filter(col("vec_id") < n).orderBy("vec_id")
+  private[graft] def firstVecs(emb: DataFrame, n: Int): Array[Array[Float]] = {
+    val vecs = emb.filter(col("vec_id") < n).orderBy("vec_id")
       .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+    require(vecs.nonEmpty, s"the embeddings table has no row with " +
+      s"vec_id < $n: the fixed-centroid index lines need at least one")
+    vecs
+  }
 
   /** Fixed PQ codebooks cut from `rows`: book `sub` holds each row's
     * `sub`-th of `m` equal subvectors. */
   private[graft] def sliceBooks(rows: Array[Array[Float]],
       m: Int): Array[Array[Array[Float]]] = {
+    require(rows.nonEmpty, s"no embeddings rows to cut $m fixed PQ " +
+      "codebooks from: the fixed-codebook lines need at least one row " +
+      "with vec_id < 4 (pq, opq) or with 4 <= vec_id < 8 (ivfpq)")
     val subDim = rows(0).length / m
     Array.tabulate(m)(sub =>
       rows.map(v => v.slice(sub * subDim, (sub + 1) * subDim)))

@@ -25,14 +25,6 @@ trait Embedder extends Serializable {
   final def embedOne(s: String): Array[Float] = embed(Seq(s)).head
 }
 
-/** Embedder for binary payloads (image/audio/video columns). The decode
-  * step is model-specific; see graft.operators.Multimodal for the
-  * stubbed offline implementation. */
-trait BinaryEmbedder extends Serializable {
-  def dim: Int
-  def embedBytes(batch: Seq[Array[Byte]]): Seq[Array[Float]]
-}
-
 /** Columnar inference surface — the drop-in point for a REAL model
   * runtime (ONNX Runtime, a JNI-wrapped torch export, TVM): a batch
   * arrives as ONE contiguous Arrow-style varchar block (concatenated

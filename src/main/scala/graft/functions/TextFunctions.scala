@@ -231,7 +231,9 @@ object TextFunctions {
         .as("fk_grade"))
   }
 
-  /** Register kernel functions for `spark.sql(...)` use. */
+  /** Register kernel functions for `spark.sql(...)` use.
+    * Contract: the `spark.sql` surface of the text kernels; callers are
+    * users' sessions, not program code. */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     def one(name: String)(f: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>

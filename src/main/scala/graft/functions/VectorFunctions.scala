@@ -77,15 +77,11 @@ object VectorFunctions {
   def vec_sum(a: Column): Column =
     column(VectorSumAgg(expression(a)).toAggregateExpression())
 
-  /** Element-wise mean: vec_sum / count, computed per group as a
-    * post-projection: `vec_mean_of(vec_sum(v), count(*))`. */
-  def vec_mean_of(sumCol: Column, countCol: Column): Column =
-    org.apache.spark.sql.functions.transform(sumCol,
-      x => x / countCol.cast("double"))
-
   /** Register all kernels for `spark.sql(...)` use. Arity is validated
     * here — the raw builders would otherwise throw index errors on
-    * e.g. `vec_dot(a)`. */
+    * e.g. `vec_dot(a)`.
+    * Contract: the `spark.sql` surface of the vector kernels; callers
+    * are users' sessions, not program code. */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     def fn(name: String, arity: Int)(

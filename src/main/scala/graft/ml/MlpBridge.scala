@@ -265,7 +265,9 @@ object MlpBridge {
   }
 
   /** Pearson correlation of prediction vs truth (A6 — the reference
-    * prints `np.corrcoef`, `VectorSearchBase.py:251`). */
+    * prints `np.corrcoef`, `VectorSearchBase.py:251`).
+    * Contract: reference-parity figure `MlpBridgeSpec` checks; no
+    * program caller. */
   def pearson(df: DataFrame, a: String, b: String): Double =
     df.agg(corr(col(a).cast("double"), col(b).cast("double"))).head.getDouble(0)
 }

@@ -48,10 +48,10 @@ private[operators] case class BloomMightContain(
     copy(child = newChild)
 }
 
-/** Bloom-pruned semi/anti joins for the "right side too big to
+/** Bloom-pruned anti join for the "right side too big to
   * broadcast, left side enormous" regime.
   *
-  * A plain `left_anti`/`left_semi` join shuffles EVERY left row on the
+  * A plain `left_anti` join shuffles EVERY left row on the
   * join key. At 100 TB left / 10^8-key right that shuffle is the job.
   * Instead: build a Bloom filter of the right keys (distributed
   * `treeAggregate`, one filter merge per partition), broadcast it inside
@@ -141,17 +141,5 @@ object BloomJoin {
       .join(b.rightKeys.withColumnRenamed(rightKey, "__bloom_key"),
         col(leftKey) === col("__bloom_key"), "left_anti")
     settled.unionByName(candidates)
-  }
-
-  /** Exact left-semi join, bloom-routed: bloom-negative rows are dropped
-    * immediately (provably unmatched); only candidates shuffle into the
-    * real semi join. NULL left keys are dropped, matching `left_semi`. */
-  def prunedSemiJoin(left: DataFrame, right: DataFrame, leftKey: String,
-      rightKey: String, fpp: Double = 0.01,
-      expectedItems: Option[Long] = None): DataFrame = {
-    val b = build(left, right, leftKey, rightKey, fpp, expectedItems)
-    left.where(b.might)
-      .join(b.rightKeys.withColumnRenamed(rightKey, "__bloom_key"),
-        col(leftKey) === col("__bloom_key"), "left_semi")
   }
 }

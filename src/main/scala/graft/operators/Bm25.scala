@@ -40,8 +40,8 @@ object Bm25 {
 
   /** Postings + corpus statistics. `postings` = (id, token, tf, dl);
     * `docFreq` = (token, df); `nDocs`/`totalDl` are the two driver-side
-    * scalars — both exact longs, so [[append]]ing increments and
-    * refitting from scratch derive the SAME `avgdl` double. */
+    * scalars — both exact longs, so a [[save]]d-then-[[load]]ed index
+    * and a fresh fit derive the SAME `avgdl` double. */
   final case class Bm25Index(postings: DataFrame, docFreq: DataFrame,
       nDocs: Long, totalDl: Long) {
     def avgdl: Double =
@@ -69,30 +69,6 @@ object Bm25 {
     val n = stats.getLong(0)
     Bm25Index(postings, docFreq, n,
       if (n == 0L) 0L else stats.getLong(1))
-  }
-
-  /** Incremental index maintenance — the append-only postings pattern
-    * (new crawl slices arrive; re-fitting 100 TB of postings per batch
-    * is not an option): the new docs pay one [[fit]] over THEMSELVES,
-    * postings union lazily, document frequencies merge by one slim
-    * aggregated-frame union+sum, and the scalar stats add exactly —
-    * so an appended index answers IDENTICALLY to a full refit over
-    * the concatenated corpus. Callers own id disjointness (duplicate
-    * doc ids would double-count their terms).
-    *
-    * This in-memory form stacks one union + one re-aggregation of
-    * lineage PER CALL — fine for a handful of batches, but after
-    * hundreds of appends the plan itself becomes the bottleneck. For
-    * a long-lived index use [[appendSaved]], which lands each delta
-    * as parquet segment files so the reopened plan depth is O(1)
-    * regardless of append count, and [[compact]] periodically. */
-  def append(index: Bm25Index, newDocs: DataFrame, idCol: String,
-      textCol: String): Bm25Index = {
-    val incr = fit(newDocs, idCol, textCol)
-    val docFreq = index.docFreq.unionByName(incr.docFreq)
-      .groupBy("token").agg(sum("df").cast("long").as("df"))
-    Bm25Index(index.postings.unionByName(incr.postings), docFreq,
-      index.nDocs + incr.nDocs, index.totalDl + incr.totalDl)
   }
 
   /** Top-k BM25 search. Returns (idCol, n_matched, score) ordered by
@@ -180,70 +156,12 @@ object Bm25 {
       .write.mode("overwrite").parquet(s"$path/stats")
   }
 
-  /** Reopen a [[save]]d index. `docfreq` may hold per-segment delta
-    * files (one per [[appendSaved]]), so it is re-aggregated at reopen
-    * — one hash aggregation of an already token-slim frame, and the
-    * plan depth stays constant no matter how many appends produced the
-    * layout (a single parquet scan per frame, never a union chain). */
+  /** Reopen a [[save]]d index: one parquet scan per frame. */
   def load(spark: org.apache.spark.sql.SparkSession,
       path: String): Bm25Index = {
     val s = spark.read.parquet(s"$path/stats").head
-    val docFreq = spark.read.parquet(s"$path/docfreq")
-      .groupBy("token").agg(sum("df").cast("long").as("df"))
-    Bm25Index(spark.read.parquet(s"$path/postings"), docFreq,
-      s.getLong(0), s.getLong(1))
-  }
-
-  /** Append new docs to a [[save]]d index ON DISK — the delta-segment
-    * pattern (mirrors the streaming near-dup segment store): the new
-    * batch pays one [[fit]] over itself, its postings and docFreq
-    * deltas land as ADDITIONAL parquet files under the same layout
-    * (no read-modify-write of existing segments — appends never
-    * rewrite history), and the two exact-long scalars are re-written.
-    * Because [[load]] re-aggregates docFreq across segment files, an
-    * appended-then-reopened index answers IDENTICALLY to a refit over
-    * the concatenated corpus, with reopened plan depth independent of
-    * the number of appends. Callers own id disjointness, as in
-    * [[append]]. Run [[compact]] when the segment-file count (not the
-    * plan) becomes the nuisance. */
-  def appendSaved(spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, idCol: String, textCol: String): Unit = {
-    val old = spark.read.parquet(s"$path/stats").head
-    val incr = fit(newDocs, idCol, textCol)
-    incr.postings.write.mode("append").parquet(s"$path/postings")
-    incr.docFreq.write.mode("append").parquet(s"$path/docfreq")
-    import spark.implicits._
-    Seq((old.getLong(0) + incr.nDocs, old.getLong(1) + incr.totalDl))
-      .toDF("n_docs", "total_dl")
-      .write.mode("overwrite").parquet(s"$path/stats")
-  }
-
-  /** Fold a segmented layout back into single compacted segments:
-    * docFreq deltas pre-aggregate into one file set (reopen then
-    * aggregates a no-op) and postings small files coalesce. Answers
-    * are unchanged. Writes to sibling temp dirs and swaps via rename —
-    * an in-place overwrite would read and clobber the same files.
-    * Swap order is crash-safe: the live dir is renamed ASIDE (not
-    * deleted) before the compacted dir takes its name, so at every
-    * instant one complete copy exists on disk — a crash mid-swap
-    * leaves either the live layout or a recoverable `_old`. */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val idx = load(spark, path)
-    idx.postings.write.mode("overwrite").parquet(s"$path/postings_tmp")
-    idx.docFreq.write.mode("overwrite").parquet(s"$path/docfreq_tmp")
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (name <- Seq("postings", "docfreq")) {
-      val live = new Path(s"$path/$name")
-      val old = new Path(s"$path/${name}_old")
-      fs.delete(old, true)
-      require(fs.rename(live, old), s"rename of $name aside failed")
-      require(fs.rename(new Path(s"$path/${name}_tmp"), live),
-        s"rename of $name failed")
-      fs.delete(old, true)
-    }
+    Bm25Index(spark.read.parquet(s"$path/postings"),
+      spark.read.parquet(s"$path/docfreq"), s.getLong(0), s.getLong(1))
   }
 
   /** Batch top-k search for a QUERY TABLE (queryIdCol, termsCol:

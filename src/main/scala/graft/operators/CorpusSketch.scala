@@ -4,114 +4,28 @@ import graft.functions.TextFunctions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** CORPUS-LEVEL set sketches: which sources/domains/shards overlap,
+/** CORPUS-LEVEL set overlap: which sources/domains/shards overlap,
   * and by how much — the "is Common Crawl dump N mostly a refetch of
   * dump N-1" / "does this vendor corpus duplicate what we already
   * have" read that runs BEFORE any pairwise document dedup is paid
   * for. Document-level near-dup (X2-X5) answers "which pairs of docs
-  * collide"; this answers "which pairs of CORPORA collide", at the
-  * cost of one narrow aggregation instead of a candidate join.
+  * collide"; this answers "which pairs of CORPORA collide".
   *
   * Beyond-reference pipeline operator (builder brief): the reference
-  * has no corpus-similarity surface at all; the design follows
-  * Broder's original resemblance estimation (Broder 1997, "On the
-  * resemblance and containment of documents") lifted from documents
-  * to document SETS, exploiting that a MinHash signature of a set
-  * union is the elementwise min of the signatures — i.e. the sketch
-  * is a MERGEABLE aggregate, so it distributes as a map-side partial
-  * min and the per-key state is `numHashes` ints regardless of corpus
-  * size.
+  * has no corpus-similarity surface at all. The estimated form (a
+  * per-source MinHash sketch, mergeable because the sketch of a union
+  * is the elementwise min of the sketches — Broder 1997) is the
+  * `source_sketch_jaccard` registry line.
   *
-  * Scale shape: per-doc signatures are one codegen'd kernel map (no
-  * shuffle); the sketch aggregate shuffles ≤ keys×numHashes slim rows
-  * after map-side combine (Θ(bytes read) map work, Θ(keys) reduce
-  * work); the pair stage touches only sketches — #keys × numHashes
-  * ints — so even a complete K×K matrix is registry-sized compute.
-  * Nothing here ever joins on a shingle.
-  *
-  * [[exactOverlapPairs]] is the exact companion (raw shingle set
+  * [[exactOverlapPairs]] is the exact form (raw shingle set
   * intersection): one shuffle on the shingle key, cost
   * Θ(distinct shingles × pairs-per-shingle). Exactness means no
   * hot-shingle pruning is possible — a shingle shared by all K keys
   * contributes K²/2 join rows — so it is priced for group-level keys
   * (sources, domains, snapshots; K in the hundreds), NOT per-doc
-  * keys. At 100 TB the sketch form is the default; exact is the
-  * audit/calibration tool, same contract as exact Jaccard vs banded
-  * MinHash (Dedup.scala:21).
+  * keys.
   */
 object CorpusSketch {
-
-  /** Per-key mergeable MinHash sketch over the UNION of all word
-    * `shingleWidth`-shingles of the key's documents (set semantics —
-    * repeated shingles collapse by the min). Returns
-    * (keyCol, sketch: array&lt;int&gt; of length `numHashes`).
-    *
-    * Sketch(A ∪ B) = elementwise-min(Sketch(A), Sketch(B)) — proved
-    * by the spec — so sketches computed per shard/day/snapshot can be
-    * stored and merged later without touching text again (the
-    * incremental-corpus-update path). Documents whose text yields no
-    * shingles (null/short) contribute nothing, like an empty set. */
-  def minhashSketchByKey(df: DataFrame, keyCol: String, textCol: String,
-      shingleWidth: Int = 3, numHashes: Int = 64): DataFrame = {
-    require(numHashes >= 1, "numHashes must be >= 1")
-    val reserved = Seq("__sig", "__pos", "__mh")
-    require(!reserved.contains(keyCol) && !reserved.contains(textCol),
-      s"column names $reserved are reserved")
-    df.select(col(keyCol),
-        Dedup.minhashSignature(shingles(col(textCol), shingleWidth),
-          numHashes).as("__sig"))
-      .where(col("__sig").isNotNull)
-      .select(col(keyCol),
-        posexplode(col("__sig")).as(Seq("__pos", "__mh")))
-      .groupBy(col(keyCol), col("__pos"))
-      .agg(min("__mh").as("__mh"))
-      .groupBy(keyCol)
-      .agg(expr("transform(array_sort(collect_list(struct(__pos, __mh)))," +
-        " x -> x.__mh)").as("sketch"))
-  }
-
-  /** Pairwise estimated Jaccard between key sketches: the fraction of
-    * matching signature components (Broder's resemblance estimator,
-    * unbiased, stderr ≈ 1/√numHashes). Returns
-    * (keyA, keyB, n_match, est_jaccard) with keyA &lt; keyB.
-    *
-    * `complete = false` (default) meets pairs on matching
-    * (position, value) components — pairs sharing NO component are
-    * omitted (their estimate is 0); shuffle volume is keys×numHashes.
-    * `complete = true` emits every pair including zero-match rows via
-    * a broadcast nested-loop cross of the (tiny, keys-sized) sketch
-    * frame — the full-matrix report form. */
-  def sketchJaccardPairs(sketches: DataFrame, keyCol: String,
-      sketchCol: String = "sketch",
-      complete: Boolean = false): DataFrame = {
-    val numHashes = "size(" + sketchCol + ")"
-    if (complete) {
-      val a = sketches.select(col(keyCol).as("keyA"),
-        col(sketchCol).as("__sa"))
-      val b = sketches.select(col(keyCol).as("keyB"),
-        col(sketchCol).as("__sb"))
-      a.crossJoin(broadcast(b)).where(col("keyA") < col("keyB"))
-        .select(col("keyA"), col("keyB"),
-          expr("aggregate(zip_with(__sa, __sb, (x, y) -> " +
-            "IF(x = y, 1, 0)), 0L, (acc, v) -> acc + v)").as("n_match"),
-          expr("size(__sa)").as("__n"))
-        .select(col("keyA"), col("keyB"), col("n_match"),
-          (col("n_match").cast("double") / col("__n")).as("est_jaccard"))
-    } else {
-      val comps = sketches.select(col(keyCol),
-        posexplode(col(sketchCol)).as(Seq("__pos", "__mh")))
-      comps.select(col(keyCol).as("keyA"), col("__pos"), col("__mh"))
-        .join(comps.select(col(keyCol).as("keyB"), col("__pos"),
-          col("__mh")), Seq("__pos", "__mh"))
-        .where(col("keyA") < col("keyB"))
-        .groupBy("keyA", "keyB")
-        .agg(count(lit(1)).cast("long").as("n_match"))
-        .join(broadcast(sketches.select(col(keyCol).as("keyA"),
-          expr(numHashes).as("__n"))), Seq("keyA"))
-        .select(col("keyA"), col("keyB"), col("n_match"),
-          (col("n_match").cast("double") / col("__n")).as("est_jaccard"))
-    }
-  }
 
   /** EXACT pairwise overlap between per-key shingle SETS: every key
     * pair sharing at least one shingle, with the exact intersection

@@ -55,19 +55,6 @@ object CountMin {
       .groupBy("seed", "bucket").agg(count(lit(1)).as("c"))
   }
 
-  /** Merge sketches built with the SAME (depth, width, hash) — the
-    * count-min monoid: bucket-wise sum. This is what makes the sketch
-    * shard-friendly at 100 TB: fit per partition/day/crawl-slice,
-    * merge the tiny (≤ d·w row) frames, and
-    * `merge(sketch(A), sketch(B)) == sketch(A ∪ B)` EXACTLY (counts
-    * are plain sums — spec-asserted). */
-  def merge(sketches: Seq[DataFrame]): DataFrame = {
-    require(sketches.nonEmpty, "need at least one sketch")
-    sketches.reduce(_ unionByName _)
-      .groupBy("seed", "bucket")
-      .agg(sum("c").cast("long").as("c"))
-  }
-
   /** Collect a [[sketch]] frame into the dense depth×width count
     * table [[estimateCol]] embeds. Bounded by construction: the
     * sketch frame has at most depth·width rows whatever the corpus

@@ -220,7 +220,10 @@ object Dedup {
     * candidates prune on the J-implied length bound before any
     * verification; exact intersection counting runs once per DISTINCT
     * pair. Returns (id_a, id_b, jaccard) with id_a < id_b; jaccard is
-    * one double division of exact longs (cross-engine bit-stable). */
+    * one double division of exact longs (cross-engine bit-stable).
+    * Contract: the inline reference `SharedFramesSpec` checks the
+    * registry's stored-token path ([[jaccardPairsExactFromTokens]])
+    * against; no program caller. */
   def jaccardPairsExact(df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, threshold: Double = 0.5): DataFrame =
     jaccardPairsExactFromTokens(
@@ -306,7 +309,10 @@ object Dedup {
     * order must be a total order defined on every token either side
     * carries, which a one-sided frequency is not. Use when the
     * cross-corpus decision must be auditable with zero missed
-    * duplicates (contamination sweeps of a frozen eval corpus). */
+    * duplicates (contamination sweeps of a frozen eval corpus).
+    * Contract: the inline reference `SharedFramesSpec` checks the
+    * registry's stored-token path ([[jaccardProbeExactFromTokens]])
+    * against; no program caller. */
   def jaccardProbeExact(probe: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, shingleWidth: Int = 3,
       threshold: Double = 0.5): DataFrame = {
@@ -362,19 +368,6 @@ object Dedup {
         (col("__np") + col("__nc") - col("__ninter")) >= threshold)
       .select(col("__idp").as(idCol)).distinct()
   }
-
-  /** The filtered slice with recall-1.0 GUARANTEE: `newDocs` rows
-    * whose exact Jaccard stays below `threshold` against EVERY corpus
-    * document (anti-join on the [[jaccardProbeExact]] flags) — the
-    * exact counterpart of [[dedupAgainstCorpus]]. What survives is
-    * PROVABLY clean; the LSH form can only say "probably". */
-  def dedupAgainstCorpusExact(newDocs: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, shingleWidth: Int = 3,
-      threshold: Double = 0.5): DataFrame =
-    newDocs.join(
-      jaccardProbeExact(newDocs, corpus, idCol, textCol, shingleWidth,
-        threshold),
-      Seq(idCol), "left_anti")
 
   /** Asymmetric near-dup probe — "dedupe the new crawl slice against
     * the existing training corpus" (the batch twin of the streaming
@@ -550,7 +543,8 @@ object Dedup {
   }
 
   /** QUALITY-AWARE near-dup canonicalization: per duplicate cluster
-    * (connected component of `pairs`), keep the row with the HIGHEST
+    * (a component of the `(id, component)` labels
+    * [[connectedComponents]] emits), keep the row with the HIGHEST
     * `scoreCol` (ties → smallest id), drop the rest; rows in no pair
     * pass through untouched. This is the curation-pipeline refinement
     * of [[dedupByPairs]]'s id-based policies: when a crawl carries
@@ -565,18 +559,6 @@ object Dedup {
     * over (−score, id) — no window, same shape as the first-wins
     * aggregate; components come from the large-star/small-star
     * operator, so the whole path is keyed joins + aggregates. */
-  def keepBestByComponent(df: DataFrame, idCol: String, scoreCol: String,
-      pairs: DataFrame, aCol: String = "idA",
-      bCol: String = "idB"): DataFrame =
-    keepBestByComponentFrom(df, idCol, scoreCol,
-      connectedComponents(pairs, aCol, bCol))
-
-  /** [[keepBestByComponent]] over PRECOMPUTED component labels
-    * (`(id, component)` — [[connectedComponents]]' shape). The stored-
-    * artifact entry point: a pipeline materializes the component table
-    * once and every policy pass (keep-best, split-by-component,
-    * cluster reports) reads it instead of re-running the iterative
-    * contraction. */
   def keepBestByComponentFrom(df: DataFrame, idCol: String,
       scoreCol: String, components: DataFrame): DataFrame = {
     val comps = components
@@ -1125,31 +1107,6 @@ object Dedup {
         col("edit_dist").cast("long").as("edit_dist"))
   }
 
-  /** MinHash-banded candidates verified by thresholded edit distance
-    * — [[nearDupPairsMinHash]]'s banding stage with
-    * [[verifyPairsEditDistance]] as the verifier. Same shuffle budget
-    * as the Jaccard form: bands carry (id, band, bucket) only, texts
-    * cross a shuffle exactly twice (the payload re-joins). */
-  def nearDupPairsEditDistance(df: DataFrame, idCol: String,
-      textCol: String, maxDist: Int, shingleWidth: Int = 3,
-      numHashes: Int = 64, bands: Int = 16, prefixLen: Int = 0,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    require(bands * rowsPerBand == numHashes,
-      s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val sh = shingles(col(textCol), shingleWidth)
-    val base = df.select(col(idCol), sh.as("__sh"), col(textCol))
-      .filter(size(col("__sh")) > 0)
-    val slim = base
-      .withColumn("__sig", minhashSignature(col("__sh"), numHashes))
-      .select(col(idCol),
-        posexplode(minhashBands(col("__sig"), bands, rowsPerBand))
-          .as(Seq("__band", "__bh")))
-    val pairs = candidatePairs(slim, idCol, Seq("__band", "__bh"),
-      maxBucketSize)
-    verifyPairsEditDistance(pairs, base.select(col(idCol), col(textCol)),
-      idCol, textCol, maxDist, prefixLen)
-  }
   /** Asymmetric EXACT containment join at recall 1.0 — the
     * subset-duplicate audit Jaccard structurally misses: a short
     * document quoted whole inside a long one has
@@ -1157,7 +1114,9 @@ object Dedup {
     * useful Jaccard threshold. Returns (id_a, id_b, containment) for
     * every pair with C(small, large) >= threshold, oriented id_a =
     * the SMALLER token set (ties by smaller id); containment is one
-    * exact-int division |A∩B|/|A|.
+    * exact-int division |A∩B|/|A|. Input is a PRE-TOKENIZED distinct
+    * (id, token) frame (see [[jaccardPairsExactFromTokens]] for why the
+    * stored token frame is the corpus-scale form).
     *
     * Same SSJoin skeleton as [[jaccardPairsExactFromTokens]] with the
     * containment-specific bounds (Chaudhuri et al. ICDE'06 §4 treats
@@ -1174,18 +1133,6 @@ object Dedup {
     * overlap ≤ 1 + min(na−ra, nb−rb), and a qualifying pair's FIRST
     * common token always survives the (floor-conservative) bound —
     * recall stays 1.0. */
-  def containmentPairsExact(df: DataFrame, idCol: String,
-      textCol: String, shingleWidth: Int = 3,
-      threshold: Double = 0.8): DataFrame =
-    containmentPairsExactFromTokens(
-      df.select(col(idCol),
-        explode(shingles(col(textCol), shingleWidth)).as("__s"))
-        .distinct(),
-      idCol, "__s", threshold)
-
-  /** [[containmentPairsExact]] over a PRE-TOKENIZED distinct
-    * (id, token) frame (see [[jaccardPairsExactFromTokens]] for why
-    * the stored token frame is the corpus-scale form). */
   def containmentPairsExactFromTokens(tokens: DataFrame, idCol: String,
       tokenCol: String, threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,

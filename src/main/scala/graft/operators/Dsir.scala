@@ -121,30 +121,6 @@ object Dsir {
       .select(col(idCol), coalesce(col("logw"), zero).as("logw"))
   }
 
-  /** Collect an llr table (≤ buckets rows) into a driver map — the
-    * offline-fit artifact the STREAMING filter embeds (see
-    * [[graft.streaming.StreamIngest.dsirFilter]]). */
-  def llrMap(llrTable: DataFrame): Map[Int, Double] =
-    llrTable.select(col("bucket"), col("llr").cast("double"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-
-  /** NARROW per-row log-importance-weight expression against an
-    * embedded llr map: a higher-order fold over the row's grams — no
-    * explode, no join, no aggregation, so it is stateless-streaming
-    * safe (micro-batches score row-local) and usable as a plain
-    * scoring column. Accumulates left-to-right in double (array
-    * order), which matches the batch path's decimal sum to ~1e-9 —
-    * fine for thresholding, not for hash-exact gates. */
-  def weightCol(text: Column, llr: Map[Int, Double], buckets: Int,
-      portableHash: Boolean = false): Column = {
-    val llrLit = typedLit(llr)
-    aggregate(
-      transform(grams(text),
-        g => coalesce(element_at(llrLit,
-          bucketOf(g, buckets, portableHash)), lit(0.0))),
-      lit(0.0), (acc, x) => acc + x)
-  }
-
   /** Gumbel top-k: k rows without replacement with probability
     * ∝ exp(logw). Each row draws u ∈ (0,1) from its md5 digest (same
     * row → same draw on any engine or partitioning; the +0.5 offset
@@ -166,18 +142,5 @@ object Dsir {
       .orderBy(col("__dsir_key").desc, col(idCol).asc)
       .limit(k)
       .drop("__dsir_key")
-  }
-
-  /** End-to-end selection: fit both LMs, score `raw`, Gumbel-sample k
-    * docs. Returns (idCol, logw). */
-  def selectTopK(raw: DataFrame, target: DataFrame, idCol: String,
-      textCol: String, k: Int, buckets: Int = 4096,
-      portableHash: Boolean = false, oracleRounding: Boolean = false,
-      gumbel: Boolean = true): DataFrame = {
-    val llr = logRatioTable(target, raw, textCol, buckets, portableHash,
-      oracleRounding)
-    val w = importanceWeights(raw, idCol, textCol, llr, buckets, portableHash)
-    if (gumbel) gumbelTopK(w, idCol, "logw", k, roundKeys = oracleRounding)
-    else w.orderBy(col("logw").desc, col(idCol).asc).limit(k)
   }
 }

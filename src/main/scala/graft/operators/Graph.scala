@@ -21,13 +21,6 @@ import graft.Checkpoints.LineageCutOps
   */
 object Graph {
 
-  /** Undirected degree per node from an edge list (self-loops dropped,
-    * parallel edges collapsed). One distinct + one count aggregate. */
-  def degrees(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    symmetrize(edges, srcCol, dstCol)
-      .groupBy(col("__u").as("node"))
-      .agg(count(lit(1)).as("degree"))
-
   /** Fixed-iteration PageRank over an UNDIRECTED edge list (the
     * TextRank setting — Mihalcea & Tarau 2004: rank tokens in a
     * co-occurrence graph; also hub scoring of near-dup graphs).
@@ -811,7 +804,7 @@ object Graph {
     * synchronous round is the standard distributed variant (one round
     * of Prat-Pérez et al.-style parallel moves): deterministic,
     * engine-replayable, and callers iterate rounds to convergence
-    * ([[louvainMoves]]), accepting that simultaneous moves can
+    * ([[louvain]]), accepting that simultaneous moves can
     * overshoot (label-swap oscillation on symmetric structures —
     * same caveat as synchronous LPA, [[labelPropagation]]).
     *
@@ -841,28 +834,6 @@ object Graph {
       labels: DataFrame, nodeCol: String, labelCol: String): DataFrame =
     moveRound(simpleEdges(edges, srcCol, dstCol), labels, nodeCol,
       labelCol)
-
-  /** Iterated [[louvainMoveRound]] from singleton communities (every
-    * node its own label — the Louvain start state): `rounds` fixed
-    * synchronous move rounds, each reading the previous assignment
-    * (per-round lineage cut, the Pregel shape of [[pageRank]]).
-    * Returns the final (node, label). Fixed rounds for the same
-    * reason as pageRank/LPA — convergence checks are driver
-    * round-trips; local moves plateau in a handful of rounds. */
-  def louvainMoves(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int): DataFrame = {
-    require(rounds >= 1, "at least one round")
-    val sym = symmetrize(edges, srcCol, dstCol).lineageCut()
-    var labels = sym.select(col("__u")).distinct()
-      .select(col("__u").as("node"), col("__u").as("label"))
-    for (_ <- 1 to rounds) {
-      labels = louvainMoveRound(sym, "__u", "__v", labels,
-        "node", "label")
-        .select(col("node"), col("new_label").as("label"))
-        .lineageCut()
-    }
-    labels
-  }
 
   /** [[louvainMoveRound]] over a WEIGHTED canonical edge list with
     * LONG count weights and self-loops — the form [[coarsenByLabels]]

@@ -4,23 +4,19 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
-/** Mergeable fixed-grid quantile sketch — the bounded-memory,
-  * shard-friendly complement to [[Quantiles]]' exact two-pass
-  * cutpoints: an equi-width histogram over known value bounds is a
-  * perfect quantile-sketch monoid (bucket-wise sum, zero merge error),
-  * with rank error bounded by one bucket width. That is the right
-  * trade for pipeline telemetry at 100 TB — fit per partition/day/
-  * shard, merge B-row frames, ask for any quantile later — where an
-  * exact global sort per metric would dwarf the job it monitors.
-  * (Value-adaptive sketches — t-digest/KLL — trade the fixed grid for
-  * relative accuracy but lose engine-exact determinism; the fixed grid
-  * is deterministic to the bit in ANY engine.)
+/** Fixed-grid quantile sketch — the bounded-memory complement to
+  * [[Quantiles]]' exact two-pass cutpoints: an equi-width histogram
+  * over known value bounds, with rank error bounded by one bucket
+  * width. That is the right trade for pipeline telemetry at 100 TB,
+  * where an exact global sort per metric would dwarf the job it
+  * monitors. (Value-adaptive sketches — t-digest/KLL — trade the fixed
+  * grid for relative accuracy but lose engine-exact determinism; the
+  * fixed grid is deterministic to the bit in ANY engine.)
   *
   * Scale shape: the sketch is [[Profile.histogram]]'s partial-agg
-  * bounded shuffle (≤ B rows cross the exchange per map task); merging
-  * is a union + B-key re-agg; quantile evaluation runs a window over
-  * the ≤ B-row sketch frame — bounded by construction, never
-  * data-sized.
+  * bounded shuffle (≤ B rows cross the exchange per map task);
+  * quantile evaluation runs a window over the ≤ B-row sketch frame —
+  * bounded by construction, never data-sized.
   */
 object HistSketch {
 
@@ -31,17 +27,6 @@ object HistSketch {
   def sketch(df: DataFrame, valCol: String, minVal: Double, maxVal: Double,
       buckets: Int): DataFrame =
     Profile.histogram(df, valCol, minVal, maxVal, buckets)
-
-  /** Merge sketches built with the SAME (minVal, maxVal, buckets):
-    * bucket-wise count sum — exact, `merge(sketch(A), sketch(B)) ==
-    * sketch(A ∪ B)` (spec-asserted). */
-  def merge(sketches: Seq[DataFrame]): DataFrame = {
-    require(sketches.nonEmpty, "need at least one sketch")
-    sketches.reduce(_ unionByName _)
-      .groupBy("bucket")
-      .agg(first("lo").as("lo"), first("hi").as("hi"),
-        sum("n").cast("long").as("n"))
-  }
 
   /** Quantile estimates from a sketch: for each p in `probs`, the
     * value at rank ⌈p·N⌉ (type-1 rank, p=0 → rank 1) located by the

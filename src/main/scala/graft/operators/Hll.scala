@@ -94,23 +94,13 @@ object Hll {
     * partition into 32768-bit buckets; each (key, bucket) collapses
     * to ONE 4-KiB bitmap with map-side combine, so the shuffle
     * carries at most one bitmap row per (partition, key, occupied
-    * bucket) — exact like COUNT(DISTINCT), bounded-and-mergeable like
-    * the HLL sketch ([[mergeDistinctBitmaps]] ORs stored per-shard
-    * bitmaps without re-reading values). The right tool when ids are
+    * bucket) — exact like COUNT(DISTINCT), bounded like the HLL
+    * sketch. The right tool when ids are
     * integers with bounded range density (users, docs, events) and
     * the count must be exact (dedup accounting, billing); HLL remains
     * the choice for unbounded string universes. Returns one row per
     * key: (keyCols..., n_distinct). */
   def exactDistinctBitmap(df: DataFrame, keyCols: Seq[String],
-      valueCol: String): DataFrame =
-    bitmapShards(df, keyCols, valueCol)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(expr("bitmap_count(__bm)")).cast("long").as("n_distinct"))
-
-  /** The storable shard form behind [[exactDistinctBitmap]]:
-    * (keyCols..., __bucket, __bm binary) — persist per day/slice and
-    * merge later. */
-  def bitmapShards(df: DataFrame, keyCols: Seq[String],
       valueCol: String): DataFrame =
     df.where(col(valueCol).isNotNull)
       .select(keyCols.map(col) :+
@@ -118,19 +108,8 @@ object Hll {
         expr(s"bitmap_bit_position($valueCol)").as("__pos"): _*)
       .groupBy(keyCols.map(col) :+ col("__bucket"): _*)
       .agg(expr("bitmap_construct_agg(__pos)").as("__bm"))
-
-  /** Merge [[bitmapShards]] frames (same keys) into exact distinct
-    * counts: bitmap_or_agg per (key, bucket), then bit counts —
-    * union semantics, values never touched again. */
-  def mergeDistinctBitmaps(shards: Seq[DataFrame],
-      keyCols: Seq[String]): DataFrame = {
-    require(shards.nonEmpty, "need at least one shard frame")
-    shards.reduce(_ unionByName _)
-      .groupBy(keyCols.map(col) :+ col("__bucket"): _*)
-      .agg(expr("bitmap_or_agg(__bm)").as("__bm"))
       .groupBy(keyCols.map(col): _*)
       .agg(sum(expr("bitmap_count(__bm)")).cast("long").as("n_distinct"))
-  }
 
   /** Merge sketches built with the SAME (m, hash): register-wise MAX.
     * Pass the key columns the sketches were grouped by (empty for
@@ -154,9 +133,9 @@ object Hll {
     * 2^(49-rho) (empty registers rho=0 contribute 2^49), a plain
     * BIGINT (m <= 1024 keeps it under 2^59) — so the only floating op
     * is ONE division of engine-exact inputs, bit-identical across
-    * engines. Returns (keyCols..., zeros, z_scaled, raw_est). The
-    * small-range linear-counting correction lives in [[correct]];
-    * raw_est is the uncorrected HLL estimator. */
+    * engines. Returns (keyCols..., zeros, z_scaled, raw_est); raw_est
+    * is the uncorrected HLL estimator (no small-range linear-counting
+    * correction). */
   def rawEstimateByKey(registers: DataFrame, keyCols: Seq[String],
       m: Int): DataFrame = {
     require(m <= 1024, s"exact-integer Z needs m <= 1024, got $m")
@@ -186,15 +165,6 @@ object Hll {
       .drop("__used", "__zused")
   }
 
-  /** Standard corrections over the raw estimate (driver-side scalar —
-    * sketches are ≤ m rows by construction, never data-sized):
-    * linear counting m·ln(m/V) when raw <= 2.5m and some register is
-    * empty; the 64-bit hash space makes the large-range correction
-    * moot. */
-  def correct(rawEst: Double, zeros: Long, m: Int): Double =
-    if (rawEst <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros)
-    else rawEst
-
   /** Sketch set algebra: distinct-count estimates for two value sets,
     * their union (register-wise MAX — the HLL union is EXACT over
     * sketches), the inclusion–exclusion intersection estimate
@@ -204,8 +174,7 @@ object Hll {
     * overlap questions ("how much vocabulary do these two crawls
     * share?") run over ≤ 3m register rows. Raw (uncorrected)
     * estimates, so every emitted double is a fixed chain of
-    * engine-exact divisions/adds (the ln-based correction is
-    * [[correct]], driver-side). Intersection via inclusion–exclusion
+    * engine-exact divisions/adds. Intersection via inclusion–exclusion
     * can go negative for near-disjoint sets — that is the estimator,
     * not a bug (documented). m ≤ 1024 (the exact-integer Z
     * constraint of [[rawEstimateByKey]], both hash modes — xx-mode
@@ -223,19 +192,5 @@ object Hll {
       .withColumn("est_inter",
         col("est_a") + col("est_b") - col("est_union"))
       .withColumn("jaccard_est", col("est_inter") / col("est_union"))
-  }
-
-  /** Convenience: corrected distinct-count estimate of one column,
-    * computed from a portable or xxhash sketch. The collect is
-    * m-bounded. */
-  def estimateDistinct(df: DataFrame, valueCol: String, m: Int,
-      portableHash: Boolean = false): Double = {
-    val sk = sketch(df, valueCol, m, portableHash)
-    val rows = sk.select(col("rho").cast("int")).collect().map(_.getInt(0))
-    val zeros = m - rows.length
-    // double-sum of exact powers of two; estimate-path only (the
-    // oracle gate goes through rawEstimateByKey's exact-integer Z)
-    val z = rows.map(r => math.pow(2.0, -r)).sum + zeros.toDouble
-    correct(alphaM2(m) / z, zeros, m)
   }
 }

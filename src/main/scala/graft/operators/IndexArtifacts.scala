@@ -47,9 +47,4 @@ private[operators] object IndexArtifacts {
         r.getSeq[Float](r.fieldIndex("values")).toArray))
       .groupBy(_._1).toArray.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3))
-
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 }

@@ -88,30 +88,11 @@ final class IvfIndex(
     assigned.write.mode("overwrite")
       .partitionBy(IvfIndex.ClusterCol).parquet(path)
 
-  /** Incrementally extend the index: new rows get cells from the
-    * EXISTING centroids (the same narrow codegen'd kernel — no refit,
-    * no shuffle, no touch of prior rows). This is the streaming-ingest
-    * contract: assignment quality degrades only as far as the data
-    * drifts from the trained centroids; call [[refreshCentroids]]
-    * periodically to re-center. */
-  def append(newRows: DataFrame): IvfIndex =
-    new IvfIndex(centroids,
-      assigned.unionByName(IvfIndex.assignCells(newRows, vecCol, centroids)),
-      vecCol, idCol)
-
-  /** Append-only write of NEW rows into an existing partitioned layout
-    * (see [[writePartitioned]]): only the incoming batch's cell
-    * directories gain files; the rest of the lake is untouched. */
-  def appendPartitioned(path: String, newRows: DataFrame): Unit =
-    IvfIndex.assignCells(newRows, vecCol, centroids)
-      .write.mode("append").partitionBy(IvfIndex.ClusterCol).parquet(path)
-
   /** Per-cell health: row count plus quantization error (squared-L2 of
     * each row's residual against its OWN centroid — for rows assigned
     * by [[IvfIndex.assignCells]] this is also the nearest-centroid
-    * distance, so it grows exactly as appended data drifts from the
-    * trained centroids). One partial-aggregated `groupBy` job whose
-    * output is nClusters rows; cells currently empty are absent.
+    * distance). One partial-aggregated `groupBy` job whose output is
+    * nClusters rows; cells currently empty are absent.
     * Returns (cluster, n, mean_sq_err, max_sq_err). */
   def cellStats: DataFrame = {
     import graft.functions.VectorFunctions.{cell_residual, vec_dot}
@@ -123,75 +104,10 @@ final class IvfIndex(
       .agg(count(lit(1)).as("n"), avg("__qe").as("mean_sq_err"),
         max("__qe").as("max_sq_err"))
   }
-
-  /** Driver-side roll-up of [[cellStats]] (nClusters rows — tiny). */
-  def health(): IvfIndex.Health = {
-    val rows = cellStats.collect()
-    val counts = rows.map(_.getLong(1))
-    val total = counts.sum
-    val meanErr =
-      if (total == 0) 0.0
-      else rows.map(r => r.getDouble(2) * r.getLong(1)).sum / total
-    IvfIndex.Health(
-      nCells = nClusters,
-      nonEmptyCells = rows.length,
-      total = total,
-      maxCell = if (counts.isEmpty) 0L else counts.max,
-      imbalance =
-        if (total == 0) 0.0 else counts.max.toDouble / (total.toDouble / nClusters),
-      meanQuantErr = meanErr,
-      maxQuantErr = if (rows.isEmpty) 0.0 else rows.map(_.getDouble(3)).max)
-  }
-
-  /** Published refresh policy — when does [[refreshCentroids]] pay for
-    * itself? (a) `imbalance` (hottest cell vs the uniform share)
-    * beyond `maxImbalance`: probes hitting the hot cell scan that many
-    * times the uniform cost, so query latency is skew-bound; (b) mean
-    * quantization error grown past `errGrowth` × the baseline captured
-    * at build/last-refresh time: appended data has drifted off the
-    * trained centroids and recall at fixed nprobe decays. A refresh is
-    * one Lloyd step, which never increases total quantization error
-    * (reassign-then-recenter each monotonically reduce SSE), so when
-    * this fires the refresh is guaranteed progress, not churn. */
-  def needsRefresh(baseline: IvfIndex.Health,
-      maxImbalance: Double = 4.0, errGrowth: Double = 1.5): Boolean = {
-    val h = health()
-    h.imbalance > maxImbalance ||
-      (baseline.meanQuantErr > 0 &&
-        h.meanQuantErr > errGrowth * baseline.meanQuantErr)
-  }
-
-  /** One Lloyd's step over the CURRENT index: recompute each cell's
-    * mean (one vec_sum job — nClusters × dim doubles cross the
-    * shuffle) and reassign all rows to the refreshed centroids (one
-    * narrow map). Run this as the periodic offline re-center after
-    * sustained appends; empty cells keep their previous centroid. */
-  def refreshCentroids(): IvfIndex = {
-    import graft.functions.VectorFunctions.vec_sum
-    val stats = assigned.groupBy(IvfIndex.ClusterCol)
-      .agg(vec_sum(col(vecCol)).as("s"), count(lit(1)).as("n"))
-      .collect()
-    val next = centroids.map(_.clone())
-    stats.foreach { r =>
-      val s = r.getSeq[Double](1)
-      val n = r.getLong(2).toDouble
-      next(r.getInt(0)) = s.map(x => (x / n).toFloat).toArray
-    }
-    new IvfIndex(next,
-      IvfIndex.assignCells(assigned.drop(IvfIndex.ClusterCol), vecCol, next),
-      vecCol, idCol)
-  }
 }
 
 object IvfIndex {
   val ClusterCol = "cluster"
-
-  /** Index health summary (see [[IvfIndex.health]]): `imbalance` is
-    * the hottest cell's share relative to a perfectly uniform spread
-    * (1.0 = uniform; k = one cell holds k× its fair share). */
-  final case class Health(
-      nCells: Int, nonEmptyCells: Int, total: Long, maxCell: Long,
-      imbalance: Double, meanQuantErr: Double, maxQuantErr: Double)
 
   /** The `nprobe` cells nearest to `q`, closest first: squared-L2 to
     * each centroid driver-side (the centroid table is tiny by
@@ -274,12 +190,6 @@ object IvfIndex {
       (books, _, p) => VectorOps.nearestCentroid(p, true, books(0))
     }(0)
 
-  /** Reload a partitioned index written by [[IvfIndex.writePartitioned]]. */
-  def load(spark: SparkSession, path: String,
-      centroids: Array[Array[Float]], vecCol: String,
-      idCol: String): IvfIndex =
-    new IvfIndex(centroids, spark.read.parquet(path), vecCol, idCol)
-
   /** Persist the whole index under one root: the cell-partitioned
     * rows (`<path>/table`) plus the centroid matrix (`<path>/cells`) —
     * self-describing, so a search job reopens it from the path alone
@@ -297,8 +207,8 @@ object IvfIndex {
       spark.read.parquet(s"$path/table"), vecCol, idCol)
 
   /** One Lloyd's recenter step as a cross-engine-auditable frame —
-    * the oracle twin of [[refreshCentroids]]'s step and of the
-    * in-process round [[IvfIndex.build]] runs ([[lloydRounds]],
+    * the oracle twin of the in-process round [[IvfIndex.build]] runs
+    * ([[lloydRounds]],
     * spec-pinned to this frame). Runs the REAL code path (the codegen'd
     * [[graft.functions.NearestCentroid]] argmin assignment, then the
     * `vec_sum` partial-aggregate recenter), but emits scalar rows

@@ -25,11 +25,9 @@ final class IvfPqIndex(
     val codebooks: Array[Array[Array[Float]]],
     val table: DataFrame,
     val corpus: DataFrame,
-    vecCol: String, idCol: String,
-    val rotation: Option[Array[Array[Float]]] = None)
+    vecCol: String, idCol: String)
     extends Serializable {
 
-  def nCells: Int = cells.length
   def codesPerBook: Int = codebooks(0).length
 
   /** Approximate top-k under the [[Rerank]] contract: per probed cell,
@@ -38,10 +36,7 @@ final class IvfPqIndex(
       refineFactor: Int = 4): DataFrame = {
     Rerank.topK(table, PqIndex.CodeCol, "distance", k, refineFactor, corpus,
         vecCol, idCol, q) { codes =>
-      IvfIndex.residualBranches(codes, cells, q, nprobe, idCol) { raw =>
-        // OPQ variant: codes live in the rotated residual space, so the
-        // query residual rotates driver-side before the ADC table
-        val residQ = rotation.fold(raw)(PqIndex.matVecFloats(_, raw))
+      IvfIndex.residualBranches(codes, cells, q, nprobe, idCol) { residQ =>
         pq_adc(col(PqIndex.CodeCol), PqIndex.adcTable(codebooks, residQ),
           codesPerBook)
       }
@@ -86,32 +81,6 @@ object IvfPqIndex {
     new IvfPqIndex(cells, books, table, df, vecCol, idCol)
   }
 
-  /** IVF-OPQ: the faiss `OPQMatrix`-inside-IVF composition — residuals
-    * pass through the OPQ-trained rotation before PQ encoding, so the
-    * codebook budget adapts to the residual distribution's anisotropy
-    * (rotating RESIDUALS is what faiss does; rotating raw vectors
-    * would change cell geometry). Distances are rotation-invariant:
-    * the ADC estimates rank the same true neighbors, and the exact
-    * re-rank still runs in the ORIGINAL space against the corpus.
-    * Same training shape as [[build]], with the OPQ alternation in
-    * place of the plain PQ fit. */
-  def buildOpq(df: DataFrame, vecCol: String, idCol: String,
-      nClusters: Int = 16, m: Int = 8, codesPerBook: Int = 256,
-      seed: Long = 42L, sampleFraction: Double = 1.0, maxIter: Int = 8,
-      opqIters: Int = 3): IvfPqIndex = {
-    val (cells, resid) = fitCells(df, vecCol, idCol, nClusters,
-      codesPerBook, seed, sampleFraction, maxIter)
-    val (rotation, books) = PqIndex.fitOpq(resid, m, codesPerBook, seed,
-      maxIter, opqIters, rotationSeed = 7L)
-    val table = residualFrame(df, vecCol, idCol, cells)
-      .withColumn("__rresid", mat_vec(col("__resid"), rotation))
-      .select(col(idCol), col(IvfIndex.ClusterCol),
-        pq_encode(col("__rresid"), books).as(PqIndex.CodeCol))
-      .cache()
-    new IvfPqIndex(cells, books, table, df, vecCol, idCol,
-      rotation = Some(rotation))
-  }
-
   /** The coarse centroids and the residuals of the same collected
     * training sample against them. */
   private def fitCells(df: DataFrame, vecCol: String, idCol: String,
@@ -130,18 +99,9 @@ object IvfPqIndex {
       .withColumn("__resid",
         cell_residual(col(IvfIndex.ClusterCol), col(vecCol), cells))
 
-  /** Reload a partitioned codes table written by
-    * [[IvfPqIndex.writeTable]]. */
-  def load(spark: SparkSession, path: String,
-      cells: Array[Array[Float]], codebooks: Array[Array[Array[Float]]],
-      corpus: DataFrame, vecCol: String, idCol: String): IvfPqIndex =
-    new IvfPqIndex(cells, codebooks, spark.read.parquet(path), corpus,
-      vecCol, idCol)
-
   /** Persist the whole index under one root: the cell-partitioned
     * codes table (`<path>/table`), coarse centroids (`<path>/cells`),
-    * codebooks (`<path>/books`), and — for the OPQ variant — the
-    * residual rotation (`<path>/rotation`). A search job reopens
+    * and codebooks (`<path>/books`). A search job reopens
     * everything from the path via [[loadSaved]]: the honest
     * fit-offline / search-online split at 100 TB, where Lloyd's runs
     * in a scheduled build job and queries only read nprobe partition
@@ -151,23 +111,13 @@ object IvfPqIndex {
     idx.writeTable(s"$path/table")
     IndexArtifacts.writeMatrix(spark, idx.cells, s"$path/cells")
     IndexArtifacts.writeBooks(spark, idx.codebooks, s"$path/books")
-    idx.rotation.foreach(
-      IndexArtifacts.writeMatrix(spark, _, s"$path/rotation"))
   }
 
-  /** Reopen a [[save]]d index against its corpus (exact re-rank side).
-    * The rotation directory's presence decides plain-vs-OPQ — the
-    * artifact is self-describing. */
+  /** Reopen a [[save]]d index against its corpus (exact re-rank side). */
   def loadSaved(spark: SparkSession, path: String, corpus: DataFrame,
-      vecCol: String, idCol: String): IvfPqIndex = {
-    val rotation =
-      if (IndexArtifacts.exists(spark, s"$path/rotation"))
-        Some(IndexArtifacts.readMatrix(spark, s"$path/rotation"))
-      else None
+      vecCol: String, idCol: String): IvfPqIndex =
     new IvfPqIndex(
       IndexArtifacts.readMatrix(spark, s"$path/cells"),
       IndexArtifacts.readBooks(spark, s"$path/books"),
-      spark.read.parquet(s"$path/table"), corpus, vecCol, idCol,
-      rotation)
-  }
+      spark.read.parquet(s"$path/table"), corpus, vecCol, idCol)
 }

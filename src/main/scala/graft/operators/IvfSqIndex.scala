@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** IVF-SQ — coarse cells prune the ROWS scanned ([[IvfIndex]] partition
   * pruning), scalar quantization shrinks the BYTES per scanned row 4×
@@ -26,7 +26,6 @@ final class IvfSqIndex(
     val corpus: DataFrame,
     vecCol: String, idCol: String) extends Serializable {
 
-  def nCells: Int = cells.length
   def dim: Int = lo.length
 
   /** Approximate top-k under the [[Rerank]] contract: per probed cell,
@@ -38,12 +37,6 @@ final class IvfSqIndex(
       IvfIndex.residualBranches(codes, cells, q, nprobe, idCol)(residQ =>
         sq_adc(col(SqIndex.CodeCol), residQ, lo, step))
     }
-
-  /** Persist the codes table partitioned by cell: probed queries read
-    * nprobe directories of dim-byte codes — the 100 TB layout. */
-  def writeTable(path: String): Unit =
-    table.write.mode("overwrite")
-      .partitionBy(IvfIndex.ClusterCol).parquet(path)
 }
 
 object IvfSqIndex {
@@ -73,11 +66,4 @@ object IvfSqIndex {
     new IvfSqIndex(ivf.centroids, sq.lo, sq.step, table, df, vecCol,
       idCol)
   }
-
-  /** Reload a partitioned codes table written by [[writeTable]]. */
-  def load(spark: SparkSession, path: String, cells: Array[Array[Float]],
-      lo: Array[Float], step: Array[Float], corpus: DataFrame,
-      vecCol: String, idCol: String): IvfSqIndex =
-    new IvfSqIndex(cells, lo, step, spark.read.parquet(path), corpus,
-      vecCol, idCol)
 }

@@ -79,7 +79,10 @@ object KnnGraph {
     * directed ranks are ≤ k. Returns (idA, idB, score), idA < idB —
     * the hubness-robust edge set for graph dedup / re-ranking.
     * The mutual meet is an inner self-join of the ≤ n·k directed
-    * edge frame on swapped endpoints; keeping idA < idB halves it. */
+    * edge frame on swapped endpoints; keeping idA < idB halves it.
+    * Contract: the composed reference `KnnGraphSpec` checks the
+    * registry's stored-edge path ([[mutualFromEdges]]) against; no
+    * program caller. */
   def mutualKnnWithCentroids(df: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Float]], k: Int,
       metric: Metric = Metric.Cosine,

@@ -9,101 +9,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Parquet-lake file maintenance. Streaming ingest, per-trigger
-  * appends, and fine-grained partitioning all accrete SMALL FILES, and
-  * at 100 TB the file count — not the byte count — becomes the
-  * scheduler/namenode bottleneck: a million 1 MB files cost a million
-  * task launches and a million metadata entries for one node's worth
-  * of data. These helpers measure the problem and rewrite a directory
-  * to target-sized files. (The bucketed [[graft.store.VectorStore]]
-  * has its own bucket-preserving variant, `compactBuckets` — this is
-  * the generic layout-free form.)
+/** Parquet-lake table operations: the z-order layout, snapshot diff
+  * and MERGE, versioned generations with as-of reads (the commit that
+  * path-mode [[graft.store.VectorStore]] shares), schema-evolution
+  * reads, incremental rollup maintenance, data-contract validation
+  * and the compaction planner.
   */
 object Lake {
-
-  /** One row per data file under `path`, recursively: (file, bytes).
-    * The LISTING is driver-side — file counts are driver-sized even
-    * when the data is not (it is the rows that scale, not the files;
-    * if the listing itself is too big, that IS the finding). Hidden
-    * and metadata files (`_SUCCESS`, checksums) are excluded. */
-  def fileStats(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(new Path(path), true)
-    val buf = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith("."))
-        buf += ((f.getPath.toString, f.getLen))
-    }
-    import spark.implicits._
-    buf.toSeq.toDF("file", "bytes")
-  }
-
-  /** Small-file health summary of a directory:
-    * (n_files, total_bytes, avg_bytes, n_small) where `n_small` counts
-    * files under `smallBytes`. */
-  final case class LakeHealth(nFiles: Long, totalBytes: Long,
-      avgBytes: Double, nSmall: Long)
-
-  def health(spark: SparkSession, path: String,
-      smallBytes: Long = 32L << 20): LakeHealth = {
-    // aggregate on the stats frame, don't collect it: a 100 TB lake
-    // with millions of small files (the exact pathology health
-    // diagnoses) must not round-trip its whole inventory to compute
-    // three scalars
-    val agg = fileStats(spark, path).agg(
-      count(lit(1)).as("n"),
-      coalesce(sum("bytes"), lit(0L)).as("total"),
-      coalesce(sum(when(col("bytes") < smallBytes, 1L).otherwise(0L)),
-        lit(0L)).as("n_small")).head
-    val n = agg.getLong(0)
-    val total = agg.getLong(1)
-    LakeHealth(n, total, if (n == 0L) 0.0 else total.toDouble / n,
-      agg.getLong(2))
-  }
-
-  /** Write a `_graft_manifest.json` beside a parquet dataset — the
-    * handoff contract between pipeline stages (and the cheap
-    * did-anything-change probe for downstream consumers): exact row
-    * count, schema DDL, and the file inventory with sizes. One count
-    * job + the driver-side listing; rewriting is atomic per the
-    * filesystem's single-file rename semantics. Returns the manifest
-    * path. */
-  def writeManifest(spark: SparkSession, path: String): String = {
-    val stats = fileStats(spark, path)
-    // scalars via aggregation; the file list STREAMS through
-    // toLocalIterator (one partition in driver memory at a time) —
-    // the manifest keeps its full inventory without the driver ever
-    // holding it whole
-    val agg = stats.agg(count(lit(1)).as("n"),
-      coalesce(sum("bytes"), lit(0L)).as("total")).head
-    val df = spark.read.parquet(path)
-    val nRows = df.count()
-    val out = new Path(path, "_graft_manifest.json")
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(out, true)
-    try {
-      def w(s: String): Unit = os.write(s.getBytes("UTF-8"))
-      w("{\n")
-      w(s"""  "n_rows": $nRows,\n""")
-      w(s"""  "n_files": ${agg.getLong(0)},\n""")
-      w(s"""  "total_bytes": ${agg.getLong(1)},\n""")
-      w(s"""  "schema": ${ujsonEscape(df.schema.toDDL)},\n""")
-      w("  \"files\": [\n")
-      val it = stats.orderBy("file").toLocalIterator()
-      var first = true
-      while (it.hasNext) {
-        val r = it.next()
-        if (!first) w(",\n")
-        first = false
-        w(s"""    {"file": ${ujsonEscape(r.getString(0))}, "bytes": ${r.getLong(1)}}""")
-      }
-      w("\n  ]\n}\n")
-    } finally os.close()
-    out.toString
-  }
 
   /** Morton (z-order) interleave of `bits`-wide non-negative integer
     * columns: bit i of column c lands at position `i·|cols| + c`. The
@@ -166,65 +78,6 @@ object Lake {
     df.withColumn("__z", zorderKey(qs, bits))
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
-  }
-
-  private def ujsonEscape(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  /** Z-order (Morton-curve) value over `cols` — the multi-column
-    * data-skipping layout (the technique behind Delta/Iceberg
-    * `OPTIMIZE ZORDER BY`): each column maps to a `bitsPerCol`-bit
-    * quantile bucket (boundaries from one sampled `approxQuantile`
-    * pass, so skewed columns still split evenly) and the buckets'
-    * bits interleave into one long. Files written in z order carry
-    * TIGHT min/max ranges on EVERY z column simultaneously, so
-    * parquet row-group / file skipping prunes filters on any of them
-    * — a plain sort gives that for the leading column only.
-    *
-    * The bucket lookup is a codegen'd array fold over the boundary
-    * literals; the interleave is static bit arithmetic — both narrow.
-    * Nulls bucket to 0 (they sort first, as with a plain sort). */
-  def zorderValue(df: DataFrame, cols: Seq[String], bitsPerCol: Int = 8,
-      relativeError: Double = 0.01): Column = {
-    require(cols.nonEmpty, "need at least one z-order column")
-    require(bitsPerCol >= 1 && bitsPerCol * cols.size <= 63,
-      s"bitsPerCol × columns must fit a long, got ${bitsPerCol}×${cols.size}")
-    val buckets = 1 << bitsPerCol
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    val bounds = df.stat.approxQuantile(cols.toArray, probs, relativeError)
-    val bucketCols = cols.zip(bounds).map { case (c, bnds) =>
-      // bucket = #boundaries <= value (0 for null): an array fold over
-      // the boundary literals, evaluated inside codegen
-      aggregate(typedLit(bnds.toSeq), lit(0),
-        (acc, b) => acc + when(col(c).cast("double") >= b, 1).otherwise(0))
-    }
-    val n = cols.size
-    val terms = for {
-      i <- 0 until bitsPerCol
-      (b, c) <- bucketCols.zipWithIndex
-    } yield shiftleft(
-      shiftright(b.cast("long"), i).bitwiseAND(lit(1L)), i * n + c)
-    terms.reduce(_ + _)
-  }
-
-  /** Rewrite `df` into `dest` as `nFiles` z-ordered parquet files:
-    * range-partition on the z value (equal-count file splits), sort
-    * within each file so row groups inherit the tight ranges too. */
-  def writeZordered(df: DataFrame, dest: String, cols: Seq[String],
-      nFiles: Int, bitsPerCol: Int = 8): Unit = {
-    require(nFiles >= 1, "need at least one output file")
-    require(!df.columns.contains("__graft_z"),
-      "reserved column '__graft_z' present — rename it")
-    df.withColumn("__graft_z", zorderValue(df, cols, bitsPerCol))
-      .repartitionByRange(nFiles, col("__graft_z"))
-      .sortWithinPartitions("__graft_z")
-      .drop("__graft_z")
-      .write.mode("overwrite").parquet(dest)
   }
 
   /** Snapshot diff (CDC between two table versions): one full-outer
@@ -622,30 +475,5 @@ object Lake {
       .withColumn("bin",
         expr(s"(running_bytes - coalesce(cast(`$sizeCol` as bigint), 0L)) " +
           s"div ${targetBytes}L"))
-  }
-
-  /** Rewrite the parquet directory at `src` into `dest` with
-    * ~`targetBytesPerFile` files (parquet→parquet, so on-disk sizes
-    * are comparable before/after; the split is by current compressed
-    * bytes, an estimate good to the compression-ratio drift between
-    * layouts). One job: a scan + round-robin repartition to
-    * ceil(total/target) + write — no shuffle keys, so AQE cannot
-    * collapse it back into few oversized tasks. `dest` must differ
-    * from `src`: the caller owns the atomic swap (rename/catalog
-    * pointer flip), because "overwrite the directory I am reading"
-    * is not crash-safe on any object store. */
-  def compactTo(spark: SparkSession, src: String, dest: String,
-      targetBytesPerFile: Long = 128L << 20): Long = {
-    require(targetBytesPerFile > 0, "target size must be positive")
-    require(new Path(src) != new Path(dest),
-      "compact to a NEW directory, then swap — in-place is not crash-safe")
-    val total = health(spark, src, smallBytes = 0L).totalBytes
-    val nFiles =
-      math.max(1L, (total + targetBytesPerFile - 1) / targetBytesPerFile)
-    require(nFiles <= Int.MaxValue, "file target overflows partitioning")
-    spark.read.parquet(src)
-      .repartition(nFiles.toInt)
-      .write.mode("overwrite").parquet(dest)
-    nFiles
   }
 }

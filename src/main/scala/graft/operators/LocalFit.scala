@@ -66,7 +66,8 @@ private[graft] object LocalFit {
     * most [[ProbeRows]] rows or the cap is that small; otherwise a
     * second top-N job brings the budget-bounded sample. A null vector
     * anywhere in the sample sorts first, so it is always seen. Raises a
-    * named error on an empty sample, null vectors or mixed dims.
+    * named error on an empty frame, on an empty `sampleFraction` sample
+    * of a non-empty frame, on null vectors and on mixed dims.
     *
     * @param budgetBytes package-visible so specs can force the budget
     *                    cut; not a user option */
@@ -85,6 +86,11 @@ private[graft] object LocalFit {
     val cap = math.min(PointsPerCentroid.toLong * centroids,
       Int.MaxValue - 1).toInt
     val first = top(math.min(cap, ProbeRows))
+    // whether the frame itself is empty is asked only once the sample
+    // came back empty, so a successful fit runs no extra job
+    require(first.nonEmpty || sampleFraction >= 1.0 || df.isEmpty,
+      s"cannot train $what: the sampleFraction = $sampleFraction sample " +
+        s"(seed $seed) of a non-empty frame is empty; raise sampleFraction")
     require(first.nonEmpty, s"cannot train $what on an empty frame")
     require(first(0) != null,
       s"cannot train $what: null vectors in column '$vecCol'")

@@ -1,36 +1,30 @@
 package graft.operators
 
-import graft.Schemas
-import graft.functions.BinaryEmbedder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 
 import java.awt.RenderingHints
 import java.awt.image.BufferedImage
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
 
-/** Multimodal column support (S10 + builder brief): image/audio/video
-  * as opaque `binary` columns with typed metadata, embedded by a
-  * pluggable [[BinaryEmbedder]]. The reference's image path is
+/** Multimodal column support (S10): image/audio/video as opaque
+  * `binary` columns with typed metadata. The reference's image path is
   * `PIL.Image.open` per row (`/root/reference/vsu/image/_classes.py:
   * 40,74`); Spark-first that becomes the `binaryFile` source plus
-  * batched executor-side embedding — same shape as the text path, no
-  * shuffle, inference-bound.
+  * per-partition decode — no shuffle.
   *
-  * Image decode/resize are REAL (JDK `javax.imageio` — PNG/JPEG/GIF/
-  * BMP, zero external deps, [[ImageCodec]]), and so is audio decode
-  * (JDK `javax.sound.sampled` — WAV/AIFF/AU PCM, [[AudioCodec]]:
-  * metadata, signal features, energy-envelope embedding). Video: the
-  * JDK has no mp4/h264 codec and none is installable offline, so that
-  * DECODE gap stays documented — but the frame-pipeline is real over
-  * [[VideoCodec]]'s length-prefixed motion-image container (each
-  * frame a real PNG/JPEG): [[Multimodal.withVideoMeta]] parses
-  * headers, [[Multimodal.sampleVideoFrames]] explodes every n-th
-  * frame as decodable image bytes that feed the SAME image operators
-  * (decode/resize/embed). [[Multimodal.sampleFrames]] keeps the
-  * fixed-size byte-slice shape for unknown containers.
+  * Image decode is REAL (JDK `javax.imageio` — PNG/JPEG/GIF/BMP, zero
+  * external deps, [[ImageCodec]]), and so is audio decode (JDK
+  * `javax.sound.sampled` — WAV/AIFF/AU PCM, [[AudioCodec]]: metadata
+  * and signal features). Video: the JDK has no mp4/h264 codec and none
+  * is installable offline, so that DECODE gap stays documented — but
+  * the frame-pipeline is real over [[VideoCodec]]'s length-prefixed
+  * motion-image container (each frame a real PNG/JPEG):
+  * [[Multimodal.withVideoMeta]] parses headers,
+  * [[Multimodal.sampleVideoFrames]] explodes every n-th frame as
+  * decodable image bytes that feed the SAME image operators.
   */
 object Multimodal {
 
@@ -49,48 +43,6 @@ object Multimodal {
     StructField("height", IntegerType),
     StructField("channels", IntegerType),
     StructField("format", StringType)))
-
-  /** Batched executor-side embedding of a binary column — twin of
-    * `Embed.embedColumn` for bytes. */
-  def embedBinaryColumn(df: DataFrame, inCol: String, outCol: String,
-      embedder: BinaryEmbedder, batchSize: Int = 64): DataFrame = {
-    require(batchSize > 0, "batchSize must be positive")
-    val outSchema = df.schema.add(outCol, Schemas.vectorType)
-    val inIdx = df.schema.fieldIndex(inCol)
-    df.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { rows =>
-        val bytes = rows.map(r =>
-          Option(r.get(inIdx)).map(_.asInstanceOf[Array[Byte]])
-            .getOrElse(Array.emptyByteArray))
-        val vecs = embedder.embedBytes(bytes)
-        require(vecs.length == rows.length,
-          s"embedder returned ${vecs.length} vectors for ${rows.length} rows")
-        rows.lazyZip(vecs).map((r, v) => Row.fromSeq(r.toSeq :+ v))
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Real pixel resize: decode, bilinear-resample to width×height,
-    * re-encode as PNG (reference: `image/_classes.py` resizes via PIL
-    * before embedding). Rows whose bytes do not decode as an image get
-    * a null `outCol` — corrupt payloads are data, not errors, at
-    * 100 TB. Per-partition batching, no shuffle. */
-  def resizeImages(df: DataFrame, inCol: String, width: Int, height: Int,
-      outCol: String = "resized", batchSize: Int = 64): DataFrame = {
-    require(width > 0 && height > 0, "positive target dims")
-    val outSchema = df.schema.add(outCol, BinaryType)
-    val inIdx = df.schema.fieldIndex(inCol)
-    df.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { rows =>
-        rows.map { r =>
-          val bytes = Option(r.get(inIdx)).map(_.asInstanceOf[Array[Byte]])
-            .getOrElse(Array.emptyByteArray)
-          val resized = ImageCodec.resizeToPng(bytes, width, height).orNull
-          Row.fromSeq(r.toSeq :+ resized)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
 
   /** 64-bit difference hash (dHash) over REAL pixels — the standard
     * perceptual image fingerprint: one bilinear resample to a 9×8
@@ -168,34 +120,6 @@ object Multimodal {
         expr("bit_count(__ha ^ __hb)").cast("int"))
       .where(col("hamming") <= maxHamming)
       .drop("__ha", "__hb")
-  }
-
-  /** Frame-sampling plumbing for video columns (STUB decode — the JDK
-    * ships no video codec and the container is offline): emits one row
-    * per sampled frame with (frame_idx, frame bytes). The "frames" are
-    * fixed-size byte slices — a real decoder would seek keyframes; the
-    * explode shape, schema, and ordering are real. */
-  def sampleFrames(df: DataFrame, inCol: String, everyNth: Int = 10,
-      frameSize: Int = 4096, outPrefix: String = "frame"): DataFrame = {
-    require(everyNth >= 1 && frameSize >= 1, "positive sampling params")
-    val idxCol = s"${outPrefix}_idx"
-    val bytesCol = s"${outPrefix}_bytes"
-    val outSchema = df.schema
-      .add(idxCol, IntegerType)
-      .add(bytesCol, BinaryType)
-    val inIdx = df.schema.fieldIndex(inCol)
-    df.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = Option(r.get(inIdx)).map(_.asInstanceOf[Array[Byte]])
-          .getOrElse(Array.emptyByteArray)
-        val nFrames = math.max(1, bytes.length / frameSize)
-        (0 until nFrames by everyNth).map { f =>
-          val start = f * frameSize
-          val end = math.min(bytes.length, start + frameSize)
-          Row.fromSeq(r.toSeq :+ f :+ bytes.slice(start, end))
-        }
-      }
-    }(Encoders.row(outSchema))
   }
 
   /** REAL frame sampling over [[VideoCodec]]'s container: parse the
@@ -396,21 +320,6 @@ object ImageCodec {
     else
       try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
       catch { case _: Exception => None }
-
-  /** Decode → bilinear resample to (w, h) → PNG bytes. */
-  def resizeToPng(bytes: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
-    decode(bytes).map { img =>
-      val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-      val g = out.createGraphics()
-      try {
-        g.setRenderingHint(RenderingHints.KEY_INTERPOLATION,
-          RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(img, 0, 0, w, h, null)
-      } finally g.dispose()
-      val bos = new ByteArrayOutputStream()
-      ImageIO.write(out, "png", bos)
-      bos.toByteArray
-    }
 
   /** Mean luminance (0..1) per cell of a gw×gh grid — spatial mean
     * pooling (A2) over real pixels, via one bilinear resample so cost
@@ -637,137 +546,4 @@ object AudioCodec {
     samples.foreach(bb.putShort)
     bb.array()
   }
-}
-
-/** Audio embedder over REAL decoded samples: pool the mono PCM energy
-  * envelope into `dim` windows (RMS per window), centered and
-  * optionally L2-normalized — the offline substitute for an audio
-  * tower, mirroring [[ImageGridEmbedder]]'s real-pixel pooling. Bytes
-  * that do not decode fall back to [[HashBinaryEmbedder]]. */
-final case class AudioEnvelopeEmbedder(dim: Int = 64,
-    normalized: Boolean = true, maxFrames: Int = 1 << 20)
-    extends BinaryEmbedder {
-  require(dim > 0, "dim must be positive")
-  private val fallback = HashBinaryEmbedder(dim, normalized)
-
-  override def embedBytes(batch: Seq[Array[Byte]]): Seq[Array[Float]] =
-    batch.map { bytes =>
-      AudioCodec.pcmSamples(bytes, maxFrames) match {
-        case Some(samples) if samples.length >= dim =>
-          val v = new Array[Float](dim)
-          val win = samples.length / dim
-          var w = 0
-          while (w < dim) {
-            var acc = 0.0
-            var i = w * win
-            val end = i + win
-            while (i < end) { acc += samples(i).toDouble * samples(i); i += 1 }
-            v(w) = math.sqrt(acc / win).toFloat
-            w += 1
-          }
-          var mean = 0.0
-          var i = 0
-          while (i < dim) { mean += v(i); i += 1 }
-          mean /= dim
-          i = 0
-          while (i < dim) { v(i) = (v(i) - mean).toFloat; i += 1 }
-          if (normalized) {
-            var acc = 0.0
-            i = 0
-            while (i < dim) { acc += v(i).toDouble * v(i); i += 1 }
-            if (acc > 1e-12) {
-              val inv = (1.0 / math.sqrt(acc)).toFloat
-              i = 0
-              while (i < dim) { v(i) *= inv; i += 1 }
-            } else v(0) = 1f // silence: deterministic unit vector
-          }
-          v
-        case _ => fallback.embedBytes(Seq(bytes)).head
-      }
-    }
-}
-
-/** Image embedder over REAL decoded pixels: bilinear-pool the image to
-  * a luminance grid of ~dim cells (spatial mean pooling, A2), centered
-  * and optionally L2-normalized — the offline substitute for CLIP /
-  * EfficientNet image towers (M2/M4; reference embeds via torch at
-  * `image/_classes.py:74-79`). Bytes that do not decode as an image
-  * fall back to [[HashBinaryEmbedder]]'s byte hashing so mixed binary
-  * corpora still embed every row deterministically. */
-final case class ImageGridEmbedder(dim: Int = 64,
-    normalized: Boolean = true) extends BinaryEmbedder {
-  require(dim > 0, "dim must be positive")
-  private val gridW = math.max(1, math.sqrt(dim.toDouble).toInt)
-  private val gridH = (dim + gridW - 1) / gridW
-  private val fallback = HashBinaryEmbedder(dim, normalized)
-
-  override def embedBytes(batch: Seq[Array[Byte]]): Seq[Array[Float]] =
-    batch.map { bytes =>
-      ImageCodec.decode(bytes) match {
-        case Some(img) =>
-          val grid = ImageCodec.luminanceGrid(img, gridW, gridH)
-          val v = new Array[Float](dim)
-          // center so constant-color images don't all collapse to the
-          // same direction after normalization
-          var mean = 0.0
-          var i = 0
-          while (i < dim) { mean += grid(i); i += 1 }
-          mean /= dim
-          i = 0
-          while (i < dim) { v(i) = (grid(i) - mean).toFloat; i += 1 }
-          if (normalized) {
-            var acc = 0.0
-            i = 0
-            while (i < dim) { acc += v(i).toDouble * v(i); i += 1 }
-            if (acc > 1e-12) {
-              val inv = (1.0 / math.sqrt(acc)).toFloat
-              i = 0
-              while (i < dim) { v(i) *= inv; i += 1 }
-            } else {
-              // flat image: deterministic unit vector keyed by mean
-              v(math.min(dim - 1, (mean * (dim - 1)).toInt)) = 1f
-            }
-          }
-          v
-        case None => fallback.embedBytes(Seq(bytes)).head
-      }
-    }
-}
-
-/** Deterministic, dependency-free binary embedder: hashing trick over
-  * sliding 8-byte windows (works on ANY binary payload — audio, video,
-  * corrupt images). For decodable images prefer [[ImageGridEmbedder]],
-  * which pools real pixels. Same bytes → same vector on every JVM. */
-final case class HashBinaryEmbedder(dim: Int = 64,
-    normalized: Boolean = true) extends BinaryEmbedder {
-  require(dim > 0, "dim must be positive")
-
-  override def embedBytes(batch: Seq[Array[Byte]]): Seq[Array[Float]] =
-    batch.map { bytes =>
-      val v = new Array[Float](dim)
-      if (bytes.nonEmpty) {
-        var i = 0
-        val step = math.max(1, bytes.length / 4096) // cap work per blob
-        while (i + 8 <= bytes.length) {
-          var h = 1469598103934665603L
-          var j = i
-          while (j < i + 8) { h ^= bytes(j); h *= 1099511628211L; j += 1 }
-          val idx = math.floorMod(h, dim).toInt
-          val sign = if (((h >>> 32) & 1L) == 0L) 1f else -1f
-          v(idx) += sign
-          i += step
-        }
-      }
-      if (normalized) {
-        var acc = 0.0
-        var j = 0
-        while (j < dim) { acc += v(j).toDouble * v(j); j += 1 }
-        if (acc > 0) {
-          val inv = (1.0 / math.sqrt(acc)).toFloat
-          j = 0
-          while (j < dim) { v(j) *= inv; j += 1 }
-        }
-      }
-      v
-    }
 }

@@ -11,10 +11,9 @@ import org.apache.spark.sql.functions._
   *  - '''winsorize''': clamp `valCol` into its per-key [pLo, pHi]
   *    EXACT quantile cutpoints (type-7, via [[Quantiles.exact]] — the
   *    same fixed interpolation expression the oracle reproduces).
-  *  - '''trim''': drop rows outside the cutpoints instead of clamping.
   *
   * Scale shape: the cutpoint frame is |keys|×2 rows — broadcast-small
-  * by construction, so the clamp/filter pass is one broadcast join +
+  * by construction, so the clamp pass is one broadcast join +
   * codegen'd `greatest/least`, no second shuffle of the data. The
   * quantile pass itself is [[Quantiles.exact]]'s one sort-shuffle; at
   * 100 TB swap in `approx_percentile` cutpoints when sketch error is
@@ -45,17 +44,6 @@ object Outliers {
         when(col(valCol).isNull || col("__qlo").isNull, col(valCol))
           .otherwise(greatest(least(col(valCol).cast("double"),
             col("__qhi")), col("__qlo"))))
-      .drop("__qlo", "__qhi")
-  }
-
-  /** Rows whose `valCol` lies INSIDE the per-key exact [pLo, pHi]
-    * quantile range (inclusive). NULL values are dropped — they have
-    * no rank, so "inside" is undefined for them. */
-  def trim(df: DataFrame, keyCols: Seq[String], valCol: String,
-      pLo: Double = 0.01, pHi: Double = 0.99): DataFrame = {
-    val cuts = cutpoints(df, keyCols, valCol, pLo, pHi)
-    df.join(broadcast(cuts), keyCols, "left")
-      .where(col(valCol).cast("double").between(col("__qlo"), col("__qhi")))
       .drop("__qlo", "__qhi")
   }
 
@@ -91,12 +79,4 @@ object Outliers {
             (col(valCol).cast("double") - col("__med")) / col("__mad")))
       .drop("__med", "__mad")
   }
-
-  /** Rows whose robust z-score exceeds `threshold` in magnitude
-    * (3.5 is the Iglewicz–Hoaglin recommendation). Degenerate-MAD and
-    * NULL rows are never flagged. */
-  def madOutliers(df: DataFrame, keyCols: Seq[String], valCol: String,
-      threshold: Double = 3.5): DataFrame =
-    madScore(df, keyCols, valCol)
-      .where(abs(col("mad_z")) > threshold)
 }

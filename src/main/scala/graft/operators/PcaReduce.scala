@@ -38,6 +38,9 @@ object PcaReduce {
       totalVariance: Double) {
     def k: Int = components.length
     def dim: Int = mean.length
+    /** Retained share of the total variance.
+      * Contract: the figure `PcaReduceSpec` checks the fitted
+      * eigenvalues with; no program caller. */
     def explainedRatio: Double =
       if (totalVariance <= 0) 0.0 else eigenvalues.sum / totalVariance
 

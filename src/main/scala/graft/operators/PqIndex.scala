@@ -211,7 +211,9 @@ object PqIndex {
     * rotate driver-side. Squared-L2 is rotation-invariant, so ranks and
     * re-ranked distances match the unrotated space (up to float32
     * rounding); what changes is how variance lands across subspaces —
-    * on anisotropic data the same m-byte budget quantizes finer. */
+    * on anisotropic data the same m-byte budget quantizes finer.
+    * Contract: the random-rotation baseline that `PqIndexSpec` and
+    * `RerankSpec` check [[trainOpq]] against; no program caller. */
   def trainRotated(df: DataFrame, vecCol: String, idCol: String,
       m: Int = 8, codesPerBook: Int = 256, seed: Long = 42L,
       sampleFraction: Double = 1.0, maxIter: Int = 8,

@@ -37,9 +37,4 @@ object SkewJoin {
       explode(sequence(lit(0), lit(saltFactor - 1))))
     salted.join(replicated, Seq(key, salt), joinType).drop(salt)
   }
-
-  /** Top-N heavy-hitter keys with counts — decide whether salting is
-    * warranted (one narrow scan + partial-aggregated count). */
-  def keySkewProfile(df: DataFrame, key: String, topN: Int = 20): DataFrame =
-    df.groupBy(key).count().orderBy(desc("count"), col(key)).limit(topN)
 }

@@ -309,7 +309,10 @@ object TextAnalysis {
     * 100 TB). With `approx = true` they come from a t-digest
     * `approx_percentile` — one partial-aggregated pass, the 100 TB
     * default; bucket edges then carry sketch error, which CCNet
-    * itself tolerates (its buckets are heuristic thirds). */
+    * itself tolerates (its buckets are heuristic thirds).
+    * Contract: the end-to-end reference `SharedFramesSpec` checks the
+    * registry's shared-frame path ([[perplexityBucketsFromScored]])
+    * against; no program caller. */
   def perplexityBuckets(df: DataFrame, idCol: String, textCol: String,
       approx: Boolean = false): DataFrame =
     perplexityBucketsFromScored(charBigramScore(df, idCol, textCol),

@@ -158,8 +158,7 @@ private[graft] object RegistryDedup {
     // stage the calibration twin replays: prefix-256 screen +
     // THRESHOLDED levenshtein (banded DP — the 100 TB verify kernel;
     // the accept set and distances equal the plain form the oracle
-    // runs). The trained-kernel sibling is
-    // Dedup.nearDupPairsEditDistance (spec-gated).
+    // runs).
     "edit_distance_verify" -> ((s, dir) => {
       // candidates = the shared whole-corpus LSH candidate artifact
       // (identical construction — md5CandAll IS this band self-join)
@@ -440,9 +439,8 @@ private[graft] object RegistryDedup {
         .orderBy("canon_url")
     }),
 
-    // X217 corpus-level MinHash sketch overlap matrix (md5 gate form —
-    // the murmur kernel is CorpusSketch.minhashSketchByKey /
-    // sketchJaccardPairs, spec-gated): per-SOURCE union sketch = 8 md5
+    // X217 corpus-level MinHash sketch overlap matrix (md5 form):
+    // per-SOURCE union sketch = 8 md5
     // min-hashes over the source's distinct shingle set (min over docs
     // = sketch of the union, the mergeability property), then the
     // complete pairwise component-match matrix. est_jaccard =

@@ -25,12 +25,6 @@ object OrcSource {
     schema.fold(r)(s => r.schema(s)).load(path)
   }
 
-  /** Write as ORC with zlib (the ecosystem-default codec). Callers
-    * size output files by partitioning/coalescing upstream — the
-    * writer never repartitions behind the caller's back. */
-  def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("compression", "zlib").orc(path)
-
   /** Hive-style partitioned ORC layout (`col=value/` directories) —
     * the layout that makes downstream partition pruning work. */
   def writePartitioned(df: DataFrame, path: String,

@@ -155,7 +155,8 @@ final class VectorStore(
   private var snapshotBudgetBytes: Long = LocalFit.sampleBudgetBytes
 
   /** Forces the snapshot budget and drops any snapshot; package-visible
-    * so specs can pin either query path (0 = always Spark). */
+    * so specs can pin either query path (0 = always Spark).
+    * Contract: spec hook (`StoreSnapshotSpec`, `VectorStoreSpec`). */
   private[graft] def setSnapshotBudget(bytes: Long): Unit = {
     snapshotBudgetBytes = bytes
     snapSource = null
@@ -265,7 +266,8 @@ final class VectorStore(
   private def maxId: Long =
     validSnapshot.fold(data.agg(max("id")).head.getLong(0))(_.maxId)
 
-  /** Typed view of the store (SURVEY §1.4). */
+  /** Typed view of the store (SURVEY §1.4).
+    * Contract: reference-parity API; no program caller. */
   def typed: org.apache.spark.sql.Dataset[graft.VectorRecord] = {
     implicit val enc: org.apache.spark.sql.Encoder[graft.VectorRecord] =
       org.apache.spark.sql.Encoders.product[graft.VectorRecord]
@@ -472,24 +474,6 @@ final class VectorStore(
   private[graft] def appendAntiJoin(inBatch: DataFrame): DataFrame =
     inBatch.join(data.select("target"), Seq("target"), "left_anti")
 
-  /** Bucketed-mode maintenance: every append adds one file set per
-    * bucket, so a long append stream accumulates small files (the LSM
-    * problem every append-friendly layout has). `compactBuckets`
-    * rewrites the table once — same rows, same bucket spec, one file
-    * set — restoring scan efficiency; run it on the same cadence you
-    * would any table-maintenance job. No-op for non-bucketed stores. */
-  def compactBuckets(): Unit = bucketedTable.foreach { tbl =>
-    if (spark.catalog.tableExists(tbl)) {
-      // repartition to the bucket spec's own hash so each write task
-      // holds exactly one bucket → one file per bucket after rewrite
-      val materialized = data.localCheckpoint(true)
-        .repartition(numBuckets, col("target"))
-      graft.operators.Bucketing.writeBucketed(materialized, tbl, "target",
-        numBuckets)
-      mem = Some(spark.table(tbl))
-    }
-  }
-
   private def persist(df: DataFrame, truncateLineage: Boolean = false): Unit = {
     path match {
       case Some(p) =>
@@ -526,7 +510,8 @@ final class VectorStore(
   }
 
   /** Drop everything (`reset_db`, `VectorSearchBase.py:96-99`): every
-    * generation, committed or torn, goes with the path. */
+    * generation, committed or torn, goes with the path.
+    * Contract: reference-parity API (`reset_db`); no program caller. */
   def reset(): Unit = {
     mem.foreach(_.unpersist())
     mem = None
@@ -552,7 +537,9 @@ final class VectorStore(
   /** Classify every stored row against the label set (`do_zeroshot`).
     * E5 semantics by default: stored vectors normalized on the fly
     * (quirk Q6); pass `softmax = true` for the CLIP probability variant
-    * (`/root/reference/vsu/image/_classes.py:21-36`). */
+    * (`/root/reference/vsu/image/_classes.py:21-36`).
+    * Contract: reference-parity API (`do_zeroshot`); no program
+    * caller. */
   def doZeroshot(softmax: Boolean = false): DataFrame = {
     require(zsLabels.nonEmpty, "call setZeroshotLabels first")
     if (softmax)
@@ -565,7 +552,9 @@ final class VectorStore(
   /** Single-row insert-if-absent (`insert_data` parity,
     * `/root/reference/vsu/base/VectorSearchBase.py:77-94`): a 1-row
     * append — existing `target` wins. Bulk ingest should use
-    * [[setData]]; this is API-parity convenience. */
+    * [[setData]]; this is API-parity convenience.
+    * Contract: reference-parity API (`insert_data`); no program
+    * caller. */
   def insertData(target: String, options: Seq[String] = Nil,
       vector: Option[Array[Float]] = None): Unit = {
     require(options.length <= Schemas.optionCols.length,
@@ -610,6 +599,9 @@ final class VectorStore(
     *                  was built WITH THE SAME arguments (`skip_build`
     *                  parity); first or differently-parameterized calls
     *                  always train
+    *
+    * Contract: reference-parity API (`MLP_Classifier`); no program
+    * caller.
     */
   def mlpClassifier(yLabel: String, hidden: Seq[Int] = Seq(100),
       maxIter: Int = 300, skipBuild: Boolean = false): graft.ml.MlpResult = {
@@ -625,7 +617,9 @@ final class VectorStore(
     * [[graft.ml.MlpBridge.trainMlpRegressor]]): 75/25 split, holdout
     * R², predictions for ALL rows. `maxIter` is the number of
     * gradient-descent iterations. `skipBuild` reuses the cached model
-    * as in [[mlpClassifier]]. */
+    * as in [[mlpClassifier]].
+    * Contract: reference-parity API (`MLP_Regressor`); no program
+    * caller. */
   def mlpRegressor(yLabel: String, maxIter: Int = 300,
       skipBuild: Boolean = false): graft.ml.MlpResult = {
     require(!isEmpty, "store is empty")
@@ -664,7 +658,9 @@ final class VectorStore(
   /** `query_with_info` parity (`VectorSearchBase.py:215-217`): query
     * result with all-null columns dropped (P4 — unused option slots
     * vanish). Decided on the ≤ k rows: read directly from an in-process
-    * result, by a null-count aggregation otherwise. */
+    * result, by a null-count aggregation otherwise.
+    * Contract: reference-parity API (`query_with_info`); no program
+    * caller. */
   def queryWithInfo(q: String, k: Int = 5): DataFrame =
     queryVectorWithInfo(embedder.embedOne(queryPrefix + q), k)
 

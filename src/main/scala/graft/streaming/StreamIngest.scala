@@ -1,223 +1,17 @@
 package graft.streaming
 
-import graft.store.VectorStore
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 
 /** Structured Streaming surface. The reference has NO streaming
-  * (SURVEY §2.9) — this is the beyond-reference extension: append-mode
-  * `set_data` is the natural `foreachBatch` body, so a stream of
-  * records continuously ingests with the same schema coercion,
-  * embed-if-missing, and first-wins dedup semantics as batch.
-  *
-  * Scale: each micro-batch is one bulk append (anti-join against the
-  * current store) — no per-row inserts; dedup cost is proportional to
-  * the batch, not the store, because the anti-join build side is the
-  * incoming batch.
+  * (SURVEY §2.9) — this is the beyond-reference extension, kept to the
+  * operators the program runs: [[nearDupIngest]] and
+  * [[streamingSessions]] (the two `graft.StreamSoak` phases) and
+  * [[streamingCurationFunnel]] (the `streaming_curation_funnel`
+  * registry line).
   */
 object StreamIngest {
-
-  /** Continuously ingest a stream into a store. Each micro-batch runs
-    * the full append path; empty batches are skipped. */
-  def intoStore(stream: DataFrame, store: VectorStore,
-      checkpoint: Option[String] = None,
-      queryName: String = "graft-stream-ingest"): StreamingQuery = {
-    val writer = stream.writeStream
-      .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.setData(batch, append = !store.isEmpty)
-      }
-    checkpoint.foreach(c => writer.option("checkpointLocation", c))
-    writer.start()
-  }
-
-  /** Streaming exact dedup with EXPLICIT state (first-wins across the
-    * whole stream, not just a watermark horizon): per key,
-    * `flatMapGroupsWithState` keeps one boolean "seen" flag and emits
-    * only the first row. This is the custom-state form of the U1/J3
-    * first-wins semantics for unbounded streams — use the built-in
-    * watermarked `dropDuplicates` when a bounded horizon suffices
-    * (bounded state); this operator's state grows with distinct keys
-    * (the LLM-pipeline "dedup the whole crawl" contract).
-    *
-    * Emission order inside a micro-batch is per-group; "first" among
-    * same-key rows in one batch is arbitrary, matching the batch
-    * ingest's tie semantics. */
-  def streamingFirstWins(stream: DataFrame, keyCol: String): DataFrame = {
-    // the group key is the value's toString — value-based for atomic
-    // types, but IDENTITY-based for BinaryType (Array[Byte]), which
-    // would silently turn dedup into a no-op (every row unique);
-    // array/struct/map renderings are similarly unreliable. Fail loudly.
-    import org.apache.spark.sql.types._
-    val keyType = stream.schema(keyCol).dataType
-    val valueBased = keyType match {
-      case StringType | BooleanType | ByteType | ShortType | IntegerType |
-           LongType | FloatType | DoubleType | DateType | TimestampType |
-           TimestampNTZType | _: DecimalType => true
-      case _ => false
-    }
-    require(valueBased,
-      s"streamingFirstWins key '$keyCol' must be an atomic non-binary " +
-        s"type (got $keyType): binary/array/struct/map keys have no " +
-        "value-based string form, so dedup would silently not deduplicate")
-    val enc: Encoder[Row] = Encoders.row(stream.schema)
-    implicit val rowEnc: Encoder[Row] = enc
-    implicit val boolEnc: Encoder[Boolean] = Encoders.scalaBoolean
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    val keyIdx = stream.schema.fieldIndex(keyCol)
-    // prefix-discriminate null from the literal string "null". For
-    // float/double keys, normalize -0.0 to 0.0 before rendering: SQL
-    // grouping (and the batch first-wins ingest) puts -0.0 and 0.0 in
-    // ONE group, but their strings ("-0.0" vs "0.0") differ — without
-    // the normalization streaming dedup would keep both. NaN is safe
-    // as-is: all NaN payloads render "NaN", matching SQL's one-NaN
-    // group.
-    val grouped = stream.groupByKey { r =>
-      if (r.isNullAt(keyIdx)) "n"
-      else "v" + (r.get(keyIdx) match {
-        case d: java.lang.Double if d.doubleValue == 0.0 => "0.0"
-        case f: java.lang.Float if f.floatValue == 0.0f => "0.0"
-        case v => v.toString
-      })
-    }
-    val deduped: Dataset[Row] = grouped.flatMapGroupsWithState[Boolean, Row](
-      OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-      (_: String, rows: Iterator[Row], state: GroupState[Boolean]) =>
-        if (state.exists) Iterator.empty
-        else {
-          state.update(true)
-          rows.take(1)
-        }
-    }
-    deduped.toDF()
-  }
-
-  /** Bounded-state streaming dedup: first-wins per key WITHIN the
-    * watermark horizon, via `dropDuplicatesWithinWatermark` — the
-    * production complement to [[streamingFirstWins]] whose "whole
-    * stream" state grows with distinct keys forever. Here a key's
-    * dedup state is evicted once the event-time watermark passes its
-    * last occurrence + `horizon`, so state is bounded by (keys seen
-    * per horizon), the right contract for "dedup this crawl's
-    * re-fetches" at 100 TB/day: duplicates in real feeds cluster in
-    * time, and a key recurring after the horizon is re-admitted (an
-    * exact-dedup batch pass downstream catches true long-range dups).
-    * `tsCol` must be a timestamp column. */
-  def dedupWithinHorizon(stream: DataFrame, keyCol: String, tsCol: String,
-      horizon: String): DataFrame =
-    stream.withWatermark(tsCol, horizon)
-      .dropDuplicatesWithinWatermark(keyCol)
-
-  /** Streaming DAU: EXACT distinct users per event-time day over an
-    * unbounded stream — watermark-bounded (user, day) dedup
-    * (`dropDuplicatesWithinWatermark`, so state holds one row per
-    * active user-day inside the horizon, not forever) followed by a
-    * windowed count. Equals the batch per-day distinct count whenever
-    * a user-day's events all arrive within `horizon` of each other —
-    * the bounded-horizon contract every streaming dedup here carries
-    * (a user-day recurring past the horizon re-counts; batch
-    * reconciliation downstream owns long-range exactness). Returns
-    * (day, dau) with `day` the window start. */
-  def streamingDau(stream: DataFrame, userCol: String, tsCol: String,
-      horizon: String = "1 day"): DataFrame =
-    stream
-      .where(col(userCol).isNotNull && col(tsCol).isNotNull)
-      .withWatermark(tsCol, horizon)
-      // the window struct inherits the event-time marker; the raw ts
-      // must NOT ride along (two event-time columns is an error)
-      .select(col(userCol), window(col(tsCol), "1 day").as("__day"))
-      .dropDuplicatesWithinWatermark(userCol, "__day")
-      .groupBy(col("__day"))
-      .agg(count(lit(1)).as("dau"))
-      .select(col("__day.start").as("day"), col("dau"))
-
-  /** Gap-based streaming sessionization via the BUILT-IN
-    * `session_window` aggregation — the Spark-native complement to
-    * [[streamingSessions]]' custom state path: the engine owns
-    * merge/seal/eviction, state is one open session per key, sessions
-    * emit once the watermark seals them (append mode).
-    *
-    * Session identity matches the batch [[graft.operators.Sessionize]]
-    * gap rule: events ≤ gap apart share a session. The one contract
-    * difference (documented, spec-pinned): `session_end` here is
-    * last-event + gap (the built-in's half-open window end), where the
-    * batch operator reports the last event time itself. */
-  def sessionWindowAgg(stream: DataFrame, keyCol: String, tsCol: String,
-      gap: String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    stream.withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col(keyCol),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"))
-
-  /** Watermarked stream-stream event-time interval join: each left
-    * row pairs with right rows of the same key whose event time lands
-    * in `[left.ts + lowerMs, left.ts + upperMs]` (the click-after-view
-    * attribution shape). The interval condition on BOTH event-time
-    * columns is what lets the engine compute per-side state-eviction
-    * watermarks — without it a stream-stream inner join would buffer
-    * both streams forever; with it state is bounded by
-    * watermark + interval width per side.
-    *
-    * Column names must be disjoint apart from the key (physically
-    * renamed here so the caller's frames may share names). Inner join
-    * only: outer stream-stream joins emit nulls on watermark close,
-    * which this engine reserves for the batch as-of operator. */
-  def intervalJoin(left: DataFrame, right: DataFrame,
-      leftKeyCol: String, rightKeyCol: String,
-      leftTsCol: String, rightTsCol: String,
-      lowerMs: Long, upperMs: Long,
-      leftWatermark: String = "10 minutes",
-      rightWatermark: String = "10 minutes"): DataFrame = {
-    require(lowerMs <= upperMs, "lowerMs must be <= upperMs")
-    // watermark is applied AFTER packing the payload struct: only the
-    // top-level join column may carry event-time metadata (a second
-    // watermarked copy inside the struct is rejected by the engine)
-    val l = left
-      .select(col(leftKeyCol).as("__lk"), col(leftTsCol).as("__lts"),
-        struct(left.columns.map(col): _*).as("left"))
-      .withWatermark("__lts", leftWatermark)
-    val r = right
-      .select(col(rightKeyCol).as("__rk"), col(rightTsCol).as("__rts"),
-        struct(right.columns.map(col): _*).as("right"))
-      .withWatermark("__rts", rightWatermark)
-    l.join(r,
-      col("__lk") === col("__rk") &&
-        col("__rts") >= col("__lts") +
-          expr(s"INTERVAL $lowerMs MILLISECONDS") &&
-        col("__rts") <= col("__lts") +
-          expr(s"INTERVAL $upperMs MILLISECONDS"))
-      .select(col("__lk").as(leftKeyCol), col("left"), col("right"))
-  }
-
-  /** Watermarked tumbling-window aggregation over an event stream —
-    * counts + sum per (window, key). Late rows beyond the watermark
-    * are dropped; state is bounded by watermark horizon. */
-  def windowedAgg(stream: DataFrame, tsCol: String, keyCol: String,
-      valueCol: String, windowLength: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    stream
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLength), col(keyCol))
-      .agg(count(lit(1)).as("cnt"), sum(col(valueCol)).as("total"))
-
-  /** Watermarked SLIDING (hopping) window aggregation — the streaming
-    * twin of [[graft.operators.TimeWindows]]: each event counts into
-    * every `length`-long window at `slide` offsets covering it
-    * (epoch-aligned, same bucket identity as the batch operator), so a
-    * backfill with `TimeWindows.slidingAgg` and this query agree
-    * window-for-window. State per key is `length/slide` open windows,
-    * sealed and dropped as the watermark passes. */
-  def slidingAgg(stream: DataFrame, tsCol: String, keyCol: String,
-      valueCol: String, windowLength: String = "2 hours",
-      slide: String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    stream
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLength, slide), col(keyCol))
-      .agg(count(lit(1)).as("cnt"), sum(col(valueCol)).as("total"))
 
   /** Incremental streaming near-duplicate filter — the crawl-dedup
     * contract over an unbounded stream: each micro-batch is
@@ -249,184 +43,6 @@ object StreamIngest {
     /** State segments, base first — exposed for tests asserting that a
       * trigger appends one O(batch) delta without rewriting the rest. */
     private[graft] def segments: Vector[DataFrame] = state()
-  }
-
-  /** Handle for [[cmStream]]: `sketch` is the merged count-min frame
-    * over everything streamed so far, `candidates` the bounded
-    * heavy-hitter candidate set (both None before the first non-empty
-    * batch). `topK` ranks candidates by their CURRENT whole-stream CM
-    * estimate (an upper bound on the true count), ties to the smaller
-    * token. */
-  final class CmStream private[streaming] (
-      val query: StreamingQuery,
-      state: () => Option[(DataFrame, DataFrame)],
-      depth: Int, width: Int, portableHash: Boolean) {
-    def sketch: Option[DataFrame] = state().map(_._1)
-    def candidates: Option[DataFrame] = state().map(_._2)
-    def topK(k: Int): Option[DataFrame] = state().map { case (sk, cand) =>
-      graft.operators.CountMin.estimate(sk, cand, "token",
-        depth, width, portableHash)
-        .orderBy(col("est").desc, col("token").asc).limit(k)
-    }
-  }
-
-  /** Continuously maintain a count-min sketch + bounded heavy-hitter
-    * candidate set over a stream — "what's trending now" with
-    * O(depth·width + maxCandidates) state however long the stream
-    * runs. Each micro-batch: sketch O(batch) rows into ≤ depth·width
-    * counters and merge (the CM bucket-sum monoid makes the streamed
-    * sketch EXACTLY equal the batch sketch of the same rows —
-    * spec-asserted); then re-rank the previous candidates ∪ the
-    * batch's distinct tokens by whole-stream CM estimate and keep the
-    * top `maxCandidates`. A true heavy hitter can never be
-    * permanently suppressed: even if evicted while rare, its sketch
-    * counts persist, so its next occurrence re-admits it with its
-    * FULL stream estimate. The streaming face of
-    * [[graft.operators.CountMin]]; estimate with the same
-    * (depth, width, portableHash) you built with. */
-  def cmStream(stream: DataFrame, tokenCol: String, depth: Int,
-      width: Int, maxCandidates: Int = 1024,
-      portableHash: Boolean = false,
-      queryName: String = "graft-cm-stream"): CmStream = {
-    require(maxCandidates > 0, "maxCandidates must be positive")
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Option[(DataFrame, DataFrame)]](None)
-    val q = stream.writeStream.queryName(queryName)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // tokens sketch as STRINGS: xxhash64 is type-sensitive, and
-          // the candidate set re-probes through a string column — the
-          // build and probe must hash identical (type, value) pairs
-          val sk = graft.operators.CountMin.sketch(
-            batch.select(col(tokenCol).cast("string").as(tokenCol)),
-            tokenCol, depth, width, portableHash)
-          val (merged, prevCand) = state.get() match {
-            case Some((prev, cand)) =>
-              (graft.operators.CountMin.merge(Seq(prev, sk)), cand)
-            case None =>
-              (sk, batch.sparkSession.emptyDataFrame
-                .withColumn("token", lit(null).cast("string")).limit(0))
-          }
-          val mergedCk = merged.localCheckpoint()
-          val pool = prevCand.select(col("token"))
-            .unionByName(batch.select(col(tokenCol).cast("string")
-              .as("token")).where(col("token").isNotNull).distinct())
-            .distinct()
-          val ranked = graft.operators.CountMin.estimate(mergedCk, pool,
-            "token", depth, width, portableHash)
-            .orderBy(col("est").desc, col("token").asc)
-            .limit(maxCandidates)
-            .select("token")
-          state.set(Some((mergedCk, ranked.localCheckpoint())))
-        }
-      }.start()
-    new CmStream(q, () => state.get(), depth, width, portableHash)
-  }
-
-  /** Handle for [[sketchStream]]: `registers` is the merged
-    * HyperLogLog register table over everything streamed so far (None
-    * before the first non-empty batch). */
-  final class HllStream private[streaming] (
-      val query: StreamingQuery, state: () => Option[DataFrame]) {
-    def registers: Option[DataFrame] = state()
-    /** Corrected distinct estimate from the current registers (≤ m-row
-      * collect). */
-    def estimate(m: Int, portableHash: Boolean): Option[Double] =
-      state().map { regs =>
-        val rhos = regs.select(col("rho").cast("int")).collect()
-          .map(_.getInt(0))
-        val zeros = m - rhos.length
-        val z = rhos.map(r => math.pow(2.0, -r)).sum + zeros.toDouble
-        graft.operators.Hll.correct(
-          graft.operators.Hll.alphaM2(m) / z, zeros.toLong, m)
-      }
-  }
-
-  /** Continuously maintain a HyperLogLog distinct-count sketch over a
-    * stream — "how many distinct users/URLs/tokens so far" with O(m)
-    * state however long the stream runs: each micro-batch sketches
-    * O(batch) rows into ≤ m registers and merges down into ONE
-    * checkpointed ≤ m-row frame (the register MAX monoid makes the
-    * streamed result EXACTLY equal the batch sketch of the same rows —
-    * spec-asserted). The streaming face of [[graft.operators.Hll]];
-    * build with the same (m, portableHash) you will estimate with. */
-  def sketchStream(stream: DataFrame, valueCol: String, m: Int,
-      portableHash: Boolean = false,
-      queryName: String = "graft-hll-stream"): HllStream = {
-    // AtomicReference, not a captured var: the register frame is
-    // written on the micro-batch thread and read from the caller's
-    // thread via HllStream — closure capture is not a safe publication
-    // (same hazard nearDupIngest documents)
-    val merged = new java.util.concurrent.atomic.AtomicReference[
-      Option[DataFrame]](None)
-    val q = stream.writeStream.queryName(queryName)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val sk = graft.operators.Hll.sketch(batch, valueCol, m,
-            portableHash)
-          val next = merged.get() match {
-            case Some(prev) => graft.operators.Hll.merge(Seq(prev, sk))
-            case None => sk
-          }
-          // localCheckpoint: the state must not re-read prior batches'
-          // (gone) micro-batch sources, and keeps lineage O(1) deep
-          merged.set(Some(next.localCheckpoint()))
-        }
-      }.start()
-    new HllStream(q, () => merged.get())
-  }
-
-  /** Stateless streaming curation: the per-row quality stack — Gopher
-    * rules, a PRE-FIT char-bigram LM threshold, PII scrub — as one
-    * streaming-safe projection+filter (no state, no watermark, valid
-    * in any output mode; chain [[nearDupIngest]] after it for the
-    * stateful dedup stage). Fit the LM on a bootstrap corpus with
-    * [[graft.operators.TextAnalysis.charBigramModel]] — a stream
-    * cannot re-fit per trigger, and a drifting model would make
-    * scores incomparable across batches; unseen bigrams score
-    * `ln(1e-9)`. Rows shorter than 2 chars fail the LM gate by
-    * definition (score −∞ < any threshold). Passing rows keep their
-    * columns with `textCol` scrubbed and gain `lm_score`. */
-  def curationFilter(stream: DataFrame, textCol: String,
-      lmModel: java.util.HashMap[String, java.lang.Double],
-      minLmScore: Double, scrub: Boolean = true): DataFrame = {
-    import graft.functions.TextFunctions.{char_bigram_lm, gopherRules}
-    import graft.operators.TextClean.scrubPii
-    require(!lmModel.isEmpty,
-      "empty LM model — fit charBigramModel on a non-empty bootstrap corpus")
-    val gated = stream
-      .withColumn("__g", gopherRules(col(textCol)))
-      .withColumn("lm_score",
-        when(length(col(textCol)) >= 2,
-          char_bigram_lm(lower(col(textCol)), lmModel, math.log(1e-9))
-            .getField("mean_lnp"))
-          .otherwise(lit(Double.NegativeInfinity)))
-      .filter(col("__g.keep") === 1 && col("lm_score") >= minLmScore)
-      .drop("__g")
-    if (scrub) gated.withColumn(textCol, scrubPii(col(textCol)))
-    else gated
-  }
-
-  /** DSIR online filter — score each incoming document against a
-    * PRE-FIT hashed-ngram log-likelihood-ratio model (fit offline with
-    * [[graft.operators.Dsir.logRatioTable]] on a bootstrap
-    * target/raw split — a stream cannot re-fit, and a drifting model
-    * would make weights incomparable across batches) and keep rows
-    * whose log importance weight clears `minLogWeight`. The model
-    * rides the tasks as one embedded map (≤ buckets entries) inside a
-    * narrow higher-order fold ([[graft.operators.Dsir.weightCol]]):
-    * no explode, no join, no state — safe in append mode at any
-    * trigger rate. Appends `dsir_logw` for downstream calibration. */
-  def dsirFilter(stream: DataFrame, textCol: String,
-      llr: Map[Int, Double], buckets: Int, minLogWeight: Double,
-      portableHash: Boolean = false): DataFrame = {
-    require(llr.nonEmpty,
-      "empty llr model — fit Dsir.logRatioTable on a bootstrap corpus")
-    stream
-      .withColumn("dsir_logw",
-        graft.operators.Dsir.weightCol(col(textCol), llr, buckets,
-          portableHash))
-      .filter(col("dsir_logw") >= minLogWeight)
   }
 
   def nearDupIngest(stream: DataFrame, idCol: String, textCol: String,
@@ -514,8 +130,8 @@ object StreamIngest {
     *    frame): pure per-row flags — streaming totals equal the batch
     *    report on the same data under ANY batch split.
     *  - dup-span: gram counts are per MICRO-BATCH (+ within-doc
-    *    self-repetition) — the bounded-horizon contract of
-    *    [[dedupWithinHorizon]]: cross-batch duplicated spans are
+    *    self-repetition) — a one-trigger horizon: cross-batch
+    *    duplicated spans are
     *    caught by the near-dup stage or a downstream batch pass.
     *    Totals equal batch when cross-doc span duplication lands
     *    within one trigger.
@@ -610,137 +226,6 @@ object StreamIngest {
     new CurationFunnelStream(q, () => counts.get())
   }
 
-  /** Continuously ingest a vector stream into a partitioned IVF layout
-    * (see [[graft.operators.IvfIndex]]): each micro-batch pays one
-    * narrow codegen'd cell assignment against the FIXED trained
-    * centroids and appends only its own rows' files into their cell
-    * directories — O(batch) work and write per trigger, no shuffle, no
-    * touch of the existing lake. Queries load the layout with
-    * `IvfIndex.load` and partition-prune to their probed cells as
-    * usual. Centroid refresh stays a periodic OFFLINE job
-    * (`IvfIndex.refreshCentroids`) — rewriting the lake inside a
-    * trigger would be the O(accepted)-per-batch mistake again. */
-  def intoIvfLayout(stream: DataFrame, centroids: Array[Array[Float]],
-      vecCol: String, path: String,
-      checkpoint: Option[String] = None,
-      queryName: String = "graft-ivf-ingest"): StreamingQuery = {
-    val writer = stream.writeStream
-      .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.IvfIndex.assignCells(batch, vecCol, centroids)
-            .write.mode("append")
-            .partitionBy(graft.operators.IvfIndex.ClusterCol)
-            .parquet(path)
-        }
-      }
-    checkpoint.foreach(c => writer.option("checkpointLocation", c))
-    writer.start()
-  }
-
-  /** Funnel progress state: step-1 time, last-step time (epoch ms),
-    * steps completed so far. */
-  private[streaming] final case class FunnelProg(
-      t1: Long, tPrev: Long, step: Int)
-
-  /** Streaming conversion funnel — the online twin of
-    * [[graft.operators.Funnel.funnel]]: per user, advance through the
-    * ordered `steps` (strictly-after ordering, `horizonMs` from step
-    * 1) and EMIT one row the moment the final step completes. State
-    * is one tiny FunnelProg per in-progress user, and it is evicted
-    * the moment it can no longer convert: on conversion, and by
-    * event-time timeout once the watermark passes t1 + horizon — so
-    * state is bounded by users-inside-their-horizon, not users-ever.
-    *
-    * Streaming approximations, documented: (1) events are processed
-    * in event-time order WITHIN a trigger (type tiebreak), but an
-    * event arriving in a later trigger that predates already-consumed
-    * progress cannot retroactively rewrite it (the batch operator,
-    * with the full corpus, can); in-order delivery ⇒ exact batch
-    * parity (spec'd). (2) This emits conversion EVENTS — a user whose
-    * state was evicted on conversion may start a new funnel cycle and
-    * emit again; the batch operator reports unique users (keeping a
-    * converted-forever sentinel would make state unbounded, the
-    * opposite of the contract). */
-  def streamingFunnel(stream: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, steps: Seq[String], horizonMs: Long,
-      watermark: String = "10 minutes"): DataFrame = {
-    require(steps.size >= 2, "a funnel needs at least two steps")
-    require(steps.distinct.size == steps.size, s"duplicate step in $steps")
-    require(horizonMs > 0, "horizonMs must be positive")
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val inEnc: Encoder[(String, String, java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.TIMESTAMP)
-    implicit val stEnc: Encoder[FunnelProg] = Encoders.product[FunnelProg]
-    implicit val outEnc: Encoder[(String, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    val prepared = stream
-      .withWatermark(tsCol, watermark)
-      // null user/type/ts rows are malformed input, not state fuel: an
-      // unfiltered null ts NPEs inside the state function and kills
-      // the QUERY (the batch twin just never matches such rows)
-      .where(col(userCol).isNotNull && col(typeCol).isNotNull &&
-        col(tsCol).isNotNull)
-      .select(col(userCol).cast("string"), col(typeCol), col(tsCol))
-      .as[(String, String, java.sql.Timestamp)]
-    val converted = prepared.groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelProg, (String, Long)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: String, rows: Iterator[(String, String, java.sql.Timestamp)],
-            state: GroupState[FunnelProg]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val evs = rows.map(r => (r._3.getTime, r._2)).toArray.sorted
-            var st = state.getOption.getOrElse(FunnelProg(-1L, -1L, 0))
-            val wm0 = state.getCurrentWatermarkMs()
-            // progress whose horizon is already behind the watermark is
-            // dead (no admissible event can extend it) — reset BEFORE
-            // processing so a fresh step-1 event in this trigger starts
-            // a new cycle instead of feeding a corpse
-            if (st.step > 0 && st.t1 + horizonMs <= wm0)
-              st = FunnelProg(-1L, -1L, 0)
-            val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-            // every event is consumed: a conversion resets the machine
-            // so a user cycling twice INSIDE one trigger emits twice —
-            // output must not depend on micro-batch boundaries
-            for ((t, et) <- evs) {
-              // events are sorted: once t passes the horizon the
-              // in-flight progress is PROVEN dead — reset here, not
-              // only at trigger start, so whether the proving event
-              // shares a trigger with the stale progress cannot
-              // change the output (trigger-packing independence)
-              if (st.step > 0 && t > st.t1 + horizonMs)
-                st = FunnelProg(-1L, -1L, 0)
-              if (st.step == 0) {
-                if (et == steps.head) st = FunnelProg(t, t, 1)
-              } else if (et == steps(st.step) && t > st.tPrev) {
-                st = st.copy(tPrev = t, step = st.step + 1)
-                if (st.step == steps.size) {
-                  out += ((key, t))
-                  st = FunnelProg(-1L, -1L, 0)
-                }
-              }
-            }
-            val wm = state.getCurrentWatermarkMs()
-            if (st.step == 0) {
-              state.remove()
-            } else if (st.t1 + horizonMs <= wm) {
-              // horizon already behind the watermark: every admissible
-              // future event has t > wm >= t1 + horizon, so this user
-              // can never convert — and a timeout at t1 + horizon
-              // would be BELOW the watermark, which Spark rejects
-              state.remove()
-            } else {
-              state.update(st)
-              // dead once no admissible event can extend it
-              state.setTimeoutTimestamp(st.t1 + horizonMs)
-            }
-            out.iterator
-          }
-      }
-    converted.toDF(userCol, "converted_at_ms")
-  }
-
   /** Multi-span sessionization state: the key's not-yet-sealed
     * sub-spans as (start, end, n_events) epoch millis. */
   private[streaming] final case class SessionSpans(
@@ -779,7 +264,6 @@ object StreamIngest {
       maxSortRows: Int = 1 << 21): DataFrame = {
     require(maxGapMs > 0, "maxGapMs must be positive")
     require(maxSortRows > 0, "maxSortRows must be positive")
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     implicit val keyEnc: Encoder[String] = Encoders.STRING
     // the event-time column must survive to the grouped Dataset as a
     // TIMESTAMP for EventTimeTimeout to see the watermark — millis
@@ -855,60 +339,5 @@ object StreamIngest {
           closed.iterator.map { case (s, e, n) => (key, s, e, n) }
       }
     sessions.toDF(keyCol, "session_start", "session_end", "n_events")
-  }
-
-  private[streaming] final case class QuotaSampleState(items: List[(String, Long)])
-
-  /** Streaming per-stratum quota sample with BOUNDED state — the
-    * streaming twin of [[graft.operators.Sampling.quotaSample]]: for
-    * every stratum key, keep the quota-n rows with the smallest
-    * (md5(id), id) priority seen so far. Because the kept set is "the
-    * n smallest priorities of everything seen", the reservoir after
-    * ANY prefix of the stream equals the batch `quotaSample` of that
-    * prefix — arrival order, micro-batch boundaries, and shuffle
-    * partitioning cannot change it (the spec asserts this parity),
-    * and a re-delivered row is idempotent (same priority, same slot).
-    * That determinism is what classic random reservoir sampling
-    * (Vitter 1985) gives up; hash-priority trades "uniform over the
-    * stream" for "uniform-by-hash AND reproducible".
-    *
-    * State per key is ≤ its quota (total ≤ Σ quotas + defaultQuota ×
-    * distinct keys), independent of stream length — the bounded-state
-    * contract `streamingFirstWins` deliberately lacks. Emits one
-    * (key, ids) snapshot row per UPDATED key per trigger (Update
-    * mode); the latest row per key is the current sample. `idCol`
-    * must cast to long; null keys take `defaultQuota` and emit a null
-    * key. */
-  def streamingQuotaSample(stream: DataFrame, keyCol: String,
-      idCol: String, quotas: Map[String, Long],
-      defaultQuota: Long = 0L): Dataset[(String, Seq[Long])] = {
-    require((quotas.values ++ Seq(defaultQuota)).forall(q =>
-      q >= 0L && q <= Int.MaxValue.toLong),
-      "quotas must be in [0, Int.MaxValue]")
-    val spark = stream.sparkSession
-    import spark.implicits._
-    // identical priority to the batch twin: md5 of the id's string
-    // form, computed BEFORE grouping so the hash function (and its
-    // hex rendering) is the engine's own, not a JVM reimplementation
-    val prepared = stream.select(
-        col(keyCol).cast("string").as("k"),
-        md5(col(idCol).cast("string").cast("binary")).as("h"),
-        col(idCol).cast("long").as("id"))
-      .as[(String, String, Long)]
-    val grouped = prepared.groupByKey {
-      case (k, _, _) => if (k == null) "n" else "v" + k }
-    grouped.mapGroupsWithState[QuotaSampleState, (String, Seq[Long])](
-      GroupStateTimeout.NoTimeout()) {
-      (rk: String, rows: Iterator[(String, String, Long)],
-          state: GroupState[QuotaSampleState]) =>
-        val key = if (rk == "n") null else rk.substring(1)
-        val quota = (if (key == null) defaultQuota
-          else quotas.getOrElse(key, defaultQuota)).toInt
-        val prev = state.getOption.map(_.items).getOrElse(Nil)
-        val merged = (prev ++ rows.map(r => (r._2, r._3)))
-          .sorted.take(quota).toList
-        state.update(QuotaSampleState(merged))
-        (key, merged.map(_._2))
-    }
   }
 }

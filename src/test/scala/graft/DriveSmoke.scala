@@ -267,10 +267,6 @@ object DriveSmoke {
       Seq("train" -> 0.9, "test" -> 0.1))
     println("SPLIT_COUNTS=" + splits.groupBy("split").count()
       .orderBy("split").collect().mkString(","))
-    val zDir = java.nio.file.Files.createTempDirectory("drive-z").toString
-    Lake.writeZordered(docs.select("doc_id", "n_chars"), s"$zDir/z",
-      Seq("doc_id", "n_chars"), nFiles = 4)
-    println("ZORDER_HEALTH=" + Lake.health(spark, s"$zDir/z"))
 
     // SQ8: fit on the real embeddings, ADC scan + exact re-rank
     val embSq = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -306,19 +302,14 @@ object DriveSmoke {
     bloomed.explain("formatted")
     println("BLOOM_ANTI_ROWS=" + bloomed.count())
 
-    // BM25 on-disk delta segments: save → append twice → reopen must
-    // equal a refit over the concatenation; compact must not change it
+    // BM25 saved index: save → reopen → search
     val bmDir = java.nio.file.Files.createTempDirectory("drive-bm25").toString
-    val half1 = docs.filter($"doc_id" % 2 === 0)
-    val half2 = docs.filter($"doc_id" % 2 === 1)
     graft.operators.Bm25.save(
-      graft.operators.Bm25.fit(half1, "doc_id", "text"), s"$bmDir/idx")
-    graft.operators.Bm25.appendSaved(spark, s"$bmDir/idx", half2, "doc_id", "text")
-    graft.operators.Bm25.compact(spark, s"$bmDir/idx")
+      graft.operators.Bm25.fit(docs, "doc_id", "text"), s"$bmDir/idx")
     val bmHits = graft.operators.Bm25.search(
       graft.operators.Bm25.load(spark, s"$bmDir/idx"), Seq("the", "data"), 5)
     bmHits.explain("formatted")
-    println("BM25_SEGMENT_ROWS=" + bmHits.count())
+    println("BM25_SAVED_ROWS=" + bmHits.count())
 
     // lazy prefix scan (materialize=false): the corpus-scale packing
     // path — no localCheckpoint in the plan, repeated actions agree
@@ -343,16 +334,6 @@ object DriveSmoke {
       docs, "doc_id", "text", shingleWidth = 3, threshold = 0.5)
     jp.explain("formatted")
     println("JACCARD_EXACT_PAIRS=" + jp.count())
-
-    // exact clean-slice wrapper: new crawl minus provably-dup docs
-    val newCrawl = docs.filter($"doc_id" % 2 === 1)
-    val corpus0 = docs.filter($"doc_id" % 2 === 0)
-    val cleanSlice = graft.operators.Dedup.dedupAgainstCorpusExact(
-      newCrawl, corpus0, "doc_id", "text", shingleWidth = 3,
-      threshold = 0.4)
-    cleanSlice.explain("formatted")
-    println("EXACT_CLEAN_ROWS=" + cleanSlice.count() +
-      "/" + newCrawl.count())
 
     // one Lloyd's iteration as an auditable frame (fixed centroids)
     val cents4 = embSq.filter($"vec_id" < 4).orderBy("vec_id")
@@ -386,15 +367,9 @@ object DriveSmoke {
     println("CHUNK_ROWS=" + chunks.count() +
       " docs=" + chunks.select("doc_id").distinct().count())
 
-    // HLL distinct-token estimate vs exact, both hash modes
+    // HLL distinct-token sketch
     val tokRows = docs.select(
       explode(graft.functions.TextFunctions.tokens($"text")).as("tok"))
-    val exactDistinct = tokRows.select("tok").distinct().count()
-    for (portable <- Seq(false, true)) {
-      val est = graft.operators.Hll.estimateDistinct(
-        tokRows, "tok", m = 1024, portableHash = portable)
-      println(f"HLL_EST portable=$portable est=$est%.1f exact=$exactDistinct")
-    }
     graft.operators.Hll.sketch(tokRows, "tok", m = 1024)
       .explain("formatted")
 
@@ -741,22 +716,11 @@ object DriveSmoke {
     mods.explain("formatted")
     println("MODULARITY=" + mods.orderBy("label").collect()
       .map(r => r.getString(0) + ":" + r.getDouble(5)).mkString(" "))
-    val edp = graft.operators.Dedup.nearDupPairsEditDistance(
-      docs.select("doc_id", "text"), "doc_id", "text",
-      maxDist = 12, prefixLen = 256)
-    edp.explain("formatted")
-    println("EDIT_PAIRS=" + edp.count())
     val rds = graft.operators.Dedup.removeDupSpans(
       docs.select("doc_id", "text"), "doc_id", "text", k = 8)
     rds.explain("formatted")
     println("SPAN_REMOVED=" + rds.agg(sum("n_removed")).collect()(0).getLong(0))
-    // r16: corpus-level sketch overlap + exact containment matrix
-    val sk = graft.operators.CorpusSketch.minhashSketchByKey(
-      docs, "source", "text", numHashes = 32)
-    val skp = graft.operators.CorpusSketch.sketchJaccardPairs(
-      sk, "source", complete = true)
-    skp.explain("formatted")
-    println("SKETCH_PAIRS=" + skp.count())
+    // r16: corpus-level exact containment matrix
     val ov = graft.operators.CorpusSketch.exactOverlapPairs(
       docs, "source", "text")
     ov.explain("formatted")
@@ -827,11 +791,7 @@ object DriveSmoke {
     beamHits.explain("formatted")
     println("BEAM_TOP=" + beamHits.orderBy("qid", "rank").collect()
       .map(r => r.getLong(0) + ">" + r.getLong(1)).take(6).mkString(" "))
-    // r17: containment audit, golden record, Kneser–Ney, blocklist
-    val contp = graft.operators.Dedup.containmentPairsExact(
-      docs, "doc_id", "text", shingleWidth = 3, threshold = 0.6)
-    contp.explain("formatted")
-    println("CONTAIN_PAIRS=" + contp.count())
+    // r17: golden record, Kneser–Ney, blocklist
     val gr = graft.operators.Dedup.goldenRecord(
       docs.withColumn("key",
         array_join(slice(graft.functions.TextFunctions.tokens($"text"),

@@ -12,6 +12,28 @@ class RegistrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() >= 1L)
   }
 
+  test("the fixed-vector helpers name the embeddings rows they need on " +
+      "an empty and a one-row table") {
+    import spark.implicits._
+    val one = Seq((7L, Array(1f, 2f, 3f, 4f))).toDF("vec_id", "embedding")
+    val empty = one.limit(0)
+    def err(f: => Any): String =
+      intercept[IllegalArgumentException](f).getMessage
+    for (df <- Seq(empty, one)) {
+      assert(err(SparkEntry.queryVec(df)).contains("vec_id = 0"))
+      assert(err(SparkEntry.firstVecs(df, 4)).contains("vec_id < 4"))
+    }
+    assert(err(SparkEntry.sliceBooks(Array.empty, 4))
+      .contains("4 <= vec_id < 8"))
+    // a one-row table whose row is vec_id 0 serves all three
+    val zero = Seq((0L, Array(1f, 2f, 3f, 4f))).toDF("vec_id", "embedding")
+    assert(SparkEntry.queryVec(zero).toSeq == Seq(1f, 2f, 3f, 4f))
+    val cents = SparkEntry.firstVecs(zero, 4)
+    assert(cents.length == 1)
+    assert(SparkEntry.sliceBooks(cents, 4).map(_.head.toSeq).toSeq ==
+      Seq(Seq(1f), Seq(2f), Seq(3f), Seq(4f)))
+  }
+
   test("every oracleSql key is a registered query") {
     val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(dangling.isEmpty,

@@ -19,16 +19,6 @@ class VectorAggregatesSpec extends SparkSpec {
     assert(out(1).getSeq[Double](1) == Seq(10.0, 20.0))
   }
 
-  test("vec_mean_of divides the sum by the count") {
-    import spark.implicits._
-    val df = Seq(("a", Array(1f, 3f)), ("a", Array(3f, 5f))).toDF("g", "v")
-    val out = df.groupBy("g")
-      .agg(vec_sum(col("v")).as("s"), count(lit(1)).as("n"))
-      .select(vec_mean_of(col("s"), col("n")))
-      .head.getSeq[Double](0)
-    assert(out == Seq(2.0, 4.0))
-  }
-
   test("null vectors are skipped; all-null group yields null") {
     import spark.implicits._
     val df = Seq(

@@ -23,17 +23,6 @@ class BloomJoinSpec extends SparkSpec {
     assert(got.toSeq == want.toSeq && got.length == 667)
   }
 
-  test("prunedSemiJoin equals plain left_semi (long keys)") {
-    val (left, right) = tables
-    val got = BloomJoin.prunedSemiJoin(left, right, "k", "rk")
-      .select("k").collect().map(_.getLong(0)).sorted
-    val want = left.join(right, col("k") === col("rk"), "left_semi")
-      .select("k").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq == want.toSeq && got.length == 333)
-    // semi join must not multiply rows on duplicate right keys
-    assert(got.distinct.length == got.length)
-  }
-
   test("string keys probe the same bytes putString inserted") {
     import spark.implicits._
     val left = Seq("a", "b", "çé", "δ", "x").toDF("k")
@@ -41,12 +30,9 @@ class BloomJoinSpec extends SparkSpec {
     val anti = BloomJoin.prunedAntiJoin(left, right, "k", "rk")
       .collect().map(_.getString(0)).sorted
     assert(anti.toSeq == Seq("a", "x"))
-    val semi = BloomJoin.prunedSemiJoin(left, right, "k", "rk")
-      .collect().map(_.getString(0)).sorted
-    assert(semi.toSeq == Seq("b", "çé", "δ"))
   }
 
-  test("NULL left keys: kept by anti, dropped by semi (SQL join semantics)") {
+  test("NULL left keys are kept by anti (SQL join semantics)") {
     import spark.implicits._
     val left = Seq[(java.lang.Long, String)]((1L, "a"), (null, "n"), (2L, "b"))
       .toDF("k", "payload")
@@ -54,9 +40,6 @@ class BloomJoinSpec extends SparkSpec {
     val anti = BloomJoin.prunedAntiJoin(left, right, "k", "rk")
       .select("payload").collect().map(_.getString(0)).sorted
     assert(anti.toSeq == Seq("b", "n"))
-    val semi = BloomJoin.prunedSemiJoin(left, right, "k", "rk")
-      .select("payload").collect().map(_.getString(0)).sorted
-    assert(semi.toSeq == Seq("a"))
   }
 
   test("NULL right keys are ignored when building the filter") {
@@ -85,18 +68,15 @@ class BloomJoinSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       BloomJoin.prunedAntiJoin(left, right, "k", "rk")
     }
-    intercept[IllegalArgumentException] {
-      BloomJoin.prunedSemiJoin(left, right, "k", "rk")
-    }
   }
 
   test("integral widening is allowed: int left vs long right keys") {
     import spark.implicits._
     val left = Seq(1, 2, 3).toDF("k") // IntegerType
     val right = Seq(2L, 3L, 4L).toDF("rk") // LongType
-    val semi = BloomJoin.prunedSemiJoin(left, right, "k", "rk")
+    val anti = BloomJoin.prunedAntiJoin(left, right, "k", "rk")
       .collect().map(_.getInt(0)).sorted
-    assert(semi.toSeq == Seq(2, 3))
+    assert(anti.toSeq == Seq(1))
   }
 
   test("plan: exact join input is bloom-filtered; settled branch is join-free") {

@@ -70,27 +70,6 @@ class Bm25Spec extends SparkSpec {
     assert(got == Set(1L, 3L))
   }
 
-  test("bm25 append: incremental index answers identically to a full " +
-      "refit over the concatenated corpus") {
-    import spark.implicits._
-    val first = (1 to 150).map(i =>
-      (i.toLong, s"spark shard w${i % 11} merge " * (i % 4 + 1)))
-      .toDF("doc_id", "text")
-    val second = (151 to 260).map(i =>
-      (i.toLong, s"hash probe w${i % 7} spark " * (i % 3 + 1)))
-      .toDF("doc_id", "text")
-    val appended = Bm25.append(
-      Bm25.fit(first, "doc_id", "text"), second, "doc_id", "text")
-    val refit = Bm25.fit(first.unionByName(second), "doc_id", "text")
-    assert(appended.nDocs == refit.nDocs)
-    assert(appended.totalDl == refit.totalDl)
-    for (terms <- Seq(Seq("spark"), Seq("hash", "w3", "merge"))) {
-      val a = Bm25.search(appended, terms, k = 25).collect().toSeq
-      val b = Bm25.search(refit, terms, k = 25).collect().toSeq
-      assert(a == b, s"append diverged from refit for $terms")
-    }
-  }
-
   test("bm25 degenerate inputs: empty corpus, empty query") {
     import spark.implicits._
     val emptyIdx = Bm25.fit(Seq.empty[(Long, String)].toDF("doc_id", "text"),
@@ -152,58 +131,6 @@ class Bm25Spec extends SparkSpec {
     val terms = Seq("spark", "hash", "and")
     assert(Bm25.search(re, terms, 10).collect().toSeq ==
       Bm25.search(idx, terms, 10).collect().toSeq)
-  }
-
-  test("appendSaved: segmented on-disk index answers identically to a " +
-      "refit and plan depth is independent of append count") {
-    import spark.implicits._
-    val batch1 = corpus.where(col("doc_id") <= 2)
-    val batch2 = corpus.where(col("doc_id") === 3 || col("doc_id") === 4)
-    val batch3 = corpus.where(col("doc_id") === 5)
-    val dir = java.nio.file.Files.createTempDirectory("bm25-seg").toString
-    Bm25.save(Bm25.fit(batch1, "doc_id", "text"), s"$dir/idx")
-    Bm25.appendSaved(spark, s"$dir/idx", batch2, "doc_id", "text")
-    Bm25.appendSaved(spark, s"$dir/idx", batch3, "doc_id", "text")
-    val re = Bm25.load(spark, s"$dir/idx")
-    val full = Bm25.fit(corpus, "doc_id", "text")
-    assert(re.nDocs == full.nDocs && re.totalDl == full.totalDl)
-    val terms = Seq("spark", "hash", "and", "quantum")
-    assert(Bm25.search(re, terms, 10).collect().toSeq ==
-      Bm25.search(full, terms, 10).collect().toSeq)
-    // plan depth O(1): the reopened frames are single parquet scans —
-    // no Union chain however many appends built the layout (the
-    // in-memory append's weakness this API exists to avoid)
-    for (frame <- Seq(re.postings, re.docFreq)) {
-      val plan = frame.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("Union"), s"union chain leaked:\n$plan")
-    }
-    val aggs = "Aggregate".r
-      .findAllIn(re.docFreq.queryExecution.optimizedPlan.toString).length
-    assert(aggs == 1, "docFreq reopen must cost exactly one aggregation")
-  }
-
-  test("compact folds segments: answers unchanged, docfreq " +
-      "pre-aggregated into one segment") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bm25-cpt").toString
-    Bm25.save(Bm25.fit(corpus.where(col("doc_id") <= 3), "doc_id", "text"),
-      s"$dir/idx")
-    Bm25.appendSaved(spark, s"$dir/idx",
-      corpus.where(col("doc_id") > 3), "doc_id", "text")
-    val before = Bm25.search(Bm25.load(spark, s"$dir/idx"),
-      Seq("spark", "quantum"), 10).collect().toSeq
-    val segFiles = new java.io.File(s"$dir/idx/docfreq")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    Bm25.compact(spark, s"$dir/idx")
-    val after = Bm25.search(Bm25.load(spark, s"$dir/idx"),
-      Seq("spark", "quantum"), 10).collect().toSeq
-    assert(after == before)
-    val compFiles = new java.io.File(s"$dir/idx/docfreq")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(compFiles <= segFiles)
-    // compacted docfreq holds one row per token (deltas folded)
-    val df = spark.read.parquet(s"$dir/idx/docfreq")
-    assert(df.groupBy("token").count().where(col("count") > 1).count() == 0)
   }
 
   test("searchBatch without broadcast answers identically (corpus-scale query path)") {

@@ -1,90 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class CorpusSketchSpec extends SparkSpec {
   import spark.implicits._
-
-  private val docs = Seq(
-    // source A: two docs over one vocabulary region
-    ("a", 1L, "the quick brown fox jumps over the lazy dog"),
-    ("a", 2L, "the quick brown fox sleeps all day long"),
-    // source B: one doc identical to A's first — heavy overlap with A
-    ("b", 3L, "the quick brown fox jumps over the lazy dog"),
-    // source C: disjoint vocabulary
-    ("c", 4L, "alpha beta gamma delta epsilon zeta eta theta"),
-    // short/null texts contribute nothing
-    ("c", 5L, "too short"),
-    ("a", 6L, null.asInstanceOf[String])
-  ).toDF("src", "doc_id", "text")
-
-  test("sketch equals elementwise min of per-doc signatures") {
-    val perDoc = docs
-      .select($"src", Dedup.minhashSignature(
-        graft.functions.TextFunctions.shingles($"text", 3), 16).as("sig"))
-      .where($"sig".isNotNull)
-      .select($"src", posexplode($"sig").as(Seq("p", "v")))
-      .groupBy("src", "p").agg(min("v").as("v"))
-      .groupBy("src")
-      .agg(expr("transform(array_sort(collect_list(struct(p, v)))," +
-        " x -> x.v)").as("expected"))
-    val got = CorpusSketch.minhashSketchByKey(docs, "src", "text",
-      shingleWidth = 3, numHashes = 16)
-    val joined = got.join(perDoc, "src")
-      .where(not($"sketch" <=> $"expected")).count()
-    assert(joined === 0)
-    assert(got.count() === 3)
-    assert(got.select(max(size($"sketch"))).as[Int].head() === 16)
-  }
-
-  test("sketch is mergeable: sketch(A union B) = min(sketch(A), sketch(B))") {
-    val merged = CorpusSketch.minhashSketchByKey(
-      docs.where($"src".isin("a", "b")).withColumn("src", lit("ab")),
-      "src", "text", numHashes = 32).select($"sketch").as[Seq[Int]].head()
-    val parts = CorpusSketch.minhashSketchByKey(
-      docs.where($"src".isin("a", "b")), "src", "text", numHashes = 32)
-      .select($"src", $"sketch").as[(String, Seq[Int])].collect().toMap
-    val elementwiseMin = parts("a").zip(parts("b")).map {
-      case (x, y) => math.min(x, y) }
-    assert(merged === elementwiseMin)
-  }
-
-  test("identical shingle sets estimate jaccard 1.0; disjoint sets meet nowhere") {
-    // b's single doc is a subset of a's shingle set only if a's second
-    // doc adds shingles — use exact singletons: clone b as b2
-    val two = docs.where($"src" === "b")
-      .union(docs.where($"src" === "b").withColumn("src", lit("b2")))
-      .union(docs.where($"src" === "c"))
-    val sk = CorpusSketch.minhashSketchByKey(two, "src", "text",
-      numHashes = 16)
-    val pairs = CorpusSketch.sketchJaccardPairs(sk, "src")
-      .collect().map(r => (r.getString(0), r.getString(1),
-        r.getLong(2), r.getDouble(3)))
-    val bb2 = pairs.find(p => p._1 == "b" && p._2 == "b2").get
-    assert(bb2._3 === 16L && bb2._4 === 1.0)
-    // c shares no shingles with b/b2: in sparse mode those pairs are
-    // absent (estimate 0)
-    assert(!pairs.exists(p => p._1 == "c" || p._2 == "c"))
-  }
-
-  test("complete matrix emits zero-match pairs and matches sparse counts") {
-    val sk = CorpusSketch.minhashSketchByKey(docs, "src", "text",
-      numHashes = 16)
-    val sparse = CorpusSketch.sketchJaccardPairs(sk, "src")
-      .collect().map(r => ((r.getString(0), r.getString(1)),
-        r.getLong(2))).toMap
-    val full = CorpusSketch.sketchJaccardPairs(sk, "src",
-      complete = true)
-      .collect().map(r => ((r.getString(0), r.getString(1)),
-        r.getLong(2))).toMap
-    assert(full.keySet.size === 3) // ab, ac, bc
-    for ((k, v) <- full)
-      assert(sparse.getOrElse(k, 0L) === v)
-    // a and b share text → nonzero; c is disjoint from both → zero
-    assert(full(("a", "b")) > 0L)
-    assert(full(("a", "c")) === 0L && full(("b", "c")) === 0L)
-  }
 
   test("exactOverlapPairs: hand-checked intersection, jaccard, containments") {
     val d = Seq(
@@ -103,29 +22,5 @@ class CorpusSketchSpec extends SparkSpec {
     assert(r.getDouble(5) === 0.5)        // jaccard 1/(2+1-1)
     assert(r.getDouble(6) === 0.5)        // cont x in y = 1/2
     assert(r.getDouble(7) === 1.0)        // cont y in x = 1/1 — swallowed
-  }
-
-  test("sketch estimate tracks exact jaccard on the sf0.001 documents table") {
-    val d = spark.read.parquet(sf() + "/documents.parquet")
-    val sk = CorpusSketch.minhashSketchByKey(d, "source", "text",
-      numHashes = 64)
-    val est = CorpusSketch.sketchJaccardPairs(sk, "source",
-      complete = true)
-      .select($"keyA", $"keyB", $"est_jaccard")
-      .collect().map(r => ((r.getString(0), r.getString(1)),
-        r.getDouble(2))).toMap
-    val exact = CorpusSketch.exactOverlapPairs(d, "source", "text")
-      .select($"keyA", $"keyB", $"jaccard")
-      .collect().map(r => ((r.getString(0), r.getString(1)),
-        r.getDouble(2))).toMap
-    assert(est.nonEmpty)
-    // stderr ≈ 1/√64 = 0.125; allow 4σ so the seed-fixed fixture
-    // can never flake
-    for ((k, j) <- exact)
-      assert(math.abs(est(k) - j) <= 0.5,
-        s"pair $k: est=${est(k)} exact=$j")
-    // pairs absent from the exact table are truly disjoint → estimate 0
-    for ((k, e) <- est if !exact.contains(k))
-      assert(e === 0.0, s"disjoint pair $k estimated $e")
   }
 }

@@ -39,24 +39,6 @@ class CountMinSpec extends SparkSpec {
       "width 16 over 200 tokens must actually collide somewhere")
   }
 
-  test("merge is the exact monoid: sharded sketches equal the whole") {
-    val a = toks(Seq.fill(20)("x") ++ Seq.fill(3)("y"))
-    val b = toks(Seq.fill(5)("y") ++ Seq("z"))
-    val whole = CountMin.sketch(a.union(b), "tok", depth = 4, width = 64)
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val merged = CountMin.merge(Seq(
-      CountMin.sketch(a, "tok", 4, 64),
-      CountMin.sketch(b, "tok", 4, 64)))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    assert(merged === whole)
-    // estimates through the merged sketch match too
-    val est = CountMin.estimate(CountMin.merge(Seq(
-      CountMin.sketch(a, "tok", 4, 64), CountMin.sketch(b, "tok", 4, 64))),
-      Seq("x", "y", "z").toDF("tok"), "tok", 4, 64)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(est === Map("x" -> 20L, "y" -> 8L, "z" -> 1L))
-  }
-
   test("sketch is bounded depth*width whatever the input size") {
     val data = toks(Seq.tabulate(5000)(i => s"t${i % 997}"))
     val sk = CountMin.sketch(data, "tok", depth = 4, width = 32)

@@ -163,13 +163,6 @@ class DedupSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(brute.nonEmpty, "no planted cross matches")
     assert(got == brute, s"missed: ${brute -- got}, extra: ${got -- brute}")
-    // the clean slice is exactly the complement of the flags
-    val clean = Dedup.dedupAgainstCorpusExact(
-      df.filter(col("id") >= 100), df.filter(col("id") < 100),
-      "id", "text", shingleWidth = 3, threshold = 0.3)
-      .collect().map(_.getLong(0)).toSet
-    val probeIds = docs.collect { case (id, _) if id >= 100 => id }.toSet
-    assert(clean == probeIds -- got)
   }
 
   test("dedupNearMinHash drops the higher id of each pair") {
@@ -515,12 +508,13 @@ class DedupSpec extends SparkSpec {
       "drops a whole unscored cluster") {
     import spark.implicits._
     // clusters {1,2,3} (transitive via 1-2, 2-3) and {4,5}; 6 untouched
-    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("idA", "idB")
+    val pairs = Dedup.connectedComponents(
+      Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("idA", "idB"), "idA", "idB")
     val df = Seq(
       (1L, 0.1), (2L, 0.9), (3L, 0.5),   // 2 wins cluster 1
       (4L, 0.7), (5L, 0.7),              // tie → 4 wins
       (6L, 0.0)).toDF("id", "score")
-    val kept = Dedup.keepBestByComponent(df, "id", "score", pairs)
+    val kept = Dedup.keepBestByComponentFrom(df, "id", "score", pairs)
       .collect().map(_.getLong(0)).toSet
     assert(kept === Set(2L, 4L, 6L))
     // an all-null-score cluster keeps its smallest id, not nothing
@@ -528,14 +522,14 @@ class DedupSpec extends SparkSpec {
       (1L, Option(0.1)), (2L, Option(0.9)), (3L, Option(0.5)),
       (4L, None: Option[Double]), (5L, None: Option[Double]),
       (6L, Option(0.0))).toDF("id", "score")
-    val keptN = Dedup.keepBestByComponent(dfn, "id", "score", pairs)
+    val keptN = Dedup.keepBestByComponentFrom(dfn, "id", "score", pairs)
       .collect().map(_.getLong(0)).toSet
     assert(keptN === Set(2L, 4L, 6L))
     // a null score LOSES to any scored member, whatever the ids
     val dfm = Seq((1L, None: Option[Double]), (2L, Option(-5.0)),
       (3L, Option(-9.0)), (4L, Option(1.0)), (5L, Option(2.0)),
       (6L, Option(0.0))).toDF("id", "score")
-    val keptM = Dedup.keepBestByComponent(dfm, "id", "score", pairs)
+    val keptM = Dedup.keepBestByComponentFrom(dfm, "id", "score", pairs)
       .collect().map(_.getLong(0)).toSet
     assert(keptM === Set(2L, 5L, 6L))
   }
@@ -603,22 +597,6 @@ class DedupSpec extends SparkSpec {
     assert(pref === Map((1L, 2L) -> 1L, (1L, 3L) -> 0L))
   }
 
-  test("nearDupPairsEditDistance finds the banded near-identical " +
-      "pair within maxDist and excludes unrelated docs") {
-    import spark.implicits._
-    val base = "the quick brown fox jumps over the lazy dog " * 4
-    val df = Seq(
-      (1L, base + "alpha beta gamma"),
-      (2L, base + "alpha beta gamm"),
-      (3L, "completely different text about spark shuffles and " +
-        "partitions with no shared shingles at all whatsoever here")
-    ).toDF("doc_id", "text")
-    val got = Dedup.nearDupPairsEditDistance(df, "doc_id", "text",
-      maxDist = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.toSeq === Seq((1L, 2L, 1L)))
-  }
-
   test("containmentPairsExact equals brute force at a non-dyadic " +
       "threshold, oriented smaller-set-first; catches the subset dup " +
       "Jaccard misses") {
@@ -631,8 +609,9 @@ class DedupSpec extends SparkSpec {
       .mkString(" ")
     val docs = docs0 :+ (500L -> span)
     val df = docs.toDF("id", "text")
-    val got = Dedup.containmentPairsExact(df, "id", "text",
-      shingleWidth = 3, threshold = 0.6)
+    val got = Dedup.containmentPairsExactFromTokens(
+      df.select(col("id"), explode(shingles(col("text"), 3)).as("tok"))
+        .distinct(), "id", "tok", threshold = 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
     val sh = df.select(col("id"),

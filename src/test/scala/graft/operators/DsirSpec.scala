@@ -66,13 +66,6 @@ class DsirSpec extends SparkSpec {
     assert(all.toSet === Set(1L, 2L, 3L, 4L), "k > rows keeps everything")
   }
 
-  test("selectTopK(gumbel=false) ranks purely by weight with id ties") {
-    val sel = Dsir.selectTopK(raw, target, "doc_id", "text", k = 2,
-      buckets = 512, gumbel = false)
-      .select("doc_id").as[Long].collect().toSet
-    assert(sel === Set(1L, 3L), s"expected the two target-like docs, got $sel")
-  }
-
   test("oracleRounding mode yields decimal weights equal to the double " +
       "path within 1e-6") {
     val llrD = Dsir.logRatioTable(target, raw, "text", 512,

@@ -8,7 +8,8 @@ class GraphSpec extends SparkSpec {
   test("degrees symmetrizes, drops self-loops, collapses parallels") {
     val e = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 3L))
       .toDF("src", "dst")
-    val out = Graph.degrees(e, "src", "dst").orderBy("node").collect()
+    // the 1-core keeps every node with its plain degree
+    val out = Graph.kCore(e, "src", "dst", k = 1).orderBy("node").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq === Seq((1L, 1L), (2L, 2L), (3L, 1L)))
   }

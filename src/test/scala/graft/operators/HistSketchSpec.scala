@@ -39,27 +39,6 @@ class HistSketchSpec extends SparkSpec {
     }
   }
 
-  test("merge is the exact monoid: sharded sketches equal the whole") {
-    val a = (0 until 700).map(i => (i % 97).toDouble)
-    val b = (0 until 300).map(i => (i % 53).toDouble)
-    val whole = HistSketch.sketch((a ++ b).toDF("v"), "v", 0.0, 100.0, 20)
-      .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    val merged = HistSketch.merge(Seq(
-      HistSketch.sketch(a.toDF("v"), "v", 0.0, 100.0, 20),
-      HistSketch.sketch(b.toDF("v"), "v", 0.0, 100.0, 20)))
-      .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    assert(merged === whole)
-    // and quantiles of the merged sketch equal quantiles of the whole
-    val qw = HistSketch.quantiles(
-      HistSketch.sketch((a ++ b).toDF("v"), "v", 0.0, 100.0, 20),
-      Seq(0.5)).head().getDouble(2)
-    val qm = HistSketch.quantiles(HistSketch.merge(Seq(
-      HistSketch.sketch(a.toDF("v"), "v", 0.0, 100.0, 20),
-      HistSketch.sketch(b.toDF("v"), "v", 0.0, 100.0, 20))),
-      Seq(0.5)).head().getDouble(2)
-    assert(qw === qm)
-  }
-
   test("empty input yields no quantile rows; out-of-range mass clamps " +
       "into edge buckets") {
     val empty = Seq.empty[Double].toDF("v")

@@ -13,10 +13,11 @@ class IvfBinarySpec extends SparkSpec {
   test("full-probe full-refine query is EXACTLY brute-force top-k") {
     val q = emb.filter($"vec_id" === 5).select("embedding")
       .head.getSeq[Float](0).toArray
-    val idx = IvfBinary.build(emb, "embedding", "vec_id", nClusters = 8,
-      maxIter = 4)
+    val idx = IvfBinary.buildWithCentroids(emb, "embedding", "vec_id",
+      IvfIndex.build(emb, "embedding", "vec_id", nClusters = 8,
+        maxIter = 4).centroids)
     val n = emb.count().toInt
-    val got = idx.query(q, k = 5, nprobe = idx.nCells, refineFactor = n)
+    val got = idx.query(q, k = 5, nprobe = idx.cells.length, refineFactor = n)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Similarity.topK(emb, "embedding", "vec_id", q, 5)
       .select("vec_id", "distance")
@@ -28,33 +29,14 @@ class IvfBinarySpec extends SparkSpec {
       "the top-k heap plan") {
     val q = emb.filter($"vec_id" === 2).select("embedding")
       .head.getSeq[Float](0).toArray
-    val idx = IvfBinary.build(emb, "embedding", "vec_id", nClusters = 8,
-      maxIter = 4)
+    val idx = IvfBinary.buildWithCentroids(emb, "embedding", "vec_id",
+      IvfIndex.build(emb, "embedding", "vec_id", nClusters = 8,
+        maxIter = 4).centroids)
     val plan = idx.query(q, k = 5, nprobe = 2, refineFactor = 1)
       .queryExecution.executedPlan.toString
     assert(plan.contains(IvfIndex.ClusterCol),
       s"cell filter missing:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"),
       s"candidate top-k lost:\n$plan")
-  }
-
-  test("fixed-centroid build matches the trained query path and " +
-      "round-trips through a partitioned table") {
-    val cents = emb.filter($"vec_id" < 4).orderBy("vec_id")
-      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-    val q = emb.filter($"vec_id" === 9).select("embedding")
-      .head.getSeq[Float](0).toArray
-    val idx = IvfBinary.buildWithCentroids(emb, "embedding", "vec_id",
-      cents)
-    val got = idx.query(q, k = 5, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfbq")
-      .toString
-    idx.writeTable(dir)
-    val re = IvfBinary.load(spark, dir, cents, emb, "embedding",
-      "vec_id")
-    val again = re.query(q, k = 5, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got === again, "reloaded index answers identically")
   }
 }

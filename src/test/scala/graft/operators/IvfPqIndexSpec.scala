@@ -44,15 +44,15 @@ class IvfPqIndexSpec extends SparkSpec {
     // rows of the same cell but different positions must not collapse:
     // residual quantization keeps within-cell structure
     val codes = index.table.select(PqIndex.CodeCol).distinct().count()
-    assert(codes > index.nCells,
-      s"only $codes distinct codes across ${index.nCells} cells")
+    assert(codes > index.cells.length,
+      s"only $codes distinct codes across ${index.cells.length} cells")
   }
 
   test("partitioned table prunes probed cells and reads only codes") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    index.writeTable(s"$dir/t")
-    val loaded = IvfPqIndex.load(spark, s"$dir/t", index.cells,
-      index.codebooks, emb, "embedding", "vec_id")
+    IvfPqIndex.save(index, s"$dir/t")
+    val loaded = IvfPqIndex.loadSaved(spark, s"$dir/t", emb, "embedding",
+      "vec_id")
     val q = queries.head
     assert(loaded.query(q, 10, nprobe = 8, refineFactor = 50)
       .collect().map(_.getLong(0)).toSeq == bruteTop(q, 10))
@@ -62,32 +62,6 @@ class IvfPqIndexSpec extends SparkSpec {
       s"probed scan not pruned:\n$plan")
     assert(!plan.contains("embedding#"),
       s"ADC scan reads raw vectors:\n$plan")
-  }
-
-  test("IVF-OPQ: rotated-residual codes answer exactly at full " +
-      "probe/refine and keep recall with the compressed scan") {
-    val opq = IvfPqIndex.buildOpq(emb, "embedding", "vec_id",
-      nClusters = 8, m = 8, codesPerBook = 32, opqIters = 2)
-    assert(opq.rotation.nonEmpty)
-    val q = queries.head
-    // exact at full probe + generous refine — the re-rank runs in the
-    // ORIGINAL space, so the rotation must not leak into results
-    assert(opq.query(q, 10, nprobe = 8, refineFactor = 50)
-      .collect().map(_.getLong(0)).toSeq == bruteTop(q, 10))
-    // compressed-scan recall stays in the same band as plain IVF-PQ on
-    // the SAME queries (this synthetic corpus is near-isotropic, so
-    // the rotation neither helps nor may it hurt much)
-    def recall(idx: IvfPqIndex, qq: Array[Float]): Double = {
-      val got = idx.query(qq, 10, nprobe = 5, refineFactor = 8)
-        .collect().map(_.getLong(0)).toSet
-      val want = bruteTop(qq, 10).toSet
-      (got & want).size.toDouble / want.size
-    }
-    val qs = queries.take(5)
-    val meanOpq = qs.map(recall(opq, _)).sum / qs.size
-    val meanPlain = qs.map(recall(index, _)).sum / qs.size
-    assert(meanOpq >= meanPlain - 0.15,
-      s"IVF-OPQ recall $meanOpq far below plain IVF-PQ $meanPlain")
   }
 
   test("cells and codebooks are bit-identical for 1 and 7 input " +

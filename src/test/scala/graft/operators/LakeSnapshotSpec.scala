@@ -58,13 +58,23 @@ class LakeSnapshotSpec extends SparkSpec {
     val root = tmp()
     Lake.commitSnapshot(spark, root,
       Seq((1L, "a", 1L)).toDF("id", "v", "n"), Seq("id"))
-    val gen0Files = Lake.fileStats(spark, s"$root/gen=0")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    // gen=0's data files (hidden and `_` metadata files excluded) with
+    // their sizes
+    def gen0: Set[(String, Long)] = {
+      import java.nio.file.{Files, Paths}
+      import scala.jdk.CollectionConverters._
+      val it = Files.walk(Paths.get(s"$root/gen=0"))
+      try it.iterator().asScala.filter { f =>
+        val name = f.getFileName.toString
+        Files.isRegularFile(f) && !name.startsWith("_") &&
+          !name.startsWith(".")
+      }.map(f => (f.toString, Files.size(f))).toSet
+      finally it.close()
+    }
+    val gen0Files = gen0
     Lake.commitSnapshot(spark, root,
       Seq((2L, "b", 2L)).toDF("id", "v", "n"), Seq("id"))
-    assert(Lake.fileStats(spark, s"$root/gen=0")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      == gen0Files, "a commit must not touch prior generations")
+    assert(gen0 == gen0Files, "a commit must not touch prior generations")
     val plan = Lake.readAsOf(spark, root, Seq("id"), 0L)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), plan)

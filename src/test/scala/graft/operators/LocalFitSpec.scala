@@ -28,6 +28,22 @@ class LocalFitSpec extends SparkSpec {
     assert(got.map(_.toSeq).toSeq == want.toSeq)
   }
 
+  test("an empty sample of a one-row frame names sampleFraction and the " +
+      "seed; an empty frame is still named as empty") {
+    import spark.implicits._
+    val one = Seq((1L, Array(1f, 2f))).toDF("id", "v")
+    def err(df: org.apache.spark.sql.DataFrame, fraction: Double): String =
+      intercept[IllegalArgumentException] {
+        LocalFit.trainingSample(df, "v", "id", 42L, fraction, 2, "test")
+      }.getMessage
+    assert(one.sample(0.001, 42L).isEmpty, "fixture: the sample must be empty")
+    val m = err(one, 0.001)
+    assert(m.contains("sampleFraction = 0.001") && m.contains("seed 42") &&
+      !m.contains("on an empty frame"), m)
+    for (fraction <- Seq(0.001, 1.0))
+      assert(err(one.limit(0), fraction).contains("on an empty frame"))
+  }
+
   test("below the cap the sample is the whole frame in hash order") {
     val full = LocalFit.hashOrdered(vecs, 42L).map(_.toSeq)
     assert(LocalFit.trainingSample(emb, "embedding", "vec_id", 42L, 1.0, 100,

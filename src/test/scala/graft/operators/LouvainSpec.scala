@@ -59,24 +59,6 @@ class LouvainSpec extends SparkSpec {
     assert(out.count() === 7)
   }
 
-  test("iterated moves from singletons improve modularity and are deterministic") {
-    // two 4-cliques bridged by one edge
-    val k4a = for (i <- 1 to 4; j <- (i + 1) to 4) yield (s"a$i", s"a$j")
-    val k4b = for (i <- 1 to 4; j <- (i + 1) to 4) yield (s"b$i", s"b$j")
-    val edges = (k4a ++ k4b :+ ("a1", "b1")).toDF("u", "v")
-    def qSum(labels: org.apache.spark.sql.DataFrame): Double =
-      Graph.modularity(edges, "u", "v", labels, "node", "label")
-        .agg(sum("q_term")).collect().head.getDouble(0)
-    val singletons = edges.select($"u".as("node")).union(
-        edges.select($"v")).distinct()
-      .select($"node", $"node".as("label"))
-    val moved = Graph.louvainMoves(edges, "u", "v", rounds = 3)
-    assert(qSum(moved) > qSum(singletons))
-    val again = Graph.louvainMoves(edges, "u", "v", rounds = 3)
-    assert(moved.except(again).count() === 0 &&
-      again.except(moved).count() === 0)
-  }
-
   test("weighted move round with unit weights equals the unweighted round") {
     val weighted = Graph.louvainMoveRoundWeighted(
       triEdges.withColumn("w", lit(1L)), "u", "v", "w",

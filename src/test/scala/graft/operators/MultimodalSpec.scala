@@ -1,8 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.HashEmbedder
-import graft.functions.Embed
 
 import java.awt.Color
 import java.awt.image.BufferedImage
@@ -67,68 +65,6 @@ class MultimodalSpec extends SparkSpec {
     assert(metas("broken.png") == (None, "png"))
   }
 
-  test("resizeImages resamples real pixels to the target dimensions") {
-    val df = Multimodal.resizeImages(
-      Multimodal.readBinaryDir(spark, dir), "content", 16, 12)
-    val out = df.select(element_at(split(col("path"), "/"), -1).as("f"),
-        col("resized")).collect()
-      .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Array[Byte]]))
-      .toMap
-    // decodable images come back as real 16x12 PNGs
-    for (f <- Seq("a.png", "b.png", "c.jpg")) {
-      val img = ImageIO.read(new java.io.ByteArrayInputStream(out(f).get))
-      assert(img.getWidth == 16 && img.getHeight == 12, s"$f dims")
-    }
-    // corrupt payload → null, not a crash
-    assert(out("broken.png").isEmpty)
-  }
-
-  test("ImageGridEmbedder pools real pixels; similar images are closer") {
-    val dim = 64
-    val e = ImageGridEmbedder(dim = dim)
-    val img1 = encode(makeImage(48, 32, 1), "png")
-    // same content re-encoded at a different size → similar grid
-    val img1big = encode(makeImage(96, 64, 1), "png")
-    val img2 = encode(makeImage(64, 64, 9), "png")
-    val Seq(v1, v1b, v2) = e.embedBytes(Seq(img1, img1big, img2))
-    assert(v1.length == dim)
-    def cos(a: Array[Float], b: Array[Float]): Double =
-      a.zip(b).map { case (x, y) => x.toDouble * y }.sum
-    assert(math.abs(cos(v1, v1) - 1.0) < 1e-5) // unit norm
-    assert(cos(v1, v1b) > 0.99, s"scale-invariant: ${cos(v1, v1b)}")
-    assert(cos(v1, v1b) > cos(v1, v2))
-    // non-image bytes take the hash fallback deterministically
-    val junk = Array.tabulate[Byte](100)(_.toByte)
-    val Seq(f1, f2) = e.embedBytes(Seq(junk, junk))
-    assert(f1.sameElements(f2))
-  }
-
-  test("binary embedding: deterministic, unit-norm, right dim") {
-    val df = Multimodal.embedBinaryColumn(
-      Multimodal.readBinaryDir(spark, dir), "content", "vector",
-      HashBinaryEmbedder(dim = 32))
-    val vecs = df.select("vector").collect().map(_.getSeq[Float](0))
-    assert(vecs.forall(_.length == 32))
-    vecs.foreach { v =>
-      val n = math.sqrt(v.map(x => x.toDouble * x).sum)
-      assert(math.abs(n - 1.0) < 1e-5)
-    }
-    // distinct payloads → distinct vectors
-    assert(vecs.map(_.toSeq).distinct.length == 4)
-  }
-
-  test("frame sampling explodes one row per sampled frame") {
-    val df = Multimodal.sampleFrames(
-      Multimodal.readBinaryDir(spark, dir, "broken.png"), "content",
-      everyNth = 1, frameSize = 64)
-    // 264-byte file → 4 frames
-    assert(df.count() == 4)
-    val idx = df.select("frame_idx").distinct().collect()
-      .map(_.getInt(0)).sorted
-    assert(idx.sameElements(Array(0, 1, 2, 3)))
-    assert(df.filter(length(col("frame_bytes")) =!= 64).count() == 0)
-  }
-
   test("VideoCodec: container round-trips; meta, lazy frame iterator " +
       "and truncation-safety") {
     val frames = (1 to 6).map(i => encode(makeImage(24, 16, i), "png"))
@@ -171,7 +107,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("video pipeline end-to-end: binaryFile source → meta → frame " +
-      "sampling → REAL image decode → embedding") {
+      "sampling → REAL image decode") {
     val d = Files.createTempDirectory("graft-vid")
     (1 to 2).foreach { v =>
       val frames = (0 until 8).map(i =>
@@ -195,36 +131,6 @@ class MultimodalSpec extends SparkSpec {
       ImageCodec.decode(bytes).map(im => (im.getWidth, im.getHeight))
     }
     assert(dims.forall(_.contains((32, 32))))
-    // and feeds the image embedder unchanged
-    val emb = Multimodal.embedBinaryColumn(sampled, "frame_bytes", "vec",
-      ImageGridEmbedder(dim = 16))
-    assert(emb.count() == 6)
-    assert(emb.select("vec").collect()
-      .forall(_.getSeq[Float](0).length == 16))
-  }
-
-  test("mixed text+binary table embeds and k-NNs end-to-end") {
-    import spark.implicits._
-    val dim = 64
-    val binVecs = Multimodal.embedBinaryColumn(
-      Multimodal.readBinaryDir(spark, dir), "content", "vector",
-      ImageGridEmbedder(dim = dim))
-      .select(col("path").as("target"), lit("image").as("modality"),
-        col("vector"))
-    val texts = Seq("spark vector search", "catalyst optimizer rules")
-      .toDF("target").withColumn("modality", lit("text"))
-    val textVecs = Embed.embedColumn(texts, "target", "vector",
-      HashEmbedder(dim = dim, normalized = true), batchSize = 8)
-      .select("target", "modality", "vector")
-    val corpus = binVecs.unionByName(textVecs)
-    assert(corpus.count() == 6)
-    // query with one of the image vectors: itself comes back first
-    val q = binVecs.orderBy("target").select("vector")
-      .head.getSeq[Float](0).toArray
-    val top = Similarity.topK(corpus, "vector", "target", q, k = 2)
-      .collect()
-    assert(top.head.getAs[String]("modality") == "image")
-    assert(top.head.getAs[Double]("distance") == 0.0)
   }
 
   private def sineWav(rate: Int, hz: Double, seconds: Double,
@@ -283,28 +189,5 @@ class MultimodalSpec extends SparkSpec {
     assert(math.abs(f.getDouble(1) - 0.5 / math.sqrt(2)) < 0.01) // rms
     assert(math.abs(f.getDouble(2) - 0.5) < 0.01) // peak
     assert(math.abs(f.getDouble(3) - 2 * 440.0 / 8000) < 0.005) // zcr
-  }
-
-  test("AudioEnvelopeEmbedder: real envelope pooling separates loud " +
-      "front from loud tail; corrupt bytes fall back deterministically") {
-    val rate = 8000
-    val n = 8000
-    // loud first half vs loud second half — envelopes must differ
-    def halfLoud(frontLoud: Boolean): Array[Byte] = {
-      val s = Array.tabulate(n) { i =>
-        val loud = if (i < n / 2) frontLoud else !frontLoud
-        val amp = if (loud) 0.8 else 0.05
-        (math.sin(2 * math.Pi * 300 * i / rate) * amp * 32767).toShort
-      }
-      AudioCodec.synthWavPcm16(rate, s)
-    }
-    val e = AudioEnvelopeEmbedder(dim = 16)
-    val Seq(front, tail) = e.embedBytes(Seq(halfLoud(true), halfLoud(false)))
-    val frontAgain = e.embedBytes(Seq(halfLoud(true))).head
-    assert(front.toSeq == frontAgain.toSeq) // deterministic
-    // front-loud: higher energy in early windows
-    assert(front(0) > front(15) && tail(15) > tail(0))
-    val corrupt = e.embedBytes(Seq(Array[Byte](9, 9, 9, 9)))
-    assert(corrupt.head.length == 16)
   }
 }

@@ -34,20 +34,11 @@ class OutliersSpec extends SparkSpec {
     assert(out.count { case (_, v, w) => w < v } >= 10)
   }
 
-  test("trim keeps exactly the in-range rows, inclusive bounds") {
-    val kept = Outliers.trim(data, Seq("k"), "v", 0.1, 0.9)
-      .where(col("k") === "a").select("v").as[Double].collect().sorted
-    val as = (1 to 100).map(_.toDouble)
-    val (lo, hi) = (q7(as, 0.1), q7(as, 0.9))
-    assert(kept.toSeq == as.filter(v => v >= lo && v <= hi))
-  }
-
-  test("null values pass through winsorize and are dropped by trim") {
+  test("null values pass through winsorize") {
     val df = Seq(("a", Some(1.0)), ("a", None), ("a", Some(100.0)),
       ("a", Some(50.0))).toDF("k", "v")
     val w = Outliers.winsorize(df, Seq("k"), "v", 0.0, 1.0)
     assert(w.where(col("winsorized").isNull).count() == 1)
-    assert(Outliers.trim(df, Seq("k"), "v", 0.0, 1.0).count() == 3)
   }
 
   test("keys are independent: one key's outliers don't move another's cuts") {
@@ -74,7 +65,9 @@ class OutliersSpec extends SparkSpec {
     def z(v: Double) = 0.6745 * (v - 5.5) / 2.5
     for (v <- Seq(1.0, 5.0, 100.0))
       assert(math.abs(scores(v) - z(v)) < 1e-12, s"$v -> ${scores(v)}")
-    val flagged = Outliers.madOutliers(df, Seq("k"), "v")
+    // the Iglewicz–Hoaglin cut, |z| > 3.5
+    val flagged = Outliers.madScore(df, Seq("k"), "v")
+      .where(abs(col("mad_z")) > 3.5)
       .select("v").as[Double].collect().toSeq
     assert(flagged == Seq(100.0)) // z(100) = 25.5, z(9) = 0.94
   }
@@ -85,7 +78,7 @@ class OutliersSpec extends SparkSpec {
       .toDF("k", "v")
     val s = Outliers.madScore(df, Seq("k"), "v")
     assert(s.where(col("mad_z").isNotNull).count() == 0)
-    assert(Outliers.madOutliers(df, Seq("k"), "v").count() == 0)
+    assert(s.where(abs(col("mad_z")) > 3.5).count() == 0)
   }
 
   test("madScore keys are independent and nulls score null") {

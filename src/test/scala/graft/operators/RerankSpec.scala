@@ -77,19 +77,20 @@ class RerankSpec extends SparkSpec {
       codesPerBook = 4, seed = seed, sampleFraction = sampleFraction)
     val ivfSq = IvfSqIndex.build(frame, "v", "id", nClusters = 4,
       seed = seed, sampleFraction = sampleFraction)
-    val ivfBq = IvfBinary.build(frame, "v", "id", nClusters = 4,
-      seed = seed, sampleFraction = sampleFraction)
+    val ivfBq = IvfBinary.buildWithCentroids(frame, "v", "id",
+      IvfIndex.build(frame, "v", "id", nClusters = 4, seed = seed,
+        sampleFraction = sampleFraction).centroids)
     val rsq = PcaReduce.fitSq(frame, "v", "id", k = 4)
     Seq(
       Entry("PqIndex", None, (k, rf, _) => pq.query(q, k, rf)),
       Entry("RotatedPqIndex", None, (k, rf, _) => rpq.query(q, k, rf)),
       Entry("SqIndex", None, (k, rf, _) => sq.query(q, k, rf)),
       Entry("BinaryQuantIndex", None, (k, rf, _) => bq.query(q, k, rf)),
-      Entry("IvfPqIndex", Some(ivfPq.nCells),
+      Entry("IvfPqIndex", Some(ivfPq.cells.length),
         (k, rf, np) => ivfPq.query(q, k, np, rf)),
-      Entry("IvfSqIndex", Some(ivfSq.nCells),
+      Entry("IvfSqIndex", Some(ivfSq.cells.length),
         (k, rf, np) => ivfSq.query(q, k, np, rf)),
-      Entry("IvfBinaryIndex", Some(ivfBq.nCells),
+      Entry("IvfBinaryIndex", Some(ivfBq.cells.length),
         (k, rf, np) => ivfBq.query(q, k, np, rf)),
       Entry("Matryoshka.topK", None, (k, rf, _) =>
         Matryoshka.topK(frame, "v", "id", q, dims = 4, k = k,

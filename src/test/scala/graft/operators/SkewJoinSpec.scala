@@ -30,13 +30,4 @@ class SkewJoinSpec extends SparkSpec {
     assert(out.count() == 3)
     assert(out.filter(col("p").isNull).count() == 1)
   }
-
-  test("skew profile surfaces heavy hitters in order") {
-    import spark.implicits._
-    val df = (Seq.fill(50)("hot") ++ Seq.fill(10)("warm") ++ Seq("cold"))
-      .toDF("key")
-    val prof = SkewJoin.keySkewProfile(df, "key", topN = 2).collect()
-    assert(prof.map(_.getString(0)).toSeq == Seq("hot", "warm"))
-    assert(prof.head.getLong(1) == 50)
-  }
 }

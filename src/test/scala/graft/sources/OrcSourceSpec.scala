@@ -14,7 +14,7 @@ class OrcSourceSpec extends SparkSpec {
     val dir = Files.createTempDirectory("orc_spec").toString
     val src = Seq((1L, "a", 10), (2L, "b", 20), (3L, null, 30))
       .toDF("id", "name", "v")
-    OrcSource.write(src, dir)
+    src.write.mode("overwrite").orc(dir)
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("name", StringType), StructField("v", IntegerType)))
     val back = OrcSource.read(spark, dir, Some(schema))

@@ -519,40 +519,6 @@ class VectorStoreSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
-  test("compactBuckets rewrites accumulated append files into one set") {
-    import spark.implicits._
-    val tbl = "graft_store_spec_compact"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val store = new VectorStore(spark, HashEmbedder(dim = 8),
-      bucketedTable = Some(tbl), numBuckets = 2)
-    try {
-      store.setData(Seq(("a", "1")).toDF("target", "option1"))
-      for (i <- 2 to 5)
-        store.setData(Seq((s"t$i", i.toString)).toDF("target", "option1"),
-          append = true)
-      def fileCount: Long = {
-        val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $tbl").collect()
-          .find(_.getString(0) == "Location").get.getString(1)
-        java.nio.file.Files.walk(
-          java.nio.file.Paths.get(new java.net.URI(loc)))
-          .filter(_.toString.endsWith(".parquet")).count()
-      }
-      val before = fileCount
-      val rowsBefore = store.data.collect()
-        .map(r => r.getString(1) -> r.getLong(0)).toMap
-      store.compactBuckets()
-      assert(fileCount < before, s"no compaction: $before -> $fileCount")
-      // rows and ids survive byte-identical
-      val rowsAfter = store.data.collect()
-        .map(r => r.getString(1) -> r.getLong(0)).toMap
-      assert(rowsAfter == rowsBefore)
-      // still bucketed: follow-up appends keep working
-      store.setData(Seq(("zz", "6")).toDF("target", "option1"),
-        append = true)
-      assert(store.data.count() == 6)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
-  }
-
   test("bucketed and path modes are mutually exclusive") {
     intercept[IllegalArgumentException] {
       new VectorStore(spark, HashEmbedder(dim = 8), path = Some("/tmp/x"),

@@ -10,233 +10,6 @@ import java.sql.Timestamp
 class StreamIngestSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
-  test("streaming ingest: micro-batches append with first-wins dedup") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(String, String)]
-    val stream = source.toDF().toDF("target", "option1")
-    val store = new VectorStore(spark, HashEmbedder(dim = 8))
-    val q = StreamIngest.intoStore(stream, store)
-    try {
-      source.addData(("a", "batch1"), ("b", "batch1"))
-      q.processAllAvailable()
-      assert(store.data.count() == 2)
-      // overlap across batches: existing rows win
-      source.addData(("b", "batch2"), ("c", "batch2"))
-      q.processAllAvailable()
-      val byTarget = store.data.collect()
-        .map(r => r.getString(1) -> r.getString(2)).toMap
-      assert(byTarget == Map("a" -> "batch1", "b" -> "batch1", "c" -> "batch2"))
-      // ids stay sequential across micro-batches
-      assert(store.data.select(max("id")).head.getLong(0) == 3L)
-    } finally q.stop()
-  }
-
-  test("streamingFirstWins: custom-state dedup across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(String, String)]
-    val deduped = StreamIngest.streamingFirstWins(
-      source.toDF().toDF("key", "payload"), "key")
-    val q = deduped.writeStream.format("memory")
-      .queryName("dedup_out").outputMode("append").start()
-    try {
-      source.addData(("a", "b1"), ("b", "b1"))
-      q.processAllAvailable()
-      source.addData(("a", "b2"), ("c", "b2")) // a is a dup across batches
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT key, payload FROM dedup_out ORDER BY key")
-        .collect().map(r => r.getString(0) -> r.getString(1))
-      assert(rows.toSeq == Seq("a" -> "b1", "b" -> "b1", "c" -> "b2"))
-    } finally q.stop()
-  }
-
-  test("streamingFirstWins: -0.0 and 0.0 double keys share one group, " +
-      "matching SQL grouping and the batch first-wins ingest") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(Double, String)]
-    val deduped = StreamIngest.streamingFirstWins(
-      source.toDF().toDF("key", "payload"), "key")
-    val q = deduped.writeStream.format("memory")
-      .queryName("dedup_zero_out").outputMode("append").start()
-    try {
-      source.addData((0.0, "pos")) // first batch: positive zero wins
-      q.processAllAvailable()
-      source.addData((-0.0, "neg"), (1.5, "other"),
-        (Double.NaN, "nan1"))
-      q.processAllAvailable()
-      source.addData((Double.NaN, "nan2")) // NaN is one group too
-      q.processAllAvailable()
-      val rows = spark.sql(
-        "SELECT payload FROM dedup_zero_out ORDER BY payload")
-        .collect().map(_.getString(0)).toSeq
-      assert(rows == Seq("nan1", "other", "pos"),
-        "-0.0 must dedup against 0.0; a second NaN must dedup too")
-    } finally q.stop()
-  }
-
-  test("streamingFirstWins: a binary key fails loudly (identity-based " +
-      "toString would silently never deduplicate)") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(Array[Byte], String)]
-    val err = intercept[IllegalArgumentException] {
-      StreamIngest.streamingFirstWins(
-        source.toDF().toDF("key", "payload"), "key")
-    }
-    assert(err.getMessage.contains("atomic non-binary"))
-    // array keys are equally identity-unreliable as group strings
-    val arrSource = MemoryStream[(Seq[Int], String)]
-    intercept[IllegalArgumentException] {
-      StreamIngest.streamingFirstWins(
-        arrSource.toDF().toDF("key", "payload"), "key")
-    }
-  }
-
-  test("dedupWithinHorizon: duplicates inside the horizon drop; a key " +
-      "recurring after the watermark passes is re-admitted") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(String, Timestamp, String)]
-    val deduped = StreamIngest.dedupWithinHorizon(
-      source.toDF().toDF("key", "ts", "payload"), "key", "ts",
-      horizon = "10 minutes")
-    val q = deduped.writeStream.format("memory")
-      .queryName("horizon_dedup_out").outputMode("append").start()
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    try {
-      // batch 1: a twice within the horizon -> one a survives
-      source.addData(("a", ts(0), "b1"), ("a", ts(1), "b1-dup"),
-        ("b", ts(2), "b1"))
-      q.processAllAvailable()
-      // batch 2: another a, still within horizon -> dropped; watermark
-      // advances to 50-10=40min, evicting a's and b's state
-      source.addData(("a", ts(3), "b2-dup"), ("x", ts(50), "b2"))
-      q.processAllAvailable()
-      // batch 3: a recurs AFTER the horizon -> re-admitted
-      source.addData(("a", ts(45), "b3"))
-      q.processAllAvailable()
-      val rows = spark.sql(
-        "SELECT key, payload FROM horizon_dedup_out ORDER BY key, payload")
-        .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
-      val (aRows, rest) = rows.partition(_._1 == "a")
-      // one "a" from batch 1 (either same-batch dup may win the
-      // first-wins race) + the re-admitted "b3"
-      assert(aRows.size === 2, s"got $rows")
-      assert(aRows.map(_._2).contains("b3"))
-      assert(aRows.map(_._2).exists(Set("b1", "b1-dup")))
-      assert(rest === Seq("b" -> "b1", "x" -> "b2"))
-    } finally q.stop()
-  }
-
-  test("sketchStream: streamed HLL registers equal the batch sketch " +
-      "exactly, whatever the batch boundaries") {
-    import spark.implicits._
-    import graft.operators.Hll
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[String]
-    val handle = StreamIngest.sketchStream(
-      source.toDF().toDF("v"), "v", m = 128, portableHash = true)
-    try {
-      assert(handle.registers.isEmpty, "no state before data")
-      source.addData((0 until 300).map(i => s"u$i"): _*)
-      handle.query.processAllAvailable()
-      source.addData((200 until 500).map(i => s"u$i"): _*) // overlap
-      handle.query.processAllAvailable()
-      source.addData((450 until 600).map(i => s"u$i"): _*)
-      handle.query.processAllAvailable()
-      val streamed = handle.registers.get.collect()
-        .map(r => r.getInt(0) -> r.getInt(1)).toMap
-      val whole = Hll.sketch((0 until 600).map(i => s"u$i").toDF("v"),
-        "v", 128, portableHash = true).collect()
-        .map(r => r.getInt(0) -> r.getInt(1)).toMap
-      assert(streamed === whole,
-        "monoid merge must make stream == batch, register for register")
-      val est = handle.estimate(128, portableHash = true).get
-      assert(math.abs(est - 600) / 600 < 0.3, s"estimate $est vs 600")
-    } finally handle.query.stop()
-  }
-
-  test("cmStream: streamed count-min equals the batch sketch exactly, " +
-      "topK surfaces planted heavy hitters, candidate state stays " +
-      "bounded") {
-    import spark.implicits._
-    import graft.operators.CountMin
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[String]
-    val handle = StreamIngest.cmStream(source.toDF().toDF("tok"), "tok",
-      depth = 4, width = 256, maxCandidates = 4, portableHash = true)
-    try {
-      assert(handle.sketch.isEmpty, "no state before data")
-      // batch 1: heavy "aaa"(30) + light noise; batch 2: heavy
-      // "bbb"(40) + more "aaa"; batch 3: long tail that evicts nothing
-      val b1 = Seq.fill(30)("aaa") ++ (0 until 10).map(i => s"n$i")
-      val b2 = Seq.fill(40)("bbb") ++ Seq.fill(15)("aaa")
-      val b3 = (10 until 30).map(i => s"n$i") ++ Seq.fill(5)("aaa")
-      source.addData(b1: _*); handle.query.processAllAvailable()
-      source.addData(b2: _*); handle.query.processAllAvailable()
-      source.addData(b3: _*); handle.query.processAllAvailable()
-      val streamed = handle.sketch.get.collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val whole = CountMin.sketch((b1 ++ b2 ++ b3).toDF("tok"), "tok",
-        depth = 4, width = 256, portableHash = true).collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-      assert(streamed === whole,
-        "bucket-sum monoid must make stream == batch")
-      val top = handle.topK(2).get.collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-      // CM never underestimates; with width 256 and ~110 values the
-      // planted heavies dominate any collision inflation
-      assert(top.map(_._1).toSeq === Seq("aaa", "bbb"),
-        s"top2 was ${top.toSeq}")
-      assert(top.toMap.apply("aaa") >= 50 && top.toMap.apply("bbb") >= 40)
-      // candidate set is bounded
-      assert(handle.candidates.get.count() <= 4)
-    } finally handle.query.stop()
-  }
-
-  test("dsirFilter: streaming weights match the batch operator and " +
-      "gate per micro-batch, statelessly") {
-    import spark.implicits._
-    import graft.operators.Dsir
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val target = Seq(
-      (100L, "the party of the first part agrees to the terms"),
-      (101L, "terms and conditions apply to the first party")
-    ).toDF("doc_id", "text")
-    val raw = Seq(
-      (1L, "the party of the first part agrees to the terms today"),
-      (2L, "lol random chatter about cats and memes"),
-      (3L, "buy cheap pills now click here")
-    ).toDF("doc_id", "text")
-    val llrTable = Dsir.logRatioTable(target, raw, "text", buckets = 512)
-    val llr = Dsir.llrMap(llrTable)
-    // batch weights as ground truth for the streaming fold
-    val batch = Dsir.importanceWeights(raw, "doc_id", "text", llrTable, 512)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val source = MemoryStream[(Long, String)]
-    val filtered = StreamIngest.dsirFilter(
-      source.toDF().toDF("doc_id", "text"), "text", llr, buckets = 512,
-      minLogWeight = 0.0)
-    val q = filtered.writeStream.format("memory")
-      .queryName("dsir_out").outputMode("append").start()
-    try {
-      source.addData((1L, "the party of the first part agrees to the terms today"),
-        (2L, "lol random chatter about cats and memes"))
-      q.processAllAvailable()
-      source.addData((3L, "buy cheap pills now click here"))
-      q.processAllAvailable()
-      val out = spark.sql("SELECT doc_id, dsir_logw FROM dsir_out")
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      // only the target-like doc clears 0
-      assert(out.keySet === Set(1L), s"kept: $out")
-      assert(math.abs(out(1L) - batch(1L)) < 1e-9,
-        s"streaming fold ${out(1L)} != batch ${batch(1L)}")
-      assert(batch(2L) < 0.0 && batch(3L) < 0.0)
-    } finally q.stop()
-  }
-
   test("nearDupIngest filters near-dups within and across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -357,134 +130,6 @@ class StreamIngestSpec extends SparkSpec {
       assert(filter.segments.head.eq(base))
       assert(filter.acceptedSignatures.count() == 5)
     } finally filter.query.stop()
-  }
-
-  test("streaming ingest into a BUCKETED store: appends write only " +
-      "fresh rows, dedup holds across batches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val tbl = "graft_stream_bucketed"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val source = MemoryStream[(String, String)]
-    val stream = source.toDF().toDF("target", "option1")
-    val store = new VectorStore(spark, HashEmbedder(dim = 8),
-      bucketedTable = Some(tbl), numBuckets = 4)
-    val q = StreamIngest.intoStore(stream, store)
-    try {
-      source.addData(("a", "batch1"), ("b", "batch1"))
-      q.processAllAvailable()
-      assert(store.data.count() == 2)
-      source.addData(("b", "batch2"), ("c", "batch2"))
-      q.processAllAvailable()
-      val byTarget = store.data.collect()
-        .map(r => r.getString(1) -> r.getString(2)).toMap
-      assert(byTarget == Map("a" -> "batch1", "b" -> "batch1",
-        "c" -> "batch2"))
-      assert(store.data.select(max("id")).head.getLong(0) == 3L)
-    } finally {
-      q.stop()
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    }
-  }
-
-  test("curationFilter: Gopher + pre-fit LM gate + PII scrub run " +
-      "statelessly over micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val stopPad = "the cat must be going to one of all and that they " +
-      "have fun with it "
-    val good = (stopPad * 5).trim + " mail me at bob@example.com"
-    val gibberish = ("qzx jzq xqz zqj " * 20).trim // wrong distribution
-    val bootstrap = Seq((0L, good)).toDF("id", "text")
-    val model = graft.operators.TextAnalysis.charBigramModel(
-      bootstrap, "text")
-    val source = MemoryStream[(Long, String)]
-    val filtered = StreamIngest.curationFilter(
-      source.toDF().toDF("id", "text"), "text", model,
-      minLmScore = -6.0)
-    val q = filtered.writeStream.format("memory")
-      .queryName("curation_out").outputMode("append").start()
-    try {
-      source.addData((1L, good), (2L, gibberish), (3L, "too short"))
-      q.processAllAvailable()
-      source.addData((4L, good)) // second batch: same stateless gate
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT id, text FROM curation_out ORDER BY id")
-        .collect().map(r => r.getLong(0) -> r.getString(1))
-      assert(rows.map(_._1).toSeq == Seq(1L, 4L))
-      assert(rows.forall(_._2.contains("<EMAIL>")),
-        "PII must be scrubbed on the accepted stream")
-    } finally q.stop()
-  }
-
-  test("full streaming pipeline: curation gate → incremental near-dup " +
-      "→ store append, end to end") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val padA = "the cat must be going to one of all and that they " +
-      "have fun with it "
-    val padB = "with all of the big and small words that we have to " +
-      "be sure about them "
-    val goodA = (padA * 5).trim + " contact bob@example.com please"
-    val goodB = (padB * 5).trim
-    // the same page fetched again under a new id — the crawl-dup case
-    // (signature-identical; the dedicated near-dup specs cover the
-    // within-hamming perturbation behavior)
-    val dupA = goodA
-    val gibberish = ("qzx jzq xqz zqj " * 20).trim
-    val model = graft.operators.TextAnalysis.charBigramModel(
-      Seq((0L, goodA), (1L, goodB)).toDF("id", "text"), "text")
-    val store = new VectorStore(spark, HashEmbedder(dim = 8))
-    val source = MemoryStream[(Long, String)]
-    val gated = StreamIngest.curationFilter(
-      source.toDF().toDF("id", "text"), "text", model, minLmScore = -6.0)
-    val filter = StreamIngest.nearDupIngest(gated, "id", "text",
-      survivors => store.setData(
-        survivors.select(col("text").as("target"),
-          col("id").cast("string").as("option1")), append = true))
-    try {
-      source.addData((1L, goodA), (2L, gibberish), (3L, "too short"))
-      filter.query.processAllAvailable()
-      source.addData((4L, dupA), (5L, goodB))
-      filter.query.processAllAvailable()
-      val rows = store.data.select("option1", "target").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      // 2 and 3 fail the quality gates; 4 near-dups accepted 1
-      assert(rows.keySet == Set("1", "5"), s"stored ${rows.keySet}")
-      // PII scrubbed BEFORE dedup/storage
-      assert(rows("1").contains("<EMAIL>") &&
-        !rows("1").contains("bob@example.com"))
-    } finally filter.query.stop()
-  }
-
-  test("intoIvfLayout: streaming cell assignment appends each batch " +
-      "into the partitioned layout") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.operators.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-s").toString
-    val centroids = Array(Array(0f, 0f), Array(10f, 10f))
-    val source = MemoryStream[(Long, Array[Float])]
-    val q = StreamIngest.intoIvfLayout(
-      source.toDF().toDF("vec_id", "embedding"), centroids, "embedding",
-      s"$dir/ivf")
-    try {
-      source.addData((1L, Array(0.1f, 0.2f)), (2L, Array(9.8f, 9.9f)))
-      q.processAllAvailable()
-      source.addData((3L, Array(0.3f, 0.1f)))
-      q.processAllAvailable()
-      val idx = IvfIndex.load(spark, s"$dir/ivf", centroids, "embedding",
-        "vec_id")
-      assert(idx.assigned.count() == 3)
-      // rows landed in their nearest cells' directories
-      val byCell = idx.assigned.select("vec_id", IvfIndex.ClusterCol)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(byCell == Map(1L -> 0, 2L -> 1, 3L -> 0))
-      // probing cell 0 alone finds the near neighbors without cell 1
-      val near = idx.query(Array(0f, 0f), k = 2, nprobe = 1)
-        .collect().map(_.getLong(0)).toSet
-      assert(near == Set(1L, 3L))
-    } finally q.stop()
   }
 
   test("stream-static enrichment: a stream joins against store contents") {
@@ -656,441 +301,5 @@ class StreamIngestSpec extends SparkSpec {
         (ms("2026-01-01 10:00:00"), ms("2026-01-01 10:00:30"), 2L),
         (ms("2026-01-01 10:05:00"), ms("2026-01-01 10:05:00"), 1L)))
     } finally q.stop()
-  }
-
-  test("watermarked windowed aggregation over an event stream") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(Timestamp, String, Double)]
-    val agg = StreamIngest.windowedAgg(
-      source.toDF().toDF("ts", "etype", "value"),
-      "ts", "etype", "value", windowLength = "1 hour")
-    val q = agg.writeStream.format("memory")
-      .queryName("win_agg").outputMode("complete").start()
-    try {
-      source.addData(
-        (Timestamp.valueOf("2026-01-01 10:10:00"), "click", 1.0),
-        (Timestamp.valueOf("2026-01-01 10:50:00"), "click", 2.0),
-        (Timestamp.valueOf("2026-01-01 11:10:00"), "click", 4.0),
-        (Timestamp.valueOf("2026-01-01 10:20:00"), "view", 8.0))
-      q.processAllAvailable()
-      val rows = spark.sql(
-        """SELECT date_format(window.start, 'HH:mm') s, etype, cnt, total
-          |FROM win_agg ORDER BY s, etype""".stripMargin).collect()
-      assert(rows.map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getDouble(3))).toSeq == Seq(
-        ("10:00", "click", 2L, 3.0), ("10:00", "view", 1L, 8.0),
-        ("11:00", "click", 1L, 4.0)))
-    } finally q.stop()
-  }
-
-  test("streaming sliding windows agree with the batch TimeWindows twin") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val agg = StreamIngest.slidingAgg(
-      source.toDF().toDF("ts", "etype", "value"),
-      "ts", "etype", "value", windowLength = "2 hours", slide = "1 hour")
-    val q = agg.writeStream.format("memory")
-      .queryName("slide_agg").outputMode("complete").start()
-    try {
-      val data = Seq(
-        (Timestamp.valueOf("2026-01-01 10:10:00"), "click", 1.0),
-        (Timestamp.valueOf("2026-01-01 10:50:00"), "click", 2.0),
-        (Timestamp.valueOf("2026-01-01 11:10:00"), "click", 4.0),
-        (Timestamp.valueOf("2026-01-01 10:20:00"), "view", 8.0))
-      source.addData(data: _*)
-      q.processAllAvailable()
-      val streamRows = spark.sql(
-        """SELECT unix_timestamp(window.start) * 1000000000 AS ws, etype,
-          |  cnt, total FROM slide_agg ORDER BY ws, etype""".stripMargin)
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getDouble(3))).toSeq
-      // batch twin over the same rows (ts as epoch nanos)
-      import spark.implicits._
-      val H = 3600L * 1000000000L
-      val batch = graft.operators.TimeWindows.slidingAgg(
-        data.map { case (t, e, v) => (t.getTime * 1000000L, e, v) }
-          .toDF("ts", "etype", "value"),
-        "ts", Seq("etype"), Seq("value"), lengthNs = 2 * H, slideNs = H)
-        .select((col("win_bucket") * H).as("ws"), col("etype"),
-          col("cnt"), col("sum_value"))
-        .orderBy("ws", "etype")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getDouble(3))).toSeq
-      assert(streamRows == batch)
-      // every event in two windows: totals double-count consistently
-      assert(streamRows.map(_._3).sum == 2 * data.size)
-    } finally q.stop()
-  }
-
-  test("sessionWindowAgg: built-in session windows split on the gap and " +
-      "seal on watermark; end = last event + gap") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(String, Timestamp)]
-    val out = StreamIngest.sessionWindowAgg(
-      source.toDF().toDF("user", "ts"), "user", "ts",
-      gap = "5 minutes", watermark = "1 minute")
-    val q = out.writeStream.format("memory").queryName("sess_win_out")
-      .outputMode("append").start()
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    try {
-      // u1: events at 0,3,4 (one session) then 20 (a second); u2: 1
-      source.addData(("u1", ts(0)), ("u1", ts(3)), ("u1", ts(4)),
-        ("u2", ts(1)), ("u1", ts(20)))
-      q.processAllAvailable()
-      // push the watermark far past every session close
-      source.addData(("wm", ts(90)))
-      q.processAllAvailable()
-      val rows = spark.sql(
-        """SELECT user, session_start, session_end, n_events
-          |FROM sess_win_out WHERE user != 'wm'
-          |ORDER BY user, session_start""".stripMargin)
-        .collect()
-        .map(r => (r.getString(0), r.getTimestamp(1), r.getTimestamp(2),
-          r.getLong(3))).toSeq
-      assert(rows === Seq(
-        ("u1", ts(0), ts(9), 3L), // end = last event 10:04 + 5min gap
-        ("u1", ts(20), ts(25), 1L),
-        ("u2", ts(1), ts(6), 1L)))
-    } finally q.stop()
-  }
-
-  test("streamingFunnel: in-order stream matches the batch funnel; " +
-      "out-of-window and wrong-order users never emit") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(String, String, Timestamp)]
-    val out = StreamIngest.streamingFunnel(
-      source.toDF().toDF("user", "etype", "ts"), "user", "etype", "ts",
-      Seq("view", "click", "purchase"), horizonMs = 10L * 60000L,
-      watermark = "1 minute")
-    val q = out.writeStream.format("memory").queryName("sfunnel_out")
-      .outputMode("append").start()
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    try {
-      // u1 converts across two triggers; u2 clicks before viewing
-      // (wrong order); u3 purchases outside the 10-minute horizon
-      source.addData(("u1", "view", ts(0)), ("u1", "click", ts(2)),
-        ("u2", "click", ts(0)), ("u2", "view", ts(1)),
-        ("u2", "purchase", ts(2)),
-        ("u3", "view", ts(0)), ("u3", "click", ts(1)))
-      q.processAllAvailable()
-      source.addData(("u1", "purchase", ts(5)),
-        ("u3", "purchase", ts(15))) // 15 > 0 + 10min horizon
-      q.processAllAvailable()
-      val rows = spark.sql(
-        "SELECT user, converted_at_ms FROM sfunnel_out ORDER BY user")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(rows === Seq(("u1", ts(5).getTime)))
-      // batch twin agrees on who converted (nanos domain)
-      val batchReach = graft.operators.Funnel.funnel(
-        Seq(("u1", "view", 0L), ("u1", "click", 2L), ("u1", "purchase", 5L),
-          ("u2", "click", 0L), ("u2", "view", 1L), ("u2", "purchase", 2L),
-          ("u3", "view", 0L), ("u3", "click", 1L), ("u3", "purchase", 15L))
-          .toDF("user", "etype", "ts"),
-        "user", "etype", "ts", Seq("view", "click", "purchase"), 10L)
-        .orderBy("step").collect().map(_.getLong(2)).toSeq
-      assert(batchReach === Seq(3L, 2L, 1L)) // final step: just u1
-    } finally q.stop()
-  }
-
-  test("streamingFunnel: two cycles in ONE trigger emit twice, and a " +
-      "key with data after its horizon passed the watermark does not " +
-      "crash the query") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(String, String, Timestamp)]
-    val out = StreamIngest.streamingFunnel(
-      source.toDF().toDF("user", "etype", "ts"), "user", "etype", "ts",
-      Seq("view", "purchase"), horizonMs = 10L * 60000L,
-      watermark = "1 minute")
-    val q = out.writeStream.format("memory").queryName("sfunnel2_out")
-      .outputMode("append").start()
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 ${10 + min / 60}%02d:${min % 60}%02d:00")
-    try {
-      // u1 converts twice inside one trigger — batch boundaries must
-      // not decide how many conversions exist
-      source.addData(("u1", "view", ts(0)), ("u1", "purchase", ts(1)),
-        ("u1", "view", ts(2)), ("u1", "purchase", ts(3)),
-        // u2 starts a funnel; the wm-advancer pushes the watermark
-        // far past u2's horizon
-        ("u2", "view", ts(0)), ("wm", "view", ts(120)))
-      q.processAllAvailable()
-      // u2 sends data again with its stored horizon (10 min from
-      // ts(0)) far below the current watermark (~ts(119)) — before
-      // the fix this threw 'timeout timestamp cannot be earlier than
-      // watermark' and killed the query; now the dead progress resets
-      // and this fresh view starts a new cycle that converts
-      source.addData(("u2", "view", ts(121)), ("u2", "purchase", ts(122)))
-      q.processAllAvailable()
-      assert(q.exception.isEmpty, s"query died: ${q.exception}")
-      val rows = spark.sql(
-        "SELECT user, converted_at_ms FROM sfunnel2_out ORDER BY user, converted_at_ms")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(rows === Seq(
-        ("u1", ts(1).getTime), ("u1", ts(3).getTime),
-        ("u2", ts(122).getTime)))
-    } finally q.stop()
-  }
-
-  test("streamingFunnel: an expired funnel resets IN-TRIGGER when a " +
-      "later event proves it dead — trigger packing cannot change output") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(String, String, Timestamp)]
-    val out = StreamIngest.streamingFunnel(
-      source.toDF().toDF("user", "etype", "ts"), "user", "etype", "ts",
-      Seq("view", "purchase"), horizonMs = 10L * 60000L,
-      watermark = "1 minute")
-    val q = out.writeStream.format("memory").queryName("sfunnel3_out")
-      .outputMode("append").start()
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 ${10 + min / 60}%02d:${min % 60}%02d:00")
-    try {
-      // all in ONE trigger: view@0 (goes stale), view@20 (past the
-      // 10-min horizon of view@0 — proves it dead, starts a new
-      // cycle), purchase@25 (within view@20's horizon) -> converts.
-      // Null-ts / null-type rows must be dropped, not NPE the query.
-      source.addData(("u1", "view", ts(0)), ("u1", "view", ts(20)),
-        ("u1", "purchase", ts(25)), ("u1", null, ts(26)),
-        ("u1", "view", null.asInstanceOf[Timestamp]))
-      q.processAllAvailable()
-      assert(q.exception.isEmpty, s"query died: ${q.exception}")
-      val rows = spark.sql("SELECT user, converted_at_ms FROM sfunnel3_out")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(rows === Seq(("u1", ts(25).getTime)))
-    } finally q.stop()
-  }
-
-  test("checkpoint restart: stateful dedup and funnel state survive a " +
-      "query stop + restart from the same checkpoint dir") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // memory sinks cannot recover from a checkpoint — restart tests
-    // must go through a fault-tolerant sink (foreachBatch), exactly
-    // as production would
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_").toString
-    val got = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[(String, String)]())
-    // --- stateful first-wins dedup across a restart ---
-    val source = MemoryStream[(String, String)]
-    def startQuery() = StreamIngest.streamingFirstWins(
-        source.toDF().toDF("key", "payload"), "key")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        df.collect().foreach(r =>
-          got.add((r.getString(0), r.getString(1))))
-      }
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    val q1 = startQuery()
-    try {
-      source.addData(("a", "b1"), ("b", "b1"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // restart from the SAME checkpoint: key state must persist, so a
-    // recurring "a" stays dropped while a fresh "c" passes
-    val q2 = startQuery()
-    try {
-      source.addData(("a", "b2-dup"), ("c", "b2"))
-      q2.processAllAvailable()
-      assert(q2.exception.isEmpty, s"restart died: ${q2.exception}")
-      import scala.jdk.CollectionConverters._
-      assert(got.asScala.toSeq.sorted ===
-        Seq(("a", "b1"), ("b", "b1"), ("c", "b2")))
-    } finally q2.stop()
-
-    // --- in-progress funnel state across a restart ---
-    val ckpt2 = java.nio.file.Files
-      .createTempDirectory("graft_ckpt2_").toString
-    val conv = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[(String, Long)]())
-    val fsrc = MemoryStream[(String, String, Timestamp)]
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    def startFunnel() = StreamIngest.streamingFunnel(
-        fsrc.toDF().toDF("user", "etype", "ts"), "user", "etype", "ts",
-        Seq("view", "purchase"), horizonMs = 60L * 60000L,
-        watermark = "1 minute")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        df.collect().foreach(r =>
-          conv.add((r.getString(0), r.getLong(1))))
-      }
-      .option("checkpointLocation", ckpt2)
-      .outputMode("append").start()
-    val f1 = startFunnel()
-    try {
-      fsrc.addData(("u1", "view", ts(0)))
-      f1.processAllAvailable()
-    } finally f1.stop()
-    val f2 = startFunnel()
-    try {
-      // the step-1 progress recorded before the stop must still be
-      // live: this purchase completes the funnel after the restart
-      fsrc.addData(("u1", "purchase", ts(5)))
-      f2.processAllAvailable()
-      assert(f2.exception.isEmpty, s"restart died: ${f2.exception}")
-      import scala.jdk.CollectionConverters._
-      assert(conv.asScala.toSeq === Seq(("u1", ts(5).getTime)))
-    } finally f2.stop()
-  }
-
-  test("intervalJoin: clicks attribute to same-key views within the " +
-      "interval; outside-window rows never pair") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val views = MemoryStream[(String, Timestamp, String)]
-    val clicks = MemoryStream[(String, Timestamp, String)]
-    val joined = StreamIngest.intervalJoin(
-      views.toDF().toDF("user", "ts", "page"),
-      clicks.toDF().toDF("user", "ts", "target"),
-      "user", "user", "ts", "ts",
-      lowerMs = 0L, upperMs = 10L * 60000L,
-      leftWatermark = "1 minute", rightWatermark = "1 minute")
-      .select(col("user"), col("left.page"), col("right.target"),
-        col("left.ts").as("vts"), col("right.ts").as("cts"))
-    val q = joined.writeStream.format("memory").queryName("ij_out")
-      .outputMode("append").start()
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    try {
-      views.addData(("u1", ts(0), "home"), ("u1", ts(20), "docs"),
-        ("u2", ts(0), "home"))
-      // c1 in u1/home's window; c2 15min after home (outside) and
-      // 5min BEFORE docs (negative lag — excluded by lower bound 0);
-      // c3 in u1/docs' window; u3 has no view at all
-      clicks.addData(("u1", ts(5), "c1"), ("u1", ts(15), "c2"),
-        ("u1", ts(25), "c3"), ("u3", ts(5), "cx"))
-      q.processAllAvailable()
-      val rows = spark.sql(
-        "SELECT user, page, target FROM ij_out ORDER BY user, page, target")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-      assert(rows === Seq(
-        ("u1", "docs", "c3"), ("u1", "home", "c1")))
-      // guard: inverted interval rejected
-      intercept[IllegalArgumentException] {
-        StreamIngest.intervalJoin(
-          views.toDF().toDF("user", "ts", "page"),
-          clicks.toDF().toDF("user", "ts", "target"),
-          "user", "user", "ts", "ts", 10L, 0L)
-      }
-    } finally q.stop()
-  }
-
-  test("streamingDau: accumulated per-day distinct-user counts EQUAL " +
-      "the batch distinct count across micro-batches, re-events " +
-      "within the horizon never double-count") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(Long, Timestamp)]
-    val dau = StreamIngest.streamingDau(
-      source.toDF().toDF("user_id", "ts"), "user_id", "ts",
-      horizon = "1 day")
-    val q = dau.writeStream.format("memory")
-      .queryName("dau_out").outputMode("complete").start()
-    val rows = Seq(
-      (1L, Timestamp.valueOf("2026-01-01 09:00:00")),
-      (2L, Timestamp.valueOf("2026-01-01 10:00:00")),
-      (1L, Timestamp.valueOf("2026-01-01 11:00:00")), // same user-day
-      (3L, Timestamp.valueOf("2026-01-02 09:00:00")),
-      (1L, Timestamp.valueOf("2026-01-02 10:00:00")),
-      (1L, Timestamp.valueOf("2026-01-02 10:30:00")), // same user-day
-      (2L, Timestamp.valueOf("2026-01-02 23:00:00")))
-    try {
-      source.addData(rows.take(3))
-      q.processAllAvailable()
-      source.addData(rows.drop(3))
-      q.processAllAvailable()
-      val got = spark.sql("SELECT day, dau FROM dau_out ORDER BY day")
-        .collect().map(r => (r.getTimestamp(0), r.getLong(1)))
-      // batch truth: distinct (user, day) counted per day
-      val want = rows.toDF("user_id", "ts")
-        .select($"user_id",
-          org.apache.spark.sql.functions.window($"ts", "1 day")("start")
-            .as("day"))
-        .distinct().groupBy("day")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("dau"))
-        .orderBy("day").collect()
-        .map(r => (r.getTimestamp(0), r.getLong(1)))
-      assert(got.toSeq === want.toSeq,
-        s"streaming DAU must equal the batch distinct count: " +
-          s"got ${got.toSeq} want ${want.toSeq}")
-      assert(got.map(_._2).toSeq === Seq(2L, 3L))
-    } finally q.stop()
-  }
-
-  test("streamingQuotaSample: bounded per-key reservoir matches the " +
-      "batch quotaSample of the full stream, across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val quotas = Map("en" -> 3L, "de" -> 2L)
-    val source = MemoryStream[(String, Long)]
-    val sampled = StreamIngest.streamingQuotaSample(
-      source.toDF().toDF("lang", "doc_id"), "lang", "doc_id", quotas)
-    val q = sampled.toDF("lang", "ids").writeStream
-      .format("memory").queryName("qsample_out")
-      .outputMode("update").start()
-    def batchTwin(rows: Seq[(String, Long)]): Map[String, Seq[Long]] =
-      graft.operators.Sampling.quotaSample(
-        rows.toDF("lang", "doc_id"), "doc_id", "lang", quotas,
-        materialize = false)
-        .collect().map(r => r.getString(0) -> r.getLong(1))
-        .groupBy(_._1).map { case (k, v) =>
-          k -> v.map(_._2).sorted.toSeq }
-    try {
-      val b1 = Seq(("en", 1L), ("en", 2L), ("en", 3L), ("en", 4L),
-        ("de", 10L), ("fr", 99L))
-      source.addData(b1: _*)
-      q.processAllAvailable()
-      val b2 = Seq(("en", 5L), ("en", 6L), ("de", 11L), ("de", 12L))
-      source.addData(b2: _*)
-      q.processAllAvailable()
-      val snapshots = spark.table("qsample_out").collect()
-        .map(r => r.getString(0) -> r.getSeq[Long](1))
-      // the update-mode sink appends one snapshot per updated key per
-      // trigger; the FINAL reservoir content must appear as a
-      // snapshot and equal the batch twin over b1 ++ b2
-      val twin = batchTwin(b1 ++ b2)
-      for ((k, ids) <- twin)
-        assert(snapshots.exists(s => s._1 == k && s._2.sorted == ids),
-          s"key $k: no snapshot matches batch twin $ids; " +
-            s"snapshots=${snapshots.filter(_._1 == k).toSeq}")
-      // fr has quota 0 (defaultQuota) -> its reservoir is always empty
-      assert(snapshots.filter(_._1 == "fr").forall(_._2.isEmpty))
-    } finally q.stop()
-  }
-
-  test("streamingQuotaSample: arrival order cannot change the " +
-      "reservoir - reversed stream converges to the same final sample") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val quotas = Map("en" -> 2L)
-    def runStream(data: Seq[(String, Long)], name: String) = {
-      val source = MemoryStream[(String, Long)]
-      val q = StreamIngest.streamingQuotaSample(
-        source.toDF().toDF("lang", "doc_id"), "lang", "doc_id", quotas)
-        .toDF("lang", "ids").writeStream.format("memory")
-        .queryName(name).outputMode("update").start()
-      try {
-        data.foreach { row =>
-          source.addData(row); q.processAllAvailable() }
-      } finally q.stop()
-      spark.table(name).collect()
-        .map(r => r.getSeq[Long](1).sorted.toSeq).toSet
-    }
-    val data = Seq(("en", 1L), ("en", 2L), ("en", 3L), ("en", 4L))
-    val fwd = runStream(data, "qs_fwd")
-    val rev = runStream(data.reverse, "qs_rev")
-    val twin = graft.operators.Sampling.quotaSample(
-      data.toDF("lang", "doc_id"), "doc_id", "lang", quotas,
-      materialize = false)
-      .collect().map(_.getLong(1)).sorted.toSeq
-    assert(fwd.contains(twin), s"forward snapshots $fwd lack twin $twin")
-    assert(rev.contains(twin), s"reversed snapshots $rev lack twin $twin")
   }
 }
