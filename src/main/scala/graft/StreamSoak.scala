@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable.ArrayBuffer
 

@@ -1,10 +1,14 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
+import graft.operators.LocalFit
+import org.apache.spark.ml.classification.{MultilayerPerceptronClassificationModel, MultilayerPerceptronClassifier}
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.graftglue.MlpGlue
+import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Result of a train-and-predict-all run: predictions for EVERY stored
   * row (train+test — the reference intentionally labels the whole
@@ -22,7 +26,9 @@ final case class MlpResult(predictions: DataFrame, holdoutMetric: Double)
   * data-parallel full-batch gradient descent (MLlib itself has no MLP
   * regressor).
   *
-  * Scale: `fit` is driver-orchestrated L-BFGS; each iteration is one
+  * Scale: the classifier fits on the driver while its input fits the
+  * in-process budget and by MLlib's distributed L-BFGS above it (see
+  * [[trainClassifier]]); the regressor's iterations are each one
   * treeAggregate over executors — no shuffle of the feature matrix.
   */
 object MlpBridge {
@@ -31,19 +37,116 @@ object MlpBridge {
     * (100,) by default like the reference (`VectorSearchBase.py:230`),
     * stratified 75/25 split, predict all rows.
     *
-    * Scale shape: the prepared frame is cached once; the split is one
-    * `rand(seed)` column over it (train rows equal `sampleBy`'s for the
-    * same seed, the holdout is their exact complement), so no step
-    * shuffles the feature matrix. The fit is MLlib's L-BFGS, one
-    * treeAggregate per iteration.
+    * Scale: two sides of one gate, [[LocalFit.collect]] under
+    * [[LocalFit.sampleBudgetBytes]], of the rows with a label and a
+    * vector: the label rendered as a string, the split draw (one
+    * `rand(seed)` column, as [[stratifiedSplit]] draws it), the
+    * partition and the vector ([[gathered]]).
+    *  - Under the budget that collect is the fit's only job: labels are
+    *    indexed, the split taken and MLlib's perceptron fitted on the
+    *    driver ([[org.apache.spark.ml.graftglue.MlpGlue.fit]], MLlib's
+    *    own topology, initial weights, loss, gradient and L-BFGS over
+    *    the same per-partition blocks), and the holdout accuracy is
+    *    counted from the collected rows.
+    *  - Over it (the collect rejects the frame before its rows reach the
+    *    driver), the prepared frame is cached once, split by
+    *    [[stratifiedSplit]] (no step shuffles the feature matrix) and
+    *    fitted by MLlib's L-BFGS, one treeAggregate per iteration.
+    *    `array<double>` vectors always take this side: the gate decodes
+    *    float vectors.
+    * Either way every row is predicted by the fitted MLlib model's
+    * narrow `transform`, materialized once.
     *
     * @param labelCol string or numeric label column; indexed to
     *                 0..n-1 by sorted distinct value (deterministic)
     */
   def trainClassifier(df: DataFrame, vecCol: String, labelCol: String,
       hidden: Seq[Int] = Seq(100), maxIter: Int = 300,
-      seed: Long = 810L): MlpResult = {
+      seed: Long = 810L): MlpResult =
+    trainClassifierWithin(df, vecCol, labelCol, hidden, maxIter, seed,
+      LocalFit.sampleBudgetBytes)
+
+  /** [[trainClassifier]] with the gate's budget as a parameter.
+    *
+    * @param budgetBytes package-visible so specs can force either side
+    *                    of the gate; not a user option */
+  private[ml] def trainClassifierWithin(df: DataFrame, vecCol: String,
+      labelCol: String, hidden: Seq[Int], maxIter: Int, seed: Long,
+      budgetBytes: Long): MlpResult = {
     val clean = df.filter(col(labelCol).isNotNull && col(vecCol).isNotNull)
+    gathered(clean, vecCol, labelCol, seed, budgetBytes) match {
+      case Some((rows, vecs)) =>
+        val (model, labels, acc) = fitLocal(rows, vecs, hidden, maxIter, seed)
+        MlpResult(predictAll(model, labels, clean.withColumn("features",
+          array_to_vector(col(vecCol).cast("array<double>")))), acc)
+      case None => trainSpark(clean, vecCol, labelCol, hidden, maxIter, seed)
+    }
+  }
+
+  /** Every row of `prepared` with its predicted label as `mlp_pred`,
+    * materialized; the fit's working columns are dropped. */
+  private def predictAll(model: MultilayerPerceptronClassificationModel,
+      labels: Array[String], prepared: DataFrame): DataFrame = {
+    // inverse lookup by exact class-index double — same map-literal
+    // form as the indexer (predictions are exact index doubles)
+    val invMap = map(labels.zipWithIndex.flatMap { case (v, i) =>
+      Seq(lit(i.toDouble), lit(v)) }: _*)
+    model.transform(prepared)
+      .withColumn("mlp_pred", element_at(invMap, col("prediction")))
+      .drop("features", "label", "rawPrediction", "probability", "prediction")
+      .localCheckpoint(true) // materialize so a cache can be released
+  }
+
+  /** Train-side share of every class (sklearn's 75/25 stratified split). */
+  private val TrainFraction = 0.75
+
+  /** `clean`'s rows for an in-process fit, through [[LocalFit.collect]]
+    * under `budgetBytes`: per row `(label as a string, split draw,
+    * partition)` and its vector, in partition and row order. The draw is
+    * `rand(seed)` over `clean`'s partitions, the one [[stratifiedSplit]]
+    * takes over the same rows. None over the budget, or when the vectors
+    * are not `array<float>`. */
+  private[ml] def gathered(clean: DataFrame, vecCol: String,
+      labelCol: String, seed: Long,
+      budgetBytes: Long): Option[(Array[Row], Array[Array[Float]])] =
+    clean.schema(vecCol).dataType match {
+      case ArrayType(FloatType, _) =>
+        LocalFit.collect(clean.select(col(labelCol).cast("string").as("__y"),
+            rand(seed).as("__u"), spark_partition_id().as("__p"),
+            col(vecCol).as("__v")),
+          Seq("__y", "__u", "__p"), budgetBytes, Some("__v"))
+          .map { case (rows, vecs, _) => (rows, vecs) }
+      case _ => None
+    }
+
+  /** The in-process side of [[trainClassifier]] over [[gathered]] rows:
+    * the fitted model, the sorted labels and the holdout accuracy. */
+  private def fitLocal(rows: Array[Row], vecs: Array[Array[Float]],
+      hidden: Seq[Int], maxIter: Int,
+      seed: Long): (MultilayerPerceptronClassificationModel, Array[String], Double) = {
+    val labels = rows.map(_.getString(0)).distinct.sorted
+    require(labels.length >= 2, "need at least 2 classes")
+    val dims = vecs.map(_.length).distinct
+    require(dims.length == 1,
+      s"cannot train an MLP: mixed vector dims ${dims.sorted.mkString(", ")}")
+    require(vecs.forall(_.forall(f => !f.isNaN && !f.isInfinite)),
+      "cannot train an MLP: vector values must not be NaN or Infinity")
+    val index = labels.zipWithIndex.toMap
+    val (train, test) = rows.indices.partition(rows(_).getDouble(1) < TrainFraction)
+    def features(i: Int): Array[Double] = vecs(i).map(_.toDouble)
+    // rows arrive in partition order; MLlib stacks each partition apart
+    val parts = train.groupBy(rows(_).getInt(2)).toSeq.sortBy(_._1)
+      .map(_._2.map(i => (features(i), index(rows(i).getString(0)))))
+    val model = MlpGlue.fit((dims.head +: hidden :+ labels.length).toArray,
+      parts, maxIter, seed)
+    val right = test.count(i => model.predict(Vectors.dense(features(i))) ==
+      index(rows(i).getString(0)).toDouble)
+    (model, labels, right.toDouble / test.length)
+  }
+
+  /** The Spark side of [[trainClassifier]]. */
+  private def trainSpark(clean: DataFrame, vecCol: String, labelCol: String,
+      hidden: Seq[Int], maxIter: Int, seed: Long): MlpResult = {
     // index by Spark's OWN string rendering (cast-to-string), which is
     // what the lookup probes with — JVM toString differs for
     // timestamp/decimal values and would miss the map
@@ -73,14 +176,7 @@ object MlpBridge {
     val acc = new MulticlassClassificationEvaluator()
       .setMetricName("accuracy")
       .evaluate(model.transform(testSet))
-    // inverse lookup by exact class-index double — same map-literal
-    // form as the indexer (predictions are exact index doubles)
-    val invMap = map(labels.zipWithIndex.flatMap { case (v, i) =>
-      Seq(lit(i.toDouble), lit(v)) }: _*)
-    val all = model.transform(prepared)
-      .withColumn("mlp_pred", element_at(invMap, col("prediction")))
-      .drop("features", "label", "rawPrediction", "probability", "prediction")
-      .localCheckpoint(true) // materialize so the cache can be released
+    val all = predictAll(model, labels, prepared)
     prepared.unpersist()
     MlpResult(all, acc)
   }
@@ -96,8 +192,8 @@ object MlpBridge {
   private[ml] def stratifiedSplit(prepared: DataFrame,
       seed: Long): (DataFrame, DataFrame) = {
     val split = prepared.withColumn("__u", rand(seed))
-    (split.filter(col("__u") < 0.75).drop("__u"),
-      split.filter(col("__u") >= 0.75).drop("__u"))
+    (split.filter(col("__u") < TrainFraction).drop("__u"),
+      split.filter(col("__u") >= TrainFraction).drop("__u"))
   }
 
   /** MLP regressor (M8 — sklearn's MLPRegressor,

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 /** Margin-based parallel-pair mining (Artetxe & Schwenk 2019, the
   * LASER/CCMatrix recipe): a raw cosine threshold cannot separate

@@ -1,13 +1,20 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
+import graft.functions.TextOps
 import graft.functions.VectorFunctions._
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Murmur3Hash, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Checkpoints.LineageCutOps
 
+import java.util.stream.IntStream
+import scala.collection.mutable.ArrayBuffer
 import scala.util.Random
 
 /** Deduplication operators for large-scale training-data pipelines
@@ -158,6 +165,9 @@ object Dedup {
       .join(payload.select(col(idCol).as("idB"),
         col(payloadCol).as(payloadCol + "B")), Seq("idB"))
 
+  /** [[nearDupPairsMinHash]]'s default hot-bucket bound. */
+  private[operators] val MaxBucketSize = 1000
+
   /** Near-duplicate pairs via MinHash LSH banding, verified by exact
     * shingle-set Jaccard. Returns (idA, idB, jaccard) with idA < idB,
     * one row per verified pair.
@@ -172,7 +182,8 @@ object Dedup {
     */
   def nearDupPairsMinHash(df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7, maxBucketSize: Int = 1000): DataFrame = {
+      threshold: Double = 0.7,
+      maxBucketSize: Int = MaxBucketSize): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes,
       s"numHashes ($numHashes) must be divisible by bands ($bands)")
@@ -575,13 +586,151 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
+  /** `df` without its MinHash near-duplicates: the pairs of
+    * [[nearDupPairsMinHash]] (its default `maxBucketSize`), dropped under
+    * `policy` as [[dedupByPairs]] drops them.
+    *
+    * Scale: two sides of one gate, [[LocalFit.collect]] of `(id, text)`
+    * under [[LocalFit.sampleBudgetBytes]].
+    *  - Under the budget the collect is the only job before the result's
+    *    own narrow filter: shingles, signatures, band hashes (Spark's
+    *    `Murmur3Hash`, evaluated directly), the hot-bucket prune, the
+    *    set-semantics Jaccard and the drop policy all run on the driver
+    *    with the Spark side's kernels ([[localNearDupDropped]]), and the
+    *    result is `df` filtered by the dropped ids.
+    *  - Over it (the gate's collect rejects the frame before its rows
+    *    reach the driver), the pairs are the distributed bucketed
+    *    self-join and the drop is [[dedupByPairs]]' anti-join.
+    * Both sides keep the same rows, with the id column first. */
   def dedupNearMinHash(df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7,
-      policy: NearDupPolicy = NearDupPolicy.IndependentSet): DataFrame = {
-    val pairs = nearDupPairsMinHash(df, idCol, textCol, shingleWidth,
-      numHashes, bands, threshold)
-    dedupByPairs(df, idCol, pairs, policy)
+      policy: NearDupPolicy = NearDupPolicy.IndependentSet): DataFrame =
+    dedupNearMinHashWithin(df, idCol, textCol, shingleWidth, numHashes,
+      bands, threshold, policy, LocalFit.sampleBudgetBytes)
+
+  /** [[dedupNearMinHash]] with the gate's budget as a parameter.
+    *
+    * @param budgetBytes package-visible so specs can force either side
+    *                    of the gate; not a user option */
+  private[operators] def dedupNearMinHashWithin(df: DataFrame, idCol: String,
+      textCol: String, shingleWidth: Int, numHashes: Int, bands: Int,
+      threshold: Double, policy: NearDupPolicy,
+      budgetBytes: Long): DataFrame = {
+    require(bands * (numHashes / bands) == numHashes,
+      s"numHashes ($numHashes) must be divisible by bands ($bands)")
+    require(numHashes >= 1, "numHashes must be >= 1")
+    val local =
+      if (df.schema(textCol).dataType != StringType) None // Spark names it
+      else LocalFit.collect(df, Seq(idCol, textCol), budgetBytes, None)
+    local match {
+      case Some((rows, _, _)) =>
+        val dropped = localNearDupDropped(rows, df.schema(idCol).dataType,
+          shingleWidth, numHashes, bands, threshold, policy)
+        val kept =
+          if (dropped.isEmpty) df
+          else df.filter(col(idCol).isNull || !col(idCol).isInCollection(dropped))
+        kept.select((col(idCol) +: df.columns.filter(_ != idCol).map(col)): _*)
+      case None =>
+        val pairs = nearDupPairsMinHash(df, idCol, textCol, shingleWidth,
+          numHashes, bands, threshold)
+        dedupByPairs(df, idCol, pairs, policy)
+    }
+  }
+
+  /** The ids [[dedupNearMinHash]] drops, decided on the driver over
+    * collected `(id, text)` rows by the same rules as the distributed
+    * pair pipeline: the [[TextOps.wordShingles]] / [[TextOps.minhashSig]]
+    * kernels, one `hash(slice(sig, ...))` band key per band, buckets of
+    * more than [[MaxBucketSize]] rows pruned (rows with a null id count,
+    * but never pair), pairs verified by set-semantics Jaccard over any
+    * two rows of their ids, then [[localMisDropped]] or a min-id
+    * union-find for [[NearDupPolicy.ComponentRep]]. Ids are grouped and
+    * ordered by Spark's ordering of `idType`. */
+  private def localNearDupDropped(rows: Array[Row], idType: DataType,
+      shingleWidth: Int, numHashes: Int, bands: Int, threshold: Double,
+      policy: NearDupPolicy): Seq[Any] = {
+    val rowsPerBand = numHashes / bands
+    // per row: its distinct shingles and band keys (null: no shingles)
+    val sets = new Array[java.util.HashSet[UTF8String]](rows.length)
+    val keys = new Array[Array[Int]](rows.length)
+    // `hash(slice(sig, ...))`: Spark's hash, seed 42, interpreted
+    val band = Murmur3Hash(Seq(BoundReference(0,
+      ArrayType(IntegerType, containsNull = false), nullable = false)), 42)
+    IntStream.range(0, rows.length).parallel().forEach { i =>
+      val text = rows(i).getString(1)
+      val sh = if (text == null) null
+        else TextOps.wordShingles(UTF8String.fromString(text), shingleWidth)
+      if (sh != null && sh.numElements > 0) {
+        val sig = TextOps.minhashSig(sh, numHashes).toIntArray
+        keys(i) = Array.tabulate(bands)(b => band.eval(InternalRow(
+          UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOfRange(
+            sig, b * rowsPerBand, (b + 1) * rowsPerBand))))
+          .asInstanceOf[Int])
+        val set = new java.util.HashSet[UTF8String]()
+        (0 until sh.numElements).foreach(j => set.add(sh.getUTF8String(j)))
+        sets(i) = set
+      }
+    }
+    // nodes: distinct non-null ids of rows with shingles, numbered in
+    // id order, so a pair's smaller id is its smaller node
+    val toKey = CatalystTypeConverters.createToCatalystConverter(idType)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val idKeys = rows.map(r => if (r.isNullAt(0)) null else toKey(r.get(0)))
+    val byId = rows.indices.filter(i => keys(i) != null && idKeys(i) != null)
+      .sortWith((a, b) => ord.lt(idKeys(a), idKeys(b)))
+    val node = Array.fill(rows.length)(-1)
+    val members = ArrayBuffer[ArrayBuffer[Int]]()
+    byId.indices.foreach { j =>
+      if (j == 0 || !ord.equiv(idKeys(byId(j - 1)), idKeys(byId(j))))
+        members += ArrayBuffer[Int]()
+      node(byId(j)) = members.length - 1
+      members.last += byId(j)
+    }
+    val buckets = new java.util.HashMap[(Int, Int), ArrayBuffer[Int]]()
+    rows.indices.filter(keys(_) != null).foreach { i =>
+      (0 until bands).foreach(b => buckets.computeIfAbsent((b, keys(i)(b)),
+        _ => ArrayBuffer[Int]()) += i)
+    }
+    val candidates = scala.collection.mutable.HashSet[(Int, Int)]()
+    buckets.values.forEach { bucket =>
+      if (bucket.length <= MaxBucketSize) {
+        val ns = bucket.map(node).filter(_ >= 0).distinct.sorted
+        for (a <- ns.indices; b <- a + 1 until ns.length)
+          candidates += ((ns(a), ns(b)))
+      }
+    }
+    def jaccard(a: java.util.HashSet[UTF8String],
+        b: java.util.HashSet[UTF8String]): Double = {
+      val (small, large) = if (a.size <= b.size) (a, b) else (b, a)
+      var inter = 0
+      small.forEach(x => if (large.contains(x)) inter += 1)
+      inter.toDouble / (a.size + b.size - inter).toDouble
+    }
+    val edges = candidates.toArray.filter { case (u, v) =>
+      members(u).exists(i => members(v).exists(j =>
+        jaccard(sets(i), sets(j)) >= threshold))
+    }.sorted
+    val dropped: Iterable[Int] = policy match {
+      case NearDupPolicy.IndependentSet =>
+        localMisDropped(edges.map { case (u, v) => (u: Any, v: Any) }, 50)
+          .map(_.asInstanceOf[Int])
+      case NearDupPolicy.ComponentRep =>
+        val parent = Array.tabulate(members.length)(identity)
+        def find(n: Int): Int = {
+          var r = n
+          while (parent(r) != r) r = parent(r)
+          parent(n) = r
+          r
+        }
+        for ((u, v) <- edges) {
+          val (ru, rv) = (find(u), find(v))
+          if (ru < rv) parent(rv) = ru else parent(ru) = rv
+        }
+        edges.iterator.flatMap { case (u, v) => Iterator(u, v) }.toSet
+          .filter(n => find(n) != n)
+    }
+    dropped.map(n => rows(members(n).head).get(0)).toSeq
   }
 
   /** Pair-list size up to which [[misDropped]] decides in-process. */

@@ -1,12 +1,14 @@
 package graft.operators
 
 import graft.functions.VectorOps
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Murmur3Hash, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, StringType, StructType}
 
 import java.util.stream.IntStream
 import scala.collection.mutable.{ArrayBuffer, HashSet}
@@ -44,9 +46,83 @@ private[graft] object LocalFit {
     * decoded floats, the kernels' `ArrayData` copies, PQ's subvectors);
     * at this budget its live driver heap measured below that of the
     * distributed fit it replaced, which cached the whole sample. The
-    * same budget bounds a [[graft.store.VectorStore]]'s in-process
-    * snapshot. */
+    * same budget bounds every other in-process decision, through
+    * [[collect]]: a [[graft.store.VectorStore]]'s snapshot,
+    * `Dedup.dedupNearMinHash` and `MlpBridge.trainClassifier`. */
   def sampleBudgetBytes: Long = Runtime.getRuntime.maxMemory / 32
+
+  /** Heap bytes a row costs beyond its floats and string chars: object
+    * headers and references of the row, its array and its strings. */
+  private val RowOverheadBytes = 96L
+
+  /** The collect gate of every in-process decider: `df`'s `cols` as
+    * rows and, when `vecCol` is given, its vectors decoded straight to
+    * float arrays (an array of nulls otherwise), with their heap
+    * estimate, when that is under `budgetBytes`; None otherwise,
+    * decided before the rows reach the driver. A frame the optimizer
+    * sizes at the budget or over is rejected with no job. Otherwise one
+    * job collects it, each task keeping its partition's rows while their
+    * heap estimate stays under an equal share of the budget and shipping
+    * a marker instead once it does not; so at most the budget is ever
+    * collected, and a partition holding more than its share rejects the
+    * frame. A local relation is already on the driver and is copied,
+    * with no job. */
+  def collect(df: DataFrame, cols: Seq[String], budgetBytes: Long,
+      vecCol: Option[String])
+      : Option[(Array[Row], Array[Array[Float]], Long)] = {
+    val schema = StructType(cols.map(df.schema(_)))
+    val (width, strings) =
+      (cols.length, cols.indices.filter(schema(_).dataType == StringType))
+    val selected = df.select(struct(cols.map(col): _*),
+      vecCol.fold(lit(null).cast(ArrayType(FloatType)))(col))
+    val plan = df.queryExecution.optimizedPlan
+    val sized = plan.stats.sizeInBytes
+    // internal rows, decoded on the driver below: a typed Dataset would
+    // generate and compile an encoder per frame, which a first append
+    // pays for twice (the store, then the batch)
+    val got: Option[Array[InternalRow]] =
+      if (sized < Long.MaxValue && sized >= budgetBytes) None
+      else if (plan.isInstanceOf[LocalRelation])
+        Some(selected.queryExecution.executedPlan.executeCollect())
+      else {
+        val kept = selected.queryExecution.toRdd.mapPartitions { it =>
+          val share = budgetBytes / TaskContext.get.numPartitions
+          val out = ArrayBuffer.empty[InternalRow]
+          var used = 0L
+          while (used < share && it.hasNext) {
+            val r = it.next()
+            val (fields, v) = (r.getStruct(0, width), r.getArray(1))
+            used += RowOverheadBytes +
+              (if (v == null) 0L else 4L * v.numElements) +
+              strings.iterator.map(i =>
+                if (fields.isNullAt(i)) 0L
+                else 2L * fields.getUTF8String(i).numChars).sum
+            out += r.copy()
+          }
+          if (used >= share) Iterator.single(null: InternalRow)
+          else out.iterator
+        }.collect()
+        if (kept.contains(null)) None else Some(kept)
+      }
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    got.map(_.map { r =>
+      (toRow(r.getStruct(0, width)).asInstanceOf[Row],
+        if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())
+    }.unzip).map { case (r, v) => (r, v, heapBytes(r, v)) }
+      .filter(_._3 < budgetBytes)
+  }
+
+  /** The heap estimate of one row and its vector. */
+  private def rowBytes(r: Row, v: Array[Float]): Long =
+    RowOverheadBytes + (if (v == null) 0L else 4L * v.length) +
+      (0 until r.length).iterator.map(r.get(_) match {
+        case s: String => 2L * s.length
+        case _ => 0L
+      }).sum
+
+  /** The heap estimate of rows and their vectors. */
+  def heapBytes(rows: Array[Row], vecs: Array[Array[Float]]): Long =
+    rows.indices.iterator.map(i => rowBytes(rows(i), vecs(i))).sum
 
   /** The training sample for a fit with `centroids` centroids per
     * codebook: the `sampleFraction` sample of `df`'s vectors, cut at

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 /** Salted equi-join for skewed keys (builder brief: "salting for
   * skew"). AQE's skew-join split handles most cases at runtime

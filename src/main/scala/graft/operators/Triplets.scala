@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.VectorFunctions.cosine_sim
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 

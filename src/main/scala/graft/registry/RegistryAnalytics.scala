@@ -1,9 +1,4 @@
 package graft
-import graft.functions.VectorFunctions._
-import graft.functions.TextFunctions._
-import graft.functions.HashEmbedder
-import graft.operators.{Dedup, Metric, Similarity}
-import graft.store.VectorStore
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -269,10 +264,12 @@ private[graft] object RegistryAnalytics {
           .cast("decimal(38,4)")).cast("double").as("syy"),
         sum((col("l_quantity") * col("l_extendedprice")).cast("decimal(38,4)"))
           .cast("double").as("sxy"))
+      // a zero denominator (one row, or a constant column) has no
+      // correlation: NULL, as the twin's division gives it
+      val den = sqrt(col("n") * col("sxx") - col("sx") * col("sx")) *
+        sqrt(col("n") * col("syy") - col("sy") * col("sy"))
       sums.select(
-        ((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (sqrt(col("n") * col("sxx") - col("sx") * col("sx")) *
-            sqrt(col("n") * col("syy") - col("sy") * col("sy"))))
+        ((col("n") * col("sxy") - col("sx") * col("sy")) / nullif(den, lit(0.0)))
           .cast("decimal(18,12)").cast("double").as("pearson"))
     }),
     // count-min sketch heavy hitters: depth 4 × width 1024 sketch over
@@ -728,8 +725,10 @@ private[graft] object RegistryAnalytics {
         .groupBy("k")
         .agg(count(col("__n")).cast("long").as("n_classes_below"),
           coalesce(sum("__n"), lit(0L)).cast("long").as("n_rows_below"))
+        // an empty table has no row share: NULL, as the twin's division
         .withColumn("row_share_below",
-          (col("n_rows_below").cast("double") / lit(total.toDouble))
+          (col("n_rows_below").cast("double") /
+            nullif(lit(total.toDouble), lit(0.0)))
             .cast("decimal(18,9)").cast("double"))
         .orderBy("k")
     }),

@@ -1,9 +1,6 @@
 package graft
-import graft.functions.VectorFunctions._
 import graft.functions.TextFunctions._
-import graft.functions.HashEmbedder
-import graft.operators.{Dedup, Metric, Similarity}
-import graft.store.VectorStore
+import graft.operators.Dedup
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -339,9 +336,12 @@ private[graft] object RegistryDedup {
           when(col("n_true") > 0,
             (col("n_caught").cast("double") / col("n_true").cast("double"))
               .cast("decimal(18,9)").cast("double")))
+        // fewer than two docs have no pairs to reduce: NULL, as the
+        // twin's division gives it
         .withColumn("reduction_ratio",
           (lit(1.0) - col("n_candidates").cast("double") * 2.0 /
-            (col("__nd").cast("double") * (col("__nd").cast("double") - 1.0)))
+            nullif(col("__nd").cast("double") *
+              (col("__nd").cast("double") - 1.0), lit(0.0)))
             .cast("decimal(18,9)").cast("double"))
         .drop("__nd")
     }),

@@ -1,10 +1,4 @@
 package graft
-import graft.functions.VectorFunctions._
-import graft.functions.TextFunctions._
-import graft.functions.HashEmbedder
-import graft.operators.{Dedup, Metric, Similarity}
-import graft.store.VectorStore
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 

@@ -4,16 +4,13 @@ import graft.Schemas
 import graft.functions.{Embed, Embedder, VectorOps}
 import graft.operators.{Lake, LocalFit, Metric, Similarity}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Schema coercion for ingest — the bulk form of the reference's
@@ -318,8 +315,8 @@ final class VectorStore(
   private def appendRows(embedded: DataFrame, sortCols: Seq[String]): Unit = {
     val batch = firstWins(embedded, sortCols)
     val local = validSnapshot.flatMap { s =>
-      StoreSnapshot.collect(embedded, Schemas.saveCols,
-        snapshotBudgetBytes - s.bytes).map { case (rows, vecs, _) =>
+      LocalFit.collect(embedded, Schemas.saveCols,
+        snapshotBudgetBytes - s.bytes, Some("vector")).map { case (rows, vecs, _) =>
         (s, (rows, vecs))
       }
     }
@@ -770,7 +767,7 @@ private[store] final class StoreSnapshot private (payload: Array[Row],
       ids ++ rows.map(_.getLong(0)),
       (dims ++ dimsOf(rowVecs)).distinct,
       Some(targets ++ rows.iterator.map(_.getString(1)).filter(_ != null)),
-      resultSchema(data), bytes + heapBytes(rows, rowVecs))
+      resultSchema(data), bytes + LocalFit.heapBytes(rows, rowVecs))
 
   /** The k nearest rows as `payload :+ distance`, ascending by
     * (distance, id); rows with a null vector never take a slot. Raises
@@ -809,85 +806,16 @@ private[store] object StoreSnapshot {
   /** (distance, row index). */
   private type Hit = (Double, Int)
 
-  /** Heap bytes a row costs beyond its floats and string chars: object
-    * headers and references of the row, its array and its strings. */
-  private val RowOverheadBytes = 96L
-
   val resultCols: Seq[String] = "id" +: Schemas.saveCols :+ "distance"
 
   /** One collect of `data` when its heap estimate is under
-    * `budgetBytes` (see [[collect]]). */
+    * `budgetBytes` (see [[LocalFit.collect]]). */
   def take(data: DataFrame, budgetBytes: Long): Option[StoreSnapshot] =
-    collect(data, resultCols.init, budgetBytes).map {
+    LocalFit.collect(data, resultCols.init, budgetBytes, Some("vector")).map {
       case (payload, vecs, bytes) =>
         new StoreSnapshot(payload, vecs, payload.map(_.getLong(0)),
           dimsOf(vecs), None, resultSchema(data), bytes)
     }
-
-  /** `df`'s `cols` as rows and its vectors, decoded straight to float
-    * arrays, with their heap estimate, when that is under
-    * `budgetBytes`; None otherwise, decided before the rows reach the
-    * driver. A frame the optimizer sizes at the budget or over is
-    * rejected with no job. Otherwise one job collects it, each task
-    * keeping its partition's rows while their heap estimate stays under
-    * an equal share of the budget and shipping a marker instead once it
-    * does not; so at most the budget is ever collected, and a partition
-    * holding more than its share rejects the frame. A local relation is
-    * already on the driver and is copied, with no job. */
-  def collect(df: DataFrame, cols: Seq[String],
-      budgetBytes: Long): Option[(Array[Row], Array[Array[Float]], Long)] = {
-    val schema = StructType(cols.map(df.schema(_)))
-    val (width, strings) =
-      (cols.length, cols.indices.filter(schema(_).dataType == StringType))
-    val selected = df.select(struct(cols.map(col): _*), col("vector"))
-    val plan = df.queryExecution.optimizedPlan
-    val sized = plan.stats.sizeInBytes
-    // internal rows, decoded on the driver below: a typed Dataset would
-    // generate and compile an encoder per frame, which a first append
-    // pays for twice (the store, then the batch)
-    val got: Option[Array[InternalRow]] =
-      if (sized < Long.MaxValue && sized >= budgetBytes) None
-      else if (plan.isInstanceOf[LocalRelation])
-        Some(selected.queryExecution.executedPlan.executeCollect())
-      else {
-        val kept = selected.queryExecution.toRdd.mapPartitions { it =>
-          val share = budgetBytes / TaskContext.get.numPartitions
-          val out = ArrayBuffer.empty[InternalRow]
-          var used = 0L
-          while (used < share && it.hasNext) {
-            val r = it.next()
-            val (fields, v) = (r.getStruct(0, width), r.getArray(1))
-            used += RowOverheadBytes +
-              (if (v == null) 0L else 4L * v.numElements) +
-              strings.iterator.map(i =>
-                if (fields.isNullAt(i)) 0L
-                else 2L * fields.getUTF8String(i).numChars).sum
-            out += r.copy()
-          }
-          if (used >= share) Iterator.single(null: InternalRow)
-          else out.iterator
-        }.collect()
-        if (kept.contains(null)) None else Some(kept)
-      }
-    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    got.map(_.map { r =>
-      (toRow(r.getStruct(0, width)).asInstanceOf[Row],
-        if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())
-    }.unzip).map { case (r, v) => (r, v, heapBytes(r, v)) }
-      .filter(_._3 < budgetBytes)
-  }
-
-  /** The heap estimate of one row and its vector. */
-  private def rowBytes(r: Row, v: Array[Float]): Long =
-    RowOverheadBytes + (if (v == null) 0L else 4L * v.length) +
-      (0 until r.length).iterator.map(r.get(_) match {
-        case s: String => 2L * s.length
-        case _ => 0L
-      }).sum
-
-  /** The heap estimate of rows and their vectors. */
-  private def heapBytes(rows: Array[Row], vecs: Array[Array[Float]]): Long =
-    rows.indices.iterator.map(i => rowBytes(rows(i), vecs(i))).sum
 
   private def dimsOf(vecs: Array[Array[Float]]): Array[Int] =
     vecs.iterator.filter(_ != null).map(_.length).distinct.toArray

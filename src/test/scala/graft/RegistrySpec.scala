@@ -34,6 +34,39 @@ class RegistrySpec extends SparkSpec {
       Seq(Seq(1f), Seq(2f), Seq(3f), Seq(4f)))
   }
 
+  test("ratio lines return NULL, as their DuckDB twins do, on empty and " +
+      "one-row tables instead of dividing by zero") {
+    // fixtures cut from the sf0.001 tables: every line reads its
+    // tables as <dir>/<name>.parquet
+    def cut(rows: Int): String = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-rows$rows")
+      for (name <- Seq("lineitem", "documents"))
+        spark.read.parquet(s"${sf()}/$name.parquet").limit(rows)
+          .write.parquet(s"$dir/$name.parquet")
+      dir.toString
+    }
+    def run(name: String, dir: String) =
+      SparkEntry.queries(name)(spark, dir).collect().toSeq
+    for (rows <- Seq(0, 1)) {
+      val dir = cut(rows)
+      val pearson = run("pearson_corr", dir)
+      assert(pearson.length == 1 && pearson.head.isNullAt(0), s"$rows: $pearson")
+      val blocking = run("blocking_quality", dir)
+      assert(blocking.length == 1, s"$rows: $blocking")
+      val b = blocking.head
+      assert(b.getAs[Long]("n_candidates") == 0L &&
+        b.isNullAt(b.fieldIndex("pair_completeness")) &&
+        b.isNullAt(b.fieldIndex("reduction_ratio")), s"$rows: $b")
+      val kAnon = run("k_anonymity", dir)
+      assert(kAnon.map(_.getAs[Long]("k")) == Seq(2L, 5L, 10L, 50L))
+      assert(kAnon.forall(r => r.getAs[Long]("n_rows_below") == rows),
+        s"$rows: $kAnon")
+      val shares = kAnon.map(r => Option(r.getAs[java.lang.Double]("row_share_below")))
+      assert(shares.forall(_ == (if (rows == 0) None else Some(1.0))),
+        s"$rows: $kAnon")
+    }
+  }
+
   test("every oracleSql key is a registered query") {
     val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(dangling.isEmpty,

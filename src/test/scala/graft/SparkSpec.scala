@@ -13,4 +13,15 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** `f`'s result and the number of Spark jobs it ran (its job group's,
+    * as the status listener recorded them). */
+  def jobsOf[T](f: => T): (T, Int) = {
+    val group = s"spec-jobs-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      val out = f
+      (out, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
+    } finally spark.sparkContext.clearJobGroup()
+  }
 }

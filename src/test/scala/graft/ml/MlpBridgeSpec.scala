@@ -82,6 +82,63 @@ class MlpBridgeSpec extends SparkSpec {
     }
   }
 
+  test("classifier on both sides of the collect gate: predictions agree " +
+      "on >= 99% of rows, holdout accuracy within 0.01") {
+    val df = clustered.repartition(3)
+    def fit(budget: Long) = {
+      val res = MlpBridge.trainClassifierWithin(df, "vector", "y",
+        Seq(16), 100, 810L, budget)
+      (res.holdoutMetric, res.predictions.select("id", "mlp_pred").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap)
+    }
+    val (sparkAcc, viaSpark) = fit(0L)
+    val (localAcc, local) = fit(Long.MaxValue)
+    assert(sparkAcc >= 0.9, s"Spark-side holdout accuracy $sparkAcc")
+    assert(viaSpark.size == 180 && local.keySet == viaSpark.keySet)
+    val agree = local.count { case (id, p) => viaSpark(id) == p }
+    assert(agree >= 0.99 * 180, s"$agree of 180 predictions agree")
+    assert(math.abs(localAcc - sparkAcc) <= 0.01, s"$localAcc vs $sparkAcc")
+  }
+
+  test("classifier under the gate: single-class input is rejected on " +
+      "both sides, and the fit runs at most two jobs") {
+    import spark.implicits._
+    val one = Seq(("x", "only", Array(1f, 2f)), ("z", "only", Array(2f, 1f)))
+      .toDF("id", "y", "vector")
+    for (budget <- Seq(0L, Long.MaxValue))
+      intercept[IllegalArgumentException] {
+        MlpBridge.trainClassifierWithin(one, "vector", "y", Seq(4), 5, 810L,
+          budget)
+      }
+    // a materialized input, as a pipeline stage hands it over
+    val input = clustered.repartition(3).localCheckpoint(true)
+    val (res, jobs) = jobsOf(MlpBridge.trainClassifier(
+      input, "vector", "y", hidden = Seq(8), maxIter = 20))
+    assert(res.predictions.columns.contains("mlp_pred"))
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("in-process split: the collected draw picks sampleBy's train rows") {
+    import org.apache.spark.sql.functions._
+    val prepared = clustered.repartition(3)
+      .withColumn("label", when(col("y") === "a", 0.0)
+        .when(col("y") === "b", 1.0).otherwise(2.0))
+      .cache()
+    try {
+      for (seed <- Seq(810L, 3L)) {
+        val (rows, vecs) = MlpBridge.gathered(prepared, "vector", "y", seed,
+          Long.MaxValue).get
+        val train = rows.indices.filter(rows(_).getDouble(1) < 0.75)
+          .map(i => vecs(i).toSeq).toSet
+        val want = prepared.stat.sampleBy("label",
+          Map(0.0 -> 0.75, 1.0 -> 0.75, 2.0 -> 0.75), seed)
+          .select("vector").collect().map(_.getSeq[Float](0)).toSet
+        assert(rows.length == 180)
+        assert(train == want)
+      }
+    } finally { prepared.unpersist(); () }
+  }
+
   test("classifier split: train rows equal sampleBy's for the same seed, " +
       "the holdout is their exact complement") {
     import org.apache.spark.sql.functions._

@@ -232,6 +232,67 @@ class DedupSpec extends SparkSpec {
     assert(keptCc == Set(1L))
   }
 
+  /** `dedupNearMinHash`'s output columns and kept ids (as sorted
+    * strings) on the Spark side and the in-process side of the gate. */
+  private def keptOnBothSides(df: org.apache.spark.sql.DataFrame,
+      threshold: Double, policy: Dedup.NearDupPolicy)
+      : ((Seq[String], Seq[String]), (Seq[String], Seq[String])) = {
+    def kept(budget: Long) = {
+      val out = Dedup.dedupNearMinHashWithin(df, "id", "text", 3, 64, 16,
+        threshold, policy, budget)
+      (out.columns.toSeq,
+        out.select("id").collect().map(r => String.valueOf(r.get(0))).toSeq.sorted)
+    }
+    (kept(0L), kept(Long.MaxValue))
+  }
+
+  test("dedupNearMinHash keeps the same ids on both sides of the " +
+      "collect gate, under both policies") {
+    import spark.implicits._
+    val (docs, _) = plantedCorpus
+    val a = "one two three four five six seven eight nine ten"
+    val b = "one two three four five six seven eight nine eleven"
+    val c = "zero two three four five six seven eight nine eleven"
+    val hot = "the same boilerplate page repeated across a crawl"
+    val fixtures = Seq(
+      "planted" -> (docs.toDF("id", "text").repartition(3), 0.5),
+      "chain" -> (Seq(1L -> a, 2L -> b, 3L -> c).toDF("id", "text"), 0.7),
+      // null and empty text never pair; a null id never pairs and is kept
+      "null/empty text" -> (Seq[(Option[Long], String)](Some(1L) -> null,
+        Some(2L) -> "", Some(3L) -> "a b", Some(4L) -> a, Some(5L) -> b,
+        None -> b, Some(6L) -> null, Some(7L) -> c).toDF("id", "text"), 0.7),
+      "empty frame" -> (Seq.empty[(Long, String)].toDF("id", "text"), 0.7),
+      // 1 001 identical docs fill one bucket per band past the prune
+      // bound, so none of them pairs; the chain beside them still does
+      "hot bucket" -> (((0 until 1001).map(i => (i.toLong + 10L, hot)) ++
+        Seq(1L -> a, 2L -> b, 3L -> c)).toDF("id", "text"), 0.7))
+    var droppedSomewhere = 0
+    for ((name, (df, t)) <- fixtures;
+         policy <- Seq(Dedup.NearDupPolicy.IndependentSet,
+           Dedup.NearDupPolicy.ComponentRep)) {
+      val (viaSpark, local) = keptOnBothSides(df, t, policy)
+      assert(local == viaSpark, s"$name / $policy")
+      assert(local._1.head == "id", s"$name: ${local._1}")
+      droppedSomewhere += (df.count() - local._2.length).toInt
+    }
+    assert(droppedSomewhere > 0)
+    val (_, hotKept) = keptOnBothSides(fixtures.last._2._1, 0.7,
+      Dedup.NearDupPolicy.IndependentSet)
+    assert(hotKept._2.length == 1001 + 2, "hot bucket pruned, B dropped")
+  }
+
+  test("dedupNearMinHash under the gate runs the collect and the " +
+      "result's own job") {
+    import spark.implicits._
+    val (docs, _) = plantedCorpus
+    // a materialized input, as a pipeline stage hands it over
+    val df = docs.toDF("id", "text").repartition(3).localCheckpoint(true)
+    val (n, jobs) = jobsOf(Dedup.dedupNearMinHash(df, "id", "text",
+      threshold = 0.5).count())
+    assert(n < docs.length)
+    assert(jobs <= 3, s"$jobs jobs")
+  }
+
   test("connectedComponents labels chains, triangles and singleton pairs") {
     import spark.implicits._
     // components: {1,2,3,4} (path), {10,11,12} (triangle), {20,21}

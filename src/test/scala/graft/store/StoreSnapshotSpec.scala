@@ -2,6 +2,7 @@ package graft.store
 
 import graft.{Schemas, SparkSpec}
 import graft.functions.HashEmbedder
+import graft.operators.LocalFit
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.concurrent.Eventually._
@@ -59,15 +60,6 @@ class StoreSnapshotSpec extends SparkSpec {
     val viaSpark = run(store)
     store.setSnapshotBudget(Long.MaxValue)
     (viaSpark, run(store))
-  }
-
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val group = s"snapshot-spec-${System.nanoTime()}"
-    spark.sparkContext.setJobGroup(group, group)
-    try {
-      val out = f
-      (out, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
-    } finally spark.sparkContext.clearJobGroup()
   }
 
   /** `f`'s result and the bytes its tasks sent the driver, counted once
@@ -206,10 +198,11 @@ class StoreSnapshotSpec extends SparkSpec {
     // the batch is rejected by the collect's tasks, which send the
     // driver a fraction of what an unbounded collect of it sends
     val (rejected, shipped) = shippedBy(
-      StoreSnapshot.collect(embedded, Schemas.saveCols, budget / 2))
+      LocalFit.collect(embedded, Schemas.saveCols, budget / 2, Some("vector")))
     assert(rejected.isEmpty)
     val (all, shippedAll) = shippedBy(
-      StoreSnapshot.collect(embedded, Schemas.saveCols, Long.MaxValue))
+      LocalFit.collect(embedded, Schemas.saveCols, Long.MaxValue,
+        Some("vector")))
     assert(all.map(_._1.length).contains(2000))
     assert(shipped * 4 < shippedAll, s"$shipped of $shippedAll bytes shipped")
     def stored(st: VectorStore) = st.data.orderBy("id").collect().toSeq
